@@ -1,0 +1,31 @@
+package perfbench
+
+/** Minimal JSON writer for the harness's result file (maps, sequences,
+  * numbers, strings, booleans). Non-finite doubles become null.
+  */
+object Json {
+  def apply(v: Any): String = v match {
+    case null => "null"
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => apply(f.toDouble)
+    case n: Number => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case s: Iterable[_] => s.map(apply).mkString("[", ",", "]")
+    case a: Array[_] => apply(a.toSeq)
+    case o: Option[_] => o.map(apply).getOrElse("null")
+    case other => quote(other.toString)
+  }
+
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+}
