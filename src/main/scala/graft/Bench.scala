@@ -76,11 +76,12 @@ object Bench {
     // one-time bucketing shuffle whose whole point is amortization —
     // the timed query measures the shuffle-free join that follows.
     graft.queries.RelationalQueries.BucketedTables.ensure(spark, sfDir)
-    Stages.drain() // discard warmup stage timers
-    // Collect observe() metrics — shared machinery, see
-    // [[Observations]] for the async-bus/declared-source/Number-only
-    // disciplines it encodes.
-    val observations = new Observations.Capture(spark)
+    def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    // One listener builds each query's record (jobs, stages, stage
+    // tags, task/storage counters, streaming progress, observe()
+    // metrics) from Spark's event stream — see [[Profile]].
+    val profile = new Profile.Listener
+    spark.sparkContext.addSparkListener(profile)
     // (name, seconds, ok, stages) — a failed query must NOT masquerade
     // as a fast timing (round-1 verdict "What's wrong" #4).
     // Materialize via the noop sink, NOT count(): under count() the
@@ -109,17 +110,17 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
-    // Task/storage/JIT counters per query (see [[TaskCounters]]): the
-    // r14 lake row tripled CPU with wall and the wall/cpu/gc triple
-    // alone could not say whether the JVM recomputed, re-read demoted
-    // blocks, recompiled, or ran contended — these rows adjudicate it.
-    val counters = new TaskCounters
-    spark.sparkContext.addSparkListener(counters)
+    // JIT compiler-thread time per query (tk_jit): recompile storms
+    // are billed to process CPU but to no task, so this row plus the
+    // (process cpu - tk_cpu) gap names them
+    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
+    def jitMillis(): Long =
+      if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
+        jitBean.getTotalCompilationTime
+      else -1L
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      Stages.drain() // isolate this query's stage timers
-      observations.clear()
       // settle the JVM between queries: eagerly-checkpointed
       // intermediates of the PREVIOUS query are only weakly
       // referenced, and their lazy cleanup otherwise lands as GC debt
@@ -137,10 +138,11 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
       Thread.sleep(250)
-      // reset AFTER the settle sleep so the clearCache-driven async
-      // block drops/unpersists of the PREVIOUS query's state do not
-      // land in this query's tk_drop/tk_evict window
-      counters.reset()
+      // open this query's window only once the bus has delivered the
+      // previous query's cleanup events
+      Profile.drain(spark)
+      profile.reset()
+      val jit0 = jitMillis()
       val cpu0 = osBean.getProcessCpuTime
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
@@ -152,14 +154,12 @@ object Bench {
       val secs = (System.nanoTime() - t0) / 1e9
       val cpuSecs = (osBean.getProcessCpuTime - cpu0) / 1e9
       val gcSecs = (gcMillis() - gc0) / 1e3
-      counters.settle() // untimed: drain the async listener bus
-      val stages: Seq[(String, String)] =
-        Stages.drain().map { case (k, v) =>
-          k -> "%.3f".formatLocal(java.util.Locale.ROOT, v)
-        } ++ counters.snapshot() ++ observations.drainFor(name)
+      Profile.drain(spark) // untimed
+      val jit1 = jitMillis()
+      val stages = profile.snapshot() ++
+        (if (jit0 >= 0 && jit1 >= 0) Seq("tk_jit" -> ms((jit1 - jit0) / 1e3)) else Nil)
       (name, secs, ok, stages, cpuSecs, gcSecs)
     }
-    def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     // DRIVER CONTRACT (restored r16, VERDICT r15 item 1): "queries" is
     // a SCALAR {name: wall_sec} map — the r13 shape the driver's
     // comparator parses. The r14 change to [wall,cpu,gc] triples left
@@ -185,41 +185,42 @@ object Bench {
     // a file — it is several KB and the harness only keeps a ~2000-char
     // tail of stdout (verified against BENCH_r05/r06: both truncated
     // mid-line despite earlier "fits in 4 KB" sizing).
-    val stagesAll = results.collect { case (k, _, _, st, _, _) if st.nonEmpty =>
+    val stagesAll = results.map { case (k, _, _, st, _, _) =>
       "\"" + k + "\":" + stageMap(st)
     }.mkString("{", ",", "}")
     // full file: scalar "queries" (same shape as the compact line, all
     // 149 rows, so any consumer finds per-query walls under the same
-    // key either place) + all-rows "q_wcg" triples for adjudication
+    // key either place) + all-rows "q_wcg" triples for adjudication;
+    // the *_cols legends name the triples' fields so the file reads
+    // on its own
     val allRows = results.map(r => (r._1, r._2, r._5, r._6))
     val fullJson =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${qmapScalar(allRows)},"q_wcg":${qmapTriples(allRows)},"failed":$failed,"failed_names":$failedNames,"stages":$stagesAll,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${qmapScalar(allRows)},"q_wcg_cols":["wall_s","cpu_s","gc_s"],"q_wcg":${qmapTriples(allRows)},"failed":$failed,"failed_names":$failedNames,"tag_cols":["wall_s","task_cpu_s","jobs"],"stages":$stagesAll,"sf":"$sfDir"}"""
     val fullPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json"))
     java.nio.file.Files.write(fullPath,
       (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // COMPACT summary as the FINAL stdout line, sized to survive the
     // ~2000-char tail capture: totals + failure list + the 10 slowest
-    // queries + the lake pipeline's stage triple. Keep this under
+    // queries + the lake and m1 pipelines' profiles. Keep this under
     // ~1.5 KB — do NOT add per-query maps here; they belong in the
     // full file above.
     val slowest = results.sortBy(-_._2).take(10)
       .map(r => (r._1, r._2, r._5, r._6))
     val lakeStages = results.collectFirst {
-      case ("lake_finder_pipeline", _, _, st, _, _) if st.nonEmpty => stageMap(st)
+      case ("lake_finder_pipeline", _, _, st, _, _) => stageMap(st)
     }.getOrElse("{}")
-    // m1's stage timers ride the compact line too: the query's
+    // m1's stage tags ride the compact line too: the query's
     // round-to-round variance (10-16 s across driver records) can only
     // be attributed to a stage if the driver record CARRIES the stages.
     val m1Stages = results.collectFirst {
-      case ("m1_dbscan", _, _, st, _, _) if st.nonEmpty => stageMap(st)
+      case ("m1_dbscan", _, _, st, _, _) => stageMap(st)
     }.getOrElse("{}")
     // "queries": scalar walls of the 10 slowest (driver-parsable);
     // "q_wcg": [wall,cpu,gc] for the 4 slowest only — the full file
     // has all of them, and the compact line must stay under the
     // ~2000-char stdout tail the driver captures (measured 1823-1840
-    // chars with 5 triples once the dbscan_sizing/maxcell stage rows
-    // landed; 4 triples buys the margin back).
+    // chars with 5 triples in r16; 4 triples buys the margin back).
     val compact =
       s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},"failed":$failed,"failed_names":$failedNames,"queries":${qmapScalar(slowest)},"q_wcg":${qmapTriples(slowest.take(4))},"lake_stages":$lakeStages,"m1_stages":$m1Stages,"sf":"$sfDir","full":"${fullPath.toAbsolutePath}"}"""
     spark.stop()

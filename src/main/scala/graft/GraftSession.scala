@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place the engine's hardened local-session configuration
-  * lives. Every JVM entry point (Bench, Verify, BenchOne, the test
-  * harness) builds through here so a lesson learned in one surface —
-  * usually the hard way, in a driver bench record — is automatically
-  * carried by all of them:
+  * lives. Every JVM entry point builds through here — the three mains
+  * (`graft.Bench`, the timing record; `graft.Verify`, the correctness
+  * dump; `graft.PlanDump`, the executed-plan audit) and the test
+  * harness — so a lesson learned in one surface — usually the hard
+  * way, in a driver bench record — is automatically carried by all of
+  * them:
   *
   *  - `spark.sql.shuffle.partitions` = worker threads, not the 200
   *    default (local mode: 200 partitions = 6x task-scheduling
@@ -46,10 +48,4 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.ui.explainMode", "simple")
-      // recentProgress is a ring buffer (default 100 entries); the
-      // streaming sq_* attribution sums it, so a long run would
-      // silently undercount. 10k entries of a few KB each is noise
-      // next to the heap, and StreamingQueries flags truncation if
-      // even this is ever hit.
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
 }

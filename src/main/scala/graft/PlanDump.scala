@@ -34,7 +34,7 @@ object PlanDump {
       println(s"\n========== $name ==========")
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      Thread.sleep(2000) // listener bus drains async
+      Profile.drain(spark) // the listener bus delivers async
       import scala.jdk.CollectionConverters._
       plans.asScala.zipWithIndex.foreach { case (qe, i) =>
         val lines = qe.executedPlan.toString.linesIterator

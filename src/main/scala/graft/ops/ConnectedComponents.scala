@@ -182,9 +182,6 @@ object ConnectedComponents {
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     val nEdges = e.count()
-    // residual-graph size in the bench record: the contract stage's
-    // cost driver, and the number that decides which solver runs
-    graft.Stages.add("cc_edges", nEdges.toDouble)
     if (nEdges <= singleTaskMax) {
       // single-task-solvable graph => the label table is bounded by
       // 2 x singleTaskMax nodes, i.e. broadcastable by construction.

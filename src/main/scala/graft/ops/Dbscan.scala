@@ -148,9 +148,7 @@ object Dbscan {
     // of hash-relation build per task — inside the execution memory
     // of a 4-core/8 GB executor; override via
     // spark.graft.dbscan.shjMaxBuildPerPartition for bigger tasks.
-    // The hottest-cell count rides the bench record (dbscan_maxcell)
-    // so the guard's input is a recorded quantity at every scale.
-    val sizing = graft.Stages.time("dbscan_sizing") {
+    val sizing = graft.Profile.stage("dbscan_sizing") {
       home.groupBy((0 until d).map(i => col(s"_c$i")): _*)
         .agg(count(lit(1)).as("_n"))
         .agg(max(col("_n")), sum(col("_n"))).head()
@@ -162,7 +160,6 @@ object Dbscan {
     val parts =
       math.max(1, spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val estBuildPerPartition = totalPts / parts + maxCell
-    graft.Stages.add("dbscan_maxcell", maxCell.toDouble)
     val homeSide =
       if (estBuildPerPartition <= shjBound) home.hint("shuffle_hash") else home
     val pairs = homeSide.join(halo, joinCond)
@@ -188,7 +185,7 @@ object Dbscan {
     val nonCorePaired = degrees.filter(col("deg") + 1 < minPts)
       .select(col("src")).persist()
     // also materializes home, pairs and degrees (first eager barrier)
-    val nNonCore = graft.Stages.time("dbscan_pairs") { nonCorePaired.count() }
+    val nNonCore = graft.Profile.stage("dbscan_pairs") { nonCorePaired.count() }
     val nonCoreBroadcastable = nNonCore <= 4000000L // ~32 MB of longs
     val coreIds =
       if (minPts <= 1) home.select(col(idCol).as("cid"))
@@ -224,23 +221,21 @@ object Dbscan {
     // join-output partition, whose spanning forest preserves the
     // link; the per-block union-find then sees it via the forest rows
     // (pinned by DbscanSpec's invariance properties).
-    val localRep = graft.Stages.time("dbscan_localrep") {
-      val forest = coreCore(pairs.filter(col("_intra")))
-        .filter(col("src") < col("dst"))
-        .select(col("src").cast("long"), col("dst").cast("long"),
-          col("_sbk").cast("long"))
-        .as[(Long, Long, Long)]
-        .mapPartitions(ConnectedComponents.forestPartition)
-      val lr = forest.toDF("_n", "_r", "_sbk")
-        .repartition(col("_sbk"))
-        .select(col("_n").cast("long"), col("_r").cast("long"))
-        .as[(Long, Long)]
-        .mapPartitions(ConnectedComponents.unionFindPartition)
-        .toDF(idCol, "_lrep")
-        .persist()
-      lr.count() // materialize so the stage timer isolates contraction
-      lr
-    }
+    // Persisted, not materialized here: its first consumer is the
+    // residual-graph build inside the dbscan_contract stage below.
+    val localRep = coreCore(pairs.filter(col("_intra")))
+      .filter(col("src") < col("dst"))
+      .select(col("src").cast("long"), col("dst").cast("long"),
+        col("_sbk").cast("long"))
+      .as[(Long, Long, Long)]
+      .mapPartitions(ConnectedComponents.forestPartition)
+      .toDF("_n", "_r", "_sbk")
+      .repartition(col("_sbk"))
+      .select(col("_n").cast("long"), col("_r").cast("long"))
+      .as[(Long, Long)]
+      .mapPartitions(ConnectedComponents.unionFindPartition)
+      .toDF(idCol, "_lrep")
+      .persist()
 
     // 4b. GLOBAL residual graph: cross-block edges mapped to local
     // roots, deduped — only boundary components survive, shrinking the
@@ -268,8 +263,9 @@ object Dbscan {
     // graph too large for one task (chain-of-blocks topologies at
     // extreme scale).
     // label()'s edge count is the second eager barrier: it pulls the
-    // local union-find contraction and the residual-graph distinct
-    val labels = graft.Stages.time("dbscan_contract") {
+    // local union-find contraction (localRep's first materialization)
+    // and the residual-graph distinct
+    val labels = graft.Profile.stage("dbscan_contract") {
       ConnectedComponents.label(reduced, "src", "dst",
         singleTaskMax = residualUnionFindMax)
     }
@@ -304,11 +300,8 @@ object Dbscan {
         Seq("src"))
       .select(col("src"), col("dst"))
       .persist()
-    // materialize, then free the 24M-pair cache. Timed as its own
-    // stage: this scan of the full pair cache was the one eager
-    // barrier not covered by a stage timer, hiding ~1-3 s of the
-    // operator's wall time from the per-stage record.
-    graft.Stages.time("dbscan_border") { borderPairs.count() }
+    // materialize, then free the 24M-pair cache
+    graft.Profile.stage("dbscan_border") { borderPairs.count() }
     pairs.unpersist(false)
     val borderLabels = borderPairs
       .join(coreLabeled.select(col(idCol).as("dst"), col("cluster").as("label")), "dst")
@@ -320,7 +313,7 @@ object Dbscan {
     // repeated dbscan calls in a long-lived session would otherwise
     // accumulate cached pair joins unboundedly. Downstream consumers
     // read the checkpointed blocks.
-    val out = graft.Stages.time("dbscan_assemble") {
+    val out = graft.Profile.stage("dbscan_assemble") {
       val labeledAll = coreLabeled.unionByName(borderLabels)
       val res =
         if (includeNoise)

@@ -66,10 +66,6 @@ object Embeddings {
       (maxAbs / lit(127.0)).cast("double").as("scale"))
   }
 
-  /** Inverse of [[quantizeInt8]]: codes * scale, as array<double>. */
-  def dequantizeInt8(q: Column): Column =
-    transform(q.getField("codes"), c => c.cast("double") * q.getField("scale"))
-
   /** Exact cosine top-k of `corpus` rows for each query row.
     * `queries` must be small (it is broadcast); corpus streams.
     */
@@ -106,37 +102,6 @@ object Embeddings {
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col(qIdCol), col("rank"), col(idCol), col("cos"))
-  }
-
-  /** LSH hash width for a corpus of `n` vectors: enough sign bits
-    * that the EXPECTED bucket occupancy `n / 2^bits` stays at
-    * `targetBucket` — the same corpus-count-derived-geometry rule as
-    * [[graft.ops.NearDup.simhashKeyBlocks]] (fixed hash widths make
-    * per-query candidate volume grow linearly with the corpus; one
-    * extra bit per corpus doubling holds it flat). The bench queries
-    * pin bits explicitly for oracle stability; a production caller
-    * sizes with this. Capped at 62 (bucket ids pack into a long).
-    */
-  def lshBitsFor(n: Long, targetBucket: Long = 1024L): Int = {
-    require(targetBucket >= 1, s"targetBucket >= 1 required, got $targetBucket")
-    var bits = 0
-    while (bits < 62 && (n >> bits) > targetBucket) bits += 1
-    math.max(bits, 1)
-  }
-
-  /** IVF list count for a corpus of `n` vectors: cells sized to
-    * `targetCell` vectors each (the sqrt(n)-ish rule every IVF
-    * deployment uses, expressed as an explicit occupancy target).
-    * Probing `nprobe` cells then scans ~`nprobe * targetCell`
-    * candidates per query REGARDLESS of corpus size — the flat-cost
-    * scale path; the k-means training cost is O(nlist * dim) driver
-    * state, which at the default target stays far below broadcast
-    * limits (10^11 vectors -> ~10^8 lists is past the driver-model
-    * tier; shard the coarse quantizer or train it offline there).
-    */
-  def ivfNlistFor(n: Long, targetCell: Long = 4096L): Int = {
-    require(targetCell >= 1, s"targetCell >= 1 required, got $targetCell")
-    math.max(1L, math.min((n + targetCell - 1) / targetCell, 1L << 20)).toInt
   }
 
   /** Deterministic random hyperplanes: `bits` planes in `dim`

@@ -139,7 +139,11 @@ object ExactMedian {
     * whose value column can carry -0.0/NaN (ours cannot: deviations
     * are abs(), lake dhdt is noise-floored) would see those collapse.
     *
-    * @return (groupCols..., medOut, madOut, nOut) — nOut = row count
+    * @return (groupCols..., medOut, madOut, nOut) — nOut counts the
+    *         group's NON-NULL values only (null values are dropped
+    *         before counting, as the median and MAD ignore them), so
+    *         the lake pipeline's `n_ring` is the number of ring points
+    *         with a non-null dhdt, not the ring's row count.
     */
   def medianAndMadByValue(
       df: DataFrame, groupCols: Seq[String], valueCol: String,

@@ -71,17 +71,13 @@ object LakeFinder {
     // salting the id-space gives the same separation in one)
     val salted = inBasins.withColumn("sid",
       col("id") * 2 + when(col("sign") < 0, 0).otherwise(1))
-    // Dbscan.dbscan ends in an EAGER localCheckpoint, so this call's
-    // wall time IS the clustering stage — record it for the bench
     // includeNoise = false: the pipeline drops noise immediately, so
     // dbscan skips the full-id left join and never materializes
     // O(points) noise rows
-    val clustered = graft.Stages.time("dbscan") {
-      Dbscan.dbscan(
-        salted.withColumn("y_salt",
-          col("y") + when(col("sign") < 0, lit(0.0)).otherwise(lit(1e9))),
-        "sid", Seq("x", "y_salt"), eps, minPts, includeNoise = false)
-    }
+    val clustered = Dbscan.dbscan(
+      salted.withColumn("y_salt",
+        col("y") + when(col("sign") < 0, lit(0.0)).otherwise(lit(1e9))),
+      "sid", Seq("x", "y_salt"), eps, minPts, includeNoise = false)
     // The label join stays on the optimizer's choice: a shuffle_hash
     // pin here was A/B'd in r15 (warm 12.69 s vs 12.6 s — neutral; the
     // sorts it removes are label-table-sized, not corpus-sized) and
@@ -167,9 +163,8 @@ object LakeFinder {
       ringPts, Seq("lake_label"), "dhdt", "outer_med", "outer_mad", "n_ring")
 
     // everything after clustering (size guards, hulls, ring stats,
-    // activity gate) executes inside this eager checkpoint — the
-    // second timed stage of the pipeline
-    val out = graft.Stages.time("hulls_rings_gate") {
+    // activity gate) executes inside this eager checkpoint
+    val out = graft.Profile.stage("hulls_rings_gate") {
       lakes
         .join(ringStats, Seq("lake_label"), "left")
         .withColumn("is_active",

@@ -65,11 +65,11 @@ object LakeQueries extends QueryPack {
     // the single-threaded driver re-analyzes it per job (see
     // LakeFinder's candidates checkpoint — same r15 measurement).
     // The checkpoint IS the input-prep materialization, so it owns
-    // the m1_input_prep stage timer; the sizing count below then
+    // the m1_input_prep stage tag; the sizing count below then
     // scans checkpointed blocks (~free), which also means a supplied
     // countHint no longer changes what gets materialized — only the
     // eps formula input, exactly like the simhash corpusCount hint.
-    val pts = graft.Stages.time("m1_input_prep") {
+    val pts = graft.Profile.stage("m1_input_prep") {
       blobPoints(s, dir).lineageCut()
     }
     // density-adaptive eps: target ~25 expected neighbors per
@@ -152,9 +152,9 @@ object LakeQueries extends QueryPack {
     // eager localCheckpoint (same r15 lineage-cut as m1 above): the
     // distinct + projection prep otherwise re-enters driver analysis
     // under every findLakes interior action. Owns the eps_estimate
-    // timer — it IS the sizing-scan materialization; the count below
+    // tag — it IS the sizing-scan materialization; the count below
     // reads checkpointed blocks (~free)
-    val ptsP = graft.Stages.time("eps_estimate") { pts.lineageCut() }
+    val ptsP = graft.Profile.stage("eps_estimate") { pts.lineageCut() }
     // density-adaptive eps (see m1_dbscan): ~25 expected
     // neighbors/point keeps the DBSCAN pair join linear at any SF.
     // 25, not the earlier 40: the pair table is the operator's

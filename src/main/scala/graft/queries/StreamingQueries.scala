@@ -61,49 +61,11 @@ object StreamingQueries extends QueryPack {
     // relational oracles re-verify every run.
     spark.conf.set(key, statePartitions.toString)
     try {
-      val t0 = System.nanoTime()
-      val q = out.writeStream.format("memory").queryName(name)
+      // micro-batch attribution (sq_* rows of the bench record) comes
+      // from the query's progress events — see [[graft.Profile]]
+      out.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // Micro-batch attribution into the bench record (the streaming
-      // analogue of the DBSCAN stage timers): when a driver-vs-builder
-      // wall-time spread appears on UNCHANGED streaming code (the
-      // round-11 record billed 171.7 s to this family vs ~20 s in
-      // r10), the progress events say WHERE it landed — operator time
-      // (addBatch), state-store commits, planning, or outside every
-      // trigger entirely (sq_wall minus sq_trigger = micro-batch
-      // scheduling + sink/offset-log machinery + ambient host noise).
-      // recentProgress is a ring buffer capped at
-      // spark.sql.streaming.numRecentProgressUpdates (default 100); a
-      // run with more micro-batches would silently undercount every
-      // sq_* metric while sq_wall stayed full (round-12 advice). These
-      // AvailableNow file-source queries produce a handful of batches,
-      // so hitting the cap means the attribution is broken — flag it
-      // in the record rather than skew it silently.
-      val progs = q.recentProgress
-      val progCap = spark.conf
-        .getOption("spark.sql.streaming.numRecentProgressUpdates")
-        .map(_.toInt).getOrElse(100)
-      graft.Stages.add("sq_progress_truncated",
-        if (progs.length >= progCap) 1.0 else 0.0)
-      def sumMs(k: String): Double = progs.map { p =>
-        val v = p.durationMs.get(k)
-        if (v == null) 0.0 else v.toDouble
-      }.sum / 1000.0
-      val st = progs.flatMap(_.stateOperators)
-      graft.Stages.add("sq_wall", (System.nanoTime() - t0) / 1e9)
-      graft.Stages.add("sq_batches", progs.length.toDouble)
-      graft.Stages.add("sq_trigger", sumMs("triggerExecution"))
-      graft.Stages.add("sq_addbatch", sumMs("addBatch"))
-      graft.Stages.add("sq_planning", sumMs("queryPlanning"))
-      graft.Stages.add("sq_offsets",
-        sumMs("walCommit") + sumMs("commitOffsets") + sumMs("latestOffset")
-          + sumMs("getBatch"))
-      graft.Stages.add("sq_state_commit", st.map(_.commitTimeMs).sum / 1000.0)
-      graft.Stages.add("sq_state_update",
-        st.map(_.allUpdatesTimeMs).sum / 1000.0)
-      graft.Stages.add("sq_state_evict",
-        st.map(_.allRemovalsTimeMs).sum / 1000.0)
+        .awaitTermination()
     } finally spark.conf.set(key, prev)
   }
 

@@ -9,7 +9,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Spark 4 made `ExpressionUtils` (and the whole Column-node layer)
   * private[sql]; third-party expression libraries conventionally
   * expose it via a shim in an org.apache.spark.sql subpackage. This is
-  * the only place the engine reaches into Spark internals.
+  * the only place the engine reaches into Spark internals: the Column
+  * layer, the function registry, and the listener bus that
+  * [[graft.Profile]] reads.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -28,4 +30,22 @@ object Bridge {
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", name),
       builder)
   }
+
+  /** Block until every event already posted to the listener bus has
+    * been delivered to every listener (10 s bound, then
+    * `TimeoutException`). After an action returns, its job, task,
+    * SQL-execution and streaming-progress events are all posted, so
+    * one call makes a listener's view of that action complete.
+    */
+  def waitForListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** `observe()` metrics of a finished SQL execution, empty for a
+    * failed one or an event that carries no QueryExecution.
+    */
+  def observedMetrics(
+      e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : Map[String, org.apache.spark.sql.Row] =
+    if (e.qe == null || e.executionFailure.isDefined) Map.empty
+    else e.qe.observedMetrics
 }

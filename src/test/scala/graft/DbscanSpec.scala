@@ -170,19 +170,11 @@ class DbscanSpec extends SparkSpec {
           .collect()
           .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
           .toMap
-        // the QueryExecutionListener bus drains async (same wait as
-        // PlanDump): poll until the pair join's plan has arrived, then
-        // until the queue stops growing, so this run's events cannot
-        // leak into the NEXT run's window (unregister drops the rest)
-        val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+        // the QueryExecutionListener bus delivers async: drain it so
+        // this run's plans are all in, and none can leak into the NEXT
+        // run's window
+        Profile.drain(spark)
         import scala.jdk.CollectionConverters._
-        while (System.nanoTime() < deadline &&
-            pairJoinPlans(joins.asScala.toSeq).isEmpty)
-          Thread.sleep(100)
-        var last = -1
-        while (System.nanoTime() < deadline && joins.size != last) {
-          last = joins.size; Thread.sleep(500)
-        }
         spark.listenerManager.unregister(listener)
         (out, joins.asScala.toSeq)
       } finally {

@@ -28,31 +28,6 @@ class EmbeddingsSpec extends SparkSpec {
     }
   }
 
-  test("index sizing rules: bits/nlist grow with the corpus, occupancy stays at target") {
-    // LSH: one extra bit per corpus doubling once past the target
-    assert(Embeddings.lshBitsFor(0) == 1)
-    assert(Embeddings.lshBitsFor(1024) == 1)   // at/below target: minimum width
-    assert(Embeddings.lshBitsFor(2048) == 1)   // 2048 >> 1 = 1024 <= target
-    assert(Embeddings.lshBitsFor(4096) == 2)
-    assert(Embeddings.lshBitsFor(1L << 30) == 20)
-    assert(Embeddings.lshBitsFor(Long.MaxValue) == 53) // 2^63-1 >> 53 = 1023
-    assert(Embeddings.lshBitsFor(Long.MaxValue, 1) == 62) // hard cap
-    // expected occupancy never exceeds target (for n past the minimum)
-    for (n <- Seq(10000L, 1000000L, 100000000L, 10000000000L)) {
-      val b = Embeddings.lshBitsFor(n)
-      assert((n >> b) <= 1024, s"occupancy ${n >> b} above target at n=$n")
-    }
-    // IVF: ceil(n / targetCell), capped
-    assert(Embeddings.ivfNlistFor(0) == 1)
-    assert(Embeddings.ivfNlistFor(4096) == 1)
-    assert(Embeddings.ivfNlistFor(4097) == 2)
-    assert(Embeddings.ivfNlistFor(1L << 40) == (1 << 20)) // cap
-    // both monotone in n
-    val ns = Seq(1L, 5000L, 1000000L, 1L << 33)
-    assert(ns.map(Embeddings.lshBitsFor(_)) == ns.map(Embeddings.lshBitsFor(_)).sorted)
-    assert(ns.map(Embeddings.ivfNlistFor(_)) == ns.map(Embeddings.ivfNlistFor(_)).sorted)
-  }
-
   test("ANN LSH: same-bucket candidates only, recall above bucket-chance") {
     val q = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))

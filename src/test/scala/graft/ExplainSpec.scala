@@ -444,9 +444,8 @@ class ExplainSpec extends SparkSpec {
     // store the (cheap) QueryExecution refs in the listener and
     // stringify AFTER the drain wait — an executedPlan.toString of a
     // deeply-cached interior plan can run to tens of MB and take
-    // seconds, and doing that inside onSuccess starves the
-    // stabilization loop below into giving up before the interesting
-    // (late) plans arrive
+    // seconds, and doing that inside onSuccess would hold up the
+    // listener bus for every later event
     val ques = new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.sql.execution.QueryExecution]()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -459,17 +458,7 @@ class ExplainSpec extends SparkSpec {
     spark.listenerManager.register(l)
     try {
       SparkEntry.queries(name)(spark, sf001).collect()
-      // the listener bus is async: wait (bounded at 15 s) until the
-      // count has been stable for a full second
-      val deadline = System.nanoTime() + 15000000000L
-      var stableSince = System.nanoTime()
-      var last = ques.size()
-      while (System.nanoTime() < deadline &&
-          System.nanoTime() - stableSince < 1000000000L) {
-        Thread.sleep(100)
-        val n = ques.size()
-        if (n != last) { last = n; stableSince = System.nanoTime() }
-      }
+      Profile.drain(spark) // the listener bus delivers async
     } finally spark.listenerManager.unregister(l)
     scala.jdk.CollectionConverters.CollectionHasAsScala(ques).asScala.toSeq
       .map(_.executedPlan.toString)

@@ -57,31 +57,38 @@ class LakeFinderSpec extends SparkSpec {
 
   test("count hint == measured count: identical lake table, sizing count skipped") {
     import graft.queries.LakeQueries
-    // Since the r15 lineage cut, eps_estimate / m1_input_prep time the
+    // Since the r15 lineage cut, eps_estimate / m1_input_prep tag the
     // EAGER input checkpoint — materialization dbscan needs regardless
-    // of the hint — so the stage key is present in BOTH runs. What the
+    // of the hint — so the stage tag is present in BOTH runs. What the
     // hint skips is the sizing COUNT over that input; its effect is
     // observable only through the eps formula, so the contract under
     // test is output identity: hint == measured count must reproduce
     // the lake table bit-for-bit.
-    Stages.drain()
-    val measured = LakeQueries.lakePipeline(spark, sf001, None).collect()
-    val measuredStages = Stages.drain().toMap
-    assert(measuredStages.contains("eps_estimate"),
-      "unhinted run must pay the input-prep materialization")
-    val nTrue = measured.map(_.getAs[Long]("n_points")).sum +
-      measured.map(_.getAs[Long]("n_ring")).sum
-    val hinted = LakeQueries.lakePipeline(spark, sf001, Some(nTrue)).collect()
-    Stages.drain()
-    assert(hinted.toSeq == measured.toSeq,
-      "hinted pipeline diverged from measured pipeline")
-    // m1 too: hint == measured reproduces the cluster table exactly
-    val m1Measured = LakeQueries.m1Dbscan(spark, sf001, None)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(Stages.drain().toMap.contains("m1_input_prep"))
-    val nM1 = m1Measured.toSeq.map(_._2).sum
-    val m1Hinted = LakeQueries.m1Dbscan(spark, sf001, Some(nM1))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(m1Hinted == m1Measured)
+    val profile = new Profile.Listener
+    spark.sparkContext.addSparkListener(profile)
+    def window(): Map[String, String] = {
+      Profile.drain(spark)
+      try profile.snapshot().toMap finally profile.reset()
+    }
+    try {
+      window()
+      val measured = LakeQueries.lakePipeline(spark, sf001, None).collect()
+      assert(window().contains("eps_estimate"),
+        "unhinted run must pay the input-prep materialization")
+      val nTrue = measured.map(_.getAs[Long]("n_points")).sum +
+        measured.map(_.getAs[Long]("n_ring")).sum
+      val hinted = LakeQueries.lakePipeline(spark, sf001, Some(nTrue)).collect()
+      assert(hinted.toSeq == measured.toSeq,
+        "hinted pipeline diverged from measured pipeline")
+      // m1 too: hint == measured reproduces the cluster table exactly
+      window()
+      val m1Measured = LakeQueries.m1Dbscan(spark, sf001, None)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(window().contains("m1_input_prep"))
+      val nM1 = m1Measured.toSeq.map(_._2).sum
+      val m1Hinted = LakeQueries.m1Dbscan(spark, sf001, Some(nM1))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(m1Hinted == m1Measured)
+    } finally spark.sparkContext.removeSparkListener(profile)
   }
 }

@@ -356,9 +356,7 @@ class NearDupSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       NearDup.minhashCandidates(corpus, "doc_id", "text", maxBucketSize = 10).count()
-      // listener delivery is async — poll briefly
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      Profile.drain(spark) // listener delivery is async
       assert(seen.isDefined, "observe metric never delivered")
       val r = seen.get
       // all 8 bands collapse the 60 identical docs into one hot bucket
