@@ -118,6 +118,11 @@ object Bench {
       if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
         jitBean.getTotalCompilationTime
       else -1L
+    // classes Spark compiled during the query (cg_n): every cache miss
+    // of CodeGenerator's compiled-class cache, on any thread, adds one
+    // sample to this histogram
+    def compiledClasses(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
@@ -143,6 +148,7 @@ object Bench {
       Profile.drain(spark)
       profile.reset()
       val jit0 = jitMillis()
+      val cg0 = compiledClasses()
       val cpu0 = osBean.getProcessCpuTime
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
@@ -156,8 +162,10 @@ object Bench {
       val gcSecs = (gcMillis() - gc0) / 1e3
       Profile.drain(spark) // untimed
       val jit1 = jitMillis()
+      val cg1 = compiledClasses()
       val stages = profile.snapshot() ++
-        (if (jit0 >= 0 && jit1 >= 0) Seq("tk_jit" -> ms((jit1 - jit0) / 1e3)) else Nil)
+        (if (jit0 >= 0 && jit1 >= 0) Seq("tk_jit" -> ms((jit1 - jit0) / 1e3)) else Nil) :+
+        ("cg_n" -> (cg1 - cg0).toString)
       (name, secs, ok, stages, cpuSecs, gcSecs)
     }
     // DRIVER CONTRACT (restored r16, VERDICT r15 item 1): "queries" is
@@ -191,11 +199,21 @@ object Bench {
     // full file: scalar "queries" (same shape as the compact line, all
     // 149 rows, so any consumer finds per-query walls under the same
     // key either place) + all-rows "q_wcg" triples for adjudication;
-    // the *_cols legends name the triples' fields so the file reads
-    // on its own
+    // the *_cols legends name the triples' fields and row_legend
+    // Bench's own per-query rows, so the file reads on its own;
+    // cg_total (classes compiled over the whole run, warmups included)
+    // and metaspace_mb (class metadata at its end) size the
+    // compiled-class cache, see GraftSession
     val allRows = results.map(r => (r._1, r._2, r._5, r._6))
+    val rowLegend =
+      """{"tk_jit":"JIT compiler seconds (CompilationMXBean delta)","cg_n":"generated classes compiled (CodegenMetrics compilation count delta)"}"""
+    val metaspaceMb = {
+      import scala.jdk.CollectionConverters._
+      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+        .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum / 1048576.0
+    }
     val fullJson =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${qmapScalar(allRows)},"q_wcg_cols":["wall_s","cpu_s","gc_s"],"q_wcg":${qmapTriples(allRows)},"failed":$failed,"failed_names":$failedNames,"tag_cols":["wall_s","task_cpu_s","jobs"],"stages":$stagesAll,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${qmapScalar(allRows)},"q_wcg_cols":["wall_s","cpu_s","gc_s"],"q_wcg":${qmapTriples(allRows)},"failed":$failed,"failed_names":$failedNames,"tag_cols":["wall_s","task_cpu_s","jobs"],"row_legend":$rowLegend,"stages":$stagesAll,"cg_total":${compiledClasses()},"metaspace_mb":${ms(metaspaceMb)},"sf":"$sfDir"}"""
     val fullPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json"))
     java.nio.file.Files.write(fullPath,

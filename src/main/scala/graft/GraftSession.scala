@@ -28,6 +28,27 @@ import org.apache.spark.sql.SparkSession
   *    burn throttles every AQE replan. "simple" keeps the events,
   *    drops the numbering pass.
   *  - UI off (no jetty, no event-log retention in a bench JVM).
+  *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]],
+  *    not Spark's 100. Spark keeps compiled classes in one JVM-wide
+  *    LRU keyed by (context class loader, source), so a class used on
+  *    the driver thread and in tasks takes two entries. The `corpus`
+  *    benchmark's three text calls compile 112 classes with the cap
+  *    lifted, so at 100 every pass evicted and recompiled most of
+  *    them: 675 compiles per run (1,223 generated classes loaded,
+  *    nested ones included) against 112 (213 loaded). The cap is
+  *    sized from full `graft.Bench` sf0.1 runs (149 queries,
+  *    `local[4]`): the timed queries compile 1,868 classes with the
+  *    cap lifted and the same 1,868 at 4096, where the whole run,
+  *    warmups included, compiles 2,016 and ends with 220 MB of
+  *    metaspace. At 100 the run compiles 2,945 and ends with 204 MB.
+  *    4096 entries hold the working set twice over. Spark reads the
+  *    value once, when `CodeGenerator` is first initialized in the
+  *    JVM, so only the first session's conf counts, and only if
+  *    nothing compiled before it; `CodegenCacheSpec` pins the effect.
+  *  - `spark.cleaner.referenceTracking.cleanCheckpoints`: the
+  *    ContextCleaner deletes a reliable checkpoint's files once its
+  *    RDD is collected, so `Lineage.cut`'s `reliable` mode does not
+  *    leave every intermediate on the checkpoint store.
   *
   * The HEAP-side lessons (Xms=Xmx, AlwaysPreTouch, 512m code cache,
   * CICompilerCount=16 — the round-11 page-commit-storm forensics)
@@ -36,6 +57,9 @@ import org.apache.spark.sql.SparkSession
   * runtime so a build.sbt refactor cannot silently drop them.
   */
 object GraftSession {
+
+  /** Entries of Spark's compiled-class cache; see the list above. */
+  val CodegenCacheEntries = 4096
 
   /** Builder with the shared hardened configs applied; callers add
     * surface-specific extras (app name, AQE knobs) before getOrCreate.
@@ -48,4 +72,6 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.ui.explainMode", "simple")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 }

@@ -32,8 +32,11 @@ import org.apache.spark.sql.DataFrame
   *   - "local" (default): eager `localCheckpoint(true)` — identical
   *     behavior to every prior round.
   *   - "reliable": eager `checkpoint(true)` into
-  *     `spark.graft.checkpoint.dir` (required on a cluster; defaults
-  *     to a session temp dir so local runs just work).
+  *     `spark.graft.checkpoint.dir` (required on a non-local master,
+  *     where a driver temp dir is no reliable storage: the cut throws
+  *     instead; a local master defaults to a temp dir so local runs
+  *     just work). GraftSession turns on the ContextCleaner's
+  *     checkpoint cleanup, so the files go once the RDD is collected.
   * Results are mode-invariant by construction (both materialize the
   * same rows); LineageSpec pins that on a declared query.
   */
@@ -44,18 +47,27 @@ object Lineage {
     spark.conf.get("spark.graft.lineage.cut", "local") match {
       case "reliable" =>
         val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty) {
-          val dir = spark.conf.getOption("spark.graft.checkpoint.dir")
-            .getOrElse(java.nio.file.Files
-              .createTempDirectory("graft-ckpt").toString)
-          sc.setCheckpointDir(dir)
-        }
+        if (sc.getCheckpointDir.isEmpty)
+          sc.setCheckpointDir(checkpointDir(
+            spark.conf.getOption("spark.graft.checkpoint.dir"), sc.isLocal))
         df.checkpoint(eager = true)
       case "local" => df.localCheckpoint(eager = true)
       case other => throw new IllegalArgumentException(
         s"spark.graft.lineage.cut must be local|reliable, got '$other'")
     }
   }
+
+  /** The `reliable` mode's checkpoint dir: the configured one, else a
+    * driver temp dir on a local master. A non-local master without one
+    * fails: its executors cannot share a driver-local dir.
+    */
+  def checkpointDir(configured: Option[String], isLocal: Boolean): String =
+    configured.getOrElse {
+      if (!isLocal) throw new IllegalArgumentException(
+        "spark.graft.lineage.cut=reliable on a non-local master needs " +
+          "spark.graft.checkpoint.dir (reliable storage, e.g. HDFS)")
+      java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    }
 
   /** Chain syntax so operator dataflows read top-to-bottom:
     * `df.lineageCut()` == `Lineage.cut(df)`.

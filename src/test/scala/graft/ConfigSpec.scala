@@ -20,6 +20,8 @@ class ConfigSpec extends SparkSpec {
     assert(c.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(c.get("spark.ui.enabled") == "false")
     assert(c.get("spark.sql.shuffle.partitions") == "8")
+    assert(c.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
   }
 
   test("the forked JVM carries the heap-hardening flags from build.sbt") {

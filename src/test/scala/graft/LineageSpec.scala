@@ -5,7 +5,9 @@ package graft
   * deployment mode, survives executor loss) must produce results
   * identical to the default `local` (eager localCheckpoint) on
   * queries that exercise cuts in every operator family that has them
-  * (Text postings, NearDup banding, Dbscan assemble, LakeFinder).
+  * (Text postings, NearDup banding, Dbscan assemble, LakeFinder); and
+  * that `reliable` mode fails fast without a checkpoint dir on a
+  * cluster and leaves its files to the ContextCleaner.
   */
 class LineageSpec extends SparkSpec {
 
@@ -25,6 +27,22 @@ class LineageSpec extends SparkSpec {
       for (n <- names)
         assert(local(n) == reliable(n), s"$n diverged across cut modes")
     } finally spark.conf.unset("spark.graft.lineage.cut")
+  }
+
+  test("reliable mode: a non-local master without a checkpoint dir fails") {
+    val e = intercept[IllegalArgumentException] {
+      Lineage.checkpointDir(None, isLocal = false)
+    }
+    assert(e.getMessage.contains("spark.graft.checkpoint.dir"))
+    assert(Lineage.checkpointDir(Some("hdfs://nn/ckpt"), isLocal = false) == "hdfs://nn/ckpt")
+    val local = Lineage.checkpointDir(None, isLocal = true)
+    assert(new java.io.File(local).isDirectory, local)
+    new java.io.File(local).delete()
+  }
+
+  test("GraftSession hands reliable checkpoints to the ContextCleaner") {
+    assert(spark.sparkContext.getConf
+      .get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
   }
 
   test("unknown mode is rejected loudly") {
