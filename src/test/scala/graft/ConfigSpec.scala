@@ -22,6 +22,8 @@ class ConfigSpec extends SparkSpec {
     assert(c.get("spark.sql.shuffle.partitions") == "8")
     assert(c.get("spark.sql.codegen.cache.maxEntries") ==
       GraftSession.CodegenCacheEntries.toString)
+    assert(spark.sparkContext.getConf
+      .get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
   }
 
   test("the forked JVM carries the heap-hardening flags from build.sbt") {

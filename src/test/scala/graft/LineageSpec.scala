@@ -7,7 +7,7 @@ package graft
   * queries that exercise cuts in every operator family that has them
   * (Text postings, NearDup banding, Dbscan assemble, LakeFinder); and
   * that `reliable` mode fails fast without a checkpoint dir on a
-  * cluster and leaves its files to the ContextCleaner.
+  * cluster.
   */
 class LineageSpec extends SparkSpec {
 
@@ -38,11 +38,6 @@ class LineageSpec extends SparkSpec {
     val local = Lineage.checkpointDir(None, isLocal = true)
     assert(new java.io.File(local).isDirectory, local)
     new java.io.File(local).delete()
-  }
-
-  test("GraftSession hands reliable checkpoints to the ContextCleaner") {
-    assert(spark.sparkContext.getConf
-      .get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
   }
 
   test("unknown mode is rejected loudly") {

@@ -1,13 +1,13 @@
 #!/usr/bin/env python3
 """Query-by-query diff of two graft.Bench full records.
 
-Usage: python3 tools/benchdiff.py A.json B.json [--threshold 0.10]
+Usage: python3 tools/benchdiff.py A.json B.json
 
 A and B are `bench_full.json` files (A the baseline). Prints:
 
 - the geometric mean over the queries both runs completed of the
   per-query wall ratio B/A, beside the ratio of the suite totals;
-- every query whose wall grew by more than the threshold, slowest
+- every query whose wall grew by more than THRESHOLD (10%), slowest
   growth first, with the context that tells a plan regression from a
   starved JVM: its `q_wcg` triple ([wall_s, cpu_s, gc_s]; a wall far
   above cpu/threads + gc means the host, not the plan), its `tk_*`
@@ -21,6 +21,8 @@ Walls are floored at 1 ms so a 0.000 s row cannot zero the geomean.
 import argparse
 import json
 import math
+
+THRESHOLD = 0.10
 
 
 def load(path):
@@ -49,8 +51,6 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split('\n\n')[0])
     ap.add_argument('a')
     ap.add_argument('b')
-    ap.add_argument('--threshold', type=float, default=0.10,
-                    help='report walls that grew by more than this fraction')
     args = ap.parse_args()
     a, wa, fa = load(args.a)
     b, wb, fb = load(args.b)
@@ -65,9 +65,9 @@ def main():
     geo = math.exp(sum(math.log(r) for r in ratios.values()) / len(ratios))
     print(f'per-query wall geomean B/A: {geo:.3f} over {len(both)} queries; '
           f"suite total B/A: {b['value'] / a['value']:.3f}")
-    worse = sorted((q for q in both if ratios[q] > 1 + args.threshold),
+    worse = sorted((q for q in both if ratios[q] > 1 + THRESHOLD),
                    key=lambda q: -ratios[q])
-    print(f'regressed by more than {args.threshold:.0%}: {len(worse)}')
+    print(f'regressed by more than {THRESHOLD:.0%}: {len(worse)}')
     for q in worse:
         print(f'  {q}: {wa[q]:.3f} -> {wb[q]:.3f} s (x{ratios[q]:.2f}) {context(a, b, q)}')
     for label, names in (('failed in A', fa), ('failed in B', fb),
