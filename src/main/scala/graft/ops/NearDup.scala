@@ -541,7 +541,6 @@ object NearDup {
       maxBucketSize: Long = 100000,
       deterministicOnly: Boolean = false,
       keyBlocks: Int = 0,
-      corpusCount: Option[Long] = None,
       distCutMinTokens: Int = 0): DataFrame = {
     val base = docs
       .withColumn("_toks", Text.tokens(col(textCol)))
@@ -549,7 +548,7 @@ object NearDup {
     if (distCutMinTokens <= 0)
       simhashPairsFromSignatures(base.drop("_toks"),
         idCol, "_sim", maxDist, blocks, tables, maxBucketSize,
-        deterministicOnly, keyBlocks, corpusCount)
+        deterministicOnly, keyBlocks)
     else
       simhashPairsFromSignatures(
         // coalesce: size(null tokens) is null, and a null exemption
@@ -564,7 +563,7 @@ object NearDup {
           coalesce(size(col("_toks")) < distCutMinTokens, lit(true)))
           .drop("_toks"),
         idCol, "_sim", maxDist, blocks, tables, maxBucketSize,
-        deterministicOnly, keyBlocks, corpusCount,
+        deterministicOnly, keyBlocks,
         distCutExemptCol = Some("_ncut"))
   }
 
@@ -582,7 +581,6 @@ object NearDup {
       maxBucketSize: Long = 100000,
       deterministicOnly: Boolean = false,
       keyBlocks: Int = 0,
-      corpusCount: Option[Long] = None,
       distCutExemptCol: Option[String] = None): DataFrame = {
     require(64 % blocks == 0, "blocks must divide 64")
     require(blocks >= 4 && blocks <= 16,
@@ -594,11 +592,10 @@ object NearDup {
     val mask = (1L << width) - 1L
     // persist ONLY when the sizing count below will run: since the
     // window refactor the banding stream reads the signatures exactly
-    // once, so with a corpusCount hint (or pinned keyBlocks) a cache
-    // write would be pure overhead at exactly the scale where hints
-    // matter; without the hint the cache keeps the 64-bit fold from
+    // once, so with pinned keyBlocks a cache write would be pure
+    // overhead; otherwise the cache keeps the 64-bit fold from
     // running twice (count + banding).
-    val needCount = keyBlocks <= 0 && corpusCount.isEmpty
+    val needCount = keyBlocks <= 0
     // optional per-doc distance-cut exemption (see [[simhashNearDuplicates]]'s
     // distCutMinTokens): the flag rides the banded rows so the final
     // hamming filter can keep a candidate when EITHER side is exempt
@@ -606,17 +603,11 @@ object NearDup {
     val sigBase = signatures
       .select(Seq(col(idCol), col(sigCol).cast("long").as("_sim")) ++ exCols: _*)
     val sig = if (needCount) sigBase.persist() else sigBase
-    // band-key sizing needs only the corpus CARDINALITY: a caller that
-    // already knows it (every pipeline with an upstream aggregate, and
-    // any 100-TB run where a pre-banding full count() pass is real
-    // money) passes the hint and skips the sizing scan; the default
-    // measures. simhashKeyBlocks is monotone and steps only at
-    // decade-ish boundaries, so an approximate hint (off by even 2x)
-    // almost always lands on the same key width — and the chosen width
-    // stays observable as `key_blocks` either way.
+    // band-key sizing needs only the corpus CARDINALITY; the chosen
+    // width is observable as `key_blocks`
     val r =
       if (keyBlocks > 0) keyBlocks
-      else simhashKeyBlocks(corpusCount.getOrElse(sig.count()), blocks)
+      else simhashKeyBlocks(sig.count(), blocks)
     require(r >= 2 && r <= blocks - 2,
       s"keyBlocks in [2, blocks-2] required (got $r): r=1 is the " +
         "single-block quadratic bomb, r > blocks-2 leaves no pigeonhole " +

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines:
@@ -185,6 +186,49 @@ object Text {
   def jaccard(a: Column, b: Column): Column =
     coalesce(graft.functions.jaccard_sim(a, b), lit(0.0))
 
+  /** BM25's term-frequency saturation and length normalization, and
+    * the query-likelihood Dirichlet prior. The oracle SQL of
+    * `llm_bm25_topk` and `llm_ql_topk` writes the same numbers.
+    */
+  val Bm25K1 = 1.2
+  val Bm25B = 0.75
+  val QlMu = 300.0
+
+  /** Vocabulary size of [[vocabOov]]; its oracle SQL cuts at 32 too. */
+  val VocabSize = 32
+
+  /** (doc_id, term, tf, doc_len) from (doc_id, text) rows: each
+    * document's whitespace tokens counted per term in one
+    * map-side-combined hash aggregate, and the document length taken
+    * from the size of the same token array (doc_id is the corpus key).
+    * The uncut expression under [[postings]], [[vocabOov]] and
+    * [[invertedIndex]].
+    */
+  private def termCounts(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
+      // explode_outer, not explode: for an explode of a column Spark
+      // infers a size(toks) > 0 filter and pushes it below the
+      // projection, which splits the text three times. The null term
+      // rows it emits for token-less docs are dropped instead.
+      .select(col("doc_id"), size(col("toks")).cast("long").as("doc_len"),
+        explode_outer(col("toks")).as("term"))
+      .filter(col("term").isNotNull)
+      .groupBy("doc_id", "term")
+      .agg(count(lit(1)).as("tf"), max(col("doc_len")).as("doc_len"))
+
+  /** The corpus postings table (doc_id, term, tf, doc_len) that the
+    * retrieval and tf-idf operators read their corpus through.
+    *
+    * It is materialized behind one [[graft.Lineage.cut]] because each
+    * operator reads it from two or three consumers (df or cf per term,
+    * corpus statistics, the scoring stream) that prune it to different
+    * columns, so Spark cannot reuse one consumer's shuffle for another:
+    * uncut, the corpus was tokenized and aggregated once per consumer
+    * (3x per bm25 call, the 24.7 s `llm_hybrid_rrf` of the r15 8-core
+    * record). ExplainSpec pins one corpus tokenization per call.
+    */
+  def postings(docs: DataFrame): DataFrame = graft.Lineage.cut(termCounts(docs))
+
   /** Corpus-trained bigram language-model scoring — the relational
     * form of CCNet-style LM quality filtering (Wenzek et al. 2020
     * score documents with an LM and filter on perplexity; here the LM
@@ -201,19 +245,21 @@ object Text {
     * engines; this is the same exact-integer-moments discipline the
     * repetition detector uses).
     *
-    * Scale shape: bigram counting and the count joins are hash
-    * shuffles with map-side combine on the (bounded) vocabulary and
-    * bigram tables; V and the unigram join are dictionary-sized.
-    * Nothing is quadratic in corpus size.
+    * Scale shape: the corpus is tokenized once, behind one
+    * [[graft.Lineage.cut]] of (doc_id, toks) rows that both the
+    * vocabulary size V and the bigram stream read. C(w1) is the sum
+    * of C(w1 w2) over w2 (every bigram counted under w1 has some w2),
+    * so it aggregates the bigram table, not the corpus. Bigram
+    * counting and the count joins are hash shuffles with map-side
+    * combine on the (bounded) vocabulary and bigram tables; V is
+    * dictionary-sized. Nothing is quadratic in corpus size.
     *
     * @return (doc_id, n_bigrams, logprob_micros) — docs with fewer
     *         than 2 tokens have no bigrams and are absent
     */
-  def bigramLogProb(
-      docs: org.apache.spark.sql.DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    val toks = docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+  def bigramLogProb(docs: DataFrame): DataFrame = {
+    val toks = graft.Lineage.cut(
+      docs.select(col("doc_id"), tokens(col("text")).as("toks")))
     val bigrams = toks
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(expr(
@@ -221,7 +267,7 @@ object Text {
           "i -> struct(toks[i - 1] as w1, toks[i] as w2))")).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     val c2 = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-    val c1 = bigrams.groupBy("w1").agg(count(lit(1)).as("c1"))
+    val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
     val vocab = toks
       .select(explode(col("toks")).as("w")).agg(countDistinct(col("w")).as("v"))
     bigrams
@@ -259,12 +305,8 @@ object Text {
     *         < 2 tokens have no LM score and are absent, as in
     *         [[bigramLogProb]]
     */
-  def pplBuckets(
-      docs: org.apache.spark.sql.DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = bigramLogProb(docs, idCol, textCol)
+  def pplBuckets(docs: DataFrame): DataFrame = {
+    val scored = bigramLogProb(docs)
       .withColumn("_avg_lp",
         col("logprob_micros").cast("double") / col("n_bigrams").cast("double"))
     val w = Window.orderBy(col("_avg_lp").desc, col("doc_id"))
@@ -280,15 +322,13 @@ object Text {
     * the classic weighting (smoothed idf: ln((N+1)/(df+1)) + 1, tf
     * normalized by document length), keeping each document's k
     * highest-scoring terms. The whole computation is declarative:
-    *   1. (doc, term) counts — one hash-aggregate shuffle with
-    *      map-side combine,
-    *   2. document length as a window sum over that table (reuses the
-    *      doc partitioning, no extra scan of the corpus),
-    *   3. document frequency — one aggregate over the distinct
-    *      (doc, term) rows, joined back by term (at 100 TB this is a
-    *      shuffle join on the term dictionary; no row ever fans out),
-    *   4. corpus size as a broadcast 1-row aggregate,
-    *   5. per-doc top-k via row_number <= k, which Catalyst executes
+    *   1. (doc, term) counts and document length — the [[postings]]
+    *      table,
+    *   2. document frequency — one aggregate over the (doc, term)
+    *      rows, joined back by term (at 100 TB this is a shuffle join
+    *      on the term dictionary; no row ever fans out),
+    *   3. corpus size as a broadcast 1-row aggregate,
+    *   4. per-doc top-k via row_number <= k, which Catalyst executes
     *      as WindowGroupLimit (partial top-k before the shuffle).
     * Ties break on the term string so ranks are engine-independent,
     * and the smoothed idf quantizes to integer micros at the ln so
@@ -297,23 +337,13 @@ object Text {
     *
     * @return (doc_id, rank, term, tfidf_micros), rank 1..k
     */
-  def tfIdfTopTerms(
-      docs: org.apache.spark.sql.DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      k: Int = 5): org.apache.spark.sql.DataFrame = {
+  def tfIdfTopTerms(docs: DataFrame, k: Int = 5): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    val rankW = w.orderBy(col("score").desc, col("term"))
+    val rankW = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
     val total = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-    // one postings materialization for the two consumers (df table +
-    // scoring stream) — same r16 cut as bm25TopK
-    val tf = graft.Lineage.cut(docs
-      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf_count")))
+    val tf = postings(docs)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df_count"))
     tf
-      .withColumn("doc_len", sum(col("tf_count")).over(w))
       .join(dfreq, "term")
       .crossJoin(broadcast(total))
       // idf quantizes to integer micros at the ln (the bm25TopK
@@ -326,7 +356,7 @@ object Text {
         round((log((col("n_docs") + 1) / (col("df_count") + 1)) + 1)
           * 1e6))
       .withColumn("score",
-        (col("tf_count").cast("double") / col("doc_len"))
+        (col("tf").cast("double") / col("doc_len"))
           * col("idf_micros"))
       .withColumn("rank", row_number().over(rankW))
       .filter(col("rank") <= k)
@@ -335,42 +365,41 @@ object Text {
   }
 
   /** Tokenizer-vocabulary training + per-document OOV stats: build
-    * the top-V word vocabulary by corpus frequency (ties broken by the
-    * term string, so the cut is engine-independent) and report every
-    * document's out-of-vocabulary token count and rate — the standard
-    * pre-tokenizer health check before committing a vocab to a
-    * training run.
+    * the top-[[VocabSize]] word vocabulary by corpus frequency (ties
+    * broken by the term string, so the cut is engine-independent) and
+    * report every document's out-of-vocabulary token count and rate —
+    * the standard pre-tokenizer health check before committing a
+    * vocab to a training run.
     *
-    * Scale shape: word counts are ONE hash aggregate with map-side
-    * combine (dictionary-sized output); the top-V cut is a window
-    * over the dictionary, not the corpus (WindowGroupLimit applies
-    * partial top-V before the single-partition tail — and at a
-    * 10^8-term dictionary the production path is a threshold from the
-    * count distribution instead); the per-doc pass joins the token
-    * stream against the broadcast vocabulary.
+    * Scale shape: both passes read one uncut (doc, term) count table.
+    * Its two readers share one shuffle, which Spark runs once and
+    * reuses (ReusedExchange), so a [[postings]] cut would only add a
+    * job. Corpus word counts are sum(tf) per term (dictionary-sized
+    * output); the top-V cut is a window over the dictionary, not the
+    * corpus (WindowGroupLimit applies partial top-V before the
+    * single-partition tail — and at a 10^8-term dictionary the
+    * production path is a threshold from the count distribution
+    * instead); the per-doc pass joins the counts against the
+    * broadcast vocabulary, with n_tokens the doc's tf sum and n_oov
+    * the tf sum of the terms outside it. (n_tokens is the doc length,
+    * but reading doc_len would keep it in one reader's shuffle only,
+    * and the two exchanges would no longer be the same.)
     *
     * @return (doc_id, n_tokens, n_oov, oov_rate) — oov_rate rounded
     *         to 6 decimals (one exact-integer division)
     */
-  def vocabOov(
-      docs: org.apache.spark.sql.DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      vocabSize: Int = 32): org.apache.spark.sql.DataFrame = {
-    require(vocabSize > 0, s"vocabSize must be positive, got $vocabSize")
-    val words = docs.select(col(idCol).as("doc_id"),
-      explode(tokens(col(textCol))).as("w"))
-    val rankW = org.apache.spark.sql.expressions.Window
-      .orderBy(col("c").desc, col("w"))
-    val vocab = words.groupBy(col("w")).agg(count(lit(1)).as("c"))
+  def vocabOov(docs: DataFrame): DataFrame = {
+    val tf = termCounts(docs)
+    val rankW = Window.orderBy(col("c").desc, col("term"))
+    val vocab = tf.groupBy(col("term")).agg(sum(col("tf")).as("c"))
       .withColumn("_r", row_number().over(rankW))
-      .filter(col("_r") <= vocabSize)
-      .select(col("w"), lit(1).as("_in_vocab"))
-    words
-      .join(broadcast(vocab), Seq("w"), "left")
+      .filter(col("_r") <= VocabSize)
+      .select(col("term"), lit(1).as("_in_vocab"))
+    tf
+      .join(broadcast(vocab), Seq("term"), "left")
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("_in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"))
+      .agg(sum(col("tf")).as("n_tokens"),
+        sum(when(col("_in_vocab").isNull, col("tf")).otherwise(0L)).as("n_oov"))
       .withColumn("oov_rate",
         round(col("n_oov").cast("double") / col("n_tokens").cast("double"), 6))
   }
@@ -385,10 +414,10 @@ object Text {
     *   idf(t)     = ln(1 + (N − df + 0.5)/(df + 0.5))   (Lucene's variant,
     *                non-negative for df ≤ N)
     *
+    * with k1 = [[Bm25K1]] and b = [[Bm25B]].
+    *
     * Scale shape (nothing grows with corpus × queries):
-    *   1. postings (doc, term, tf): one map-side-combined hash
-    *      aggregate; doc length as a window sum over it (reuses the
-    *      doc partitioning);
+    *   1. the [[postings]] table (doc, term, tf, doc_len);
     *   2. N and avgdl: one broadcast 1-row aggregate;
     *   3. the query-term table joined with per-term df is tiny by
     *      contract and BROADCAST into the postings stream — the
@@ -411,27 +440,9 @@ object Text {
     *        are matched (standard bag-of-distinct-terms BM25)
     * @return (query_id, rank, doc_id, score_micros), rank 1..k
     */
-  def bm25TopK(
-      docs: org.apache.spark.sql.DataFrame,
-      queries: org.apache.spark.sql.DataFrame,
-      k: Int = 10, k1: Double = 1.2, b: Double = 0.75):
-      org.apache.spark.sql.DataFrame = {
+  def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    val tf = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    // ONE materialization of the postings+length table (r16, guide
-    // §2.4/§3.3): three consumers below (df per term, corpus stats,
-    // the scoring stream) each re-executed the corpus tokenize +
-    // hash-aggregate + length-window subtree — the stats/df legs run
-    // INSIDE the broadcast build, so the corpus was scanned and
-    // exploded 3x per call and the single executed plan carried ~26
-    // codegen spans (first-execution janino debt billed to the
-    // query). The cut computes it once and every consumer reads the
-    // materialized table.
-    val withLen = graft.Lineage.cut(
-      tf.withColumn("doc_len", sum(col("tf")).over(w)))
+    val withLen = postings(docs)
     val dfreq = withLen.groupBy("term").agg(count(lit(1)).as("df_count"))
     // N and avgdl from the postings table itself (docs with no tokens
     // can match no query term, so excluding them from N/avgdl is the
@@ -463,15 +474,14 @@ object Text {
         round(log(lit(1) + (col("n_docs") - col("df_count") + 0.5)
           / (col("df_count") + 0.5)) * 1e6))
       .select(col("term"), col("query_id"), col("idf_micros"), col("avgdl"))
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
+    val rankW = Window.partitionBy("query_id")
       .orderBy(col("score_micros").desc, col("doc_id"))
     withLen
       .join(broadcast(qside), Seq("term"))
       .withColumn("term_micros",
-        round(col("idf_micros") * (col("tf") * (k1 + 1))
-          / (col("tf") + lit(k1) * (lit(1 - b)
-            + lit(b) * col("doc_len") / col("avgdl")))).cast("long"))
+        round(col("idf_micros") * (col("tf") * (Bm25K1 + 1))
+          / (col("tf") + lit(Bm25K1) * (lit(1 - Bm25B)
+            + lit(Bm25B) * col("doc_len") / col("avgdl")))).cast("long"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("term_micros")).as("score_micros"))
       .withColumn("rank", row_number().over(rankW))
@@ -489,10 +499,10 @@ object Text {
     *   score(q,d) = Σ_{t ∈ q∩d} ln(1 + tf·|C| / (μ·cf(t)))
     *              + |q| · ln(μ / (|d| + μ))
     *
-    * so it needs exactly the postings table BM25 already needs (no
-    * per-(query,doc) zero-tf rows), and shares its scale shape:
-    * postings one map-side agg, the (query term × collection stats)
-    * side broadcast, WindowGroupLimit top-k.
+    * with μ = [[QlMu]], so it needs exactly the [[postings]] table
+    * BM25 already needs (no per-(query,doc) zero-tf rows), and shares
+    * its scale shape: the (query term × collection stats) side
+    * broadcast, WindowGroupLimit top-k.
     *
     * Exactness: both ln() terms quantize to integer micros at the
     * transcendental (the [[bm25TopK]] discipline — the argument of
@@ -504,21 +514,9 @@ object Text {
     * @return (query_id, rank, doc_id, score_micros) — score_micros is
     *         the quantized log-likelihood (negative; higher = better)
     */
-  def queryLikelihoodTopK(
-      docs: org.apache.spark.sql.DataFrame,
-      queries: org.apache.spark.sql.DataFrame,
-      k: Int = 10, mu: Double = 300.0):
-      org.apache.spark.sql.DataFrame = {
+  def queryLikelihoodTopK(docs: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    require(mu > 0, s"mu must be positive, got $mu")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-    val tf = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    // one postings materialization for the three consumers (cf,
-    // collection total, scoring stream) — same r16 cut as bm25TopK
-    val withLen = graft.Lineage.cut(
-      tf.withColumn("doc_len", sum(col("tf")).over(w)))
+    val withLen = postings(docs)
     val cf = withLen.groupBy("term").agg(sum(col("tf")).as("cf"))
     val ctotal = withLen.agg(sum(col("tf")).as("c_total"))
     val qterms = queries
@@ -530,21 +528,20 @@ object Text {
       // exact rational argument: (tf·|C|) stays a long product, one
       // double division, one ln, ONE rounding to the micro grain
       .select(col("term"), col("query_id"), col("cf"), col("c_total"))
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
+    val rankW = Window.partitionBy("query_id")
       .orderBy(col("score_micros").desc, col("doc_id"))
     withLen
       .join(broadcast(qside), Seq("term"))
       .withColumn("term_micros",
         round(log(lit(1) + (col("tf") * col("c_total"))
-          / (lit(mu) * col("cf"))) * 1e6).cast("long"))
+          / (lit(QlMu) * col("cf"))) * 1e6).cast("long"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("term_micros")).as("match_micros"),
         max(col("doc_len")).as("doc_len"))
       .join(broadcast(nq), Seq("query_id"))
       .withColumn("score_micros",
         col("match_micros") + col("n_qterms") *
-          round(log(lit(mu) / (col("doc_len") + lit(mu))) * 1e6).cast("long"))
+          round(log(lit(QlMu) / (col("doc_len") + lit(QlMu))) * 1e6).cast("long"))
       .withColumn("rank", row_number().over(rankW))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score_micros"))
@@ -555,14 +552,11 @@ object Text {
     * postings TABLE (term, doc_id, tf) is the index — term-partitioned
     * parquet, read back by an equi-join on term; this summary is the
     * term-dictionary side of it. Shape: one explode (narrow) + two
-    * map-side-combined hash aggregates; no window, no join.
+    * map-side-combined hash aggregates; no window, no join. It has
+    * one consumer of the term counts, so it reads them uncut.
     */
-  def invertedIndex(
-      docs: org.apache.spark.sql.DataFrame,
-      minDf: Int = 1): org.apache.spark.sql.DataFrame =
-    docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+  def invertedIndex(docs: DataFrame, minDf: Int = 1): DataFrame =
+    termCounts(docs)
       .groupBy("term")
       .agg(count(lit(1)).as("df_count"),
         sum(col("tf")).as("tf_total"),

@@ -40,35 +40,16 @@ object LakeQueries extends QueryPack {
       .withColumn("y", col("py").cast("double"))
   }
 
-  /** Dev-only count hints for the DBSCAN-family sizing pre-passes
-    * (the driver never sets these — declared runs measure). A 100-TB
-    * caller already knows the clusterable-point cardinality from an
-    * upstream aggregate or ingest metadata; passing it skips a full
-    * corpus scan that exists ONLY to size eps (26.2 s of the sf10
-    * lake pipeline, measured r14). Mirrors the round-14
-    * NearDup.simhashPairs(corpusCount=...) hint: the hint feeds the
-    * same eps formula, so hint == true count reproduces the measured
-    * path bit-for-bit (pinned by LakeFinderSpec).
-    */
-  private[graft] def m1CountHint: Option[Long] =
-    sys.env.get("SPARK_GRAFT_M1_COUNT_HINT").map(_.toLong)
-  private[graft] def lakeCountHint: Option[Long] =
-    sys.env.get("SPARK_GRAFT_LAKE_COUNT_HINT").map(_.toLong)
-
-  /** m1_dbscan dataflow; `countHint` = clusterable (non-noise) point
-    * count, skipping the m1_input_prep sizing scan when supplied.
-    */
+  /** m1_dbscan dataflow. */
   private[graft] def m1Dbscan(s: org.apache.spark.sql.SparkSession,
-      dir: String, countHint: Option[Long]): org.apache.spark.sql.DataFrame = {
+      dir: String): org.apache.spark.sql.DataFrame = {
     // eager localCheckpoint, not persist: the distinct input-prep
     // lineage otherwise hangs under every interior dbscan action and
     // the single-threaded driver re-analyzes it per job (see
     // LakeFinder's candidates checkpoint — same r15 measurement).
     // The checkpoint IS the input-prep materialization, so it owns
     // the m1_input_prep stage tag; the sizing count below then
-    // scans checkpointed blocks (~free), which also means a supplied
-    // countHint no longer changes what gets materialized — only the
-    // eps formula input, exactly like the simhash corpusCount hint.
+    // scans checkpointed blocks (~free).
     val pts = graft.Profile.stage("m1_input_prep") {
       blobPoints(s, dir).lineageCut()
     }
@@ -84,8 +65,7 @@ object LakeQueries extends QueryPack {
     // ISOLATED blob point, P(deg=0) = e^-25 ~ 1.4e-11 per point,
     // vanishing at every SF. Noise points stay >= 1000 apart,
     // far above eps at every SF (eps(sf0.001) ~ 282).
-    val n = countHint.getOrElse(
-      pts.filter(col("px") < lit(10000000L)).count())
+    val n = pts.filter(col("px") < lit(10000000L)).count()
     val rho = (n / 5.0) / (997.0 * 997.0)
     val eps = math.sqrt(25.0 / (math.Pi * rho))
     // includeNoise = false: the count drops noise anyway, so the
@@ -98,12 +78,9 @@ object LakeQueries extends QueryPack {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** §3.2 lake pipeline dataflow; `countHint` = candidate
-    * (|dhdt| > noise floor) point count, skipping the eps_estimate
-    * sizing scan when supplied.
-    */
+  /** §3.2 lake pipeline dataflow. */
   private[graft] def lakePipeline(s: org.apache.spark.sql.SparkSession,
-      dir: String, countHint: Option[Long]): org.apache.spark.sql.DataFrame = {
+      dir: String): org.apache.spark.sql.DataFrame = {
     val li = Tables(s, dir, "lineitem")
     // Three planted populations per blob, mirroring the reference's
     // X_local semantics (ring stats come from the noise-floored,
@@ -164,8 +141,7 @@ object LakeQueries extends QueryPack {
     // cluster MEMBERS, a sub-minPts point with any neighbor joins
     // its blob as border, so only an ISOLATED blob point breaks
     // the oracle — P(deg=0) = e^-25 ~ 1.4e-11 per point
-    val nClustered = countHint.getOrElse(
-      ptsP.filter(abs(col("dhdt")) > 0.105).count())
+    val nClustered = ptsP.filter(abs(col("dhdt")) > 0.105).count()
     val rho = (nClustered / 5.0) / (997.0 * 997.0)
     val eps = math.sqrt(25.0 / (math.Pi * rho))
     // bufferDist covers the planted ring strip (hull edge ~997 to
@@ -190,7 +166,7 @@ object LakeQueries extends QueryPack {
     // isolated points as noise. The oracle reconstructs the expected
     // (cluster, n) table from the blob construction itself.
     Q("m1_dbscan",
-      (s, dir) => m1Dbscan(s, dir, m1CountHint),
+      m1Dbscan,
       Some("""
         WITH pts AS (
           SELECT DISTINCT
@@ -281,7 +257,7 @@ object LakeQueries extends QueryPack {
     // round would land exactly on a decimal half — the classic
     // cross-engine round() divergence.
     Q("lake_finder_pipeline",
-      (s, dir) => lakePipeline(s, dir, lakeCountHint),
+      lakePipeline,
       Some("""
         WITH base AS (
           SELECT DISTINCT

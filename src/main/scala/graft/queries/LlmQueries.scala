@@ -1770,8 +1770,7 @@ object LlmQueries extends QueryPack {
           (1L, "hash join merge batch"),
           (2L, "fast scan filter value"),
           (3L, "customer order line")).toDF("query_id", "query_text")
-        Text.queryLikelihoodTopK(Tables(s, dir, "documents"), queries,
-          k = 10, mu = 300.0)
+        Text.queryLikelihoodTopK(Tables(s, dir, "documents"), queries, k = 10)
       },
       Some("""
         WITH q(query_id, query_text) AS (VALUES

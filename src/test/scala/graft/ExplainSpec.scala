@@ -104,11 +104,6 @@ class ExplainSpec extends SparkSpec {
     // the ONLY nested-loop join allowed is the 1-row corpus-count
     // broadcast; the term-dictionary join must stay a real join
     assert(!p.contains("CartesianProduct"), s"cartesian crept in:\n$p")
-    // r16: the postings table is a DELIBERATE materialization barrier
-    // (Lineage.cut in tfIdfTopTerms) — both consumers (df table +
-    // scoring stream) must read it as a leaf scan instead of
-    // re-running the corpus tokenize+aggregate per consumer
-    assert(p.contains("ExistingRDD"), s"postings cut disappeared:\n$p")
   }
 
   test("llm_bm25_topk: query side broadcast into postings, top-k via WindowGroupLimit") {
@@ -121,12 +116,6 @@ class ExplainSpec extends SparkSpec {
     assert(p.contains("WindowGroupLimit"),
       s"per-query top-k no longer partial before the rank shuffle:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian crept in:\n$p")
-    // r16: postings+length table deliberately cut (Lineage.cut in
-    // bm25TopK) — the df/stats/scoring consumers read ONE materialized
-    // table; before the cut the corpus tokenize subtree executed 3x
-    // per call (the 24.7 s llm_hybrid_rrf pathology of the r15 8-core
-    // driver record)
-    assert(p.contains("ExistingRDD"), s"postings cut disappeared:\n$p")
   }
 
   test("llm_hard_negatives: broadcast anti-join of dense positives, top-k via WindowGroupLimit") {
@@ -176,9 +165,6 @@ class ExplainSpec extends SparkSpec {
     assert(p.contains("WindowGroupLimit"),
       s"per-query top-k no longer partial before the rank shuffle:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian crept in:\n$p")
-    // r16: postings+length table deliberately cut (Lineage.cut in
-    // queryLikelihoodTopK — same shape as the bm25TopK pin)
-    assert(p.contains("ExistingRDD"), s"postings cut disappeared:\n$p")
   }
 
   test("llm_mmr_diversify: broadcast vector fetch, k-row group shuffle only") {
@@ -216,6 +202,10 @@ class ExplainSpec extends SparkSpec {
       s"vocab join no longer broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian crept in:\n$p")
     assert(!p.contains("ExistingRDD"), s"RDD scan barrier crept in:\n$p")
+    // the vocabulary build and the per-doc stream read ONE (doc, term)
+    // count shuffle: the second reader reuses the first's exchange
+    assert("Generate".r.findAllIn(p).size == 1, s"corpus exploded twice:\n$p")
+    assert(p.contains("ReusedExchange"), s"count shuffle no longer shared:\n$p")
   }
 
   test("llm_span_dedup: no cartesian, no token-level anti-join tail") {
@@ -473,6 +463,18 @@ class ExplainSpec extends SparkSpec {
       .map { case (_, i) =>
         lines.slice(math.max(0, i - 2), math.min(lines.size, i + 3)).mkString("\n")
       }.mkString("\n...\n")
+  }
+
+  test("lexical text operators tokenize the corpus once per call") {
+    // every plan one call executes, the cut's own materialization
+    // included: each operator reads the corpus through one
+    // tokenization (Text.postings, or bigramLogProb's token cut), so a
+    // second split means a consumer went back to the raw text
+    val splits = Seq("llm_tfidf_topterms", "llm_bm25_topk", "llm_ql_topk",
+      "llm_vocab_oov", "llm_lm_score", "llm_ppl_buckets", "llm_inverted_index")
+      .map(q => q -> capturePlans(q)
+        .map(p => "split\\(text".r.findAllIn(p.split("== Initial Plan ==")(0)).size).sum)
+    assert(splits.forall(_._2 == 1), s"corpus splits per call: $splits")
   }
 
   test("near-dup banding joins never broadcast a corpus-scaling side") {

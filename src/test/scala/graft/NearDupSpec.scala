@@ -91,24 +91,14 @@ class NearDupSpec extends SparkSpec {
     assert(detPairs.subsetOf(pairs), "deterministic pairs must be a subset")
   }
 
-  test("corpusCount hint == measured count: identical pairs, no sizing scan needed") {
-    // a 100-TB caller passes the corpus cardinality it already has
-    // from an upstream aggregate; the hint must reproduce the measured
-    // path bit-for-bit when it equals the true count (same key width,
-    // same bands, same pairs)
+  test("simhashKeyBlocks is step-wise: a 2x-off corpus count keeps the key width") {
+    // this corpus sits mid-decade (r=2 holds to n=37449), so doubling
+    // its count lands on the SAME key width — asserted strictly, not
+    // as a bounded step, so a 2x sizing error at this scale provably
+    // cannot change bands or recall
     val n = docs.count()
-    val measured = NearDup.simhashPairs(docs, "doc_id", "text", maxDist = 12)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hinted = NearDup.simhashPairs(docs, "doc_id", "text", maxDist = 12,
-        corpusCount = Some(n))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(hinted == measured, "hinted sizing diverged from measured sizing")
-    // and the sizing rule is step-wise: this corpus sits mid-decade
-    // (r=2 holds to n=37449), so a 2x-off hint lands on the SAME key
-    // width — asserted strictly, not as a bounded step, so a stale
-    // hint at this scale provably cannot change bands or recall
     assert(NearDup.simhashKeyBlocks(n) == NearDup.simhashKeyBlocks(2 * n),
-      s"2x hint error moved the key width at n=$n")
+      s"2x count error moved the key width at n=$n")
   }
 
   test("simhashKeyBlocks: key width grows with corpus count, capped at blocks-2") {

@@ -164,7 +164,7 @@ class TextSpec extends SparkSpec {
       (2L, "apple tart"),
       (3L, "cherry tart date")).toDF("doc_id", "text")
     val queries = Seq((0L, "apple pie")).toDF("query_id", "query_text")
-    val got = Text.queryLikelihoodTopK(docs, queries, k = 10, mu = 300.0)
+    val got = Text.queryLikelihoodTopK(docs, queries, k = 10)
       .collect().map(r => (r.getInt(1), r.getLong(2), r.getLong(3)))
     // |C| = 8 tokens; cf(apple)=3, cf(pie)=1; |q|=2
     val cTotal = 8L

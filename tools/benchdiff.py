@@ -10,10 +10,11 @@ A and B are `bench_full.json` files (A the baseline). Prints:
 - every query whose wall grew by more than THRESHOLD (10%), slowest
   growth first, with the context that tells a plan regression from a
   starved JVM: its `q_wcg` triple ([wall_s, cpu_s, gc_s]; a wall far
-  above cpu/threads + gc means the host, not the plan), its `tk_*`
-  task counters (same tasks and bytes with more CPU is per-task
-  slowdown, not extra work) and `cg_n` (classes compiled by Spark
-  codegen during the query);
+  above cpu/threads + gc means the host, not the plan), its `jobs` and
+  `stages` counts (a new materialization adds a job, a removed scan
+  removes stages), its `tk_*` task counters (same tasks and bytes with
+  more CPU is per-task slowdown, not extra work) and `cg_n` (classes
+  compiled by Spark codegen during the query);
 - queries that failed in either run, or ran in only one.
 
 Walls are floored at 1 ms so a 0.000 s row cannot zero the geomean.
@@ -37,11 +38,12 @@ def fmt(v):
 
 
 def context(a, b, q):
-    """`key=A->B` for q_wcg and every tk_*/cg_n row either run carries,
-    leaving out rows that read zero in both."""
+    """`key=A->B` for q_wcg and every jobs/stages/tk_*/cg_n row either
+    run carries, leaving out rows that read zero in both."""
     out = [f"q_wcg={fmt(a.get('q_wcg', {}).get(q))}->{fmt(b.get('q_wcg', {}).get(q))}"]
     ra, rb = a.get('stages', {}).get(q, {}), b.get('stages', {}).get(q, {})
-    keys = dict.fromkeys(k for k in [*ra, *rb] if k.startswith('tk_') or k == 'cg_n')
+    keys = dict.fromkeys(k for k in [*ra, *rb]
+                         if k in ('jobs', 'stages', 'cg_n') or k.startswith('tk_'))
     out += [f'{k}={fmt(ra.get(k))}->{fmt(rb.get(k))}' for k in keys
             if ra.get(k) or rb.get(k)]
     return ' '.join(out)
