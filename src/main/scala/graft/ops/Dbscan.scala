@@ -135,70 +135,54 @@ object Dbscan {
     val sameBlk = (0 until d).map(i =>
       blockIdx(col(s"_c$i")) === blockIdx(floor(col(s"_b$i") / eps).cast("long")))
       .reduce(_ && _)
-    // r16 skew guard on the shuffle_hash pin (guide §2.5/§3.1): SHJ
-    // builds the 1x home side per partition IN MEMORY and the build
-    // cannot spill. Under the density-adaptive eps contract occupancy
-    // is bounded, but real point clouds concentrate mass in few grid
-    // cells — and one hot CELL is one join KEY, which AQE skew-split
-    // cannot divide. Estimate the worst-case per-partition build as
-    // (total/partitions + hottest cell) from one aggregate over the
-    // cached home table (this also materializes home, which the pair
-    // join needed anyway) and keep the spillable sort-merge join when
-    // the estimate exceeds the bound. Default bound 2M rows ≈ 200 MB
-    // of hash-relation build per task — inside the execution memory
-    // of a 4-core/8 GB executor; override via
-    // spark.graft.dbscan.shjMaxBuildPerPartition for bigger tasks.
-    val sizing = graft.Profile.stage("dbscan_sizing") {
-      home.groupBy((0 until d).map(i => col(s"_c$i")): _*)
-        .agg(count(lit(1)).as("_n"))
-        .agg(max(col("_n")), sum(col("_n"))).head()
-    }
-    val maxCell = if (sizing.isNullAt(0)) 0L else sizing.getLong(0)
-    val totalPts = if (sizing.isNullAt(1)) 0L else sizing.getLong(1)
-    val shjBound = spark.conf
-      .get("spark.graft.dbscan.shjMaxBuildPerPartition", "2000000").toLong
-    val parts =
-      math.max(1, spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val estBuildPerPartition = totalPts / parts + maxCell
-    val homeSide =
-      if (estBuildPerPartition <= shjBound) home.hint("shuffle_hash") else home
-    val pairs = homeSide.join(halo, joinCond)
-      .filter(col(idCol) =!= col("_bid"))
-      .filter(dist2 <= lit(eps * eps))
-      .select(col(idCol).as("src"), col("_bid").as("dst"),
-        sameBlk.as("_intra"), srcBlk)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // The pair join's strategy comes from sizes Spark measured. It
+    // runs with broadcast off and the shuffled-hash local-map
+    // threshold at the session's advisory partition size, so AQE's
+    // DynamicJoinSelection turns the sort-merge join into a shuffled
+    // hash join only when every measured home-side shuffle partition
+    // fits under it. A hash build cannot spill, and a hot cell is one
+    // join key in one partition that skew splitting cannot divide, so
+    // a hot cell keeps the spillable sort-merge join. Broadcast is off
+    // because a small home side would otherwise be broadcast, which
+    // breaks the cell co-location that the pass-1 forestPartition
+    // pre-contraction relies on (the offsets broadcast is a hint and is
+    // unaffected). The scope opens before `pairs` is persisted because
+    // CacheManager plans the cached query at persist() time, in a copy
+    // of the session conf.
+    val (pairs, degrees, nonCorePaired) = withConf(spark,
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" ->
+          spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"),
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val pairs = home.join(halo, joinCond)
+        .filter(col(idCol) =!= col("_bid"))
+        .filter(dist2 <= lit(eps * eps))
+        .select(col(idCol).as("src"), col("_bid").as("dst"),
+          sameBlk.as("_intra"), srcBlk)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
-    // 3. core points. For minPts > 1 every core point has >= 1
-    // neighbor and therefore appears in `pairs`, so the core split is
-    // derivable from the degree table ALONE — no join back to the full
-    // id set. The interesting set is the NON-core-but-paired one:
-    // under the density-adaptive eps contract (interior points carry
-    // ~target neighbors >> minPts) it is a thin boundary population,
-    // so it broadcasts, and every core-core filter below becomes a
-    // pair of broadcast ANTI-joins over the cached pair table instead
-    // of two shuffle joins against all ids (measured: removed the
-    // separate `core` cache materialization and the per-consumer
-    // shuffle join prep on the 19M-pair table at sf0.1). The shuffle
-    // path is kept for sparse/noisy data where non-core is large.
-    val degrees = pairs.groupBy(col("src")).agg(count(lit(1)).as("deg")).persist()
-    val nonCorePaired = degrees.filter(col("deg") + 1 < minPts)
-      .select(col("src")).persist()
-    // also materializes home, pairs and degrees (first eager barrier)
-    val nNonCore = graft.Profile.stage("dbscan_pairs") { nonCorePaired.count() }
-    val nonCoreBroadcastable = nNonCore <= 4000000L // ~32 MB of longs
+      // 3. core points. For minPts > 1 every core point has >= 1
+      // neighbor and therefore appears in `pairs`, so the core split
+      // is derivable from the degree table ALONE — no join back to the
+      // full id set. The interesting set is the NON-core-but-paired
+      // one: under the density-adaptive eps contract (interior points
+      // carry ~target neighbors >> minPts) it is a thin boundary
+      // population, and every core-core filter below is a pair of
+      // anti-joins against it over the cached pair table (for
+      // minPts <= 1 it is empty and they keep every edge). The count
+      // materializes it, home, pairs and degrees, so Spark plans those
+      // joins from their measured sizes: a thin set broadcasts.
+      val degrees = pairs.groupBy(col("src")).agg(count(lit(1)).as("deg")).persist()
+      val nonCorePaired = degrees.filter(col("deg") + 1 < minPts)
+        .select(col("src")).persist()
+      graft.Profile.stage("dbscan_pairs") { nonCorePaired.count() }
+      (pairs, degrees, nonCorePaired)
+    }
     val coreIds =
       if (minPts <= 1) home.select(col(idCol).as("cid"))
       else degrees.filter(col("deg") + 1 >= minPts).select(col("src").as("cid"))
-    def coreCore(df: DataFrame) =
-      if (minPts <= 1) df // every point is core, incl. isolated ones
-      else if (nonCoreBroadcastable) df
-        .join(broadcast(nonCorePaired), Seq("src"), "left_anti")
-        .join(broadcast(nonCorePaired.select(col("src").as("dst"))),
-          Seq("dst"), "left_anti")
-      else df
-        .join(coreIds.withColumnRenamed("cid", "src"), "src")
-        .join(coreIds.withColumnRenamed("cid", "dst"), "dst")
+    def coreCore(df: DataFrame) = df
+      .join(nonCorePaired, Seq("src"), "left_anti")
+      .join(nonCorePaired.select(col("src").as("dst")), Seq("dst"), "left_anti")
 
     // 4a. LOCAL contraction: union-find per block over intra-block
     // edges, in TWO passes. Pass 1 (zero shuffle) pre-contracts each
@@ -288,7 +272,7 @@ object Dbscan {
     // 5. assemble: core labels, border = min-labeled core neighbor.
     // Border candidates are exactly the non-core-but-paired ids
     // (zero-pair points cannot have a core neighbor), so the same
-    // broadcast set drives the border join. The border PAIR subset is
+    // materialized set drives the border join. The border PAIR subset is
     // materialized FIRST — it is thin by the same density contract —
     // so the full pair cache can be dropped before the assemble joins
     // run: after this point no stage holds the O(pairs) table, which
@@ -296,8 +280,7 @@ object Dbscan {
     // record showed the cached-pair dataflow's heap footprint, not its
     // plan, as the wall-time liability).
     val borderPairs = pairs
-      .join(if (nonCoreBroadcastable) broadcast(nonCorePaired) else nonCorePaired,
-        Seq("src"))
+      .join(nonCorePaired, Seq("src"))
       .select(col("src"), col("dst"))
       .persist()
     // materialize, then free the 24M-pair cache
@@ -331,5 +314,20 @@ object Dbscan {
     borderPairs.unpersist(false)
     coreLabeled.unpersist(false)
     out
+  }
+
+  /** Runs `body` with `settings` in the session conf, then restores
+    * each key's previous value, unsetting a key that had none.
+    */
+  private def withConf[T](spark: SparkSession, settings: (String, String)*)(
+      body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

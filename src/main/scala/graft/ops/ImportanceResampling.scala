@@ -40,74 +40,66 @@ import org.apache.spark.sql.functions._
   */
 object ImportanceResampling {
 
+  /** Hashed feature dimension B (the oracle SQL hard-codes it too). */
+  val Buckets = 64
+
   /** Hashed n-gram bucket: first 8 md5 hex digits (32 bits) mod B. */
-  private def bucketOf(ngram: Column, buckets: Int): Column =
-    (conv(substring(md5(ngram), 1, 8), 16, 10).cast("long") % buckets)
+  private def bucketOf(ngram: Column): Column =
+    (conv(substring(md5(ngram), 1, 8), 16, 10).cast("long") % Buckets)
       .cast("int")
 
-  /** (doc_id?, _g): one row per unigram and word-bigram occurrence. */
-  private def gramRows(df: DataFrame, idCol: Option[String],
-      textCol: String): DataFrame = {
-    val idCols = idCol.toSeq.map(c => col(c).as("doc_id"))
-    val base = df.select(idCols :+ Text.tokens(col(textCol)).as("_t"): _*)
-    val keep = idCol.toSeq.map(_ => col("doc_id"))
-    val uni = base.select(keep :+ explode(col("_t")).as("_g"): _*)
-    val bi = base.filter(size(col("_t")) >= 2)
-      .select(keep :+ explode(expr(
-        "transform(sequence(1, size(_t) - 1), " +
-          "i -> concat(_t[i - 1], ' ', _t[i]))")).as("_g"): _*)
-    uni.unionByName(bi)
-  }
+  /** (keep..., _b): the bucket of every unigram and word-bigram
+    * occurrence in the `text` column, from one tokenization: both gram
+    * kinds come out of one explode_outer plus a null filter. A plain
+    * explode (or a size filter on the token column) makes Spark infer
+    * a size filter on the tokens and push it below the projection,
+    * which splits the text again (see [[Text.postings]]).
+    */
+  private def gramBuckets(df: DataFrame, keep: Column*): DataFrame =
+    df.select(keep :+ Text.tokens(col("text")).as("_t"): _*)
+      .select(keep :+ explode_outer(expr(
+        "concat(_t, if(size(_t) >= 2, transform(sequence(1, size(_t) - 1), " +
+          "i -> concat(_t[i - 1], ' ', _t[i])), array()))")).as("_g"): _*)
+      .filter(col("_g").isNotNull)
+      .select(keep :+ bucketOf(col("_g")).as("_b"): _*)
 
-  /** @param docs   raw corpus (the DSIR "source" distribution)
+  /** @param docs   raw corpus (the DSIR "source" distribution), with
+    *               `doc_id` and `text` columns
     * @param target target-domain sample, same text column
     * @param k      documents to select
-    * @param buckets hashed feature dimension B
     * @return (doc_id, rank, n_grams, w_micros, score_micros) — the k
     *         selected docs, rank 1..k by (score DESC, doc_id)
     */
-  def dsirSelect(
-      docs: DataFrame,
-      target: DataFrame,
-      k: Int,
-      buckets: Int = 64,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    require(k > 0 && buckets > 0)
+  def dsirSelect(docs: DataFrame, target: DataFrame, k: Int): DataFrame = {
+    require(k > 0)
     val spark = docs.sparkSession
 
     // ONE materialization of the bucketed gram stream (r16, the
     // bm25TopK postings-cut pattern): the source distribution and the
     // per-doc weights both consume it, and without the cut the corpus
-    // tokenize + two explodes + per-gram md5 executed twice. Cut
+    // tokenize + explode + per-gram md5 executed twice. Cut
     // AFTER the bucket projection so only (doc_id, bucket) — 12
     // bytes/gram, not the gram strings — is stored.
-    val docGrams = graft.Lineage.cut(
-      gramRows(docs, Some(idCol), textCol)
-        .withColumn("_b", bucketOf(col("_g"), buckets))
-        .select(col("doc_id"), col("_b")))
+    val docGrams = graft.Lineage.cut(gramBuckets(docs, col("doc_id")))
     val srcDist = docGrams.groupBy(col("_b")).agg(count(lit(1)).as("_cs"))
-    val tgtDist = gramRows(target, None, textCol)
-      .withColumn("_b", bucketOf(col("_g"), buckets))
+    val tgtDist = gramBuckets(target)
       .groupBy(col("_b")).agg(count(lit(1)).as("_ct"))
-    val totals = srcDist.agg(sum(col("_cs")).as("_tot_s"))
-      .crossJoin(tgtDist.agg(sum(col("_ct")).as("_tot_t")))
 
     // complete bucket table: empty buckets still carry smoothing mass.
-    // Operand order of the double products/division is fixed so the
-    // IEEE result — and therefore the micro rounding — replays
-    // bit-identically in the oracle.
-    val allB = spark.range(buckets).select(col("id").cast("int").as("_b"))
+    // The corpus and target totals are sums over it, so each
+    // distribution is aggregated once. Operand order of the double
+    // products/division is fixed so the IEEE result — and therefore
+    // the micro rounding — replays bit-identically in the oracle.
+    val allB = spark.range(Buckets).select(col("id").cast("int").as("_b"))
     val ratios = allB
       .join(srcDist, Seq("_b"), "left")
       .join(tgtDist, Seq("_b"), "left")
-      .crossJoin(broadcast(totals))
       .select(col("_b"),
         round(log(
           ((coalesce(col("_ct"), lit(0L)) + 1).cast("double") *
-            (col("_tot_s") + buckets).cast("double")) /
+            (sum(col("_cs")).over() + Buckets).cast("double")) /
             ((coalesce(col("_cs"), lit(0L)) + 1).cast("double") *
-              (col("_tot_t") + buckets).cast("double"))) * 1e6)
+              (sum(col("_ct")).over() + Buckets).cast("double"))) * 1e6)
           .cast("long").as("_lr_micros"))
 
     val weights = docGrams

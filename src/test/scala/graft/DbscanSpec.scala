@@ -8,6 +8,13 @@ import graft.ops.{ConvexHull, Dbscan}
 
 class DbscanSpec extends SparkSpec {
 
+  /** Advisory partition size for the hot-cell test's lowered run. Its
+    * largest home-side shuffle partition measured 11-12 KiB with the
+    * hot cell and 5-6 KiB without it (8 partitions, lz4 shuffle
+    * compression), so 8 KiB sits between the two.
+    */
+  private val HotCellAdvisoryBytes = 8192L
+
   private val schema = StructType(Seq(
     StructField("id", LongType),
     StructField("x", DoubleType), StructField("y", DoubleType)))
@@ -124,17 +131,22 @@ class DbscanSpec extends SparkSpec {
   }
 
   test("SHJ skew guard: hotspot fixture flips the pair join to sort-merge, labels unchanged") {
-    // r16 (VERDICT r15 item 3): the eps-grid pair join's shuffle_hash
-    // pin builds the home side in memory per partition; a HOT CELL is
-    // one join key that neither AQE skew-split nor the average can
-    // bound, so Dbscan gates the hint on (total/partitions + max cell
-    // count) vs spark.graft.dbscan.shjMaxBuildPerPartition. Fixture:
-    // one eps-cell holding ~25% of the points (400 of 1600). With the
-    // bound forced below the estimate the executed pair join must be
-    // the spillable SortMergeJoin; with the default it stays
-    // ShuffledHashJoin; the labeling must be bit-identical either way.
+    // A shuffled hash join builds the home side per partition in memory
+    // and cannot spill, and a HOT CELL is one join key in one partition
+    // that AQE skew splitting cannot divide. Dbscan lets AQE pick the
+    // shuffled hash join only when every measured home-side shuffle
+    // partition fits under the session's advisory partition size.
+    // Fixture: one eps-cell holding 400 of the 1600 points. With the
+    // default advisory size the executed pair join must be
+    // ShuffledHashJoin; with it lowered below the hot cell's partition
+    // bytes it must be the spillable SortMergeJoin, and the same
+    // setting without the hot cell must stay ShuffledHashJoin. The
+    // labeling must be identical in every run, also under 1 and 8
+    // shuffle partitions.
     val hot = (0 until 400).map { i =>
-      (i.toLong, 100.0 + (i % 20) * 4.0, 100.0 + (i / 20) * 4.0) // one 100-unit cell
+      val r = 45.0 * i / 400 // spiral inside the one 100-unit cell [100, 200)^2
+      val a = 2.399963 * i
+      (i.toLong, 150.0 + r * math.cos(a), 150.0 + r * math.sin(a))
     }
     val rest = for (b <- 0 until 12; i <- 0 until 100) yield {
       val cx = 5000.0 + (b % 4) * 3000.0
@@ -143,7 +155,6 @@ class DbscanSpec extends SparkSpec {
       val a = 2.399963 * i
       (10000L + b * 1000L + i, cx + r * math.cos(a), cy + r * math.sin(a))
     }
-    val pts = df(hot ++ rest)
     val joins = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(name: String,
@@ -153,20 +164,14 @@ class DbscanSpec extends SparkSpec {
           qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = ()
     }
-    // a captured plan is THE pair join iff it carries the pair cache's
-    // block-key column — other interior joins (labels, borders) and
-    // any late-delivered event from a previous run's window must not
-    // decide the assertion
-    def pairJoinPlans(all: Seq[String]): Seq[String] =
-      all.filter(p => p.contains("_sbk") &&
-        (p.contains("ShuffledHashJoin") || p.contains("SortMergeJoin")))
-    def run(bound: Option[Long]): (Map[Long, Option[Long]], Seq[String]) = {
-      bound.foreach(b =>
-        spark.conf.set("spark.graft.dbscan.shjMaxBuildPerPartition", b.toString))
+    def run(pts: Seq[(Long, Double, Double)], settings: (String, String)*)
+        : (Map[Long, Option[Long]], Seq[String]) = {
+      val prev = settings.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         joins.clear()
         spark.listenerManager.register(listener)
-        val out = Dbscan.dbscan(pts, "id", Seq("x", "y"), eps = 100.0, minPts = 5)
+        val out = Dbscan.dbscan(df(pts), "id", Seq("x", "y"), eps = 100.0, minPts = 5)
           .collect()
           .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
           .toMap
@@ -174,26 +179,29 @@ class DbscanSpec extends SparkSpec {
         // this run's plans are all in, and none can leak into the NEXT
         // run's window
         Profile.drain(spark)
-        import scala.jdk.CollectionConverters._
         spark.listenerManager.unregister(listener)
-        (out, joins.asScala.toSeq)
-      } finally {
-        spark.conf.unset("spark.graft.dbscan.shjMaxBuildPerPartition")
+        import scala.jdk.CollectionConverters._
+        (out, DbscanSpec.pairJoins(joins.asScala.toSeq))
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
     }
-    val (shjLabels, shjPlans) = run(None)
-    // estimate = 1600/partitions + 400 hot-cell rows; bound 10 forces merge
-    val (smjLabels, smjPlans) = run(Some(10L))
-    assert(pairJoinPlans(shjPlans).exists(_.contains("ShuffledHashJoin")),
-      "default bound no longer plans the pair join as ShuffledHashJoin")
-    val guarded = pairJoinPlans(smjPlans)
-    assert(guarded.nonEmpty, "guarded run's pair-join plan not captured")
-    assert(!guarded.exists(_.contains("ShuffledHashJoin")),
-      "guard did not flip the hot-cell pair join off ShuffledHashJoin")
-    assert(guarded.exists(_.contains("SortMergeJoin")),
-      "guarded pair join is not a SortMergeJoin")
-    assert(shjLabels == smjLabels, "join strategy changed the labeling")
-    assert(shjLabels.values.flatten.toSet.size == 13,
+    val lowered = "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> HotCellAdvisoryBytes.toString
+    val (labels, defaultJoins) = run(hot ++ rest)
+    val (hotLabels, hotJoins) = run(hot ++ rest, lowered)
+    val (_, coolJoins) = run(rest, lowered)
+    assert(defaultJoins.nonEmpty && defaultJoins.forall(_ == "ShuffledHashJoin"),
+      s"default run's pair join is not a ShuffledHashJoin: $defaultJoins")
+    assert(hotJoins.nonEmpty && hotJoins.forall(_ == "SortMergeJoin"),
+      s"hot-cell partition did not keep the pair join sort-merge: $hotJoins")
+    assert(coolJoins.nonEmpty && coolJoins.forall(_ == "ShuffledHashJoin"),
+      s"lowered advisory size flipped the pair join without a hot cell: $coolJoins")
+    assert(hotLabels == labels, "join strategy changed the labeling")
+    for (n <- Seq(1, 8))
+      assert(run(hot ++ rest, "spark.sql.shuffle.partitions" -> n.toString)._1 == labels,
+        s"$n shuffle partitions changed the labeling")
+    assert(labels.values.flatten.toSet.size == 13,
       "expected the 12 blobs + hot cell as clusters")
   }
 
@@ -250,4 +258,17 @@ class DbscanSpec extends SparkSpec {
     assert(ConvexHull.hull(Seq((1.0, 1.0))) == Seq((1.0, 1.0)))
     assert(ConvexHull.hull(Seq((1.0, 1.0), (1.0, 1.0))) == Seq((1.0, 1.0)))
   }
+}
+
+object DbscanSpec {
+
+  /** Strategies of the executed DBSCAN pair join in `plans` (executed
+    * plan strings): the join on the home cell keys (`_c0`...) in a plan
+    * carrying the pair cache's block-key column, read from the
+    * final-plan section only (AQE's toString appends the initial
+    * sort-merge plan after it).
+    */
+  def pairJoins(plans: Seq[String]): Seq[String] =
+    plans.filter(_.contains("_sbk"))
+      .flatMap(p => "\\w+Join(?= \\[_c0#)".r.findAllIn(p.split("== Initial Plan ==")(0)))
 }

@@ -467,14 +467,17 @@ class ExplainSpec extends SparkSpec {
 
   test("lexical text operators tokenize the corpus once per call") {
     // every plan one call executes, the cut's own materialization
-    // included: each operator reads the corpus through one
-    // tokenization (Text.postings, or bigramLogProb's token cut), so a
-    // second split means a consumer went back to the raw text
-    val splits = Seq("llm_tfidf_topterms", "llm_bm25_topk", "llm_ql_topk",
+    // included: each lexical operator reads the corpus through one
+    // tokenization (Text.postings, or bigramLogProb's token cut), and
+    // DSIR splits the corpus once for its gram cut and the target
+    // sample once, so another split means a consumer went back to the
+    // raw text
+    val expected = Seq("llm_tfidf_topterms", "llm_bm25_topk", "llm_ql_topk",
       "llm_vocab_oov", "llm_lm_score", "llm_ppl_buckets", "llm_inverted_index")
-      .map(q => q -> capturePlans(q)
-        .map(p => "split\\(text".r.findAllIn(p.split("== Initial Plan ==")(0)).size).sum)
-    assert(splits.forall(_._2 == 1), s"corpus splits per call: $splits")
+      .map(_ -> 1) :+ ("llm_dsir_select" -> 2)
+    val splits = expected.map { case (q, _) => q -> capturePlans(q)
+      .map(p => "split\\(text".r.findAllIn(p.split("== Initial Plan ==")(0)).size).sum }
+    assert(splits == expected, s"text splits per call: $splits")
   }
 
   test("near-dup banding joins never broadcast a corpus-scaling side") {
@@ -545,6 +548,13 @@ class ExplainSpec extends SparkSpec {
     // core-point table for a kilobyte build side
     assert("BroadcastHashJoin \\[rep".r.findAllIn(all).nonEmpty,
       s"residual label join no longer broadcast; joins seen:\n${around(all, "Join")}")
+    // the eps-grid pair join runs as a shuffled hash join when AQE's
+    // measured partitions allow, and is never broadcast: a broadcast
+    // home side breaks the cell co-location the pass-1 forest
+    // contraction relies on
+    val pair = DbscanSpec.pairJoins(plans)
+    assert(pair.nonEmpty && pair.forall(_ == "ShuffledHashJoin"),
+      s"pair join not executed as ShuffledHashJoin: $pair")
   }
 
   test("lake_finder: ring kernel rides the broadcast basin join, member anti-join broadcast, no cartesian") {
@@ -580,6 +590,11 @@ class ExplainSpec extends SparkSpec {
     val all = plans.mkString("\n")
     assert(!all.contains("CartesianProduct"),
       s"cartesian crept in:\n${around(all, "CartesianProduct")}")
+    // the lake DBSCAN's pair join: shuffled hash, never broadcast (see
+    // the m1_dbscan pin)
+    val pair = DbscanSpec.pairJoins(plans)
+    assert(pair.nonEmpty && pair.forall(_ == "ShuffledHashJoin"),
+      s"pair join not executed as ShuffledHashJoin: $pair")
   }
 
   test("llm_decontam_bloom: corpus never shuffled, bloom probe inside the scan codegen span") {

@@ -15,6 +15,10 @@ A and B are `bench_full.json` files (A the baseline). Prints:
   removes stages), its `tk_*` task counters (same tasks and bytes with
   more CPU is per-task slowdown, not extra work) and `cg_n` (classes
   compiled by Spark codegen during the query);
+- every query whose `jobs` count differs, biggest cut first, as
+  `jobs A->B` with the stage tags (the `[wall_s, task_cpu_s, jobs]`
+  rows) that only one side carries — a removed or added pipeline step
+  shows here even when the wall did not move;
 - queries that failed in either run, or ran in only one.
 
 Walls are floored at 1 ms so a 0.000 s row cannot zero the geomean.
@@ -49,6 +53,21 @@ def context(a, b, q):
     return ' '.join(out)
 
 
+def job_changes(a, b):
+    """(query, jobs A, jobs B, tags only in A, tags only in B) for every
+    query both records profiled whose `jobs` differ, biggest cut first."""
+    sa, sb = a.get('stages', {}), b.get('stages', {})
+    out = []
+    for q in sorted(set(sa) & set(sb)):
+        ja, jb = sa[q].get('jobs'), sb[q].get('jobs')
+        if ja != jb:
+            ta, tb = (dict.fromkeys(k for k, v in r.items() if isinstance(v, list))
+                      for r in (sa[q], sb[q]))
+            out.append((q, ja, jb, [t for t in ta if t not in tb],
+                        [t for t in tb if t not in ta]))
+    return sorted(out, key=lambda c: (c[2] or 0) - (c[1] or 0))
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split('\n\n')[0])
     ap.add_argument('a')
@@ -72,6 +91,12 @@ def main():
     print(f'regressed by more than {THRESHOLD:.0%}: {len(worse)}')
     for q in worse:
         print(f'  {q}: {wa[q]:.3f} -> {wb[q]:.3f} s (x{ratios[q]:.2f}) {context(a, b, q)}')
+    changes = job_changes(a, b)
+    print(f'jobs changed: {len(changes)}')
+    for q, ja, jb, only_a, only_b in changes:
+        print(f'  {q}: jobs {ja}->{jb}'
+              + (f"; tags only in A: {', '.join(only_a)}" if only_a else '')
+              + (f"; tags only in B: {', '.join(only_b)}" if only_b else ''))
     for label, names in (('failed in A', fa), ('failed in B', fb),
                          ('only in A', set(a['queries']) - set(b['queries'])),
                          ('only in B', set(b['queries']) - set(a['queries']))):
