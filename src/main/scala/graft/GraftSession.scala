@@ -74,4 +74,18 @@ object GraftSession {
       .config("spark.sql.ui.explainMode", "simple")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+
+  /** Runs `body` with `settings` in the session conf, then restores
+    * each key's previous value, unsetting a key that had none.
+    */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

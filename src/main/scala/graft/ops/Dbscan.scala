@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Lineage.CutSyntax
@@ -149,7 +149,7 @@ object Dbscan {
     // unaffected). The scope opens before `pairs` is persisted because
     // CacheManager plans the cached query at persist() time, in a copy
     // of the session conf.
-    val (pairs, degrees, nonCorePaired) = withConf(spark,
+    val (pairs, degrees, nonCorePaired) = graft.GraftSession.withConf(spark,
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" ->
           spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"),
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
@@ -314,20 +314,5 @@ object Dbscan {
     borderPairs.unpersist(false)
     coreLabeled.unpersist(false)
     out
-  }
-
-  /** Runs `body` with `settings` in the session conf, then restores
-    * each key's previous value, unsetting a key that had none.
-    */
-  private def withConf[T](spark: SparkSession, settings: (String, String)*)(
-      body: => T): T = {
-    val set = spark.conf.getAll
-    val prev = settings.map { case (k, _) => k -> set.get(k) }
-    settings.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

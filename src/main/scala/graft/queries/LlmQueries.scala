@@ -340,7 +340,7 @@ object LlmQueries extends QueryPack {
     // blocks-2 = 6, where banding recall is a pigeonhole GUARANTEE;
     // the 7..12 band is probabilistic (368/369 at sf0.1).
     // ADAPTIVE-WIDTH SCOPE (round 13): the query rides the adaptive
-    // keyBlocks default, which keeps the r=2 geometry — and therefore
+    // key width, which keeps the r=2 geometry — and therefore
     // the recall-1.0 oracle contract — for any corpus under 37,449
     // docs (gate corpora: 510 at sf0.01, 5,100 at sf0.1). Past that
     // boundary the key widens and the brute-force oracle would

@@ -41,9 +41,6 @@ object StreamingQueries extends QueryPack {
 
   private def runToCompletion(out: DataFrame, name: String,
       mode: String, statePartitions: Int = 8): Unit = {
-    val spark = out.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
     // Stateful streaming creates one state store per shuffle partition
     // per stateful operator, and EVERY micro-batch commits every
     // store. A real deployment sizes the state partition count to
@@ -59,14 +56,14 @@ object StreamingQueries extends QueryPack {
     // Those pass statePartitions = cores. Results are partition-
     // count-invariant (exact aggregation/join semantics), which the
     // relational oracles re-verify every run.
-    spark.conf.set(key, statePartitions.toString)
-    try {
+    graft.GraftSession.withConf(out.sparkSession,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       // micro-batch attribution (sq_* rows of the bench record) comes
       // from the query's progress events — see [[graft.Profile]]
       out.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
         .awaitTermination()
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   override def queries: Seq[Q] = Seq(

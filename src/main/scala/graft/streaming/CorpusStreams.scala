@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.ops.{NearDup, Text}
+
 /** Streaming corpus curation: the near-duplicate GATE a training-data
   * ingest pipeline runs in front of the lake — every arriving
   * document is checked against the stream's history and flagged when
@@ -16,10 +18,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stateful operator keyed by (band, band signature) holds each
   * bucket's member history and verifies candidates with exact
   * set-Jaccard — the same candidates-then-verify contract as the
-  * batch [[graft.ops.NearDup]], so banding recall carries over. A
-  * document is a duplicate iff ANY of its band buckets verifies it
-  * against an earlier member (earlier = (event time, doc id), made
-  * deterministic within a batch by sorting the group).
+  * batch [[graft.ops.NearDup]], on its band keys, so banding recall
+  * carries over. A document is a duplicate iff ANY of its band
+  * buckets verifies it against an earlier member (earlier = (event
+  * time, doc id), made deterministic within a batch by sorting the
+  * group).
   *
   * State: per-bucket member list (id, ts, shingles). Like any dedup-
   * against-history, state grows with the distinct corpus — the
@@ -44,26 +47,16 @@ object CorpusStreams {
     */
   def nearDupGate(
       docs: DataFrame,
-      numPerms: Int = 32,
-      bands: Int = 8,
-      shingleN: Int = 3,
       threshold: Double = 0.5,
       watermark: String = "1 hour"): DataFrame = {
-    require(numPerms % bands == 0, "numPerms must divide into bands")
     val spark = docs.sparkSession
     import spark.implicits._
-    val r = numPerms / bands
     val banded = docs
       .withWatermark("ts_utc", watermark)
-      .withColumn("sh",
-        graft.functions.shingles(graft.ops.Text.tokens(col("text")), shingleN))
-      .withColumn("_sig", graft.functions.minhash_sig(col("sh"), numPerms))
-      .select(Seq(col("doc_id"), unix_millis(col("ts_utc")).as("ts_ms")) ++
-        Seq(posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("_sig"), b * r + 1, lit(r)), b)))
-          .as(Seq("band", "band_sig"))) :+ col("sh"): _*)
-      .select(col("doc_id"), col("ts_ms"), col("band"),
-        col("band_sig"), col("sh"))
+      .withColumn("sh", graft.functions.shingles(Text.tokens(col("text")), NearDup.ShingleN))
+      .withColumn("_sig", graft.functions.minhash_sig(col("sh"), NearDup.NumPerms))
+      .select(col("doc_id"), unix_millis(col("ts_utc")).as("ts_ms"),
+        NearDup.minhashBands(col("_sig")), col("sh"))
       .as[BandRow]
 
     banded

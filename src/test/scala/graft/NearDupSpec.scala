@@ -47,7 +47,7 @@ class NearDupSpec extends SparkSpec {
 
   test("simhash banded: deterministic band is a guarantee, 7..12 is corpus-pinned") {
     // ground truth: exact hamming distance of every planted pair
-    val sig = docs.withColumn("_sim", NearDup.simhash64(Text.tokens(col("text"))))
+    val sig = docs.withColumn("_sim", graft.functions.simhash64(Text.tokens(col("text"))))
       .select("doc_id", "_sim")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val withinDist = sig.keys.filter(_ >= 100000L)
@@ -75,19 +75,20 @@ class NearDupSpec extends SparkSpec {
     // doc has the measured per-distance recall).
     val missed = withinDist.diff(pairs)
     assert(missed.isEmpty, s"corpus-pinned 7..12 recall changed: $missed")
-    // deterministicOnly: the same call with the knob caps the distance
-    // filter at blocks-2 = 6 — exactly the guaranteed subset, nothing
-    // from the probabilistic 7..12 band
-    val detPairs = NearDup.simhashPairs(docs, "doc_id", "text", maxDist = 12,
-        deterministicOnly = true)
+    // the same call with maxDist at the pigeonhole radius 8 - r (6 on
+    // this fixture) emits exactly the guaranteed subset, nothing from
+    // the probabilistic 7..12 band
+    val detDist = 8 - NearDup.simhashKeyBlocks(docs.count())
+    assert(detDist == 6, s"fixture left the r=2 regime: radius $detDist")
+    val detPairs = NearDup.simhashPairs(docs, "doc_id", "text", maxDist = detDist)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expectedDet = withinDist
       .filter { case (a, b) => java.lang.Long.bitCount(sig(a) ^ sig(b)) <= 6 }
     assert(expectedDet.diff(detPairs).isEmpty,
-      "deterministicOnly must still surface every hamming <= blocks-2 pair")
+      "the pigeonhole radius must still surface every hamming <= blocks-2 pair")
     assert(detPairs.forall { case (a, b) =>
       java.lang.Long.bitCount(sig(a) ^ sig(b)) <= 6 },
-      "deterministicOnly must emit nothing from the probabilistic band")
+      "the pigeonhole radius must emit nothing from the probabilistic band")
     assert(detPairs.subsetOf(pairs), "deterministic pairs must be a subset")
   }
 
@@ -128,7 +129,7 @@ class NearDupSpec extends SparkSpec {
     // term that made fixed 16-bit keys quadratic. Two corpus sizes
     // straddling the r=2 -> r=3 boundary (4k -> 40k docs, 100x the
     // pair universe): under the adaptive width, collisions per doc
-    // must stay bounded; under pinned keyBlocks=2 they must grow
+    // must stay bounded; under a pinned r=2 they must grow
     // ~10x per doc (the quadratic signature this feature removes).
     // maxDist=64 disables the hamming cut so the raw collision mass
     // is what's counted; seeds are fixed -> fully deterministic.
@@ -137,11 +138,11 @@ class NearDupSpec extends SparkSpec {
       val rng = new scala.util.Random(42)
       (0 until n).map(i => (i.toLong, rng.nextLong())).toDF("id", "s")
     }
-    def collisions(n: Int, kb: Int): Long =
+    def collisions(n: Int, r: Int): Long =
       NearDup.simhashPairsFromSignatures(randomSigs(n), "id", "s",
-        maxDist = 64, keyBlocks = kb).count()
-    val smallAdaptive = collisions(4000, 0)  // n=4000  -> r=2
-    val bigAdaptive = collisions(40000, 0)   // n=40000 -> r=3
+        maxDist = 64, r = r).count()
+    val smallAdaptive = collisions(4000, NearDup.simhashKeyBlocks(4000))  // r=2
+    val bigAdaptive = collisions(40000, NearDup.simhashKeyBlocks(40000))  // r=3
     val bigFixed = collisions(40000, 2)
     // expectations (84 or 168 bands over 2^16 / 2^24 keys):
     //   small r=2: ~84 * C(4k,2)/2^16  ~ 10.2k -> ~2.6 per doc
@@ -166,7 +167,7 @@ class NearDupSpec extends SparkSpec {
     // some triple key matches in table 0 — a guarantee, not a corpus
     // pin. Also: candidate mass must not exceed the r=2 geometry's
     // (narrower keys can only collide MORE).
-    val sig = docs.withColumn("_sim", NearDup.simhash64(Text.tokens(col("text"))))
+    val sig = docs.withColumn("_sim", graft.functions.simhash64(Text.tokens(col("text"))))
       .select("doc_id", "_sim")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val det = sig.keys.filter(_ >= 100000L)
@@ -174,8 +175,9 @@ class NearDupSpec extends SparkSpec {
       .filter { case (a, b) => java.lang.Long.bitCount(sig(a) ^ sig(b)) <= 5 }
       .toSet
     assert(det.nonEmpty, "expected planted pairs within hamming 5")
-    val pairs = NearDup.simhashPairs(docs, "doc_id", "text", maxDist = 12,
-        keyBlocks = 3)
+    val pairs = NearDup.simhashPairsFromSignatures(
+        docs.withColumn("_sim", graft.functions.simhash64(Text.tokens(col("text")))),
+        "doc_id", "_sim", maxDist = 12, r = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val missed = det.diff(pairs)
     assert(missed.isEmpty,
@@ -196,7 +198,7 @@ class NearDupSpec extends SparkSpec {
         .select((col("doc_id") + lit(100000L)).as("doc_id"),
           concat_ws(" ", slice(Text.tokens(col("text")), 2, 100000)).as("text")))
     val withSig = planted01
-      .withColumn("_sim", NearDup.simhash64(Text.tokens(col("text"))))
+      .withColumn("_sim", graft.functions.simhash64(Text.tokens(col("text"))))
       .withColumn("_sh", Text.shingles(Text.tokens(col("text")), 3))
     // the brute-force oracle also depends on the gate corpus staying
     // in the r=2 adaptive-width regime (recall 1.0 is only a contract
@@ -207,8 +209,7 @@ class NearDupSpec extends SparkSpec {
     assert(NearDup.simhashKeyBlocks(nGate) == 2,
       s"sf0.01 gate corpus ($nGate docs) left the r=2 adaptive-width " +
         "regime: the llm_simhash_neardup brute-force oracle no longer " +
-        "matches the adaptive banding — pin keyBlocks=2 in the query " +
-        "or re-plant a smaller fixture")
+        "matches the adaptive banding — re-plant a smaller fixture")
     val maxH = withSig.as("a").join(withSig.as("b"),
         col("a.doc_id") < col("b.doc_id"))
       .filter(Text.jaccard(col("a._sh"), col("b._sh")) >= 0.5)
@@ -237,7 +238,7 @@ class NearDupSpec extends SparkSpec {
           .select((col("doc_id") + lit(100000L)).as("doc_id"),
             concat_ws(" ", slice(Text.tokens(col("text")), 2, 100000)).as("text")))
       val withSig = planted
-        .withColumn("_sim", NearDup.simhash64(Text.tokens(col("text"))))
+        .withColumn("_sim", graft.functions.simhash64(Text.tokens(col("text"))))
         .withColumn("_sh", Text.shingles(Text.tokens(col("text")), 3))
         .withColumn("_nt", size(Text.tokens(col("text"))))
       val escapes = withSig.as("a").join(withSig.as("b"),
@@ -295,46 +296,44 @@ class NearDupSpec extends SparkSpec {
     assert(sig.toSeq == sig2.toSeq)
   }
 
-  test("hot-bucket cap: a degenerate boilerplate bucket is excluded, not expanded") {
+  /** `n` identical boilerplate docs (one bucket in EVERY band) plus
+    * one genuinely near-dup pair of distinct docs.
+    */
+  private def boilerplate(n: Int) = {
     val sess = spark
     import sess.implicits._
-    // 60 identical boilerplate docs (one hot bucket in EVERY band)
-    // plus one genuinely near-dup pair of distinct docs
-    val boiler = (1L to 60L).map(i =>
+    val boiler = (1L to n.toLong).map(i =>
       (i, "the same legal footer text appears verbatim on every page"))
     val pair = Seq(
-      (1001L, "a quick brown fox jumps over the lazy dog near the river bank today"),
-      (1002L, "a quick brown fox jumps over the lazy dog near the river bank now"))
-    val corpus = (boiler ++ pair).toDF("doc_id", "text")
-    // cap below the boilerplate bucket size: its quadratic expansion
-    // (60*59/2 pairs per band) is skipped; the distinct near-dup pair
-    // lives in small buckets and must survive
-    val capped = NearDup.nearDuplicates(corpus, "doc_id", "text",
-        threshold = 0.5, maxBucketSize = 10)
+      (100001L, "a quick brown fox jumps over the lazy dog near the river bank today"),
+      (100002L, "a quick brown fox jumps over the lazy dog near the river bank now"))
+    (boiler ++ pair).toDF("doc_id", "text")
+  }
+
+  test("hot-bucket cap: a degenerate boilerplate bucket is excluded, not expanded") {
+    val cap = NearDup.MinhashMaxBucket.toInt
+    // one doc over the cap: the boilerplate bucket's quadratic
+    // expansion is skipped; the distinct near-dup pair lives in small
+    // buckets and must survive
+    val capped = NearDup.nearDuplicates(boilerplate(cap + 1), "doc_id", "text",
+        threshold = 0.5)
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(capped == Set((1001L, 1002L)), s"got $capped")
-    // with the cap lifted the boilerplate pairs come back
-    val uncapped = NearDup.nearDuplicates(corpus, "doc_id", "text",
-        threshold = 0.5, maxBucketSize = 100000)
+    assert(capped == Set((100001L, 100002L)), s"got $capped")
+    // at the cap the boilerplate pairs are expanded
+    val atCap = NearDup.nearDuplicates(boilerplate(cap), "doc_id", "text",
+        threshold = 0.5)
       .count()
-    assert(uncapped == 60L * 59 / 2 + 1, s"got $uncapped")
+    assert(atCap == cap.toLong * (cap - 1) / 2 + 1, s"got $atCap")
   }
 
   test("hot-bucket cap is observable: dropped-bucket metrics fire") {
-    val sess = spark
-    import sess.implicits._
     // mixed corpus: hot boilerplate buckets PLUS genuine docs in small
     // buckets. If EVERY bucket were dropped, AQE's empty-relation
     // propagation would elide the CollectMetrics node with the rest of
     // the join subtree and no metric would be delivered (documented
-    // caveat on minhashCandidates) — the realistic mixed case is what
-    // the metric exists for.
-    val boiler = (1L to 60L).map(i =>
-      (i, "the same legal footer text appears verbatim on every page"))
-    val pair = Seq(
-      (1001L, "a quick brown fox jumps over the lazy dog near the river bank today"),
-      (1002L, "a quick brown fox jumps over the lazy dog near the river bank now"))
-    val corpus = (boiler ++ pair).toDF("doc_id", "text")
+    // caveat on NearDup.collisionRows) — the realistic mixed case is
+    // what the metric exists for.
+    val n = NearDup.MinhashMaxBucket + 1
     @volatile var seen: Option[org.apache.spark.sql.Row] = None
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -345,14 +344,53 @@ class NearDupSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      NearDup.minhashCandidates(corpus, "doc_id", "text", maxBucketSize = 10).count()
+      NearDup.minhashCandidates(boilerplate(n.toInt), "doc_id", "text").count()
       Profile.drain(spark) // listener delivery is async
       assert(seen.isDefined, "observe metric never delivered")
       val r = seen.get
-      // all 8 bands collapse the 60 identical docs into one hot bucket
+      // all 8 bands collapse the identical docs into one hot bucket
       assert(r.getAs[Long]("dropped_buckets") == 8L, s"got $r")
-      assert(r.getAs[Long]("dropped_docs") == 8L * 60, s"got $r")
+      assert(r.getAs[Long]("dropped_docs") == 8L * n, s"got $r")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("every entry point handles an empty corpus and docs too short to shingle") {
+    val sess = spark
+    import sess.implicits._
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    // fewer than 3 tokens: no shingles, so nothing can be a near-dup —
+    // not even the two identical docs
+    val short = Seq((1L, ""), (2L, "one"), (3L, "two words"), (4L, "two words"))
+      .toDF("doc_id", "text")
+    val ids = Seq(1L, 2L, 3L, 4L)
+    def pairs(d: org.apache.spark.sql.DataFrame) = Seq(
+      NearDup.nearDuplicates(d, "doc_id", "text", threshold = 0.5),
+      NearDup.simhashNearDuplicates(d, "doc_id", "text", threshold = 0.5),
+      NearDup.simhashNearDuplicates(d, "doc_id", "text", threshold = 0.5,
+        maxDist = 6, distCutMinTokens = 32))
+    for (d <- Seq(empty, short); p <- pairs(d))
+      assert(p.count() == 0, s"got ${p.collect().toSeq}")
+    for (q <- Seq(NearDup.dedupClusters(empty, "doc_id", "text", threshold = 0.5),
+        NearDup.dedupKeepBest(empty, "doc_id", "text", threshold = 0.5),
+        NearDup.clusterSafeSplit(empty, "doc_id", "text", threshold = 0.5),
+        NearDup.incrementalNearDup(empty, empty, "doc_id", "text", threshold = 0.5)))
+      assert(q.count() == 0, s"got ${q.collect().toSeq}")
+    val clusters = NearDup.dedupClusters(short, "doc_id", "text", threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getLong(3))).toSet
+    assert(clusters == ids.map(i => (i, i, true, 1L)).toSet, s"got $clusters")
+    val best = NearDup.dedupKeepBest(short, "doc_id", "text", threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
+    assert(best == Set((1L, 1L, 0, 1L), (2L, 2L, 1, 1L), (3L, 3L, 2, 1L), (4L, 4L, 2, 1L)),
+      s"got $best")
+    val split = NearDup.clusterSafeSplit(short, "doc_id", "text", threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(split == ids.map(i => (i, i, 1L)).toSet, s"got $split")
+    val batch = short.filter(col("doc_id") > 2)
+    for (corpus <- Seq(empty, short.filter(col("doc_id") <= 2))) {
+      val inc = NearDup.incrementalNearDup(corpus, batch, "doc_id", "text", threshold = 0.5)
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+      assert(inc == Set((3L, "keep", 3L), (4L, "keep", 4L)), s"got $inc")
+    }
   }
 
   test("dedupClusters: transitivity merges A~B~C into one group even when A!~C") {

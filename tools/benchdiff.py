@@ -19,6 +19,10 @@ A and B are `bench_full.json` files (A the baseline). Prints:
   `jobs A->B` with the stage tags (the `[wall_s, task_cpu_s, jobs]`
   rows) that only one side carries — a removed or added pipeline step
   shows here even when the wall did not move;
+- every query whose `observe()` metrics differ: each scalar row that
+  is not `jobs`, `stages`, `tk_*`, `cg_n` or `sq_*` and differs, as
+  `name A->B` (e.g. `candidate_pairs 123->120`), so two records show
+  whether a change kept the same candidate mass;
 - queries that failed in either run, or ran in only one.
 
 Walls are floored at 1 ms so a 0.000 s row cannot zero the geomean.
@@ -68,6 +72,26 @@ def job_changes(a, b):
     return sorted(out, key=lambda c: (c[2] or 0) - (c[1] or 0))
 
 
+def observed_changes(a, b):
+    """(query, [(row, A, B)]) for every query both records profiled
+    whose scalar observe() rows differ; a row only one side carries
+    reads None on the other."""
+    sa, sb = a.get('stages', {}), b.get('stages', {})
+
+    def observed(r):
+        return {k: v for k, v in r.items()
+                if not isinstance(v, list) and k not in ('jobs', 'stages', 'cg_n')
+                and not k.startswith(('tk_', 'sq_'))}
+    out = []
+    for q in sorted(set(sa) & set(sb)):
+        oa, ob = observed(sa[q]), observed(sb[q])
+        rows = [(k, oa.get(k), ob.get(k)) for k in dict.fromkeys([*oa, *ob])
+                if oa.get(k) != ob.get(k)]
+        if rows:
+            out.append((q, rows))
+    return out
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split('\n\n')[0])
     ap.add_argument('a')
@@ -97,6 +121,10 @@ def main():
         print(f'  {q}: jobs {ja}->{jb}'
               + (f"; tags only in A: {', '.join(only_a)}" if only_a else '')
               + (f"; tags only in B: {', '.join(only_b)}" if only_b else ''))
+    observed = observed_changes(a, b)
+    print(f'observed changed: {len(observed)}')
+    for q, rows in observed:
+        print(f'  {q}: ' + ', '.join(f'{k} {fmt(va)}->{fmt(vb)}' for k, va, vb in rows))
     for label, names in (('failed in A', fa), ('failed in B', fb),
                          ('only in A', set(a['queries']) - set(b['queries'])),
                          ('only in B', set(b['queries']) - set(a['queries']))):
