@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
 import graft.Lineage.CutSyntax
@@ -48,10 +49,13 @@ object LakeQueries extends QueryPack {
     // the single-threaded driver re-analyzes it per job (see
     // LakeFinder's candidates checkpoint — same r15 measurement).
     // The checkpoint IS the input-prep materialization, so it owns
-    // the m1_input_prep stage tag; the sizing count below then
-    // scans checkpointed blocks (~free).
+    // the m1_input_prep stage tag, and it observes the blob-point
+    // count that sizes eps below on its own pass: no job of its own.
+    val sizing = Observation("graft.m1_input_prep")
     val pts = graft.Profile.stage("m1_input_prep") {
-      blobPoints(s, dir).lineageCut()
+      blobPoints(s, dir)
+        .observe(sizing, count_if(col("px") < lit(10000000L)).as("blob_points"))
+        .lineageCut()
     }
     // density-adaptive eps: target ~25 expected neighbors per
     // point regardless of SF, so the neighbor-pair join stays
@@ -65,7 +69,7 @@ object LakeQueries extends QueryPack {
     // ISOLATED blob point, P(deg=0) = e^-25 ~ 1.4e-11 per point,
     // vanishing at every SF. Noise points stay >= 1000 apart,
     // far above eps at every SF (eps(sf0.001) ~ 282).
-    val n = pts.filter(col("px") < lit(10000000L)).count()
+    val n = sizing.get("blob_points").asInstanceOf[Long]
     val rho = (n / 5.0) / (997.0 * 997.0)
     val eps = math.sqrt(25.0 / (math.Pi * rho))
     // includeNoise = false: the count drops noise anyway, so the
@@ -129,9 +133,13 @@ object LakeQueries extends QueryPack {
     // eager localCheckpoint (same r15 lineage-cut as m1 above): the
     // distinct + projection prep otherwise re-enters driver analysis
     // under every findLakes interior action. Owns the eps_estimate
-    // tag — it IS the sizing-scan materialization; the count below
-    // reads checkpointed blocks (~free)
-    val ptsP = graft.Profile.stage("eps_estimate") { pts.lineageCut() }
+    // tag, and observes the above-floor count that sizes eps below on
+    // its own pass: no job of its own
+    val sizing = Observation("graft.eps_estimate")
+    val ptsP = graft.Profile.stage("eps_estimate") {
+      pts.observe(sizing, count_if(abs(col("dhdt")) > 0.105).as("n_clustered"))
+        .lineageCut()
+    }
     // density-adaptive eps (see m1_dbscan): ~25 expected
     // neighbors/point keeps the DBSCAN pair join linear at any SF.
     // 25, not the earlier 40: the pair table is the operator's
@@ -141,7 +149,7 @@ object LakeQueries extends QueryPack {
     // cluster MEMBERS, a sub-minPts point with any neighbor joins
     // its blob as border, so only an ISOLATED blob point breaks
     // the oracle — P(deg=0) = e^-25 ~ 1.4e-11 per point
-    val nClustered = ptsP.filter(abs(col("dhdt")) > 0.105).count()
+    val nClustered = sizing.get("n_clustered").asInstanceOf[Long]
     val rho = (nClustered / 5.0) / (997.0 * 997.0)
     val eps = math.sqrt(25.0 / (math.Pi * rho))
     // bufferDist covers the planted ring strip (hull edge ~997 to

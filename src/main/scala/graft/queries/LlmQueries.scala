@@ -25,11 +25,6 @@ object LlmQueries extends QueryPack {
     d.unionByName(planted)
   }
 
-  /** Shared CTE chain: planted corpus -> tokens -> 3-gram shingles ->
-    * all-pairs exact Jaccard. Composed into the brute-force truth-set
-    * oracles (llm_minhash_neardup / llm_simhash_neardup) and the
-    * transitive-closure clustering oracle (llm_dedup_clusters).
-    */
   /** Planted decontamination fixture shared by llm_decontaminate and
     * llm_decontam_bloom: benchmark = docs with doc_id % 100 = 17;
     * every corpus doc with doc_id % 50 = 3 gets the first 8 tokens of

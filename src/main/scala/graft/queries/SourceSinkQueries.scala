@@ -5,9 +5,11 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-import graft.sources.hdf5.{Atl11, Hdf5Writer}
+import graft.{Profile, Tables}
+import graft.sources.hdf5.{Atl11, Hdf5Sink, Hdf5Writer}
 import graft.sources.hdf5.Hdf5Writer.{Dset, Group}
+import graft.sources.netcdf.NetCdf
+import graft.sources.zarr.ZarrSink
 
 /** Source/sink surface (SURVEY.md §2.1 S1/S4/S8/S11, §2.7 F8): each
   * declared as a write -> read-back round-trip whose oracle
@@ -133,7 +135,7 @@ object SourceSinkQueries extends QueryPack {
     // filename. The oracle replays the generator formulas in DuckDB.
     Q("s2_hdf5_atl11",
       (s, dir) => {
-        val base = writeAtl11Fixtures(s, dir)
+        val base = Profile.stage("sink_write") { writeAtl11Fixtures(s, dir) }
         Atl11.read(s, s"$base/ATL11_*.h5")
       },
       Some("""
@@ -165,25 +167,27 @@ object SourceSinkQueries extends QueryPack {
       (s, dir) => {
         val base = tmp("atl06")
         new java.io.File(base).mkdirs()
-        val keys = Tables(s, dir, "nation").select("n_nationkey")
-          .collect().map(_.getInt(0)).sorted
         val lasers = Seq("gt1l", "gt1r", "gt2l", "gt2r", "gt3l", "gt3r")
-        val groups = lasers.zipWithIndex.map { case (laser, li) =>
-          Hdf5Writer.Group(laser, Nil, Seq(Hdf5Writer.Group("land_ice_segments", Seq(
-            Dset("segment_id", "i64", Seq(keys.length),
-              Hdf5Writer.i64Bytes(keys.map(_.toLong + 1000L))),
-            Dset("longitude", "f64", Seq(keys.length),
-              Hdf5Writer.f64Bytes(keys.map(k => 40.0 + k * 0.25 + li * 0.5))),
-            Dset("latitude", "f64", Seq(keys.length),
-              Hdf5Writer.f64Bytes(keys.map(k => -70.0 - k * 0.125 - li * 0.0625))),
-            Dset("h_li", "f64", Seq(keys.length),
-              Hdf5Writer.f64Bytes(keys.map(k =>
-                1000.0 + li * 100.0 + k * 1.0 + (k % 5) * 0.25)),
-              chunkDims = Some(Seq(10)), deflate = Some(6)),
-            Dset("atl06_quality_summary", "i8", Seq(keys.length),
-              Hdf5Writer.i8Bytes(keys.map(k => ((k + li) % 2).toByte)))))))
+        Profile.stage("sink_write") {
+          val keys = Tables(s, dir, "nation").select("n_nationkey")
+            .collect().map(_.getInt(0)).sorted
+          val groups = lasers.zipWithIndex.map { case (laser, li) =>
+            Hdf5Writer.Group(laser, Nil, Seq(Hdf5Writer.Group("land_ice_segments", Seq(
+              Dset("segment_id", "i64", Seq(keys.length),
+                Hdf5Writer.i64Bytes(keys.map(_.toLong + 1000L))),
+              Dset("longitude", "f64", Seq(keys.length),
+                Hdf5Writer.f64Bytes(keys.map(k => 40.0 + k * 0.25 + li * 0.5))),
+              Dset("latitude", "f64", Seq(keys.length),
+                Hdf5Writer.f64Bytes(keys.map(k => -70.0 - k * 0.125 - li * 0.0625))),
+              Dset("h_li", "f64", Seq(keys.length),
+                Hdf5Writer.f64Bytes(keys.map(k =>
+                  1000.0 + li * 100.0 + k * 1.0 + (k % 5) * 0.25)),
+                chunkDims = Some(Seq(10)), deflate = Some(6)),
+              Dset("atl06_quality_summary", "i8", Seq(keys.length),
+                Hdf5Writer.i8Bytes(keys.map(k => ((k + li) % 2).toByte)))))))
+          }
+          Hdf5Writer.write(s"$base/ATL06_1287_granule.h5", groups)
         }
-        Hdf5Writer.write(s"$base/ATL06_1287_granule.h5", groups)
         s.read.format("hdf5")
           .option("groups", lasers.map(l => s"$l/land_ice_segments").mkString(","))
           .option("datasets",
@@ -226,7 +230,7 @@ object SourceSinkQueries extends QueryPack {
           .select(col("l_orderkey"), col("l_linenumber"),
             col("l_quantity"), col("l_extendedprice"))
           .repartition(4, col("l_orderkey"))
-        graft.sources.hdf5.Hdf5Sink.write(li, base, group = "lineitem")
+        Profile.stage("sink_write") { Hdf5Sink.write(li, base, group = "lineitem") }
         s.read.format("hdf5")
           .option("groups", "lineitem")
           .option("datasets", "l_orderkey,l_linenumber,l_quantity,l_extendedprice")
@@ -255,7 +259,7 @@ object SourceSinkQueries extends QueryPack {
             array(col("l_quantity"), col("l_discount"), col("l_tax"))
               .as("h_corr"))
           .repartition(4, col("l_orderkey"))
-        graft.sources.hdf5.Hdf5Sink.write(li, base, group = "lineitem")
+        Profile.stage("sink_write") { Hdf5Sink.write(li, base, group = "lineitem") }
         s.read.format("hdf5")
           .option("groups", "lineitem")
           .option("datasets", "l_orderkey,l_linenumber,h_corr")
@@ -296,7 +300,7 @@ object SourceSinkQueries extends QueryPack {
           .repartition(4, col("l_partkey"))
         // 8k-row chunks: sf0.01's ~60k rows span multiple chunks, so
         // the grid-alignment shuffle and edge-chunk fill actually run
-        graft.sources.zarr.ZarrSink.write(li, base, chunkRows = 8192)
+        Profile.stage("sink_write") { ZarrSink.write(li, base, chunkRows = 8192) }
         s.read.format("zarr").load(base)
           .select("l_orderkey", "l_partkey", "l_quantity", "l_discount")
       },
@@ -326,8 +330,9 @@ object SourceSinkQueries extends QueryPack {
           .select(col("l_orderkey"), col("l_suppkey"),
             col("l_extendedprice"), col("l_tax"))
           .repartition(4, col("l_suppkey"))
-        graft.sources.zarr.ZarrSink.write(li, base, chunkRows = 8192,
-          level = 5, codec = "blosc")
+        Profile.stage("sink_write") {
+          ZarrSink.write(li, base, chunkRows = 8192, level = 5, codec = "blosc")
+        }
         s.read.format("zarr").load(base)
           .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_tax")
       },
@@ -360,8 +365,9 @@ object SourceSinkQueries extends QueryPack {
             array(col("l_quantity"), col("l_discount"), col("l_tax"))
               .as("h_corr"))
           .repartition(4, col("l_orderkey"))
-        graft.sources.zarr.ZarrSink.write(li, base, chunkRows = 8192,
-          level = 5, codec = "blosc")
+        Profile.stage("sink_write") {
+          ZarrSink.write(li, base, chunkRows = 8192, level = 5, codec = "blosc")
+        }
         s.read.format("zarr").load(base)
           .select(col("l_orderkey"), col("l_linenumber"),
             posexplode(col("h_corr")).as(Seq("pos", "val")))
@@ -397,8 +403,8 @@ object SourceSinkQueries extends QueryPack {
             col("l_linenumber"),
             col("l_quantity"), col("l_extendedprice"))
           .repartition(4)
-        graft.sources.netcdf.NetCdf.write(li, base)
-        graft.sources.netcdf.NetCdf.read(s, base)
+        Profile.stage("sink_write") { NetCdf.write(li, base) }
+        NetCdf.read(s, base)
       },
       Some("""
         SELECT CAST(l_suppkey AS INTEGER) AS suppkey, l_linenumber,
@@ -431,8 +437,8 @@ object SourceSinkQueries extends QueryPack {
             array(col("l_quantity"), col("l_discount"), col("l_tax"))
               .as("h_corr"))
           .repartition(4)
-        graft.sources.netcdf.NetCdf.write(li, base, version = 2)
-        graft.sources.netcdf.NetCdf.read(s, base)
+        Profile.stage("sink_write") { NetCdf.write(li, base, version = 2) }
+        NetCdf.read(s, base)
           .select(col("orderkey"), col("l_linenumber"),
             posexplode(col("h_corr")).as(Seq("pos", "val")))
       },

@@ -42,7 +42,7 @@ object Atl11 {
       val files = Hdf5DataSource.resolveFiles(
         new org.apache.spark.sql.util.CaseInsensitiveStringMap(
           java.util.Map.of("path", glob)))
-      val r = new Hdf5Reader(files.head, Hdf5DataSource.hadoopConf())
+      val r = new Hdf5Reader(files.head, graft.sources.ArrayScan.hadoopConf())
       try {
         r.groupChildren(pairs.head).flatMap { case (n, a) =>
           r.dataset(n, a).attrs.get("_FillValue").map(n -> _)

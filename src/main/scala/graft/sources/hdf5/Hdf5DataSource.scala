@@ -1,26 +1,19 @@
 package graft.sources.hdf5
 
-import java.util.{Map => JMap}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 over [[Hdf5Reader]] — the scan shape the README's S2
-  * design note promised (per /root/reference/atl06_to_atl11.py's
-  * per-beam-pair reads): **one Spark split per (granule file, group)**,
-  * so a 1000-granule × 3-beam-pair campaign scans as ~3000 independent
+import graft.sources.{ArrayScan, ArraySource}
+import graft.sources.ArrayScan._
+
+/** HDF5 on the shared [[graft.sources.ArrayScan]], decoded through
+  * [[Hdf5Reader]] — the scan shape the README's S2 design note
+  * promised (per the reference atl06_to_atl11.py's per-beam-pair
+  * reads): **one Spark split per (granule file, group)**, so a
+  * 1000-granule × 3-beam-pair campaign scans as ~3000 independent
   * partitions with no driver-side data movement.
   *
   * Usage:
@@ -39,71 +32,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * group must share the leading dimension; coordinate-sized datasets
   * (e.g. `cycle_number`) are read as their own tiny load instead.
   *
-  * Column pruning is pushed down: an unrequested dataset's bytes are
-  * never fetched (datasets are independent byte ranges in HDF5, and
-  * [[Hdf5Input]] reads strictly positionally), which is the HDF5
-  * analogue of parquet column pruning. The scan is vectorized:
-  * decoded primitive arrays are served as ColumnarBatches
-  * (OnHeapColumnVector, 4096-row batches) so downstream whole-stage
-  * codegen consumes them directly; a row-wise reader remains as the
-  * general fallback.
+  * Column pruning reaches the bytes: an unrequested dataset is never
+  * fetched (datasets are independent byte ranges in HDF5, and
+  * [[Hdf5Input]] reads strictly positionally), the HDF5 analogue of
+  * parquet column pruning. `_filename`/`_group` equality and IN
+  * filters drop whole (granule, group) splits at planning. The
+  * decoded arrays reach Spark as ColumnarBatches through the shared
+  * columnar split reader, as Zarr's and NetCDF's do.
   */
-class Hdf5DataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "hdf5"
-  override def supportsExternalMetadata(): Boolean = true
+class Hdf5DataSource extends ArraySource("hdf5", Hdf5DataSource) with DataSourceRegister
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    Hdf5DataSource.infer(options)
-
-  override def getTable(
-      schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new Hdf5Table(schema, new CaseInsensitiveStringMap(properties))
-}
-
-object Hdf5DataSource {
+object Hdf5DataSource extends ArrayScan.Format {
   val FilenameCol = "_filename"
   val GroupCol = "_group"
   val IndexCol = "_index"
 
-  private[hdf5] def hadoopConf(): Configuration =
-    SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration())
+  final case class Split(file: String, group: String) extends InputPartition
 
-  /** Serializable key-value dump of a Hadoop conf, for shipping the
-    * session conf to executor-side readers.
-    */
-  private[hdf5] def confKv(conf: Configuration): Array[(String, String)] = {
-    val it = conf.iterator()
-    val b = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-    b.toArray
-  }
+  private[hdf5] def resolveFiles(options: CaseInsensitiveStringMap): Seq[String] =
+    ArrayScan.resolve(options, "hdf5", "files")(_.isFile)
 
-  /** Expand `path`/`paths` options through Hadoop glob resolution. */
-  private[hdf5] def resolveFiles(options: CaseInsensitiveStringMap): Seq[String] = {
-    val raw: Seq[String] =
-      if (options.containsKey("paths"))
-        // DataFrameReader encodes multiple load() args as a JSON array
-        "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(options.get("paths"))
-          .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-      else Option(options.get("path")).toSeq
-    require(raw.nonEmpty, "hdf5 source requires a path")
-    val conf = hadoopConf()
-    val files = raw.flatMap { pat =>
-      val p = new Path(pat)
-      val fs = p.getFileSystem(conf)
-      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-        .filter(_.isFile).map(_.getPath.toString)
-    }.sorted
-    require(files.nonEmpty, s"hdf5 source matched no files: ${raw.mkString(",")}")
-    files
-  }
-
-  private[hdf5] def groupList(options: CaseInsensitiveStringMap): Seq[String] =
-    Option(options.get("groups")).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq(""))
+  private def groupList(options: CaseInsensitiveStringMap): Seq[String] =
+    ArrayScan.listOption(options, "groups").getOrElse(Seq(""))
 
   private[hdf5] def sparkType(dt: Hdf5Reader.Dtype): DataType =
     (dt.clazz, dt.size, dt.signed) match {
@@ -123,15 +73,14 @@ object Hdf5DataSource {
     }
 
   /** Schema from the first (file, group): metadata columns + datasets. */
-  private[hdf5] def infer(options: CaseInsensitiveStringMap): StructType = {
+  override def infer(options: CaseInsensitiveStringMap): StructType = {
     val file = resolveFiles(options).head
     val group = groupList(options).head
-    val r = new Hdf5Reader(file, hadoopConf())
+    val r = new Hdf5Reader(file, ArrayScan.hadoopConf())
     try {
       val all = r.groupChildren(group)
         .map { case (n, a) => r.dataset(n, a) }
-      val wanted = Option(options.get("datasets"))
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      val wanted = ArrayScan.listOption(options, "datasets")
         .getOrElse(all.map(_.name).sorted)
       val byName = all.map(d => d.name -> d).toMap
       val fields = wanted.map { n =>
@@ -150,278 +99,79 @@ object Hdf5DataSource {
         StructField(IndexCol, LongType, nullable = false) :: fields.toList)
     } finally r.close()
   }
-}
 
-final class Hdf5Table(schema: StructType, options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = s"hdf5(${options.get("path")})"
-  override def schema(): StructType = schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new Hdf5ScanBuilder(schema, options)
-}
-
-final class Hdf5ScanBuilder(full: StructType, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  import org.apache.spark.sql.sources._
-
-  private var required: StructType = full
-  private var fileSet: Option[Set[String]] = None
-  private var groupSet: Option[Set[String]] = None
-  private var accepted: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** `_filename` / `_group` equality prunes (granule, group)
-    * partitions at PLANNING time — the reference reads SPECIFIC beam
-    * groups out of many-granule campaigns, and a pruned partition's
-    * HDF5 metadata and chunks are never opened. Filters stay residual
-    * (Spark re-applies them post-scan), so pruning only drops I/O.
+  /** `_filename` / `_group` equality prunes (granule, group) splits —
+    * the reference reads SPECIFIC beam groups out of many-granule
+    * campaigns, and a pruned split's HDF5 metadata and chunks are
+    * never opened.
     */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    def narrow(cur: Option[Set[String]], s: Set[String]) =
-      Some(cur.fold(s)(_.intersect(s)))
-    accepted = filters.filter {
-      case EqualTo(Hdf5DataSource.FilenameCol, s: String) =>
-        fileSet = narrow(fileSet, Set(s)); true
-      case In(Hdf5DataSource.FilenameCol, vs)
-          if vs.forall(_.isInstanceOf[String]) =>
-        fileSet = narrow(fileSet, vs.map(_.asInstanceOf[String]).toSet); true
-      case EqualTo(Hdf5DataSource.GroupCol, s: String) =>
-        groupSet = narrow(groupSet, Set(s)); true
-      case In(Hdf5DataSource.GroupCol, vs)
-          if vs.forall(_.isInstanceOf[String]) =>
-        groupSet = narrow(groupSet, vs.map(_.asInstanceOf[String]).toSet); true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = accepted
+  override def prunes(filter: Filter): Boolean = pinned(filter).nonEmpty
 
-  override def build(): Scan = new Hdf5Scan(required,
-    Hdf5DataSource.resolveFiles(options)
-      .filter(f => fileSet.forall(_.contains(f))),
-    Hdf5DataSource.groupList(options)
-      .filter(g => groupSet.forall(_.contains(g))))
-}
-
-final class Hdf5Scan(schema: StructType, files: Seq[String], groups: Seq[String])
-    extends Scan with Batch {
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"hdf5 ${files.size} file(s) x ${groups.size} group(s)"
-  override def planInputPartitions(): Array[InputPartition] =
-    (for (f <- files; g <- groups) yield Hdf5InputPartition(f, g)).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    Hdf5ReaderFactory(schema, Hdf5DataSource.confKv(Hdf5DataSource.hadoopConf()))
-}
-
-final case class Hdf5InputPartition(file: String, group: String)
-    extends InputPartition
-
-final case class Hdf5ReaderFactory(schema: StructType,
-    confKv: Array[(String, String)])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[Hdf5InputPartition]
-    new Hdf5PartitionReader(p.file, p.group, schema, confKv)
-  }
-  // HDF5 datasets decode to primitive arrays anyway, so vectorized
-  // output is the natural shape: Spark wires a codegen'd ColumnarToRow
-  // above the scan and downstream stages fuse over the batches.
-  override def supportColumnarReads(partition: InputPartition): Boolean = true
-  override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[Hdf5InputPartition]
-    new Hdf5ColumnarPartitionReader(p.file, p.group, schema, confKv)
-  }
-}
-
-/** Vectorized split reader: the decoded dataset arrays are copied into
-  * OnHeapColumnVectors in fixed-size batches. 2-D datasets become
-  * array<T> columns (one child-vector run per row).
-  */
-final class Hdf5ColumnarPartitionReader(file: String, group: String,
-    schema: StructType, confKv: Array[(String, String)])
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
-  import Hdf5DataSource._
-
-  private val data = new Hdf5SplitData(file, group, schema, confKv)
-  private val batchSize = 4096
-  private var start = 0
-  private var batch: ColumnarBatch = _
-
-  override def next(): Boolean = {
-    if (start >= data.rowCount) return false
-    val n = math.min(batchSize, data.rowCount - start)
-    val vectors = schema.fields.zipWithIndex.map { case (f, ci) =>
-      val v = new OnHeapColumnVector(n, f.dataType)
-      fill(v, f, ci, start, n)
-      v
-    }
-    batch = new ColumnarBatch(vectors.map(_.asInstanceOf[ColumnVector]), n)
-    start += n
-    true
+  private def pinned(filter: Filter): Option[(String, Set[String])] = filter match {
+    case EqualTo(c @ (FilenameCol | GroupCol), s: String) => Some(c -> Set(s))
+    case In(c @ (FilenameCol | GroupCol), vs) if vs.forall(_.isInstanceOf[String]) =>
+      Some(c -> vs.map(_.asInstanceOf[String]).toSet)
+    case _ => None
   }
 
-  private def fill(v: OnHeapColumnVector, f: StructField, ci: Int,
-      from: Int, n: Int): Unit = {
-    import graft.sources.hdf5.Hdf5SplitData._
-    data.cols(ci) match {
-      case ConstStr(bytes) =>
-        var i = 0
-        while (i < n) { v.putByteArray(i, bytes); i += 1 }
-      case Strs(rows) =>
-        var i = 0
-        while (i < n) { v.putByteArray(i, rows(from + i)); i += 1 }
-      case Index =>
-        var i = 0
-        while (i < n) { v.putLong(i, (from + i).toLong); i += 1 }
-      case Prim(arr) => putRange(v, arr, from, 0, n)
-      case Arr(arr, width) =>
-        val child = v.getChild(0).asInstanceOf[OnHeapColumnVector]
-        child.reserve(n * width)
-        putRange(child, arr, from * width, 0, n * width)
-        var i = 0
-        while (i < n) { v.putArray(i, i * width, width); i += 1 }
-    }
+  override def splits(schema: StructType, options: CaseInsensitiveStringMap,
+      filters: Seq[Filter]): Seq[InputPartition] = {
+    val pins = filters.flatMap(pinned)
+    def allowed(c: String, v: String) = pins.forall { case (pc, vs) => pc != c || vs(v) }
+    for {
+      f <- resolveFiles(options) if allowed(FilenameCol, f)
+      g <- groupList(options) if allowed(GroupCol, g)
+    } yield Split(f, g)
   }
 
-  private def putRange(v: OnHeapColumnVector, arr: AnyRef,
-      srcFrom: Int, dstFrom: Int, n: Int): Unit = arr match {
-    case a: Array[Double] => v.putDoubles(dstFrom, n, a, srcFrom)
-    case a: Array[Float]  => v.putFloats(dstFrom, n, a, srcFrom)
-    case a: Array[Long]   => v.putLongs(dstFrom, n, a, srcFrom)
-    case a: Array[Int]    => v.putInts(dstFrom, n, a, srcFrom)
-    case a: Array[Short]  => v.putShorts(dstFrom, n, a, srcFrom)
-    case a: Array[Byte]   => v.putBytes(dstFrom, n, a, srcFrom)
-  }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = data.close()
-}
-
-/** Decoded per-split column data shared by the row-wise and the
-  * vectorized readers: each requested dataset as one primitive array
-  * (row-major; 2-D datasets keep their trailing-dim width).
-  */
-private[hdf5] object Hdf5SplitData {
-  sealed trait Col
-  final case class ConstStr(bytes: Array[Byte]) extends Col
-  case object Index extends Col
-  final case class Prim(arr: AnyRef) extends Col
-  final case class Arr(arr: AnyRef, width: Int) extends Col
-  /** one UTF-8 byte array per row (decoded fixed-length strings) */
-  final case class Strs(rows: Array[Array[Byte]]) extends Col
-}
-
-private[hdf5] final class Hdf5SplitData(file: String, group: String,
-    schema: StructType, confKv: Array[(String, String)])
-    extends AutoCloseable {
-  import Hdf5DataSource._
-  import Hdf5SplitData._
-
-  // the SESSION Hadoop conf, shipped from the driver through the
-  // reader factory: an executor-side `new Configuration()` would
-  // silently drop fs.s3a/hdfs settings, so a granule that reads fine
-  // locally would fail (or mis-authenticate) on object storage
-  private val reader = new Hdf5Reader(file, {
-    val c = new Configuration(false)
-    confKv.foreach { case (k, v) => c.set(k, v) }
-    c
-  })
-
-  val (cols: Array[Col], rowCount: Int) = {
-    val metas = reader.groupChildren(group)
-      .map { case (n, a) => n -> a }.toMap
-    var leading = -1
-    val built = schema.fields.map[Col] { f =>
-      f.name match {
-        case FilenameCol => ConstStr(file.getBytes("UTF-8"))
-        case GroupCol    => ConstStr(group.getBytes("UTF-8"))
-        case IndexCol    => Index
-        case n =>
-          val meta = reader.dataset(n,
-            metas.getOrElse(n, throw new NoSuchElementException(
-              s"$file group '$group' has no dataset '$n'")))
-          val lead = meta.dims.head.toInt
-          if (leading < 0) leading = lead
-          else require(lead == leading,
-            s"$file '$group': dataset '$n' leading dim $lead != $leading " +
-              "(coordinate-sized datasets must be loaded separately)")
-          if (meta.dtype.clazz == 3) {
-            require(meta.rank == 1, s"$n: string datasets must be rank 1")
-            Strs(reader.readStrings(meta).map(_.getBytes("UTF-8")))
-          } else {
-            val flat: AnyRef = Hdf5DataSource.sparkType(meta.dtype) match {
-              case DoubleType => reader.readDoubles(meta)
-              case FloatType =>
-                val d = reader.readRaw(meta)
-                val bb = java.nio.ByteBuffer.wrap(d).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-                Array.tabulate(meta.elemCount.toInt)(i => bb.getFloat(i * 4))
-              case LongType  => reader.readLongs(meta)
-              case IntegerType => reader.readLongs(meta).map(_.toInt)
-              case ShortType => reader.readLongs(meta).map(_.toShort)
-              case ByteType  => reader.readLongs(meta).map(_.toByte)
-              case t => throw new IllegalArgumentException(s"$t")
+  override def decode(split: InputPartition, schema: StructType,
+      conf: Configuration): Decoded = {
+    val Split(file, group) = split
+    val reader = new Hdf5Reader(file, conf)
+    try {
+      val metas = reader.groupChildren(group).toMap
+      var leading = -1
+      val cols = schema.fields.map[Col] { f =>
+        f.name match {
+          case FilenameCol => ConstStr(file.getBytes("UTF-8"))
+          case GroupCol    => ConstStr(group.getBytes("UTF-8"))
+          case IndexCol    => Index(0L)
+          case n =>
+            val meta = reader.dataset(n,
+              metas.getOrElse(n, throw new NoSuchElementException(
+                s"$file group '$group' has no dataset '$n'")))
+            val lead = meta.dims.head.toInt
+            if (leading < 0) leading = lead
+            else require(lead == leading,
+              s"$file '$group': dataset '$n' leading dim $lead != $leading " +
+                "(coordinate-sized datasets must be loaded separately)")
+            if (meta.dtype.clazz == 3) {
+              require(meta.rank == 1, s"$n: string datasets must be rank 1")
+              Strs(reader.readStrings(meta).map(_.getBytes("UTF-8")))
+            } else {
+              val flat: AnyRef = sparkType(meta.dtype) match {
+                case DoubleType => reader.readDoubles(meta)
+                case FloatType =>
+                  val d = reader.readRaw(meta)
+                  val bb = java.nio.ByteBuffer.wrap(d).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+                  Array.tabulate(meta.elemCount.toInt)(i => bb.getFloat(i * 4))
+                case LongType  => reader.readLongs(meta)
+                case IntegerType => reader.readLongs(meta).map(_.toInt)
+                case ShortType => reader.readLongs(meta).map(_.toShort)
+                case ByteType  => reader.readLongs(meta).map(_.toByte)
+                case t => throw new IllegalArgumentException(s"$t")
+              }
+              if (meta.rank == 2) Arr(flat, meta.dims(1).toInt) else Prim(flat)
             }
-            if (meta.rank == 2) Arr(flat, meta.dims(1).toInt) else Prim(flat)
-          }
+        }
       }
-    }
-    // a metadata-only projection (e.g. count(*) over _filename) still
-    // needs the row count: probe the first dataset in the group
-    if (leading < 0) {
-      leading = metas.headOption
-        .map { case (n, a) => reader.dataset(n, a).dims.head.toInt }
-        .getOrElse(0)
-    }
-    (built, leading)
+      // a metadata-only projection (e.g. count(*) over _filename) still
+      // needs the row count: probe the first dataset in the group
+      if (leading < 0)
+        leading = metas.headOption
+          .map { case (n, a) => reader.dataset(n, a).dims.head.toInt }
+          .getOrElse(0)
+      Decoded(leading, cols)
+    } finally reader.close()
   }
-
-  override def close(): Unit = reader.close()
-}
-
-/** Row-wise split reader (Spark prefers the columnar one; this stays
-  * as the general fallback path).
-  */
-final class Hdf5PartitionReader(file: String, group: String,
-    schema: StructType, confKv: Array[(String, String)])
-    extends PartitionReader[InternalRow] {
-  import Hdf5SplitData._
-
-  private val data = new Hdf5SplitData(file, group, schema, confKv)
-
-  private def prim(arr: AnyRef, i: Int): Any = arr match {
-    case a: Array[Double] => a(i)
-    case a: Array[Float]  => a(i)
-    case a: Array[Long]   => a(i)
-    case a: Array[Int]    => a(i)
-    case a: Array[Short]  => a(i)
-    case a: Array[Byte]   => a(i)
-  }
-
-  private def value(c: Col, i: Int): Any = c match {
-    case ConstStr(b) => UTF8String.fromBytes(b)
-    case Strs(rows)  => UTF8String.fromBytes(rows(i))
-    case Index       => i.toLong
-    case Prim(a)     => prim(a, i)
-    case Arr(a, w) =>
-      val out = new Array[Any](w)
-      var j = 0
-      while (j < w) { out(j) = prim(a, i * w + j); j += 1 }
-      new GenericArrayData(out)
-  }
-
-  private var i = -1
-  override def next(): Boolean = { i += 1; i < data.rowCount }
-  override def get(): InternalRow =
-    InternalRow.fromSeq(data.cols.map(value(_, i)).toIndexedSeq)
-  override def close(): Unit = data.close()
 }

@@ -2,6 +2,7 @@ package graft.sources.hdf5
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Distributed HDF5 sink: one granule FILE per partition, numeric
   * columns as 1-D datasets — and array<numeric> columns as 2-D
@@ -49,12 +50,7 @@ object Hdf5Sink {
     // `new Configuration()` there drops session-configured filesystem
     // settings (fs.s3a credentials/endpoints), so executor writes
     // could resolve a different filesystem than the driver's mkdirs
-    val confKv: Array[(String, String)] = {
-      val it = hadoopConf.iterator()
-      val b = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.toArray
-    }
+    val conf = new SerializableConfiguration(hadoopConf)
     val names = schema.fields.map(_.name)
     val types = schema.fields.map(f => dtypeOf(f.dataType).get)
     // -1 = scalar column; array columns learn their width from the
@@ -121,9 +117,7 @@ object Hdf5Sink {
         // complete granules, and a task retry re-promotes identical
         // bytes instead of truncating a file mid-scan
         val target = new org.apache.hadoop.fs.Path(f"$dir/$filePrefix-$pid%05d.h5")
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confKv.foreach { case (k, v) => conf.set(k, v) }
-        val fs = target.getFileSystem(conf)
+        val fs = target.getFileSystem(conf.value)
         val tmp = new org.apache.hadoop.fs.Path(target.getParent,
           s".${target.getName}.${java.util.UUID.randomUUID()}.part")
         val out = fs.create(tmp, true)

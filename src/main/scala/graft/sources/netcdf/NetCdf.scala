@@ -3,8 +3,17 @@ package graft.sources.netcdf
 import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.sources.{ArrayScan, ArraySource}
+import graft.sources.ArrayScan._
 
 /** Literal NetCDF classic (CDF-1 / CDF-2) sink + source, from the
   * public file format: magic "CDF\x01" / "CDF\x02", big-endian header
@@ -166,12 +175,7 @@ object NetCdf {
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
     dirPath.getFileSystem(hadoopConf).mkdirs(dirPath)
-    val confKv: Array[(String, String)] = {
-      val it = hadoopConf.iterator()
-      val b = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.toArray
-    }
+    val conf = new SerializableConfiguration(hadoopConf)
     val names = schema.fields.map(_.name)
     val types = schema.fields.map(f => ncType(elemTypeOf(f.dataType)).get)
     val isArr = schema.fields.map(_.dataType match {
@@ -194,10 +198,8 @@ object NetCdf {
                 "2-D width unknowable"))
         }
         val bytes = granuleBytes(names, types, widths, cols, n, version)
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confKv.foreach { case (k, v) => conf.set(k, v) }
         val p = new org.apache.hadoop.fs.Path(dir, f"$filePrefix-$pid%05d.nc")
-        val fs = p.getFileSystem(conf)
+        val fs = p.getFileSystem(conf.value)
         val os = fs.create(p, true)
         try os.write(bytes) finally os.close()
       }
@@ -320,7 +322,7 @@ object NetCdf {
     * so a >=2 GiB foreign file must fail with a clear message, not a
     * silent `.toInt` truncation feeding a negative allocation.
     */
-  private def readFully(
+  private[netcdf] def readFully(
       fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Array[Byte] = {
     val len = fs.getFileStatus(p).getLen
@@ -332,63 +334,93 @@ object NetCdf {
     b
   }
 
-  /** Read every granule under `dir` back as a DataFrame — one task
-    * per granule (the split unit the sink produced). 2-D variables
-    * surface as array<type> columns; every granule must agree on
-    * names, types, AND widths (one schema per directory, like a
-    * parquet dataset).
+  /** Read every granule under `dir` back as a DataFrame through
+    * [[NetCdfDataSource]]: one split per granule (the split unit the
+    * sink produced).
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(hadoopConf)
-    val files = fs.listStatus(dirPath).map(_.getPath)
-      .filter(_.getName.endsWith(".nc")).map(_.toString).sorted
+  def read(spark: SparkSession, dir: String): DataFrame =
+    spark.read.format(classOf[NetCdfDataSource].getName).load(dir)
+}
+
+/** NetCDF classic granules on the shared [[graft.sources.ArrayScan]]:
+  * one split per `.nc` granule under the load directory, in name
+  * order, each decoded column by column from its big-endian data
+  * region. 2-D variables surface as array<type> columns; every granule
+  * must agree with the first on names, types AND widths (one schema
+  * per directory, like a parquet dataset). No short name is
+  * registered: [[NetCdf.read]] is the entry point.
+  */
+class NetCdfDataSource extends ArraySource("netcdf", NetCdfDataSource)
+
+object NetCdfDataSource extends ArrayScan.Format {
+
+  /** One granule, and the variables (name, nc_type, width) of the
+    * first granule it must match.
+    */
+  final case class Split(file: String, first: String, vars: Seq[(String, Int, Int)])
+      extends InputPartition
+
+  private def granules(options: CaseInsensitiveStringMap): Seq[String] = {
+    val dir = options.get("path")
+    require(dir != null, "netcdf source requires a path")
+    val dirPath = new Path(dir)
+    val files = dirPath.getFileSystem(ArrayScan.hadoopConf()).listStatus(dirPath)
+      .map(_.getPath).filter(_.getName.endsWith(".nc")).map(_.toString).sorted
     require(files.nonEmpty, s"no .nc granules under $dir")
-    val first =
-      readFully(fs, new org.apache.hadoop.fs.Path(files.head))
-    val (names, ntypes, _, widths, _) = parseHeader(first)
-    def scalarType(nm: String, t: Int): DataType = t match {
-      case 4 => IntegerType
-      case 5 => FloatType
-      case 6 => DoubleType
-      case other => throw new IllegalArgumentException(s"$nm: nc_type $other unsupported")
-    }
-    val schema = StructType(names.indices.map { v =>
-      val st = scalarType(names(v), ntypes(v))
-      StructField(names(v), if (widths(v) > 0) ArrayType(st) else st)
-    })
-    val confKv: Array[(String, String)] = {
-      val it = hadoopConf.iterator()
-      val b = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.toArray
-    }
-    val rdd = spark.sparkContext
-      .parallelize(files.toIndexedSeq, files.length)
-      .flatMap { f =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confKv.foreach { case (k, v) => conf.set(k, v) }
-        val p = new org.apache.hadoop.fs.Path(f)
-        val gfs = p.getFileSystem(conf)
-        val bytes = readFully(gfs, p)
-        val (gn, gt, begins, gw, n) = parseHeader(bytes)
-        require(gn.sameElements(names) && gt.sameElements(ntypes) &&
-          gw.sameElements(widths),
-          s"$f: granule schema differs from ${files.head}")
-        val bb = ByteBuffer.wrap(bytes)
-        def elem(c: Int, i: Int): Any = gt(c) match {
-          case 4 => bb.getInt(begins(c) + 4 * i)
-          case 5 => bb.getFloat(begins(c) + 4 * i)
-          case 6 => bb.getDouble(begins(c) + 8 * i)
-        }
-        (0 until n).iterator.map { r =>
-          Row.fromSeq(names.indices.map { c =>
-            if (gw(c) > 0) (0 until gw(c)).map(j => elem(c, r * gw(c) + j))
-            else elem(c, r)
-          })
-        }
+    files.toSeq
+  }
+
+  /** A granule's bytes, its parsed header, and its variables
+    * (name, nc_type, width).
+    */
+  private def open(file: String, conf: Configuration) = {
+    val p = new Path(file)
+    val bytes = NetCdf.readFully(p.getFileSystem(conf), p)
+    val header @ (names, types, _, widths, _) = NetCdf.parseHeader(bytes)
+    (bytes, header, names.indices.map(v => (names(v), types(v), widths(v))))
+  }
+
+  private def vars(file: String): Seq[(String, Int, Int)] =
+    open(file, ArrayScan.hadoopConf())._3
+
+  override def infer(options: CaseInsensitiveStringMap): StructType =
+    StructType(vars(granules(options).head).map { case (name, t, width) =>
+      val st = t match {
+        case 4 => IntegerType
+        case 5 => FloatType
+        case 6 => DoubleType
+        case other => throw new IllegalArgumentException(s"$name: nc_type $other unsupported")
       }
-    spark.createDataFrame(rdd, schema)
+      StructField(name, if (width > 0) ArrayType(st) else st)
+    })
+
+  override def splits(schema: StructType, options: CaseInsensitiveStringMap,
+      filters: Seq[Filter]): Seq[InputPartition] = {
+    val files = granules(options)
+    val first = vars(files.head)
+    files.map(Split(_, files.head, first))
+  }
+
+  override def decode(split: InputPartition, schema: StructType,
+      conf: Configuration): Decoded = {
+    val Split(file, first, expected) = split
+    val (bytes, (names, types, begins, widths, n), found) = open(file, conf)
+    require(found == expected, s"$file: granule schema differs from $first")
+    Decoded(n, schema.fields.map[Col] { f =>
+      val v = names.indexOf(f.name)
+      val len = n * math.max(widths(v), 1)
+      val values: AnyRef = types(v) match {
+        case 4 =>
+          val a = new Array[Int](len)
+          ByteBuffer.wrap(bytes, begins(v), 4 * len).asIntBuffer().get(a); a
+        case 5 =>
+          val a = new Array[Float](len)
+          ByteBuffer.wrap(bytes, begins(v), 4 * len).asFloatBuffer().get(a); a
+        case 6 =>
+          val a = new Array[Double](len)
+          ByteBuffer.wrap(bytes, begins(v), 8 * len).asDoubleBuffer().get(a); a
+      }
+      if (widths(v) > 0) Arr(values, widths(v)) else Prim(values)
+    })
   }
 }

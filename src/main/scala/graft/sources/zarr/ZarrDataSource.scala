@@ -1,26 +1,21 @@
 package graft.sources.zarr
 
-import java.util.{Map => JMap}
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.{ArrayScan, ArraySource}
+import graft.sources.ArrayScan._
 
 import ZarrMeta.ArrayMeta
 
-/** DataSource V2 over [[ZarrStore]] — S5 closed literally: the
-  * reference's campaign data lives as ATL11 Zarr stores read through
-  * xarray/dask (/root/reference/atl06_to_atl11.py:206-217), and this
-  * source scans the same on-disk format as Spark splits.
+/** Zarr on the shared [[graft.sources.ArrayScan]], decoded through
+  * [[ZarrStore]] — S5 closed literally: the reference's campaign data
+  * lives as ATL11 Zarr stores read through xarray/dask
+  * (reference atl06_to_atl11.py:206-217), and this source scans
+  * the same on-disk format as Spark splits.
   *
   * Usage:
   * {{{
@@ -34,76 +29,35 @@ import ZarrMeta.ArrayMeta
   * selected array's chunks[0], sized >= 64k rows), so a 10^9-row
   * store scans as thousands of independent chunk-aligned range reads
   * with no split ever re-decompressing another split's chunk files.
-  * Column pruning is pushed down — an unselected array's chunk files
+  * Column pruning reaches the chunk files — an unselected array's
   * are never opened (each array is its own directory of chunks, the
-  * columnar-storage property Zarr shares with parquet).
+  * columnar-storage property Zarr shares with parquet). `_index`
+  * range and `_store` equality filters drop whole splits at planning.
   *
   * Schema: `_store` (string), `_index` (long row position), then one
   * column per array — rank-1 as scalars, rank-2 as `array<T>` per
   * leading-dim row (ATL11's (ref_pt x cycle) matrices). All selected
   * arrays must share their leading dimension.
   */
-class ZarrDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "zarr"
-  override def supportsExternalMetadata(): Boolean = true
+class ZarrDataSource extends ArraySource("zarr", ZarrDataSource) with DataSourceRegister
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ZarrDataSource.infer(options)
-
-  override def getTable(
-      schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new ZarrTable(schema, new CaseInsensitiveStringMap(properties))
-}
-
-object ZarrDataSource {
+object ZarrDataSource extends ArrayScan.Format {
   val StoreCol = "_store"
   val IndexCol = "_index"
 
-  private[zarr] def hadoopConf(): Configuration =
-    SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new Configuration())
+  final case class Split(store: String, row0: Long, row1: Long) extends InputPartition
 
-  /** Serializable key-value dump of a Hadoop conf, for shipping the
-    * session conf to executor-side readers.
-    */
-  private[zarr] def confKv(conf: Configuration): Array[(String, String)] = {
-    val it = conf.iterator()
-    val b = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-    b.toArray
-  }
+  /** Stores are DIRECTORIES, unlike hdf5's files. */
+  private def resolveStores(options: CaseInsensitiveStringMap): Seq[String] =
+    ArrayScan.resolve(options, "zarr", "stores")(_.isDirectory)
 
-  /** Expand `path`/`paths` options through Hadoop glob resolution to
-    * store DIRECTORIES (a store is a directory, unlike hdf5's files).
-    */
-  private[zarr] def resolveStores(options: CaseInsensitiveStringMap): Seq[String] = {
-    val raw: Seq[String] =
-      if (options.containsKey("paths"))
-        "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(options.get("paths"))
-          .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-      else Option(options.get("path")).toSeq
-    require(raw.nonEmpty, "zarr source requires a path")
-    val conf = hadoopConf()
-    val stores = raw.flatMap { pat =>
-      val p = new Path(pat)
-      val fs = p.getFileSystem(conf)
-      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-        .filter(_.isDirectory).map(_.getPath.toString)
-    }.sorted
-    require(stores.nonEmpty, s"zarr source matched no stores: ${raw.mkString(",")}")
-    stores
-  }
-
-  private[zarr] def arrayList(
+  private def arrayList(
       options: CaseInsensitiveStringMap, store: String,
       conf: Configuration): Seq[String] =
-    Option(options.get("arrays"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    ArrayScan.listOption(options, "arrays")
       .getOrElse(ZarrStore.listArrays(store, conf))
 
-  private[zarr] def sparkType(m: ArrayMeta): DataType =
+  private def sparkType(m: ArrayMeta): DataType =
     ZarrStore.jvmKind(m) match {
       case 'd' => DoubleType
       case 'f' => FloatType
@@ -113,8 +67,8 @@ object ZarrDataSource {
       case 'b' => ByteType
     }
 
-  private[zarr] def infer(options: CaseInsensitiveStringMap): StructType = {
-    val conf = hadoopConf()
+  override def infer(options: CaseInsensitiveStringMap): StructType = {
+    val conf = ArrayScan.hadoopConf()
     val store = resolveStores(options).head
     val arrays = arrayList(options, store, conf)
     require(arrays.nonEmpty, s"$store: no arrays")
@@ -146,98 +100,49 @@ object ZarrDataSource {
     }
     lcm * math.max(1L, 65536L / lcm)
   }
-}
 
-final class ZarrTable(schema: StructType, options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = s"zarr(${options.get("path")})"
-  override def schema(): StructType = schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(schema, options)
-}
+  private def indexLit(v: Any): Option[Long] = v match {
+    case l: Long => Some(l)
+    case i: Int => Some(i.toLong)
+    case s: Short => Some(s.toLong)
+    case b: Byte => Some(b.toLong)
+    case _ => None
+  }
 
-final class ZarrScanBuilder(full: StructType, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  import org.apache.spark.sql.sources._
+  /** `_index` bounds `[lo, hi]` a filter pins, if any. */
+  private def indexBounds(filter: Filter): Option[(Long, Long)] = filter match {
+    case EqualTo(IndexCol, v) => indexLit(v).map(l => (l, l))
+    case GreaterThan(IndexCol, v) => indexLit(v).map(l => (l + 1, Long.MaxValue))
+    case GreaterThanOrEqual(IndexCol, v) => indexLit(v).map(l => (l, Long.MaxValue))
+    case LessThan(IndexCol, v) => indexLit(v).map(l => (Long.MinValue, l - 1))
+    case LessThanOrEqual(IndexCol, v) => indexLit(v).map(l => (Long.MinValue, l))
+    case _ => None
+  }
 
-  private var required: StructType = full
-  private var lo: Long = Long.MinValue
-  private var hi: Long = Long.MaxValue
-  private var storeSet: Option[Set[String]] = None
-  private var accepted: Array[Filter] = Array.empty
+  private def storeSet(filter: Filter): Option[Set[String]] = filter match {
+    case EqualTo(StoreCol, s: String) => Some(Set(s))
+    case In(StoreCol, vs) if vs.forall(_.isInstanceOf[String]) =>
+      Some(vs.map(_.asInstanceOf[String]).toSet)
+    case _ => None
+  }
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** `_index` range predicates prune chunk splits at PLANNING time —
-    * the Zarr analogue of parquet row-group pruning (a range read of
-    * a 10^9-row store touches only the overlapping chunk blocks).
-    * Pruning is conservative (whole splits only), so every filter is
-    * returned as a residual for Spark to re-apply post-scan — the
-    * pushdown can drop I/O but never rows it shouldn't.
+  /** `_index` range predicates prune chunk splits — the Zarr analogue
+    * of parquet row-group pruning (a range read of a 10^9-row store
+    * touches only the overlapping chunk blocks); `_store` equality
+    * prunes whole stores, the multi-granule analogue of Hive
+    * partition pruning.
     */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    def lit(v: Any): Option[Long] = v match {
-      case l: Long => Some(l)
-      case i: Int => Some(i.toLong)
-      case s: Short => Some(s.toLong)
-      case b: Byte => Some(b.toLong)
-      case _ => None
-    }
-    accepted = filters.filter {
-      case EqualTo(ZarrDataSource.IndexCol, v) => lit(v).exists { l =>
-        lo = math.max(lo, l); hi = math.min(hi, l); true
-      }
-      case GreaterThan(ZarrDataSource.IndexCol, v) => lit(v).exists { l =>
-        lo = math.max(lo, l + 1); true
-      }
-      case GreaterThanOrEqual(ZarrDataSource.IndexCol, v) => lit(v).exists { l =>
-        lo = math.max(lo, l); true
-      }
-      case LessThan(ZarrDataSource.IndexCol, v) => lit(v).exists { l =>
-        hi = math.min(hi, l - 1); true
-      }
-      case LessThanOrEqual(ZarrDataSource.IndexCol, v) => lit(v).exists { l =>
-        hi = math.min(hi, l); true
-      }
-      // `_store` equality prunes whole STORES at planning — the
-      // multi-granule analogue of Hive partition pruning: the other
-      // granules' metadata and chunks are never opened
-      case EqualTo(ZarrDataSource.StoreCol, s: String) =>
-        storeSet = Some(storeSet.getOrElse(Set(s)).intersect(Set(s))); true
-      case In(ZarrDataSource.StoreCol, vs)
-          if vs.forall(_.isInstanceOf[String]) =>
-        val set = vs.map(_.asInstanceOf[String]).toSet
-        storeSet = Some(storeSet.fold(set)(_.intersect(set))); true
-      case _ => false
-    }
-    filters // all residual: splits are pruned, rows re-checked
-  }
-  override def pushedFilters(): Array[Filter] = accepted
+  override def prunes(filter: Filter): Boolean =
+    indexBounds(filter).nonEmpty || storeSet(filter).nonEmpty
 
-  override def build(): Scan = {
-    val stores = ZarrDataSource.resolveStores(options)
-      .filter(s => storeSet.forall(_.contains(s)))
-    new ZarrScan(required, stores, options, lo, hi)
-  }
-}
-
-final class ZarrScan(schema: StructType, stores: Seq[String],
-    options: CaseInsensitiveStringMap,
-    idxLo: Long = Long.MinValue, idxHi: Long = Long.MaxValue)
-    extends Scan with Batch {
-  import ZarrDataSource._
-
-  override def readSchema(): StructType = schema
-  override def toBatch: Batch = this
-  override def description(): String = s"zarr ${stores.size} store(s)"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = hadoopConf()
-    stores.flatMap { store =>
+  override def splits(schema: StructType, options: CaseInsensitiveStringMap,
+      filters: Seq[Filter]): Seq[InputPartition] = {
+    val conf = ArrayScan.hadoopConf()
+    val bounds = filters.flatMap(indexBounds)
+    val lo = bounds.map(_._1).foldLeft(Long.MinValue)(math.max)
+    val hi = bounds.map(_._2).foldLeft(Long.MaxValue)(math.min)
+    val stores = filters.flatMap(storeSet)
+    resolveStores(options).filter(s => stores.forall(_(s))).flatMap { store =>
       // split planning needs every DATA column's meta; the leading dim
       // comes from any array when only metadata columns are projected
       val projected = schema.fieldNames.toSeq
@@ -245,7 +150,7 @@ final class ZarrScan(schema: StructType, stores: Seq[String],
       val arrays =
         if (projected.nonEmpty) projected
         else arrayList(options, store, conf).take(1)
-      if (arrays.isEmpty) Seq(ZarrInputPartition(store, 0L, 0L))
+      if (arrays.isEmpty) Seq(Split(store, 0L, 0L))
       else {
         val all = ZarrStore.consolidated(store, conf).getOrElse(Map.empty)
         val metas = arrays.map(a =>
@@ -257,155 +162,29 @@ final class ZarrScan(schema: StructType, stores: Seq[String],
         }
         val step = splitRows(metas.map(_.chunks.head))
         (0L until rows by step)
-          .map(r0 => ZarrInputPartition(store, r0, math.min(r0 + step, rows)))
-          // chunk-split pruning from pushed _index bounds: a split
-          // entirely outside [idxLo, idxHi] is never planned, so its
+          .map(r0 => Split(store, r0, math.min(r0 + step, rows)))
+          // a split entirely outside [lo, hi] is never planned, so its
           // chunk files are never opened
-          .filter(p => p.row1 > idxLo && p.row0 <= idxHi)
+          .filter(p => p.row1 > lo && p.row0 <= hi)
       }
-    }.toArray
+    }
   }
-  override def createReaderFactory(): PartitionReaderFactory =
-    ZarrReaderFactory(schema, ZarrDataSource.confKv(hadoopConf()))
-}
 
-final case class ZarrInputPartition(store: String, row0: Long, row1: Long)
-    extends InputPartition
-
-final case class ZarrReaderFactory(schema: StructType,
-    confKv: Array[(String, String)])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ZarrInputPartition]
-    new ZarrPartitionReader(p, schema, confKv)
-  }
-  override def supportColumnarReads(partition: InputPartition): Boolean = true
-  override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[ZarrInputPartition]
-    new ZarrColumnarPartitionReader(p, schema, confKv)
-  }
-}
-
-/** Decoded per-split column data shared by both readers. */
-private[zarr] final class ZarrSplitData(p: ZarrInputPartition,
-    schema: StructType, confKv: Array[(String, String)]) {
-  import ZarrDataSource._
-
-  val rowCount: Int = (p.row1 - p.row0).toInt
-
-  sealed trait Col
-  final case class ConstStr(bytes: Array[Byte]) extends Col
-  case object Index extends Col
-  final case class Data(d: ZarrStore.RangeData) extends Col
-
-  val cols: Array[Col] = {
-    // the SESSION Hadoop conf, shipped from the driver through the
-    // reader factory: an executor-side `new Configuration()` would
-    // silently drop fs.s3a/hdfs settings, so a store that reads fine
-    // locally would fail (or mis-authenticate) on object storage
-    val conf = new Configuration(false)
-    confKv.foreach { case (k, v) => conf.set(k, v) }
+  override def decode(split: InputPartition, schema: StructType,
+      conf: Configuration): Decoded = {
+    val Split(store, row0, row1) = split
     // one .zmetadata open per TASK covers all projected columns on a
     // consolidated store — no per-column .zarray round trips
-    lazy val all = ZarrStore.consolidated(p.store, conf).getOrElse(Map.empty)
-    schema.fields.map[Col] { f =>
+    lazy val all = ZarrStore.consolidated(store, conf).getOrElse(Map.empty)
+    Decoded((row1 - row0).toInt, schema.fields.map[Col] { f =>
       f.name match {
-        case StoreCol => ConstStr(p.store.getBytes("UTF-8"))
-        case IndexCol => Index
+        case StoreCol => ConstStr(store.getBytes("UTF-8"))
+        case IndexCol => Index(row0)
         case a =>
-          val m = all.getOrElse(a, ZarrStore.readMeta(p.store, a, conf))
-          Data(ZarrStore.readRange(p.store, a, m, p.row0, p.row1, conf))
+          val m = all.getOrElse(a, ZarrStore.readMeta(store, a, conf))
+          val rd = ZarrStore.readRange(store, a, m, row0, row1, conf)
+          if (m.rank == 2) Arr(rd.values, rd.width) else Prim(rd.values)
       }
-    }
+    })
   }
-}
-
-final class ZarrColumnarPartitionReader(p: ZarrInputPartition,
-    schema: StructType, confKv: Array[(String, String)])
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
-
-  private val data = new ZarrSplitData(p, schema, confKv)
-  private val batchSize = 4096
-  private var start = 0
-  private var batch: ColumnarBatch = _
-
-  override def next(): Boolean = {
-    if (start >= data.rowCount) return false
-    val n = math.min(batchSize, data.rowCount - start)
-    val vectors = schema.fields.zipWithIndex.map { case (f, ci) =>
-      val v = new OnHeapColumnVector(n, f.dataType)
-      fill(v, ci, start, n)
-      v
-    }
-    batch = new ColumnarBatch(vectors.map(_.asInstanceOf[ColumnVector]), n)
-    start += n
-    true
-  }
-
-  private def fill(v: OnHeapColumnVector, ci: Int, from: Int, n: Int): Unit =
-    data.cols(ci) match {
-      case data.ConstStr(bytes) =>
-        var i = 0
-        while (i < n) { v.putByteArray(i, bytes); i += 1 }
-      case data.Index =>
-        var i = 0
-        while (i < n) { v.putLong(i, p.row0 + from + i); i += 1 }
-      case data.Data(rd) if rd.width == 1 =>
-        putRange(v, rd, from, 0, n)
-      case data.Data(rd) =>
-        val w = rd.width
-        val child = v.getChild(0).asInstanceOf[OnHeapColumnVector]
-        child.reserve(n * w)
-        putRange(child, rd, from * w, 0, n * w)
-        var i = 0
-        while (i < n) { v.putArray(i, i * w, w); i += 1 }
-    }
-
-  private def putRange(v: OnHeapColumnVector, rd: ZarrStore.RangeData,
-      srcFrom: Int, dstFrom: Int, n: Int): Unit =
-    if (rd.doubles != null) v.putDoubles(dstFrom, n, rd.doubles, srcFrom)
-    else if (rd.floats != null) v.putFloats(dstFrom, n, rd.floats, srcFrom)
-    else if (rd.longs != null) v.putLongs(dstFrom, n, rd.longs, srcFrom)
-    else if (rd.ints != null) v.putInts(dstFrom, n, rd.ints, srcFrom)
-    else if (rd.shorts != null) v.putShorts(dstFrom, n, rd.shorts, srcFrom)
-    else v.putBytes(dstFrom, n, rd.bytes, srcFrom)
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = ()
-}
-
-final class ZarrPartitionReader(p: ZarrInputPartition,
-    schema: StructType, confKv: Array[(String, String)])
-    extends PartitionReader[InternalRow] {
-
-  private val data = new ZarrSplitData(p, schema, confKv)
-
-  private def prim(rd: ZarrStore.RangeData, i: Int): Any =
-    if (rd.doubles != null) rd.doubles(i)
-    else if (rd.floats != null) rd.floats(i)
-    else if (rd.longs != null) rd.longs(i)
-    else if (rd.ints != null) rd.ints(i)
-    else if (rd.shorts != null) rd.shorts(i)
-    else rd.bytes(i)
-
-  private def value(c: data.Col, i: Int): Any = c match {
-    case data.ConstStr(b) => UTF8String.fromBytes(b)
-    case data.Index => p.row0 + i
-    case data.Data(rd) if rd.width == 1 => prim(rd, i)
-    case data.Data(rd) =>
-      val w = rd.width
-      val out = new Array[Any](w)
-      var j = 0
-      while (j < w) { out(j) = prim(rd, i * w + j); j += 1 }
-      new GenericArrayData(out)
-  }
-
-  private var i = -1
-  override def next(): Boolean = { i += 1; i < data.rowCount }
-  override def get(): InternalRow =
-    InternalRow.fromSeq(data.cols.map(value(_, i)).toIndexedSeq)
-  override def close(): Unit = ()
 }

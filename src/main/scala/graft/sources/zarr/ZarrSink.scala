@@ -6,6 +6,7 @@ import java.util.zip.Deflater
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import ZarrMeta.{ArrayMeta, Compressor}
 
@@ -78,12 +79,7 @@ object ZarrSink {
     val isArr = types.map { case _: ArrayType => true; case _ => false }
     val spark = df.sparkSession
     val hadoopConf = spark.sessionState.newHadoopConf()
-    val confKv: Array[(String, String)] = {
-      val it = hadoopConf.iterator()
-      val b = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-      b.toArray
-    }
+    val sessionConf = new SerializableConfiguration(hadoopConf)
 
     // persisted across the two passes: pass 2 must see the exact rows
     // and order pass 1 counted, even over a nondeterministic upstream.
@@ -184,8 +180,7 @@ object ZarrSink {
         .repartition(parts, fcol("_chunk"))
         .sortWithinPartitions(fcol("_chunk"), fcol("_gid"))
         .foreachPartition { (it: Iterator[Row]) =>
-          val conf = new org.apache.hadoop.conf.Configuration(false)
-          confKv.foreach { case (k, v) => conf.set(k, v) }
+          val conf = sessionConf.value
           var chunk = -1
           var buf: Array[ByteBuffer] = null
           // gid-contiguity guard: each chunk must see exactly the run

@@ -26,14 +26,10 @@ import ZarrMeta.ArrayMeta
 object ZarrStore {
 
   /** Flat row-major values for a row range; `width` = elements per
-    * row (1 for rank-1). One of the arrays is non-null, matching the
-    * array's JVM-surfaced type.
+    * row (1 for rank-1). `values` is the primitive array matching the
+    * array's JVM-surfaced type (see [[jvmKind]]).
     */
-  final case class RangeData(
-      width: Int,
-      doubles: Array[Double] = null, floats: Array[Float] = null,
-      longs: Array[Long] = null, ints: Array[Int] = null,
-      shorts: Array[Short] = null, bytes: Array[Byte] = null)
+  final case class RangeData(width: Int, values: AnyRef)
 
   /** Consolidated metadata (`.zmetadata`) if the store carries it —
     * ONE small-file open replaces a directory listing plus a
@@ -77,15 +73,6 @@ object ZarrStore {
             }
         walk(root, "").sorted
     }
-
-  /** Every array's meta in one pass — one `.zmetadata` open on a
-    * consolidated store, the per-array fallback otherwise.
-    */
-  def readAllMeta(store: String,
-      conf: Configuration): Map[String, ArrayMeta] =
-    consolidated(store, conf).getOrElse(
-      listArrays(store, conf)
-        .map(a => a -> readMeta(store, a, conf)).toMap)
 
   def readMeta(store: String, array: String, conf: Configuration): ArrayMeta = {
     val p = new Path(new Path(store, array), ".zarray")
@@ -169,23 +156,23 @@ object ZarrStore {
     val width = if (m.rank == 2) m.shape(1).toInt else 1
     val nOut = ((row1 - row0) * width).toInt
     val kind = jvmKind(m)
-    val out = RangeData(width,
-      doubles = if (kind == 'd') new Array[Double](nOut) else null,
-      floats = if (kind == 'f') new Array[Float](nOut) else null,
-      longs = if (kind == 'l') new Array[Long](nOut) else null,
-      ints = if (kind == 'i') new Array[Int](nOut) else null,
-      shorts = if (kind == 's') new Array[Short](nOut) else null,
-      bytes = if (kind == 'b') new Array[Byte](nOut) else null)
+    // filled first, then stored chunks overlaid (missing files stay
+    // fill — the spec's sparse semantics)
+    val fill = m.fillValue
+    val out: AnyRef = kind match {
+      case 'd' => val a = new Array[Double](nOut); java.util.Arrays.fill(a, fill); a
+      case 'f' => val a = new Array[Float](nOut); java.util.Arrays.fill(a, fill.toFloat); a
+      case 'l' => val a = new Array[Long](nOut); java.util.Arrays.fill(a, fill.toLong); a
+      case 'i' => val a = new Array[Int](nOut); java.util.Arrays.fill(a, fill.toInt); a
+      case 's' => val a = new Array[Short](nOut); java.util.Arrays.fill(a, fill.toShort); a
+      case 'b' => val a = new Array[Byte](nOut); java.util.Arrays.fill(a, fill.toByte); a
+    }
 
     val order =
       if (m.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
     val c0 = m.chunks.head
     val c1 = if (m.rank == 2) m.chunks(1) else 1
     val gridCols = if (m.rank == 2) m.grid(1) else 1L
-
-    // write fill first, then overlay stored chunks (missing files stay
-    // fill — the spec's sparse semantics)
-    fillRange(out, kind, m.fillValue)
 
     var ci = row0 / c0
     while (ci * c0 < row1) {
@@ -216,39 +203,29 @@ object ZarrStore {
       }
       ci += 1
     }
-    out
+    RangeData(width, out)
   }
 
-  private def fillRange(out: RangeData, kind: Char, fill: Double): Unit =
-    kind match {
-      case 'd' => java.util.Arrays.fill(out.doubles, fill)
-      case 'f' => java.util.Arrays.fill(out.floats, fill.toFloat)
-      case 'l' => java.util.Arrays.fill(out.longs, fill.toLong)
-      case 'i' => java.util.Arrays.fill(out.ints, fill.toInt)
-      case 's' => java.util.Arrays.fill(out.shorts, fill.toShort)
-      case 'b' => java.util.Arrays.fill(out.bytes, fill.toByte)
-    }
-
   private def putElem(
-      out: RangeData, kind: Char, dst: Int,
+      out: AnyRef, kind: Char, dst: Int,
       bb: ByteBuffer, srcElem: Int, m: ArrayMeta): Unit = {
     val off = srcElem * m.elemSize
     kind match {
-      case 'd' => out.doubles(dst) = bb.getDouble(off)
-      case 'f' => out.floats(dst) = bb.getFloat(off)
+      case 'd' => out.asInstanceOf[Array[Double]](dst) = bb.getDouble(off)
+      case 'f' => out.asInstanceOf[Array[Float]](dst) = bb.getFloat(off)
       case 'l' =>
-        out.longs(dst) =
+        out.asInstanceOf[Array[Long]](dst) =
           if (m.kind == 'u') bb.getInt(off).toLong & 0xffffffffL
           else bb.getLong(off)
       case 'i' =>
-        out.ints(dst) =
+        out.asInstanceOf[Array[Int]](dst) =
           if (m.kind == 'u') bb.getShort(off).toInt & 0xffff
           else bb.getInt(off)
       case 's' =>
-        out.shorts(dst) =
+        out.asInstanceOf[Array[Short]](dst) =
           if (m.kind == 'u') (bb.get(off).toInt & 0xff).toShort
           else bb.getShort(off)
-      case 'b' => out.bytes(dst) = bb.get(off)
+      case 'b' => out.asInstanceOf[Array[Byte]](dst) = bb.get(off)
     }
   }
 }

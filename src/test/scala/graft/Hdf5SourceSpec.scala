@@ -2,19 +2,25 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ColumnarToRowExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.hdf5.{Atl11, Hdf5Writer}
+import graft.sources.hdf5.{Atl11, Hdf5Sink, Hdf5Writer}
 import graft.sources.hdf5.Hdf5Writer.{Dset, Group}
+import graft.sources.netcdf.NetCdf
+import graft.sources.zarr.ZarrSink
 
 /** DSv2 surface of the S2 ingest (README §"HDF5 ingest"): the scan
   * must plan one split per (granule, beam-pair), push column pruning
   * down to the dataset byte ranges, and the ATL11 assembly must
   * reproduce the reference's xarray semantics (fill -> null, rgt from
   * filename, positional cycle join;
-  * /root/reference/atl06_to_atl11.py:170-196).
+  * reference atl06_to_atl11.py:170-196). Column pruning and the
+  * vectorized read are pinned for every format on the shared array
+  * scan: HDF5, Zarr and NetCDF.
   */
 class Hdf5SourceSpec extends SparkSpec {
 
@@ -89,35 +95,53 @@ class Hdf5SourceSpec extends SparkSpec {
     assert(one.count() == 6)
   }
 
+  /** The same 12-row frame (`ref_pt` int, `h_corr` array<double>) in
+    * each array format, read back through the shared columnar scan.
+    */
+  private lazy val arrayFormats: Seq[(String, () => DataFrame)] = {
+    val sess = spark
+    import sess.implicits._
+    val d = Files.createTempDirectory("graft_arrayscan").toString
+    val df = (0 until 12).map(k => (k * 10, Seq(k + 0.5, k + 1.5)))
+      .toDF("ref_pt", "h_corr").repartition(2)
+    Hdf5Sink.write(df, s"$d/hdf5", group = "data")
+    ZarrSink.write(df, s"$d/zarr", chunkRows = 4)
+    NetCdf.write(df, s"$d/netcdf")
+    Seq(
+      "hdf5" -> (() => spark.read.format("hdf5").option("groups", "data")
+        .load(s"$d/hdf5/part-*.h5")),
+      "zarr" -> (() => spark.read.format("zarr").load(s"$d/zarr")),
+      "netcdf" -> (() => NetCdf.read(spark, s"$d/netcdf")))
+  }
+
   test("column pruning is pushed into the scan") {
-    val df = spark.read.format("hdf5")
-      .option("groups", "pt2")
-      .load(s"$dir/ATL11_*.h5")
-      .select("ref_pt")
-    val scans = df.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b
+    for ((format, read) <- arrayFormats) {
+      val df = read().select("ref_pt")
+      val scans = df.queryExecution.executedPlan.collect {
+        case b: BatchScanExec => b
+      }
+      assert(scans.nonEmpty, format)
+      // only the requested column survives in the scan output — the
+      // reader then never fetches the other columns' bytes
+      assert(scans.head.output.map(_.name) == Seq("ref_pt"), format)
+      assert(df.distinct().count() == 12, format)
+      // and an empty projection still counts every row
+      assert(read().count() == 12, format)
     }
-    assert(scans.nonEmpty)
-    // only the requested dataset survives in the scan output — the
-    // reader then never fetches the other datasets' byte ranges
-    assert(scans.head.output.map(_.name) == Seq("ref_pt"))
-    assert(df.distinct().count() == 6)
   }
 
   test("the scan is vectorized: ColumnarToRow above the BatchScan") {
-    val df = spark.read.format("hdf5")
-      .option("groups", "pt1")
-      .option("datasets", "ref_pt,h_corr")
-      .load(s"$dir/ATL11_*.h5")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"),
-      s"hdf5 scan fell back to row-wise reads:\n$plan")
-    // and the batches decode identically to the row path's values
-    val rows = df.orderBy("_filename", "_group", "_index").collect()
-    assert(rows.length == 2 * 6)
-    assert(rows.map(_.getLong(3)).toSeq == Seq.tabulate(2)(_ =>
-      Seq.tabulate(6)(_.toLong * 10)).flatten)
-    assert(rows.head.getSeq[Double](4).length == 2)
+    for ((format, read) <- arrayFormats) {
+      val df = read().select("ref_pt", "h_corr")
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case c: ColumnarToRowExec => c }
+          .exists(_.exists(_.isInstanceOf[BatchScanExec])),
+        s"$format scan is not read as ColumnarBatches:\n$plan")
+      val rows = df.collect().sortBy(_.getInt(0))
+      assert(rows.map(_.getInt(0)).toSeq == (0 until 12).map(_ * 10), format)
+      assert(rows.map(_.getSeq[Double](1)).toSeq ==
+        (0 until 12).map(k => Seq(k + 0.5, k + 1.5)), format)
+    }
   }
 
   test("ATL11 long assembly: fill masking, rgt parse, positional cycle join") {

@@ -58,7 +58,7 @@ class LakeFinderSpec extends SparkSpec {
   test("input prep materializations carry the eps_estimate and m1_input_prep tags") {
     import graft.queries.LakeQueries
     // eps_estimate / m1_input_prep tag the EAGER input checkpoint that
-    // the sizing count and dbscan both read
+    // observes the eps sizing count and that dbscan reads
     val profile = new Profile.Listener
     spark.sparkContext.addSparkListener(profile)
     def window(): Map[String, String] = {

@@ -165,8 +165,11 @@ class NearDupSpec extends SparkSpec {
     // the wide-corpus geometry (24-bit triple keys) on the small
     // fixture: every pair at hamming <= 5 has >= 3 clean blocks, so
     // some triple key matches in table 0 — a guarantee, not a corpus
-    // pin. Also: candidate mass must not exceed the r=2 geometry's
-    // (narrower keys can only collide MORE).
+    // pin. Also: a triple key match implies a match on each of its
+    // block pairs in the same table, so with no bucket capped the r=3
+    // candidate pairs are a subset of the r=2 ones. (Raw key-match
+    // counts carry no such bound: a pair clean on m >= 6 blocks
+    // matches C(m,3) > C(m,2) keys.)
     val sig = docs.withColumn("_sim", graft.functions.simhash64(Text.tokens(col("text"))))
       .select("doc_id", "_sim")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -175,13 +178,17 @@ class NearDupSpec extends SparkSpec {
       .filter { case (a, b) => java.lang.Long.bitCount(sig(a) ^ sig(b)) <= 5 }
       .toSet
     assert(det.nonEmpty, "expected planted pairs within hamming 5")
-    val pairs = NearDup.simhashPairsFromSignatures(
+    def pairsAt(r: Int) = NearDup.simhashPairsFromSignatures(
         docs.withColumn("_sim", graft.functions.simhash64(Text.tokens(col("text")))),
-        "doc_id", "_sim", maxDist = 12, r = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        "doc_id", "_sim", maxDist = 12, r = r)
+      .collect().map(row => (row.getLong(0), row.getLong(1))).toSet
+    val pairs = pairsAt(3)
     val missed = det.diff(pairs)
     assert(missed.isEmpty,
       s"r=3 DETERMINISTIC guarantee broken (hamming <= 5 missed): $missed")
+    val pairs2 = pairsAt(2)
+    assert(pairs.subsetOf(pairs2),
+      s"r=3 candidates outside the r=2 set: ${pairs.diff(pairs2).take(10)}")
   }
 
   test("sf0.01 oracle truth set sits inside the deterministic simhash band") {

@@ -117,6 +117,18 @@ class NetCdfSpec extends SparkSpec {
     }
   }
 
+  test("granules that disagree with the first one's schema fail the read") {
+    val dir = java.nio.file.Files.createTempDirectory("ncmixed")
+    java.nio.file.Files.write(dir.resolve("part-00000.nc"), NetCdf.granuleBytes(
+      Array("a"), Array((4, 4)), Array(0), Array(Array[Any](7, 9)), n = 2))
+    java.nio.file.Files.write(dir.resolve("part-00001.nc"), NetCdf.granuleBytes(
+      Array("a"), Array((6, 8)), Array(0), Array(Array[Any](7.0, 9.0)), n = 2))
+    val e = intercept[org.apache.spark.SparkException] {
+      NetCdf.read(spark, dir.toString).collect()
+    }
+    assert(e.getMessage.contains("granule schema differs"))
+  }
+
   test("ragged array widths are rejected at write time") {
     val sess = spark
     import sess.implicits._

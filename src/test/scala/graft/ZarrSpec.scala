@@ -170,6 +170,13 @@ class ZarrSpec extends SparkSpec {
       if (k % 2 == 0) assert(v === Seq(k.toDouble, 0.0))
       else assert(v === Seq(0.0, 0.0)) // whole-row fill
     }
+    // a trailing dim of 1 is still rank 2: one-element array<T> rows
+    val dir3 = s"${newStore()}/store3"
+    ZarrSink.write(spark.range(0, 10).select(col("id").as("k"),
+      array(col("id").cast("double")).as("v")), dir3, chunkRows = 4)
+    val b3 = spark.read.format("zarr").load(dir3)
+      .select("k", "v").as[(Long, Seq[Double])].collect().sortBy(_._1)
+    assert(b3.toSeq === (0L until 10L).map(k => (k, Seq(k.toDouble))))
     // ragged widths must fail with a clear error, not corrupt the grid
     val ragged = spark.range(0, 10).select(
       when(col("id") % 2 === 0, array(lit(1.0)))
@@ -310,7 +317,7 @@ class ZarrSpec extends SparkSpec {
     assert(ZarrDataSource.splitRows(Seq(100, 128)) % 128 === 0L)
     // chunk files for `b` were written but never opened — can't assert
     // open() calls directly; the pruned readSchema above is the
-    // contract that ZarrSplitData only reads projected arrays
+    // contract that the decode reads only projected arrays
   }
 
   test("_index range pushdown prunes chunk splits at planning time") {
