@@ -21,6 +21,19 @@ object SourceSinkQueries extends QueryPack {
   private def tmp(name: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_$name"
 
+  /** `tmp(name)`, deleted first: stale granules or chunks of an earlier
+    * (wider) write would otherwise leak into the read-back.
+    */
+  private def freshTmp(name: String): String = {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete()
+    }
+    val base = tmp(name)
+    rm(new java.io.File(base))
+    base
+  }
+
   /** Two deterministic ATL11-shaped granules derived from `nation`
     * (ref_pt = n_nationkey), mirroring the real product layout
     * (/root/reference/atl06_to_atl11.py:115 filename format,
@@ -221,11 +234,7 @@ object SourceSinkQueries extends QueryPack {
     // consume granule archives without any external HDF5 tooling.
     Q("s5_hdf5_sink_roundtrip",
       (s, dir) => {
-        val base = tmp("hdf5_sink")
-        // fresh dir per run: stale part files from a previous (wider)
-        // partitioning would otherwise leak into the glob
-        val d = new java.io.File(base)
-        if (d.exists()) d.listFiles().foreach(_.delete())
+        val base = freshTmp("hdf5_sink")
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"),
             col("l_quantity"), col("l_extendedprice"))
@@ -251,9 +260,7 @@ object SourceSinkQueries extends QueryPack {
     // rank-2 Zarr/NetCDF rows.
     Q("s5_hdf5_rank2_roundtrip",
       (s, dir) => {
-        val base = tmp("hdf5_rank2_sink")
-        val d = new java.io.File(base)
-        if (d.exists()) d.listFiles().foreach(_.delete())
+        val base = freshTmp("hdf5_rank2_sink")
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"),
             array(col("l_quantity"), col("l_discount"), col("l_tax"))
@@ -285,15 +292,7 @@ object SourceSinkQueries extends QueryPack {
     // row all fail the hash.
     Q("s5_zarr_roundtrip",
       (s, dir) => {
-        val base = tmp("zarr_store")
-        val d = new java.io.File(base)
-        if (d.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(d)
-        }
+        val base = freshTmp("zarr_store")
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"),
             col("l_quantity"), col("l_discount"))
@@ -317,15 +316,7 @@ object SourceSinkQueries extends QueryPack {
     // relational oracle hash-gates every decoded value.
     Q("s5_zarr_blosc_roundtrip",
       (s, dir) => {
-        val base = tmp("zarr_blosc_store")
-        val d = new java.io.File(base)
-        if (d.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(d)
-        }
+        val base = freshTmp("zarr_blosc_store")
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_suppkey"),
             col("l_extendedprice"), col("l_tax"))
@@ -351,15 +342,7 @@ object SourceSinkQueries extends QueryPack {
     // index, is hash-gated), hashable output.
     Q("s5_zarr_rank2_roundtrip",
       (s, dir) => {
-        val base = tmp("zarr_rank2_store")
-        val d = new java.io.File(base)
-        if (d.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(d)
-        }
+        val base = freshTmp("zarr_rank2_store")
         val li = Tables(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"),
             array(col("l_quantity"), col("l_discount"), col("l_tax"))
@@ -389,15 +372,7 @@ object SourceSinkQueries extends QueryPack {
     // this closes all three array formats the reference writes.
     Q("s5_netcdf_roundtrip",
       (s, dir) => {
-        val base = tmp("netcdf_store")
-        val d = new java.io.File(base)
-        if (d.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(d)
-        }
+        val base = freshTmp("netcdf_store")
         val li = Tables(s, dir, "lineitem")
           .select(col("l_suppkey").cast("int").as("suppkey"),
             col("l_linenumber"),
@@ -419,15 +394,7 @@ object SourceSinkQueries extends QueryPack {
     // driver's hash compare, same as the rank-2 Zarr row.
     Q("s5_netcdf_rank2_roundtrip",
       (s, dir) => {
-        val base = tmp("netcdf_rank2_store")
-        val d = new java.io.File(base)
-        if (d.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete()
-          }
-          rm(d)
-        }
+        val base = freshTmp("netcdf_rank2_store")
         val li = Tables(s, dir, "lineitem")
           // classic CDF has no int64 type (that's CDF-5), and orderkey
           // outgrows NC_INT past sf~0.5 (sf1 keys reach ~3e9) — ride it

@@ -1,18 +1,17 @@
 package graft.sources.netcdf
 
 import java.io.ByteArrayOutputStream
-import java.nio.ByteBuffer
+import java.nio.{BufferUnderflowException, ByteBuffer}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
-import graft.sources.{ArrayScan, ArraySource}
+import graft.sources.{ArrayScan, ArraySink, ArraySource}
 import graft.sources.ArrayScan._
 
 /** Literal NetCDF classic (CDF-1 / CDF-2) sink + source, from the
@@ -25,16 +24,14 @@ import graft.sources.ArrayScan._
   * array outputs are NetCDF/Zarr/HDF5, and graft writes and reads all
   * three.
   *
-  * Scope (same contract as the HDF5/Zarr sinks): numeric scalar
-  * columns as 1-D variables over one "row" dimension, array<numeric>
-  * columns as 2-D (row × fixed-width) variables — the per-cycle shape
-  * the reference's ATL11 files carry for h_corr/delta_time
-  * (atl06_to_atl11.py:170-196) — one granule file per partition, the
-  * distributed layout a 100-TB export needs (writers never
-  * coordinate; readers get one split per granule). Files are plain
-  * classic CDF and open in any netCDF tool. Record dimension,
-  * attributes, and char/short types are parsed past on read but not
-  * written.
+  * The sink runs on the shared [[graft.sources.ArraySink]], one
+  * granule `part-NNNNN.nc` per partition: scalar columns become 1-D
+  * variables over one "row" dimension, array<numeric> columns 2-D
+  * (row × width) variables, the per-cycle shape the reference's ATL11
+  * files carry for h_corr/delta_time (atl06_to_atl11.py:170-196).
+  * Files are plain classic CDF and open in any netCDF tool. Only
+  * int/float/double are written; the record dimension, attributes,
+  * and char/short types are parsed past on read.
   *
   * Ref: reference pipeline writes NetCDF via xarray
   * (atl06_to_atl11.py:306-321, atlxi_dhdt.py:87).
@@ -45,19 +42,15 @@ object NetCdf {
   private val NcVariable = 11
   private val NcAttribute = 12
 
-  private def ncType(dt: DataType): Option[(Int, Int)] = dt match {
-    case IntegerType => Some((4, 4)) // NC_INT
-    case FloatType => Some((5, 4)) // NC_FLOAT
-    case DoubleType => Some((6, 8)) // NC_DOUBLE
-    case _ => None
-  }
+  private val Types: Map[DataType, Int] =
+    Map(IntegerType -> 4, FloatType -> 5, DoubleType -> 6) // NC_INT, NC_FLOAT, NC_DOUBLE
 
-  /** Element type: the column itself for scalars, the element for an
-    * `array<numeric>` column (written as a 2-D variable).
-    */
-  private def elemTypeOf(t: DataType): DataType = t match {
-    case ArrayType(e, _) => e
-    case other => other
+  private def elemSize(ncType: Int, name: String): Long = ncType match {
+    case 1 | 2 => 1L
+    case 3 => 2L
+    case 4 | 5 => 4L
+    case 6 => 8L
+    case other => throw new IllegalArgumentException(s"$name: nc_type $other unsupported")
   }
 
   private def pad4(n: Int): Int = (n + 3) & ~3
@@ -70,19 +63,17 @@ object NetCdf {
     while (p % 4 != 0) { out.write(0); p += 1 }
   }
 
-  /** Serialize one granule: all rows of a partition as fixed
-    * variables over a single "row" dimension. `widths(c)` = 0 for a
-    * 1-D (scalar) variable, else the trailing-dim width of a 2-D
-    * variable (its elements arrive as collection.Seq[Any] — Spark hands
-    * mutable.ArraySeq, which scala.Seq (= immutable.Seq on 2.13)
-    * does NOT match; null elements write
-    * 0, the same no-null-mask contract as the Zarr sink).
+  /** Serialize one granule: the collected columns of a partition as
+    * fixed variables over a single "row" dimension, `types` their
+    * nc_types. An `Arr` column becomes a 2-D (row × width) variable.
     * `version` = 1 (CDF-1, int32 begins) or 2 (CDF-2, int64 begins).
     */
-  private[graft] def granuleBytes(
-      names: Array[String], types: Array[(Int, Int)], widths: Array[Int],
-      cols: Array[Array[Any]], n: Int, version: Int = 1): Array[Byte] = {
+  private[graft] def granuleBytes(names: Seq[String], types: Seq[Int],
+      data: Decoded, version: Int = 1): Array[Byte] = {
     require(version == 1 || version == 2, s"CDF-$version unsupported")
+    val n = data.rows
+    val cols = data.cols.map(ArraySink.column)
+    val widths = cols.map(_._2.getOrElse(0))
     val head = new ByteArrayOutputStream()
     head.write(Array[Byte]('C', 'D', 'F', version.toByte))
     def i4(v: Int): Unit = head.write(ByteBuffer.allocate(4).putInt(v).array())
@@ -93,7 +84,7 @@ object NetCdf {
     // dim 0 = shared "row"; one extra trailing dim per 2-D column,
     // named per-array (never shared — two arrays of different widths
     // must not fight over one dim name)
-    val arrCols = widths.zipWithIndex.collect { case (w, c) if w > 0 => c }
+    val arrCols = widths.indices.filter(widths(_) > 0)
     val dimIdOf = arrCols.zipWithIndex.map { case (c, i) => c -> (i + 1) }.toMap
     i4(NcDimension); i4(1 + arrCols.length)
     putName(head, "row"); i4(n)
@@ -108,11 +99,12 @@ object NetCdf {
         4 + 4 + (if (version == 2) 8 else 4) // nc_type + vsize + begin
     val fixedPrefix = head.size()
     val headerSize = fixedPrefix + names.indices.map(varEntrySize).sum
-    def rowElems(c: Int): Int = math.max(widths(c), 1)
+    def vsize(c: Int): Int =
+      pad4(n * math.max(widths(c), 1) * elemSize(types(c), names(c)).toInt)
     var begin = headerSize.toLong
     val begins = types.indices.map { c =>
       val b = begin
-      begin += pad4(n * rowElems(c) * types(c)._2)
+      begin += vsize(c)
       b
     }
     require(version == 2 || begin <= Int.MaxValue,
@@ -122,36 +114,15 @@ object NetCdf {
       if (widths(c) > 0) { i4(2); i4(0); i4(dimIdOf(c)) } // row × name_dim
       else { i4(1); i4(0) } // ndims, dimid 0 ("row")
       i4(0); i4(0) // vatt_list ABSENT
-      i4(types(c)._1)
-      i4(pad4(n * rowElems(c) * types(c)._2))
+      i4(types(c))
+      i4(vsize(c))
       begin8(begins(c))
     }
     val out = ByteBuffer.allocate(begin.toInt)
     out.put(head.toByteArray)
     names.indices.foreach { c =>
-      val (t, sz) = types(c)
-      val col = cols(c)
-      def putElem(v: Any): Unit = t match {
-        case 4 => out.putInt(if (v == null) 0 else v.asInstanceOf[Int])
-        case 5 => out.putFloat(if (v == null) 0f else v.asInstanceOf[Float])
-        case 6 => out.putDouble(if (v == null) 0d else v.asInstanceOf[Double])
-      }
-      var r = 0
-      while (r < n) {
-        if (widths(c) > 0) {
-          val cell = col(r)
-          if (cell == null) (0 until widths(c)).foreach(_ => putElem(null))
-          else {
-            val vals = cell.asInstanceOf[scala.collection.Seq[Any]]
-            require(vals.length == widths(c),
-              s"${names(c)}: array length ${vals.length} != width ${widths(c)}")
-            vals.foreach(putElem)
-          }
-        } else putElem(col(r))
-        r += 1
-      }
-      var p = n * rowElems(c) * sz
-      while (p % 4 != 0) { out.put(0: Byte); p += 1 }
+      ArraySink.put(out, cols(c)._1) // big-endian, ByteBuffer's default
+      out.position(begins(c).toInt + vsize(c))
     }
     out.array()
   }
@@ -159,51 +130,16 @@ object NetCdf {
   /** One .nc granule per non-empty partition under `dir`.
     * `version` = 1 writes CDF-1 (int32 offsets, <2 GiB granules);
     * 2 writes CDF-2 (64-bit offsets, the NETCDF3_64BIT flavour).
-    * array<numeric> columns become 2-D variables; their width is
-    * taken from the partition's first non-null cell and every cell
-    * must match (a classic-CDF dim is fixed — ragged input must fail
-    * loudly, not corrupt the layout).
+    * An array column's width is taken from the partition's first
+    * non-null cell (a classic-CDF dim is fixed). Classic CDF has no
+    * null mask: null cells and elements are written as 0.
     */
-  def write(df: DataFrame, dir: String, filePrefix: String = "part",
-      version: Int = 1): Unit = {
+  def write(df: DataFrame, dir: String, version: Int = 1): Unit = {
     require(version == 1 || version == 2,
       s"CDF-$version unsupported (1 = classic, 2 = 64-bit offset)")
-    val schema = df.schema
-    schema.fields.foreach(f => require(ncType(elemTypeOf(f.dataType)).nonEmpty,
-      s"${f.name}: ${f.dataType} unsupported " +
-        "(int/float/double scalars or arrays only)"))
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val hadoopConf = df.sparkSession.sessionState.newHadoopConf()
-    dirPath.getFileSystem(hadoopConf).mkdirs(dirPath)
-    val conf = new SerializableConfiguration(hadoopConf)
-    val names = schema.fields.map(_.name)
-    val types = schema.fields.map(f => ncType(elemTypeOf(f.dataType)).get)
-    val isArr = schema.fields.map(_.dataType match {
-      case _: ArrayType => true; case _ => false
-    })
-    df.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-        rows.foreach(buf += _)
-        val n = buf.length
-        val cols = Array.tabulate[Array[Any]](names.length) { c =>
-          Array.tabulate[Any](n)(r => buf(r).get(c))
-        }
-        val widths = Array.tabulate(names.length) { c =>
-          if (!isArr(c)) 0
-          else cols(c).collectFirst { case s: scala.collection.Seq[_] => s.length }.getOrElse(
-            throw new IllegalArgumentException(
-              s"${names(c)}: all-null array column in partition $pid, " +
-                "2-D width unknowable"))
-        }
-        val bytes = granuleBytes(names, types, widths, cols, n, version)
-        val p = new org.apache.hadoop.fs.Path(dir, f"$filePrefix-$pid%05d.nc")
-        val fs = p.getFileSystem(conf.value)
-        val os = fs.create(p, true)
-        try os.write(bytes) finally os.close()
-      }
-    }
+    val sink = ArraySink(df, dir, "NetCDF", Types, zeroNulls = true)
+    val names = df.schema.fieldNames.toSeq
+    sink.granules(df, ".nc")(granuleBytes(names, sink.codes, _, version))
   }
 
   /** Parsed granule header: (names, ncTypes, begins, widths, n) where
@@ -212,6 +148,14 @@ object NetCdf {
     * NETCDF3_64BIT writes — identical layout except `begin` is int64).
     */
   private[graft] def parseHeader(bytes: Array[Byte])
+      : (Array[String], Array[Int], Array[Int], Array[Int], Int) =
+    parseHeader(bytes, bytes.length.toLong)
+
+  /** [[parseHeader]] of a granule `fileLen` bytes long from `bytes`,
+    * a prefix of it that holds at least the header: the data regions
+    * are bounded by the file, not by the prefix.
+    */
+  private[graft] def parseHeader(bytes: Array[Byte], fileLen: Long)
       : (Array[String], Array[Int], Array[Int], Array[Int], Int) = {
     val in = ByteBuffer.wrap(bytes)
     require(in.get() == 'C' && in.get() == 'D' && in.get() == 'F',
@@ -297,35 +241,26 @@ object NetCdf {
       begins(v) = begin.toInt
     }
     // the data region is untrusted too: every variable's
-    // begin + elems*elemSize must land inside the buffer, else a clean
+    // begin + elems*elemSize must land inside the file, else a clean
     // error now beats a corrupt read (or AIOOBE) at decode time
     val rows = math.max(n, 0)
     for (v <- 0 until nvars) {
-      val elemSize = ntypes(v) match {
-        case 1 | 2 => 1L
-        case 3 => 2L
-        case 4 | 5 => 4L
-        case 6 => 8L
-        case other => throw new IllegalArgumentException(
-          s"${names(v)}: nc_type $other unsupported")
-      }
       val end = begins(v).toLong +
-        elemSize * rows * math.max(widths(v), 1)
-      require(begins(v) >= 0 && end <= bytes.length,
-        s"${names(v)}: data region [${begins(v)}, $end) outside ${bytes.length}B file")
+        elemSize(ntypes(v), names(v)) * rows * math.max(widths(v), 1)
+      require(begins(v) >= 0 && end <= fileLen,
+        s"${names(v)}: data region [${begins(v)}, $end) outside ${fileLen}B file")
     }
     (names, ntypes, begins, widths, rows)
   }
 
-  /** Whole-file read with an explicit size gate: classic CDF
-    * granules this engine reads are header-decoded from one buffer,
-    * so a >=2 GiB foreign file must fail with a clear message, not a
-    * silent `.toInt` truncation feeding a negative allocation.
+  /** The first `len` bytes of `p`, with an explicit size gate: classic
+    * CDF granules this engine reads are decoded from one buffer, so a
+    * >=2 GiB foreign file must fail with a clear message, not a silent
+    * `.toInt` truncation feeding a negative allocation.
     */
   private[netcdf] def readFully(
       fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Array[Byte] = {
-    val len = fs.getFileStatus(p).getLen
+      p: org.apache.hadoop.fs.Path, len: Long): Array[Byte] = {
     require(len <= Int.MaxValue,
       s"$p: ${len}B granule exceeds the supported 2 GiB classic-CDF read")
     val b = new Array[Byte](len.toInt)
@@ -370,18 +305,31 @@ object NetCdfDataSource extends ArrayScan.Format {
     files.toSeq
   }
 
-  /** A granule's bytes, its parsed header, and its variables
+  /** Bytes read to find a granule's header when planning a scan. */
+  private val HeaderProbe = 65536L
+
+  /** A granule's bytes (the whole file, or with `header` only a prefix
+    * that holds its header), its parsed header, and its variables
     * (name, nc_type, width).
     */
-  private def open(file: String, conf: Configuration) = {
+  private def open(file: String, conf: Configuration, header: Boolean = false) = {
     val p = new Path(file)
-    val bytes = NetCdf.readFully(p.getFileSystem(conf), p)
-    val header @ (names, types, _, widths, _) = NetCdf.parseHeader(bytes)
-    (bytes, header, names.indices.map(v => (names(v), types(v), widths(v))))
+    val fs = p.getFileSystem(conf)
+    val len = fs.getFileStatus(p).getLen
+    val prefix = NetCdf.readFully(fs, p, if (header) math.min(len, HeaderProbe) else len)
+    val (bytes, parsed @ (names, types, _, widths, _)) =
+      try (prefix, NetCdf.parseHeader(prefix, len))
+      catch {
+        // the header runs past the probe: read on
+        case _: IllegalArgumentException | _: BufferUnderflowException if prefix.length < len =>
+          val all = NetCdf.readFully(fs, p, len)
+          (all, NetCdf.parseHeader(all, len))
+      }
+    (bytes, parsed, names.indices.map(v => (names(v), types(v), widths(v))))
   }
 
   private def vars(file: String): Seq[(String, Int, Int)] =
-    open(file, ArrayScan.hadoopConf())._3
+    open(file, ArrayScan.hadoopConf(), header = true)._3
 
   override def infer(options: CaseInsensitiveStringMap): StructType =
     StructType(vars(granules(options).head).map { case (name, t, width) =>
