@@ -24,9 +24,12 @@ object Vec {
     * [off, off + s.length) to the integer centroid (cnt, s):
     * acc += dbl(cnt*v[d] - s[d])^2 / dbl(cnt^2), strictly left to
     * right — the bit-identical twin of the aggregate(zip_with) fold
-    * it replaces and of DuckDB's list_reduce replay.
+    * it replaces and of DuckDB's list_reduce replay. A vector too short
+    * for the slice yields null, like the twin's zip_with null padding
+    * (and never reads past the array's end).
     */
   def centroidDist(v: ArrayData, off: Int, cnt: Long, s: Array[Long]): java.lang.Double = {
+    if (off + s.length > v.numElements()) return null
     val cc = (cnt * cnt).toDouble
     var acc = 0.0
     var d = 0
@@ -183,9 +186,9 @@ case class VecDot(left: Expression, right: Expression)
   * subspace slice directly, eliminating the per-row slice() copy.
   *
   * Null contract — identical to the HOF twin: a null VECTOR yields
-  * null via the standard null-safe wrapper; a null ELEMENT poisons
-  * the fold to null (zip_with's null-padding semantics), never a
-  * silently-wrong distance.
+  * null via the standard null-safe wrapper; a null ELEMENT, or a
+  * vector shorter than the slice, poisons the fold to null (zip_with's
+  * null-padding semantics), never a silently-wrong distance.
   */
 case class CentroidDist(child: Expression, offset: Int, cnt: Long, s: Array[Long])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression

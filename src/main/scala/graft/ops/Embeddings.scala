@@ -14,11 +14,12 @@ import org.apache.spark.sql.functions._
   *     bucketed once by signature; queries probe only their bucket, so
   *     the candidate set (and the shuffle) shrinks by ~2^bits. The
   *     scale path when the query set is itself large.
-  *   - [[ivfTopK]]: inverted-file index — a k-means coarse quantizer
-  *     partitions the corpus into nlist cells; queries probe only the
-  *     nprobe nearest cells. Unlike data-oblivious LSH planes, the
-  *     quantizer ADAPTS to the corpus distribution, which is what
-  *     production vector indexes (FAISS IVF) use at billion scale.
+  *   - [[ivfTopK]]: inverted-file index — the integer-exact [[KMeans]]
+  *     coarse quantizer partitions the corpus into nlist cells; queries
+  *     probe only the nprobe nearest cells. Unlike data-oblivious LSH
+  *     planes, the quantizer ADAPTS to the corpus distribution, which
+  *     is what production vector indexes (FAISS IVF) use at billion
+  *     scale.
   */
 object Embeddings {
 
@@ -186,89 +187,32 @@ object Embeddings {
       .select(col(qIdCol), col("rank"), col(idCol), col("cos"))
   }
 
-  /** Squared L2 distance of a vector column to a literal centroid —
-    * |v|^2 is common to all centroids and irrelevant to the argmin, so
-    * only -2<v,c> + |c|^2 is evaluated (one codegen'd vec_dot per
-    * centroid).
-    */
-  private def negHalfDist(v: Column, c: Array[Double]): Column = {
-    val c2 = c.map(x => x * x).sum
-    dot(v, lit(c)) * (-2.0) + lit(c2)
-  }
-
-  /** Train an IVF coarse quantizer: Lloyd's k-means with deterministic
-    * init (the nlist vectors with the smallest ids). Per iteration:
-    * one broadcast-assign pass + one per-dimension average; the ONLY
-    * driver-side materialization is the MODEL itself (nlist x dim
-    * doubles — O(model), never O(data), the same contract as MLlib's
-    * k-means). Empty cells keep their previous centroid.
-    */
-  def trainIvfCentroids(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, iters: Int = 5): Array[Array[Double]] = {
-    val v = col(vecCol).cast("array<double>")
-    var centroids: Array[Array[Double]] = corpus
-      .orderBy(col(idCol))
-      .limit(nlist)
-      .select(v.as("v"))
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(centroids.length == nlist, s"corpus smaller than nlist=$nlist")
-    for (_ <- 0 until iters) {
-      val assigned = corpus.select(v.as("v"))
-        .select(col("v"), assignCell(col("v"), centroids).as("cell"))
-      // per-(cell, dim) means: posexplode is a generator (no UDF), the
-      // aggregation is one shuffle keyed by (cell, dim) — nlist x dim
-      // groups, tiny
-      val means = assigned
-        .select(col("cell"), posexplode(col("v")).as(Seq("d", "x")))
-        .groupBy(col("cell"), col("d"))
-        .agg(avg(col("x")).as("m"))
-        .collect()
-      val next = centroids.map(_.clone())
-      means.foreach(r => next(r.getAs[Int]("cell"))(r.getAs[Int]("d")) = r.getAs[Double]("m"))
-      centroids = next
-    }
-    centroids
-  }
-
-  /** Nearest-centroid id of a vector under literal centroids: the
-    * nlist distances as one array, argmin via
-    * array_position(arr, array_min(arr)) — the expression tree stays
-    * LINEAR in nlist (a when()-chain argmin fold duplicates its
-    * accumulator per level, which is exponential and OOMs the
-    * optimizer). No UDF, no shuffle; evaluated inline in whatever
-    * scan uses it; ties resolve to the smallest cell id
-    * (array_position returns the first match).
-    */
-  def assignCell(v: Column, centroids: Array[Array[Double]]): Column = {
-    val arr = array(centroids.toIndexedSeq.map(c => negHalfDist(v, c)): _*)
-    (array_position(arr, array_min(arr)) - 1).cast("int")
-  }
-
-  /** Approximate top-k via an IVF index: corpus assigned to its cell
-    * once (narrow scan), queries probe their `nprobe` nearest cells —
-    * an equi-join on the cell id, never a cross join. Recall/cost is
-    * tuned by nlist (cell granularity) and nprobe (cells searched);
-    * candidates shrink ~nprobe/nlist versus brute force. Centroids are
-    * trained on `corpus` with [[trainIvfCentroids]] unless supplied.
+  /** Approximate top-k via an IVF index: the coarse quantizer is
+    * [[KMeans]] trained on `corpus` (seeds = the nlist smallest ids,
+    * `trainIters` centroid updates), the corpus is assigned to its cell
+    * inline on the scan with [[KMeans.cell]], and queries probe their
+    * `nprobe` nearest cells — an equi-join on the cell id, never a
+    * cross join. Recall/cost is tuned by nlist (cell granularity) and
+    * nprobe (cells searched); candidates shrink ~nprobe/nlist versus
+    * brute force. Integer centroids make the cells — and so the output
+    * at any nprobe — independent of the shuffle-partition count. The
+    * rerank cosine reads the raw vectors, never the quantized ones.
     */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String,
       qIdCol: String, qVecCol: String,
       k: Int, nlist: Int = 16, nprobe: Int = 4,
-      trainIters: Int = 5,
-      centroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    val model = centroids.getOrElse(
-      trainIvfCentroids(corpus, idCol, vecCol, nlist, trainIters))
+      trainIters: Int = 5): DataFrame = {
+    // KMeans counts assignment passes: trainIters updates + the last pass
+    val model = KMeans.train(corpus, idCol, vecCol, nlist, trainIters + 1)._1
     val c = corpus.select(col(idCol), col(vecCol),
-      assignCell(col(vecCol).cast("array<double>"), model).as("cell"))
+      KMeans.cell(col(vecCol), model).as("cell"))
     // query probes: rank the nlist distances per query, keep nprobe
-    val qd = queries.select(col(qIdCol), col(qVecCol),
-      posexplode(array(model.toIndexedSeq.map(ct =>
-        negHalfDist(col(qVecCol).cast("array<double>"), ct)): _*))
-        .as(Seq("cell", "dist")))
+    val qd = queries.filter(KMeans.dimGuard(col(qVecCol), model(0).s.length))
+      .select(col(qIdCol), col(qVecCol),
+        posexplode(KMeans.distances(KMeans.quantize(col(qVecCol)), model))
+          .as(Seq("cell", "dist")))
     val pw = Window.partitionBy(col(qIdCol)).orderBy(col("dist"), col("cell"))
     val probes = qd.withColumn("pr", row_number().over(pw))
       .filter(col("pr") <= nprobe)
@@ -308,8 +252,9 @@ object Embeddings {
     * is the embedding-level op a training-data pipeline layers on top.
     *
     * `cell` is the pluggable quantizer expression: production passes
-    * the trained k-means assignment ([[assignCell]]); oracle-gated
-    * tests pass [[argmaxCell]] (SQL-replayable). Scale shape: the
+    * the trained k-means assignment ([[KMeans.cell]] under a
+    * [[KMeans.train]] model); oracle-gated tests pass [[argmaxCell]]
+    * (SQL-replayable). Scale shape: the
     * pair join is an equi-join on the cell id, so candidate mass is
     * sum(cellSize^2)/2 — bounded by quantizer balance (nlist tunes
     * it), never the N^2/2 of brute force; components are solved on

@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+
+import graft.functions.Vec
 
 /** Product quantization (PQ) — the FAISS-style compression stage that
   * turns a d-dim float vector into m small integer codes, one per
@@ -12,134 +15,18 @@ import org.apache.spark.sql.functions._
   * memory (m bytes per vector instead of 4·d), and IVF-PQ = coarse
   * IVF cell + PQ residual codes is the textbook billion-vector layout.
   *
-  * Exactness design — identical to [[KMeans]]'s integer discipline so
-  * the CODES THEMSELVES are an oracle-gated query result:
-  * vectors quantize once to integer units; per-subspace centroids are
-  * exact rationals (sum: array<long>, count); the point-to-centroid
-  * distance folds left-to-right over dimensions with one product and
-  * one division in double per term (identical IEEE op sequence in
-  * DuckDB's list_reduce); argmin is array_position(arr, array_min) —
-  * first match on ties = smallest code; empty clusters keep their
-  * previous centroid.
-  *
-  * Scale shape: training is ONE map-side-combined shuffle per Lloyd
-  * iteration covering ALL m subspaces at once — the explode emits
-  * (subspace, code, dim, x) and the group count is m·ksub·subLen =
-  * ksub·dim rows collected driver-side (the O(model) collect, same as
-  * IVF). Assignment is a narrow codegen'd expression over the scan;
-  * the quantized input is cached across iterations (MEMORY_AND_DISK;
-  * at petabyte scale substitute a checkpoint).
+  * Training and code assignment are [[KMeans]]'s Lloyd over m
+  * contiguous subspaces, so the CODES THEMSELVES are an oracle-gated
+  * query result under its integer discipline (exact-rational
+  * centroids, left-to-right distance fold, first-match argmin, empty
+  * clusters keep their centroid) — ONE map-side-combined shuffle per
+  * iteration covers all m subspaces. What is PQ's own lives here: the
+  * ADC distance tables, the IVF-PQ composition, and the oracle
+  * builders that replay both.
   */
 object ProductQuantizer {
 
   import KMeans.Centroid
-
-  private def quantize(vec: Column, scale: Double): Column =
-    transform(vec.cast("array<double>"), x => round(x * scale).cast("long"))
-
-  /** Exact-fold distance of the j-th slice of quantized vector `v` to
-    * centroid `c` (slice start is 1-based, matching Spark's slice()).
-    * Codegen'd [[graft.functions.CentroidDist]] with a direct offset —
-    * no per-row slice() copy; the interpreted twin is [[distHof]],
-    * pinned bit-identical in KernelEquivalenceSpec.
-    */
-  private def dist(v: Column, start: Int, len: Int, c: Centroid): Column = {
-    require(c.s.length == len)
-    graft.functions.centroid_dist(v, start - 1, c.cnt, c.s)
-  }
-
-  /** The replaced HOF formulation, spec-only. */
-  private[graft] def distHof(v: Column, start: Int, len: Int, c: Centroid): Column = {
-    val cnt = lit(c.cnt)
-    val cc = lit((c.cnt * c.cnt).toDouble)
-    aggregate(
-      zip_with(slice(v, start, len), typedLit(c.s.toSeq), (x, s) => {
-        val t = (cnt * x - s).cast("double")
-        t * t / cc
-      }),
-      lit(0.0), (acc, d) => acc + d)
-  }
-
-  private def assign(v: Column, start: Int, len: Int,
-      cents: Array[Centroid]): Column = {
-    val arr = array(cents.toIndexedSeq.map(dist(v, start, len, _)): _*)
-    (array_position(arr, array_min(arr)) - 1).cast("int")
-  }
-
-  /** Trained PQ model + final assignment: (codebooks[m][ksub],
-    * codes DataFrame `(_id, code_0 … code_{m-1})`). The codebook that
-    * produced the final assignment is returned (the last iteration
-    * assigns without updating, exactly like [[KMeans]]).
-    */
-  def train(
-      emb: DataFrame, idCol: String, vecCol: String,
-      m: Int, ksub: Int, iters: Int, dim: Int,
-      scale: Double = 1e6): (Array[Array[Centroid]], DataFrame) = {
-    val q = emb.select(col(idCol).as("_id"), quantize(col(vecCol), scale).as("_v"))
-      // null/absent vectors are EXCLUDED from the index: at corpus
-      // scale a broken row must not poison training or rank first in
-      // a search (null codes -> null distance sorts ahead under asc)
-      .filter(col("_v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try trainOnQuantized(q, m, ksub, iters, dim)
-    finally q.unpersist()
-  }
-
-  /** [[train]] over an already-quantized, already-persisted
-    * `(_id, _v)` frame — lets composite index builds (IVF-PQ) share
-    * ONE quantized cache across the coarse and PQ training loops
-    * instead of scanning and caching the corpus once per model.
-    */
-  private[ops] def trainOnQuantized(
-      q: DataFrame, m: Int, ksub: Int, iters: Int,
-      dim: Int): (Array[Array[Centroid]], DataFrame) = {
-    require(m > 0 && ksub > 0 && iters > 0)
-    require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    val subLen = dim / m
-    locally {
-      // init: subspace slices of the ksub smallest-id vectors — the
-      // same deterministic seed rule as KMeans, applied per subspace
-      val seed = q.orderBy(col("_id")).limit(ksub).select(col("_v")).collect()
-        .map(_.getSeq[Long](0).toArray)
-      require(seed.length == ksub, s"input smaller than ksub=$ksub")
-      var cents: Array[Array[Centroid]] = Array.tabulate(m) { j =>
-        seed.map(v => Centroid(1L, v.slice(j * subLen, (j + 1) * subLen)))
-      }
-      var assigned: DataFrame = null
-      for (i <- 1 to iters) {
-        val codeCols = (0 until m).map(j =>
-          assign(col("_v"), j * subLen + 1, subLen, cents(j)).as(s"code_$j"))
-        assigned = q.select(col("_id") +: col("_v") +: codeCols: _*)
-        if (i < iters) {
-          // ONE shuffle for all m subspaces: (sub, code, dim) integer
-          // sums; the member count rides on each group (constant per
-          // (sub, code), min over dims below)
-          val stats = assigned
-            .select(
-              posexplode(col("_v")).as(Seq("d", "x")),
-              array((0 until m).map(j => col(s"code_$j")): _*).as("codes"))
-            .withColumn("sub", (col("d") / subLen).cast("int"))
-            .withColumn("cl", element_at(col("codes"), col("sub") + 1))
-            .groupBy(col("sub"), col("cl"), col("d"))
-            .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-            .collect()
-          val next = cents.map(_.map(c => Centroid(c.cnt, c.s.clone())))
-          stats.groupBy(r => (r.getAs[Int]("sub"), r.getAs[Int]("cl")))
-            .foreach { case ((sub, cl), rows) =>
-              val s = new Array[Long](subLen)
-              rows.foreach(r =>
-                s(r.getAs[Int]("d") - sub * subLen) = r.getAs[Long]("s"))
-              next(sub)(cl) = Centroid(rows.head.getAs[Long]("n"), s)
-            }
-          // (sub, code) pairs absent from stats keep their previous
-          // centroid — matches the oracle's COALESCE
-          cents = next
-        }
-      }
-      (cents, assigned.select(col("_id") +:
-        (0 until m).map(j => col(s"code_$j")): _*))
-    }
-  }
 
   /** (id, code_0 … code_{m-1}) after `iters` Lloyd iterations per
     * subspace. Scalar code columns (not an array) so the driver's
@@ -147,10 +34,10 @@ object ProductQuantizer {
     */
   def pqCodes(
       emb: DataFrame, idCol: String, vecCol: String,
-      m: Int, ksub: Int, iters: Int, dim: Int,
-      scale: Double = 1e6): DataFrame =
-    train(emb, idCol, vecCol, m, ksub, iters, dim, scale)._2
-      .withColumnRenamed("_id", idCol)
+      m: Int, ksub: Int, iters: Int): DataFrame =
+    KMeans.withQuantized(emb, idCol, vecCol)(q =>
+        KMeans.lloyd(q, KMeans.seeds(q, ksub)._1, iters, m))._2
+      .drop("_v").withColumnRenamed("_id", idCol)
 
   /** ADC (asymmetric distance computation) top-k search — the reason
     * PQ exists: the query vector is NOT quantized; per subspace a
@@ -162,29 +49,52 @@ object ProductQuantizer {
     * bytes of floats, scan-speed, embarrassingly parallel.
     *
     * Exactness: the distance table replays the centroid fold
-    * (one product + one division per dim, folded left-to-right) in
-    * driver-side Scala doubles — the same IEEE op sequence DuckDB's
-    * list_reduce performs in [[adcOracleSql]] — and the final sum is
-    * a left-associated (m-1)-add chain in both engines, so the
-    * ordering (and the emitted micro-unit distance) is bit-identical.
-    * Ties break on vec_id.
+    * ([[graft.functions.Vec.centroidDist]], one product + one division
+    * per dim, folded left-to-right) driver-side — the same IEEE op
+    * sequence DuckDB's list_reduce performs in [[adcOracleSql]] — and
+    * the final sum is a left-associated (m-1)-add chain in both
+    * engines, so the ordering (and the emitted micro-unit distance) is
+    * bit-identical. Ties break on vec_id.
     */
   def adcTopK(
       emb: DataFrame, idCol: String, vecCol: String,
-      m: Int, ksub: Int, iters: Int, dim: Int,
-      queryId: Long, k: Int, scale: Double = 1e6): DataFrame = {
-    val subLen = dim / m
-    val (cents, codes) = train(emb, idCol, vecCol, m, ksub, iters, dim, scale)
-    val qv: Array[Long] = emb.filter(col(idCol) === queryId)
-      .select(quantize(col(vecCol), scale)).head().getSeq[Long](0).toArray
-    require(qv.length == dim, s"query vector dim ${qv.length} != $dim")
-    val dtab = distTables(qv, cents, subLen)
-    val adc = (0 until m).map(j =>
+      m: Int, ksub: Int, iters: Int,
+      queryId: Long, k: Int): DataFrame = {
+    // the query vector is read from the training cache, in the seed job
+    val (cents, codes, qv) = KMeans.withQuantized(emb, idCol, vecCol) { q =>
+      val (s, Seq(v)) = KMeans.seeds(q, ksub, Seq(queryId))
+      val (c, a) = KMeans.lloyd(q, s, iters, m)
+      (c, a.drop("_v"), v)
+    }
+    topK(codes, adcSum(distTables(qv, cents)), idCol, k)
+  }
+
+  /** Per-subspace distance tables: dtab(j)(c) = exact fold of the
+    * quantized query's j-th slice against codebook entry c — the
+    * assignment kernel itself, called driver-side.
+    */
+  private def distTables(qv: Array[Long],
+      cents: Array[Array[Centroid]]): Array[Array[Double]] = {
+    val subLen = cents(0)(0).s.length
+    val dim = subLen * cents.length
+    require(qv.length == dim, s"query vector length ${qv.length} != seed dim=$dim")
+    val v = ArrayData.toArrayData(qv)
+    Array.tabulate(cents.length)(j =>
+      cents(j).map(c => Vec.centroidDist(v, j * subLen, c.cnt, c.s).doubleValue))
+  }
+
+  /** The left-associated sum of the m table lookups over the codes. */
+  private def adcSum(dtab: Array[Array[Double]]): Column =
+    dtab.indices.map(j =>
         element_at(typedLit(dtab(j).toSeq), col(s"code_$j") + 1))
       .reduceLeft(_ + _)
-    // orderBy+limit plans as TakeOrderedAndProject — per-partition
-    // top-k heaps, no global sort; the rank window then runs over the
-    // k surviving rows only
+
+  /** (rank, id, adc_units) top-k of `codes` by `adc`, ties on id.
+    * orderBy+limit plans as TakeOrderedAndProject — per-partition
+    * top-k heaps, no global sort; the rank window then runs over the k
+    * surviving rows only.
+    */
+  private def topK(codes: DataFrame, adc: Column, idCol: String, k: Int): DataFrame =
     codes
       .withColumn("adc", adc)
       .orderBy(col("adc").asc, col("_id").asc)
@@ -196,32 +106,6 @@ object ProductQuantizer {
         // floor-then-cast: identical bits in, identical integer out
         // (DuckDB's bare double->bigint cast ROUNDS; floor() doesn't)
         floor(col("adc")).cast("long").as("adc_units"))
-  }
-
-  /** Exact scalar fold of the quantized query slice at `off` against
-    * centroid `c` — the driver-side twin of [[dist]] and of the
-    * oracle's list_reduce (same IEEE op sequence, identical bits).
-    */
-  private def exactDist(qv: Array[Long], off: Int, len: Int, c: Centroid): Double = {
-    val cc = (c.cnt * c.cnt).toDouble
-    var acc = 0.0
-    var d = 0
-    while (d < len) {
-      val t = (c.cnt * qv(off + d) - c.s(d)).toDouble
-      acc = acc + t * t / cc
-      d += 1
-    }
-    acc
-  }
-
-  /** Per-subspace ADC distance tables: dtab(j)(c) = exact fold of the
-    * query's j-th slice against codebook entry c.
-    */
-  private def distTables(qv: Array[Long], cents: Array[Array[Centroid]],
-      subLen: Int): Array[Array[Double]] =
-    Array.tabulate(cents.length) { j =>
-      cents(j).map(exactDist(qv, j * subLen, subLen, _))
-    }
 
   /** IVF-PQ search — the textbook billion-vector layout: an IVF
     * coarse quantizer (integer-exact [[KMeans]]) narrows the search to
@@ -243,50 +127,26 @@ object ProductQuantizer {
   def ivfAdcTopK(
       emb: DataFrame, idCol: String, vecCol: String,
       coarseK: Int, coarseIters: Int, nprobe: Int,
-      m: Int, ksub: Int, iters: Int, dim: Int,
-      queryId: Long, k: Int, scale: Double = 1e6): DataFrame = {
+      m: Int, ksub: Int, iters: Int,
+      queryId: Long, k: Int): DataFrame = {
     require(nprobe >= 1 && nprobe <= coarseK)
-    val subLen = dim / m
     // ONE quantized cache shared by the coarse and PQ training loops
     // and the query-vector fetch — the index build scans the corpus
     // once, not once per model
-    val q = emb.select(col(idCol).as("_id"), quantize(col(vecCol), scale).as("_v"))
-      // null/absent vectors are EXCLUDED from the index: at corpus
-      // scale a broken row must not poison training or rank first in
-      // a search (null codes -> null distance sorts ahead under asc)
-      .filter(col("_v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (coarse, pq, qv) =
-      try {
-        val (c, _) = KMeans.trainOnQuantized(q, coarseK, coarseIters)
-        val (p, _) = trainOnQuantized(q, m, ksub, iters, dim)
-        val v = q.filter(col("_id") === queryId)
-          .select(col("_v")).head().getSeq[Long](0).toArray
-        (c, p, v)
-      } finally q.unpersist()
-    require(qv.length == dim, s"query vector dim ${qv.length} != $dim")
-    val probeCells: Seq[Int] = coarse.zipWithIndex
-      .map { case (c, i) => (exactDist(qv, 0, dim, c), i) }
+    val (coarse, pq, qv) = KMeans.withQuantized(emb, idCol, vecCol) { q =>
+      // one seed job serves both models and the query vector
+      val (s, Seq(v)) = KMeans.seeds(q, math.max(coarseK, ksub), Seq(queryId))
+      (KMeans.lloyd(q, s.take(coarseK), coarseIters, 1)._1(0),
+        KMeans.lloyd(q, s.take(ksub), iters, m)._1, v)
+    }
+    val probeCells: Seq[Int] = distTables(qv, Array(coarse))(0).zipWithIndex
       .sorted.take(nprobe).map(_._2).toIndexedSeq
-    val dtab = distTables(qv, pq, subLen)
-    val adc = (0 until m).map(j =>
-        element_at(typedLit(dtab(j).toSeq), col(s"code_$j") + 1))
-      .reduceLeft(_ + _)
-    val codeCols = (0 until m).map(j =>
-      assign(col("_v"), j * subLen + 1, subLen, pq(j)).as(s"code_$j"))
-    emb
-      .select(col(idCol).as("_id"), quantize(col(vecCol), scale).as("_v"))
-      .withColumn("cell", KMeans.assign(col("_v"), coarse))
+    val cand = emb
+      .select(col(idCol).as("_id"), KMeans.quantize(col(vecCol)).as("_v"))
+      .withColumn("cell", KMeans.nearest(col("_v"), coarse))
       .filter(col("cell").isin(probeCells.map(Integer.valueOf): _*))
-      .select(col("_id") +: codeCols: _*)
-      .withColumn("adc", adc)
-      .orderBy(col("adc").asc, col("_id").asc)
-      .limit(k)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col("adc").asc, col("_id").asc)))
-      .select(col("rank"), col("_id").as(idCol),
-        floor(col("adc")).cast("long").as("adc_units"))
+      .select(col("_id") +: KMeans.codes(col("_v"), pq): _*)
+    topK(cand, adcSum(distTables(qv, pq)), idCol, k)
   }
 
   /** DuckDB oracle replaying [[pqCodes]] verbatim: one [[KMeans]]-style

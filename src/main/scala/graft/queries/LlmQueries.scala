@@ -731,7 +731,7 @@ object LlmQueries extends QueryPack {
     // same doubles after the cast) must collapse onto their min-id
     // originals; everything else survives. The coarse quantizer here
     // is the SQL-replayable argmax cell (production passes the
-    // trained k-means assignCell); closure is replayed with the same
+    // trained k-means KMeans.cell); closure is replayed with the same
     // recursive-CTE pattern as llm_dedup_clusters.
     Q("llm_semdedup",
       (s, dir) => {
@@ -2211,21 +2211,23 @@ object LlmQueries extends QueryPack {
     // brute-force top-k and the llm_cosine_topk oracle applies
     // verbatim. This pins the whole IVF plumbing — cell assignment
     // partitions without loss or duplication, the probe equi-join,
-    // the exact rerank — while staying robust to the quantizer's
-    // floating-point nondeterminism (per-dim avg() order). The
+    // the exact rerank. The quantizer is the integer-exact KMeans, so
+    // the cells themselves are partition-invariant too; the
     // approximate path (nprobe < nlist) is gated in EmbeddingsSpec:
-    // recall beats cell-chance and candidates shrink ~nprobe/nlist.
+    // recall beats cell-chance, candidates shrink ~nprobe/nlist, and
+    // the rows do not change with the input partitioning.
     Q("llm_ann_ivf_topk",
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
         val q = e.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
         // trainIters = 1: with nprobe = nlist (full probe) the output
-        // is provably centroid-independent, so one refinement pass
+        // is provably centroid-independent, so one centroid update
         // exercises the whole training path (seed + assign +
-        // per-(cell,dim) means) without paying 4 more full-corpus
-        // training jobs that cannot change the answer (A/B'd: 3.8 ->
-        // ~2 s warm at sf0.1). Approximate configs keep the default.
+        // per-(cell,dim) integer sums) without paying 4 more
+        // full-corpus training jobs that cannot change the answer
+        // (A/B'd: 3.8 -> ~2 s warm at sf0.1). Approximate configs keep
+        // the default.
         Embeddings.ivfTopK(e, q, "vec_id", "embedding", "qid", "qvec",
             k = 10, nlist = 16, nprobe = 16, trainIters = 1)
           .select(col("qid"), col("rank"), col("vec_id"),
@@ -2373,7 +2375,7 @@ object LlmQueries extends QueryPack {
         k = 8, iters = 3),
       Some(graft.ops.KMeans.oracleSql(
         "embeddings", "vec_id", "embedding",
-        k = 8, iters = 3, dim = 64, scaleUnits = 1000000L))),
+        k = 8, iters = 3, dim = 64, scaleUnits = graft.ops.KMeans.ScaleUnits))),
 
     // Product quantization codes (ops/ProductQuantizer.scala): the
     // FAISS-style 4x->m-byte vector compression completing the ANN
@@ -2385,10 +2387,10 @@ object LlmQueries extends QueryPack {
     Q("llm_pq_codes",
       (s, dir) => graft.ops.ProductQuantizer.pqCodes(
         Tables(s, dir, "embeddings"), "vec_id", "embedding",
-        m = 4, ksub = 8, iters = 2, dim = 64),
+        m = 4, ksub = 8, iters = 2),
       Some(graft.ops.ProductQuantizer.oracleSql(
         "embeddings", "vec_id", "embedding",
-        m = 4, ksub = 8, iters = 2, dim = 64, scaleUnits = 1000000L))),
+        m = 4, ksub = 8, iters = 2, dim = 64, scaleUnits = graft.ops.KMeans.ScaleUnits))),
 
     // PQ ADC top-k search: the query vector is never quantized —
     // per-subspace distance TABLES are built once driver-side and each
@@ -2399,10 +2401,10 @@ object LlmQueries extends QueryPack {
     Q("llm_pq_adc_topk",
       (s, dir) => graft.ops.ProductQuantizer.adcTopK(
         Tables(s, dir, "embeddings"), "vec_id", "embedding",
-        m = 4, ksub = 8, iters = 2, dim = 64, queryId = 0L, k = 10),
+        m = 4, ksub = 8, iters = 2, queryId = 0L, k = 10),
       Some(graft.ops.ProductQuantizer.adcOracleSql(
         "embeddings", "vec_id", "embedding",
-        m = 4, ksub = 8, iters = 2, dim = 64, scaleUnits = 1000000L,
+        m = 4, ksub = 8, iters = 2, dim = 64, scaleUnits = graft.ops.KMeans.ScaleUnits,
         queryId = 0L, k = 10))),
 
     // IVF-PQ search — the textbook billion-vector layout, fully
@@ -2417,11 +2419,11 @@ object LlmQueries extends QueryPack {
       (s, dir) => graft.ops.ProductQuantizer.ivfAdcTopK(
         Tables(s, dir, "embeddings"), "vec_id", "embedding",
         coarseK = 8, coarseIters = 2, nprobe = 3,
-        m = 4, ksub = 8, iters = 2, dim = 64, queryId = 0L, k = 10),
+        m = 4, ksub = 8, iters = 2, queryId = 0L, k = 10),
       Some(graft.ops.ProductQuantizer.ivfAdcOracleSql(
         "embeddings", "vec_id", "embedding",
         coarseK = 8, coarseIters = 2, nprobe = 3,
-        m = 4, ksub = 8, iters = 2, dim = 64, scaleUnits = 1000000L,
+        m = 4, ksub = 8, iters = 2, dim = 64, scaleUnits = graft.ops.KMeans.ScaleUnits,
         queryId = 0L, k = 10))),
 
     // KMV distinct-count sketch (ops/Sketches.scala): the sketch

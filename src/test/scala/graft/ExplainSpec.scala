@@ -13,6 +13,8 @@ package graft
   *    (tiny) matched keys only;
   *  - llm_ann_lsh_topk: banded equi-joins only (no cartesian/nested-
   *    loop fallback), top-k via the rank-window path;
+  *  - llm_ann_ivf_topk: the k-means cell is computed inline on the
+  *    corpus scan and the probe join is an equi-join on it;
   *  - none of them fall off the Catalyst plan into an RDD scan.
   *
   * Queries execute at sf0.001 so AQE finalizes, then the FINAL
@@ -292,6 +294,25 @@ class ExplainSpec extends SparkSpec {
     assert(!p.toLowerCase.contains("join"), s"unexpected join:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"top-k fell to a global sort:\n$p")
     assert(shuffles(p) == 0, s"probe+rank should be scan-local:\n$p")
+  }
+
+  test("llm_ann_ivf_topk: cell assigned inline on the corpus scan, probe equi-join on cell") {
+    val p = finalPlan("llm_ann_ivf_topk")
+    // the probe join keys on the cell id alone — never a cross join
+    // with a distance filter
+    assert("(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \\[cell#\\d+\\], \\[cell#\\d+\\]"
+      .r.findFirstIn(p).isDefined, s"probe join is not an equi-join on cell:\n$p")
+    assert(!p.contains("CartesianProduct"), s"cartesian crept in:\n$p")
+    assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop join crept in:\n$p")
+    // the corpus cell is the centroid argmin projected straight over
+    // the corpus scan: no exchange or stage boundary below it
+    val lines = p.linesIterator.toIndexedSeq
+    val cellAt = lines.indexWhere(l => l.contains("Project [") &&
+      l.contains("centroid_dist(") && l.contains(" AS cell#"))
+    assert(cellAt >= 0, s"no inline cell projection:\n$p")
+    val below = lines.drop(cellAt + 1).takeWhile(!_.contains("FileScan"))
+    assert(below.forall(l => !l.contains("Exchange") && !l.contains("QueryStage")),
+      s"cell assignment is not on the corpus scan:\n$p")
   }
 
   test("q3_shipping_priority: selective joins broadcast, top-k via TakeOrdered, no cartesian") {

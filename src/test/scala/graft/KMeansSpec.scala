@@ -80,6 +80,24 @@ class KMeansSpec extends SparkSpec {
     assert(out.forall(_ == 0))
   }
 
+  test("a vector whose length differs from the seeds' fails, naming the dim") {
+    val sess = spark
+    import sess.implicits._
+    // seeds (ids 0, 1) are 3-dim; id 2 is one element short — the
+    // kernel alone would score it null against every centroid
+    val df = Seq(
+      (0L, Array(1.0f, 0.0f, 0.0f)),
+      (1L, Array(0.0f, 1.0f, 0.0f)),
+      (2L, Array(1.0f, 0.0f)),
+      (3L, Array(0.0f, 0.9f, 0.1f))).toDF("vec_id", "embedding")
+    val ex = intercept[Exception] {
+      KMeans.assignClusters(df, "vec_id", "embedding", k = 2, iters = 2).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(_.toString).toSeq
+    assert(msgs.exists(_.contains("dim=3")), msgs.mkString("\n"))
+  }
+
   test("oracle builder embeds the requested k/iters/dim") {
     val sql = KMeans.oracleSql("embeddings", "vec_id", "embedding",
       k = 8, iters = 3, dim = 64, scaleUnits = 1000000L)

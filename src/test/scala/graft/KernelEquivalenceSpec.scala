@@ -29,13 +29,14 @@ class KernelEquivalenceSpec extends SparkSpec {
     import graft.ops.KMeans
     val e = Tables(spark, sf001, "embeddings")
     val (cents, _) = KMeans.train(e, "vec_id", "embedding", k = 4, iters = 2)
+    val dim = cents(0).s.length
     val q = e.select(col("vec_id"),
       transform(col("embedding").cast("array<double>"),
         x => round(x * 1e6).cast("long")).as("v"))
     cents.foreach { c =>
       val ne = q.select(
         (graft.functions.centroid_dist(col("v"), 0, c.cnt, c.s) =!=
-          KMeans.distHof(col("v"), c)).as("ne"))
+          KMeans.distHof(col("v"), 1, dim, c)).as("ne"))
         .filter(col("ne"))
       assert(ne.count() == 0, "full-vector kernel diverged from the HOF fold")
     }
@@ -43,7 +44,7 @@ class KernelEquivalenceSpec extends SparkSpec {
     val sub = graft.ops.KMeans.Centroid(cents(0).cnt, cents(0).s.slice(16, 32))
     val ne2 = q.select(
       (graft.functions.centroid_dist(col("v"), 16, sub.cnt, sub.s) =!=
-        graft.ops.ProductQuantizer.distHof(col("v"), 17, 16, sub)).as("ne"))
+        KMeans.distHof(col("v"), 17, 16, sub)).as("ne"))
       .filter(col("ne"))
     assert(ne2.count() == 0, "sliced kernel diverged from the HOF fold")
     // null vector -> null distance (standard null-safe wrapper)
@@ -53,16 +54,26 @@ class KernelEquivalenceSpec extends SparkSpec {
     assert(nul.isNullAt(0))
     // null ELEMENT -> null distance, matching the HOF twin's
     // poisoning (null * y nulls the fold) — never a silent 0-read
-    val dim = cents(0).s.length
     val nelArr = (0 until dim)
       .map(i => if (i == 3) "cast(null as bigint)" else s"${i}L")
       .mkString("array(", ", ", ")")
     val nel = spark.sql(s"select $nelArr as v")
       .select(
         graft.functions.centroid_dist(col("v"), 0, cents(0).cnt, cents(0).s).as("d"),
-        KMeans.distHof(col("v"), cents(0)).as("h")).head
+        KMeans.distHof(col("v"), 1, dim, cents(0)).as("h")).head
     assert(nel.isNullAt(0), "kernel must poison on a null element")
     assert(nel.isNullAt(1), "HOF reference should also be null")
+    // vector shorter than the slice -> null (the HOF twin's zip_with
+    // null padding), never a read past the array's end: full vector
+    // one element short, and a PQ slice running off the end
+    val short = spark.sql(
+        s"select transform(sequence(1, ${dim - 1}), i -> cast(i as bigint)) as v")
+      .select(
+        graft.functions.centroid_dist(col("v"), 0, cents(0).cnt, cents(0).s).as("d"),
+        KMeans.distHof(col("v"), 1, dim, cents(0)).as("h"),
+        graft.functions.centroid_dist(col("v"), dim - 16, sub.cnt, sub.s).as("ds"),
+        KMeans.distHof(col("v"), dim - 15, 16, sub).as("hs")).head
+    assert((0 until 4).forall(short.isNullAt), s"short vector must yield null: $short")
   }
 
   test("quantize_int8 == array_max/transform/floor HOF formulation, field-wise") {

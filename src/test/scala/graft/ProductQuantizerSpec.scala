@@ -39,7 +39,7 @@ class ProductQuantizerSpec extends SparkSpec {
       .withColumn("vec_id", col("vec_id") + 1000L)
     val emb = base.unionByName(copies)
     val codes = ProductQuantizer.pqCodes(
-      emb, "vec_id", "embedding", m = m, ksub = ksub, iters = 2, dim = dim)
+      emb, "vec_id", "embedding", m = m, ksub = ksub, iters = 2)
     val rows = codes.collect().map(r =>
       r.getLong(0) -> (0 until m).map(j => r.getInt(j + 1))).toMap
     assert(rows.size == 42)
@@ -51,7 +51,7 @@ class ProductQuantizerSpec extends SparkSpec {
   test("ADC rank-1 is the query vector itself; ranks are 1..k") {
     val top = ProductQuantizer.adcTopK(
       corpus(40), "vec_id", "embedding",
-      m = m, ksub = ksub, iters = 2, dim = dim, queryId = 0L, k = 5)
+      m = m, ksub = ksub, iters = 2, queryId = 0L, k = 5)
       .collect()
     assert(top.length == 5)
     assert(top.map(_.getInt(0)).toSeq == (1 to 5))
@@ -65,12 +65,12 @@ class ProductQuantizerSpec extends SparkSpec {
     val emb = corpus(60)
     val full = ProductQuantizer.adcTopK(
         emb, "vec_id", "embedding",
-        m = m, ksub = ksub, iters = 2, dim = dim, queryId = 0L, k = 60)
+        m = m, ksub = ksub, iters = 2, queryId = 0L, k = 60)
       .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
     val probed = ProductQuantizer.ivfAdcTopK(
         emb, "vec_id", "embedding",
         coarseK = 4, coarseIters = 2, nprobe = 2,
-        m = m, ksub = ksub, iters = 2, dim = dim, queryId = 0L, k = 10)
+        m = m, ksub = ksub, iters = 2, queryId = 0L, k = 10)
       .collect()
     assert(probed.length == 10)
     assert(probed.head.getLong(1) == 0L, "query's own cell is always probed")
@@ -89,22 +89,36 @@ class ProductQuantizerSpec extends SparkSpec {
     val withNull = base.unionByName(
       Seq((999L, null.asInstanceOf[Array[Float]])).toDF("vec_id", "embedding"))
     val codes = ProductQuantizer.pqCodes(
-      withNull, "vec_id", "embedding", m = m, ksub = ksub, iters = 2, dim = dim)
+      withNull, "vec_id", "embedding", m = m, ksub = ksub, iters = 2)
     assert(codes.count() == 40, "null row must not receive codes")
     val top = ProductQuantizer.adcTopK(
       withNull, "vec_id", "embedding",
-      m = m, ksub = ksub, iters = 2, dim = dim, queryId = 0L, k = 5)
+      m = m, ksub = ksub, iters = 2, queryId = 0L, k = 5)
       .collect()
     assert(!top.exists(_.getLong(1) == 999L),
       "null vector must never appear in search results")
     assert(top.head.getLong(1) == 0L)
   }
 
+  test("a vector whose length differs from the seeds' fails, naming the dim") {
+    val sess = spark
+    import sess.implicits._
+    val bad = corpus(40).unionByName(
+      Seq((999L, Array.fill(dim + 2)(1.0f))).toDF("vec_id", "embedding"))
+    val ex = intercept[Exception] {
+      ProductQuantizer.pqCodes(bad, "vec_id", "embedding",
+        m = m, ksub = ksub, iters = 2).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(_.toString).toSeq
+    assert(msgs.exists(_.contains(s"dim=$dim")), msgs.mkString("\n"))
+  }
+
   test("codes are invariant to input partitioning") {
     val emb = corpus(60)
     def run(parts: Int) = ProductQuantizer.pqCodes(
         emb.repartition(parts), "vec_id", "embedding",
-        m = m, ksub = ksub, iters = 3, dim = dim)
+        m = m, ksub = ksub, iters = 3)
       .collect().map(r => r.getLong(0) ->
         (0 until m).map(j => r.getInt(j + 1))).toMap
     assert(run(1) == run(7))
