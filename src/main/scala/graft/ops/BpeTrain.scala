@@ -292,12 +292,6 @@ object BpeTrain {
   // cannot silently break another oracle.
   // ---------------------------------------------------------------
 
-  /** DuckDB list of whitespace tokens of `expr` — the oracle-side
-    * twin of [[Text.tokens]].
-    */
-  private def tokensSql(expr: String): String =
-    s"""list_filter(string_split_regex($expr, '\\s+'), x -> len(x) > 0)"""
-
   /** The shared training CTE chain: `WITH RECURSIVE t0, v, w0,
     * (p/pc/best/rw/w) x steps` — ends after `w$steps` with NO final
     * SELECT; tails append `,<extra ctes>` and/or a final SELECT.
@@ -334,7 +328,7 @@ object BpeTrain {
          |  WHERE pos = len(syms) + 1)""".stripMargin
     }
     s"""WITH RECURSIVE t0 AS (
-       |  SELECT unnest(${tokensSql(textCol)}) AS word
+       |  SELECT unnest(${Text.tokensSql(textCol)}) AS word
        |  FROM $table),
        |v AS MATERIALIZED (SELECT word, count(*) AS freq FROM t0 GROUP BY word),
        |w0 AS MATERIALIZED (
@@ -376,7 +370,7 @@ object BpeTrain {
       s"""tok AS (
          |  SELECT $idCol, i, toks[i] AS word
          |  FROM (SELECT $idCol, toks, unnest(range(1, len(toks) + 1)) AS i
-         |        FROM (SELECT $idCol, ${tokensSql(textCol)} AS toks
+         |        FROM (SELECT $idCol, ${Text.tokensSql(textCol)} AS toks
          |              FROM $table)))
          |SELECT tok.$idCol, CAST(tok.i - 1 AS INTEGER) AS tok_pos, tok.word,
          |       CAST(w.j - 1 AS INTEGER) AS piece_pos, w.syms[w.j] AS piece

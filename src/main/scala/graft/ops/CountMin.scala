@@ -163,8 +163,7 @@ object CountMin {
       d: Int, w: Int, k: Int): String = {
     val len = sliceLen(d)
     s"""WITH t AS (
-       |  SELECT unnest(list_filter(string_split_regex($textCol, '\\s+'),
-       |           x -> len(x) > 0)) AS term
+       |  SELECT unnest(${Text.tokensSql(textCol)}) AS term
        |  FROM $table),
        |h AS (SELECT term, md5(term || '#cms') AS hx FROM t),
        |cells AS (

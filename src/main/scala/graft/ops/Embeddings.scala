@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *   - [[bruteForceTopK]]: exact cosine top-k — broadcast the (small)
   *     query set against the full corpus; one scan, no shuffle of the
   *     corpus, a partial top-k per partition then a tiny final sort.
-  *   - [[lshBuckets]] / [[annTopK]]: random-hyperplane LSH — corpus
+  *   - [[lshTableBuckets]] / [[annTopK]]: random-hyperplane LSH — corpus
   *     bucketed once by signature; queries probe only their bucket, so
   *     the candidate set (and the shuffle) shrinks by ~2^bits. The
   *     scale path when the query set is itself large.
@@ -20,6 +20,11 @@ import org.apache.spark.sql.functions._
   *     planes, the quantizer ADAPTS to the corpus distribution, which
   *     is what production vector indexes (FAISS IVF) use at billion
   *     scale.
+  *
+  * The paths differ only in how they generate candidates: all three
+  * score and rank them through one exact rerank (norms once per
+  * vector, the [[cosine]] pair expression, a dimension check per pair,
+  * one row_number top-k window), so their cosines agree bit-for-bit.
   */
 object Embeddings {
 
@@ -33,11 +38,28 @@ object Embeddings {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val n = norm(a) * norm(b)
-    when(n > 0, d / n).otherwise(lit(0.0))
+  def cosine(a: Column, b: Column): Column = cosineOfNorms(a, b, norm(a), norm(b))
+
+  /** [[cosine]] from norms computed beforehand — the one pair
+    * expression every scorer uses, so `sqrt(dot(v, v))` runs once per
+    * vector instead of once per pair, with the identical double op
+    * chain (same sqrt, same product, same division: bit-identical cos).
+    */
+  private[graft] def cosineOfNorms(a: Column, b: Column, na: Column, nb: Column): Column = {
+    val n = na * nb
+    when(n > 0, dot(a, b) / n).otherwise(lit(0.0))
   }
+
+  /** DuckDB twin of [[cosine]] over two `DOUBLE[]` SQL expressions:
+    * `list_dot_product` accumulates left to right like `vec_dot`.
+    */
+  def cosineSql(a: String, b: String): String =
+    s"""CASE WHEN sqrt(list_dot_product($a, $a)) *
+       |          sqrt(list_dot_product($b, $b)) > 0
+       |  THEN list_dot_product($a, $b) /
+       |       (sqrt(list_dot_product($a, $a)) *
+       |        sqrt(list_dot_product($b, $b)))
+       |  ELSE 0.0 END""".stripMargin
 
   /** Symmetric per-vector int8 quantization — the 4x storage cut a
     * 100-TB embedding store takes before anything else: q_i =
@@ -67,6 +89,41 @@ object Embeddings {
       (maxAbs / lit(127.0)).cast("double").as("scale"))
   }
 
+  /** Corpus candidates `(idCol, vecCol, _nrm)` paired with query rows
+    * `(qIdCol, qVecCol, _qnrm)`, scored: the exact rerank every top-k
+    * path shares — each path only generates its own candidates (the
+    * EDBT 2020 incremental top-k / REPOSE split). Self pairs drop out;
+    * a dimension mismatch fails loudly, because vec_dot would return
+    * null and a null cos would silently take ranks instead of
+    * surfacing the corrupt row. assert_true yields NULL on pass;
+    * keeping it inside a Filter (not a projected-then-dropped column)
+    * means pruning can't remove it.
+    */
+  private def scorePairs(cand: DataFrame, idCol: String, vecCol: String,
+      qIdCol: String, qVecCol: String): DataFrame =
+    cand.filter(col(idCol) =!= col(qIdCol))
+      .filter(assert_true(size(col(vecCol)) === size(col(qVecCol)),
+        lit("embedding dimension mismatch between corpus and query")).isNull)
+      .withColumn("cos", cosineOfNorms(col(vecCol).cast("array<double>"),
+        col(qVecCol).cast("array<double>"), col("_nrm"), col("_qnrm")))
+
+  /** The top `k` scored pairs per query by (cos desc, id): (qIdCol,
+    * rank, idCol, cos).
+    */
+  private def topK(scored: DataFrame, idCol: String, qIdCol: String,
+      k: Int): DataFrame = {
+    val w = Window.partitionBy(col(qIdCol)).orderBy(col("cos").desc, col(idCol))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col(qIdCol), col("rank"), col(idCol), col("cos"))
+  }
+
+  /** `df` plus column `as`, the norm of `vecCol`: computed once per
+    * vector, before any candidate join.
+    */
+  private def withNorm(df: DataFrame, vecCol: String, as: String): DataFrame =
+    df.withColumn(as, norm(col(vecCol).cast("array<double>")))
+
   /** Exact cosine top-k of `corpus` rows for each query row.
     * `queries` must be small (it is broadcast); corpus streams.
     */
@@ -75,42 +132,20 @@ object Embeddings {
       idCol: String, vecCol: String,
       qIdCol: String, qVecCol: String,
       k: Int): DataFrame = {
-    // norms precomputed per VECTOR, not per pair (r16, guide §1.2
-    // "per-task work"): cosine(a,b) = d / (sqrt(dot(a,a)) *
-    // sqrt(dot(b,b))) evaluated after the crossJoin recomputed each
-    // corpus norm once per QUERY and each query norm once per corpus
-    // row — with q queries that is (1+2q)·dim mults per corpus row
-    // where (q+...)·dim suffice. Hoisting sqrt(dot(v,v)) to the
-    // pre-join projections leaves the identical double op chain
-    // (same sqrt, same product, same division — bit-identical cos,
-    // pinned by EmbeddingsSpec), cutting the pair-scoring flops ~3x.
-    val c = corpus.withColumn("_nrm", norm(col(vecCol).cast("array<double>")))
-    val q = queries.withColumn("_qnrm", norm(col(qVecCol).cast("array<double>")))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col(idCol) =!= col(qIdCol))
-      // fail fast on dimension mismatch (same discipline as annTopK's
-      // dimGuard): vec_dot would return null, and a null cos would
-      // silently take ranks instead of surfacing the corrupt row
-      .filter(assert_true(size(col(vecCol)) === size(col(qVecCol)),
-        lit("embedding dimension mismatch between corpus and query")).isNull)
-      .withColumn("cos", {
-        val d = dot(col(vecCol).cast("array<double>"),
-          col(qVecCol).cast("array<double>"))
-        val n = col("_nrm") * col("_qnrm")
-        when(n > 0, d / n).otherwise(lit(0.0))
-      })
-    val w = Window.partitionBy(col(qIdCol)).orderBy(col("cos").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qIdCol), col("rank"), col(idCol), col("cos"))
+    val cand = withNorm(corpus, vecCol, "_nrm")
+      .crossJoin(broadcast(withNorm(queries, qVecCol, "_qnrm")))
+    topK(scorePairs(cand, idCol, vecCol, qIdCol, qVecCol), idCol, qIdCol, k)
   }
 
-  /** Deterministic random hyperplanes: `bits` planes in `dim`
-    * dimensions from a fixed-seed Gaussian — identical on every
-    * executor and every run.
+  /** Seed of LSH table 0's hyperplanes; table t draws from LshSeed + t. */
+  private val LshSeed = 7L
+
+  /** Deterministic random hyperplanes of LSH table `table`: `bits`
+    * planes in `dim` dimensions from a fixed-seed Gaussian — identical
+    * on every executor and every run.
     */
-  def hyperplanes(dim: Int, bits: Int, seed: Long = 7L): Array[Array[Double]] = {
-    val rng = new scala.util.Random(seed)
+  def hyperplanes(dim: Int, bits: Int, table: Int): Array[Array[Double]] = {
+    val rng = new scala.util.Random(LshSeed + table)
     Array.fill(bits)(Array.fill(dim)(rng.nextGaussian()))
   }
 
@@ -127,11 +162,9 @@ object Embeddings {
     * multi-table LSH: a pair is a candidate if it collides in ANY
     * table, recall 1-(1-p^bits)^tables for per-bit agreement p.
     */
-  def lshTableBuckets(vec: Column, dim: Int, bits: Int, tables: Int,
-      seed: Long = 7L): Column = {
+  def lshTableBuckets(vec: Column, dim: Int, bits: Int, tables: Int): Column = {
     val all = (0 until tables).map { t =>
-      struct(lit(t).as("tbl"),
-        lshBucket(vec, hyperplanes(dim, bits, seed + t)).as("bucket"))
+      struct(lit(t).as("tbl"), lshBucket(vec, hyperplanes(dim, bits, t)).as("bucket"))
     }
     array(all: _*)
   }
@@ -155,17 +188,15 @@ object Embeddings {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String,
       qIdCol: String, qVecCol: String,
-      k: Int, bits: Int = 4, tables: Int = 8,
-      seed: Long = 7L, dim: Int = 64): DataFrame = {
-    val tb = (v: Column) => lshTableBuckets(v, dim, bits, tables, seed)
-    // assert_true yields NULL on pass; keeping it inside a Filter (not
-    // a projected-then-dropped column) means pruning can't remove it.
+      k: Int, bits: Int = 4, tables: Int = 8, dim: Int = 64): DataFrame = {
+    val tb = (v: Column) => explode(lshTableBuckets(v, dim, bits, tables)).as("tb")
     val dimGuard = (v: Column) => assert_true(size(v) === dim,
       lit(s"embedding length != declared dim=$dim")).isNull
-    val c = corpus.filter(dimGuard(col(vecCol)))
-      .select(col(idCol), col(vecCol), explode(tb(col(vecCol))).as("tb"))
-    val q = queries.filter(dimGuard(col(qVecCol)))
-      .select(col(qIdCol), col(qVecCol), explode(tb(col(qVecCol))).as("tb"))
+    // norms before the explode: once per vector, not once per table
+    val c = withNorm(corpus.filter(dimGuard(col(vecCol))), vecCol, "_nrm")
+      .select(col(idCol), col(vecCol), col("_nrm"), tb(col(vecCol)))
+    val q = withNorm(queries.filter(dimGuard(col(qVecCol))), qVecCol, "_qnrm")
+      .select(col(qIdCol), col(qVecCol), col("_qnrm"), tb(col(qVecCol)))
     // Score BEFORE the multi-table dedupe: cos is a pure function of
     // the pair, so every duplicate collision yields the identical
     // value and the dedupe becomes a map-side-combined aggregate over
@@ -175,16 +206,10 @@ object Embeddings {
     // operator's dominant byte volume). The recomputed cosine per
     // extra collision is a codegen'd dim-length fold — noise next to
     // the bytes saved.
-    val scored = c.join(q, "tb")
-      .filter(col(idCol) =!= col(qIdCol))
-      .withColumn("cos",
-        cosine(col(vecCol).cast("array<double>"), col(qVecCol).cast("array<double>")))
+    val scored = scorePairs(c.join(q, "tb"), idCol, vecCol, qIdCol, qVecCol)
       .groupBy(col(qIdCol), col(idCol))
       .agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy(col(qIdCol)).orderBy(col("cos").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qIdCol), col("rank"), col(idCol), col("cos"))
+    topK(scored, idCol, qIdCol, k)
   }
 
   /** Approximate top-k via an IVF index: the coarse quantizer is
@@ -206,25 +231,23 @@ object Embeddings {
       trainIters: Int = 5): DataFrame = {
     // KMeans counts assignment passes: trainIters updates + the last pass
     val model = KMeans.train(corpus, idCol, vecCol, nlist, trainIters + 1)._1
-    val c = corpus.select(col(idCol), col(vecCol),
-      KMeans.cell(col(vecCol), model).as("cell"))
+    // cell -1 (a null vector's) matches no probe; non-null by
+    // construction, so the join infers no isnotnull(cell) filter that
+    // would evaluate the whole cell expression a second time below it
+    val c = withNorm(corpus.select(col(idCol), col(vecCol),
+      coalesce(KMeans.cell(col(vecCol), model), lit(-1)).as("cell")), vecCol, "_nrm")
     // query probes: rank the nlist distances per query, keep nprobe
-    val qd = queries.filter(KMeans.dimGuard(col(qVecCol), model(0).s.length))
-      .select(col(qIdCol), col(qVecCol),
+    val qd = withNorm(queries.filter(KMeans.dimGuard(col(qVecCol), model(0).s.length)),
+        qVecCol, "_qnrm")
+      .select(col(qIdCol), col(qVecCol), col("_qnrm"),
         posexplode(KMeans.distances(KMeans.quantize(col(qVecCol)), model))
           .as(Seq("cell", "dist")))
     val pw = Window.partitionBy(col(qIdCol)).orderBy(col("dist"), col("cell"))
     val probes = qd.withColumn("pr", row_number().over(pw))
       .filter(col("pr") <= nprobe)
-      .select(col(qIdCol), col(qVecCol), col("cell"))
-    val cand = c.join(probes, "cell")
-      .filter(col(idCol) =!= col(qIdCol))
-    val scored = cand.withColumn("cos",
-      cosine(col(vecCol).cast("array<double>"), col(qVecCol).cast("array<double>")))
-    val w = Window.partitionBy(col(qIdCol)).orderBy(col("cos").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qIdCol), col("rank"), col(idCol), col("cos"))
+      .select(col(qIdCol), col(qVecCol), col("_qnrm"), col("cell"))
+    topK(scorePairs(c.join(probes, "cell"), idCol, vecCol, qIdCol, qVecCol),
+      idCol, qIdCol, k)
   }
 
   /** Deterministic coarse cell for [[semDedup]]'s oracle path:
@@ -276,9 +299,7 @@ object Embeddings {
     val pairs = e.as("a").join(e.as("b"),
         col("a._cell") === col("b._cell") && col("a._id") < col("b._id"))
       .withColumn("_cos",
-        when(col("a._nrm") * col("b._nrm") > 0,
-          dot(col("a._v"), col("b._v")) / (col("a._nrm") * col("b._nrm")))
-          .otherwise(lit(0.0)))
+        cosineOfNorms(col("a._v"), col("b._v"), col("a._nrm"), col("b._nrm")))
       .filter(col("_cos") >= tau)
       .select(col("a._id").as("src"), col("b._id").as("dst"))
     // labels cover only paired ids (sparse); canonical = min id of the

@@ -31,6 +31,19 @@ object Text {
   def tokens(text: Column): Column =
     filter(split(text, "\\s+"), t => length(t) > 0)
 
+  /** DuckDB list of the whitespace tokens of the SQL expression
+    * `expr` — the oracle-side twin of [[tokens]].
+    */
+  def tokensSql(expr: String): String =
+    s"""list_filter(string_split_regex($expr, '\\s+'), x -> len(x) > 0)"""
+
+  /** DuckDB text of `expr` without its first token, re-joined by
+    * single spaces — the oracle-side twin of the planted near-copy
+    * `concat_ws(" ", slice(tokens(text), 2, ...))`.
+    */
+  def dropFirstTokenSql(expr: String): String =
+    s"""array_to_string(string_split_regex(trim($expr), '\\s+')[2:], ' ')"""
+
   def tokenCount(text: Column): Column = size(tokens(text))
 
   /** Count of tokens that appear in a fixed vocabulary. */

@@ -1,5 +1,8 @@
 package graft.queries
 
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -16,7 +19,7 @@ object LlmQueries extends QueryPack {
     * doc_id + 100000): makes candidate generation exercise a known,
     * deterministic set of true pairs at any SF.
     */
-  private[graft] def docsWithPlanted(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private[graft] def docsWithPlanted(s: SparkSession, dir: String) = {
     val d = Tables(s, dir, "documents")
     val planted = d.filter(col("doc_id") % 50 === 0)
       .withColumn("doc_id", col("doc_id") + lit(100000L))
@@ -33,8 +36,7 @@ object LlmQueries extends QueryPack {
     * %-based key would be the constant 317 since doc_id % 50 = 3
     * fixes doc_id % 5. Returns (corpus, bench), both (doc_id, text).
     */
-  private def decontamInputs(s: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+  private def decontamInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val d = Tables(s, dir, "documents")
     val bench = d.filter(col("doc_id") % 100 === 17)
       .select(col("doc_id").as("bench_id"), col("text").as("btext"))
@@ -53,11 +55,10 @@ object LlmQueries extends QueryPack {
       bench.select(col("bench_id").as("doc_id"), col("btext").as("text")))
   }
 
-  private val decontamOracle: String = """
+  private val decontamOracle: String = s"""
         WITH bench AS (
           SELECT doc_id AS bench_id,
-                 list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0) AS btoks
+                 ${Text.tokensSql("text")} AS btoks
           FROM documents WHERE doc_id % 100 = 17),
         frag AS (
           SELECT bench_id, array_to_string(btoks[1:8], ' ') AS frag
@@ -79,8 +80,7 @@ object LlmQueries extends QueryPack {
           FROM bench),
         ct AS (
           SELECT doc_id,
-                 list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0) AS toks
+                 ${Text.tokensSql("text")} AS toks
           FROM corpus),
         csh AS (
           SELECT doc_id, unnest(CASE WHEN len(toks) >= 5
@@ -95,32 +95,75 @@ object LlmQueries extends QueryPack {
         GROUP BY 1
       """.trim
 
-  private val plantedPairCtes: String = """
-    all_docs AS (
+  /** The oracle side of [[docsWithPlanted]]: documents ∪ planted
+    * near-copies, as (doc_id, text) rows.
+    */
+  private val plantedDocsSql: String = s"""
       SELECT doc_id, text FROM documents
       UNION ALL
-      SELECT doc_id + 100000,
-             array_to_string(string_split_regex(trim(text), '\s+')[2:], ' ')
-      FROM documents WHERE doc_id % 50 = 0),
+      SELECT doc_id + 100000, ${Text.dropFirstTokenSql("text")}
+      FROM documents WHERE doc_id % 50 = 0"""
+
+  /** `t(doc_id, toks)` and `sh(doc_id, sh)`, the 3-gram shingle list of
+    * each row of `docs` (the [[Text.shingles]] contract, n = 3).
+    */
+  private def shingleCtes(docs: String, text: String = "text"): String = s"""
     t AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
-      FROM all_docs),
+      SELECT doc_id, ${Text.tokensSql(text)} AS toks
+      FROM $docs),
     sh AS (
       SELECT doc_id,
              CASE WHEN len(toks) >= 3
                THEN list_transform(generate_series(1, len(toks) - 2),
                  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
                ELSE [] END AS sh
-      FROM t),
-    pairs AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2,
+      FROM t)"""
+
+  /** Exact 3-gram Jaccard of the shingle lists `a.sh` and `b.sh`. */
+  private val jaccardSql: String = """
              CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) > 0
                THEN CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
                     len(list_distinct(list_concat(a.sh, b.sh)))
-               ELSE 0.0 END AS j
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-  """.trim
+               ELSE 0.0 END"""
+
+  /** `all_docs` (the planted corpus), its shingles, and every
+    * id1 < id2 pair with its Jaccard `j`.
+    */
+  private[graft] val plantedPairCtes: String = s"""
+    all_docs AS ($plantedDocsSql),
+    ${shingleCtes("all_docs")},
+    pairs AS (
+      SELECT a.doc_id AS id1, b.doc_id AS id2, $jaccardSql AS j
+      FROM sh a JOIN sh b ON a.doc_id < b.doc_id)"""
+
+  /** Transitive closure of the undirected pairs `pairs(id1, id2)`:
+    * `comp(<id>, label)`, label = the smallest id of the component.
+    * Needs `WITH RECURSIVE`.
+    */
+  private def closureCtes(pairs: String, id: String): String = s"""
+    ud AS (SELECT id1 AS a, id2 AS b FROM $pairs
+           UNION SELECT id2, id1 FROM $pairs),
+    reach(a, b) AS (
+      SELECT a, b FROM ud
+      UNION
+      SELECT r.a, u.b FROM reach r JOIN ud u ON r.b = u.a),
+    comp AS (
+      SELECT a AS $id, least(a, min(b)) AS label
+      FROM reach GROUP BY a)"""
+
+  /** The planted corpus's j >= 0.5 near-dup clusters, the oracle of
+    * the NearDup clustering family: `canon(doc_id, canonical_id)` and
+    * `sizes(canonical_id, group_size)`. Needs `WITH RECURSIVE`.
+    */
+  private val plantedClusterCtes: String = s"""$plantedPairCtes,
+    dup AS (SELECT id1, id2 FROM pairs WHERE j >= 0.5),
+    ${closureCtes("dup", "doc_id")},
+    canon AS (
+      SELECT d.doc_id, coalesce(c.label, d.doc_id) AS canonical_id
+      FROM all_docs d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+    sizes AS (
+      SELECT canonical_id, count(*) AS group_size
+      FROM canon GROUP BY 1)"""
 
   /** Brute-force all-pairs 3-gram Jaccard >= threshold over the
     * planted corpus — the truth set both near-dup oracles compare
@@ -130,6 +173,120 @@ object LlmQueries extends QueryPack {
     WITH $plantedPairCtes
     SELECT id1, id2, round(j, 6) AS jaccard
     FROM pairs WHERE j >= $threshold
+  """.trim
+
+  /** The fixed query texts of the retrieval rows. */
+  private val retrievalTexts = Seq("spark window agg", "hash join merge batch",
+    "fast scan filter value", "customer order line")
+
+  /** Query ids 0..3: query i's dense probe is the vector with vec_id i
+    * (the fixture's embeddings pair with documents row for row).
+    */
+  private val probeIds = Seq(0L, 1L, 2L, 3L)
+
+  /** The query ids llm_bm25_topk reports. */
+  private val namedIds = Seq("q1", "q2", "q3", "q4")
+
+  /** The retrieval query set as (query_id, query_text), `ids` in text
+    * order.
+    */
+  private def retrievalQueries[T: TypeTag](s: SparkSession, ids: Seq[T]): DataFrame = {
+    import s.implicits._
+    ids.zip(retrievalTexts).toDF("query_id", "query_text")
+  }
+
+  /** Oracle CTEs shared by the lexical scorers: the query set
+    * `q(query_id, query_text)`, the corpus postings `tf(doc_id, term,
+    * tf)` and `dl(.., doc_len)`, and the distinct query terms
+    * `qt(query_id, term)`.
+    */
+  private def lexicalCtes(ids: Seq[Any]): String = {
+    val rows = ids.zip(retrievalTexts).map {
+      case (id: String, text) => s"('$id', '$text')"
+      case (id, text) => s"($id, '$text')"
+    }
+    s"""
+    q(query_id, query_text) AS (VALUES
+      ${rows.mkString(",\n      ")}),
+    t AS (
+      SELECT doc_id, unnest(${Text.tokensSql("text")}) AS term
+      FROM documents),
+    tf AS (
+      SELECT doc_id, term, count(*) AS tf
+      FROM t GROUP BY doc_id, term),
+    dl AS (
+      SELECT doc_id, term, tf,
+             sum(tf) OVER (PARTITION BY doc_id) AS doc_len
+      FROM tf),
+    qt AS (
+      SELECT DISTINCT query_id, term FROM (
+        SELECT query_id, unnest(${Text.tokensSql("query_text")}) AS term
+        FROM q))"""
+  }
+
+  /** The oracle of [[Text.bm25TopK]], op for op, over the retrieval
+    * query set: CTEs ending in `lex(query_id, doc_id, score_micros,
+    * rank)`, the top `k` documents per query.
+    */
+  private def bm25Ctes(ids: Seq[Any], k: Int): String = s"""${lexicalCtes(ids)},
+    df AS (SELECT term, count(*) AS df_count FROM tf GROUP BY term),
+    stats AS (
+      SELECT CAST(count(*) AS DOUBLE) AS n_docs,
+             CAST(sum(doc_len) AS DOUBLE) / count(*) AS avgdl
+      FROM (SELECT DISTINCT doc_id, doc_len FROM dl)),
+    qs AS (
+      SELECT term, query_id,
+             round(ln(1 + (n_docs - df_count + 0.5) / (df_count + 0.5))
+               * 1e6) AS idf_micros,
+             avgdl
+      FROM qt JOIN df USING (term), stats),
+    bm AS (
+      SELECT query_id, dl.doc_id,
+             sum(CAST(round(idf_micros * (tf * (1.2 + 1))
+               / (tf + 1.2 * ((1 - 0.75) + 0.75 * doc_len / avgdl)))
+               AS BIGINT)) AS score_micros
+      FROM dl JOIN qs USING (term)
+      GROUP BY query_id, dl.doc_id),
+    lex AS (
+      SELECT * FROM (
+        SELECT *, row_number() OVER (PARTITION BY query_id
+                 ORDER BY score_micros DESC, doc_id) AS rank
+        FROM bm) WHERE rank <= $k)"""
+
+  /** Probe vectors: the embeddings with vec_id < n, as (qid, qvec). */
+  private def probes(e: DataFrame, n: Int): DataFrame =
+    e.filter(col("vec_id") < n)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+
+  /** Exact cosine top-k of the `n` probes over `e`: (qid, rank,
+    * vec_id, cos).
+    */
+  private def denseTopK(e: DataFrame, n: Int, k: Int): DataFrame =
+    Embeddings.bruteForceTopK(e, probes(e, n), "vec_id", "embedding", "qid", "qvec", k)
+
+  /** The oracle of [[denseTopK]]: the probes `qe(qid, qv)`, the corpus
+    * `c(vec_id, v)`, and `dense(qid, vec_id, cos, rank)`, the top `k`
+    * vectors per probe.
+    */
+  private def denseCtes(n: Int, k: Int): String = s"""
+    qe AS (
+      SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
+      FROM embeddings WHERE vec_id < $n),
+    c AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    scored AS (
+      SELECT qe.qid, c.vec_id, ${Embeddings.cosineSql("qe.qv", "c.v")} AS cos
+      FROM c, qe WHERE c.vec_id <> qe.qid),
+    dense AS (
+      SELECT * FROM (
+        SELECT *, row_number() OVER (PARTITION BY qid
+                 ORDER BY cos DESC, vec_id) AS rank
+        FROM scored) WHERE rank <= $k)"""
+
+  /** [[denseCtes]] as a (qid, rank, vec_id, cos) result. */
+  private def cosineTopKSql(n: Int, k: Int): String = s"""
+    WITH ${denseCtes(n, k)}
+    SELECT qid, rank, vec_id, round(cos, 6) AS cos FROM dense
   """.trim
 
   override def queries: Seq[Q] = Seq(
@@ -143,13 +300,8 @@ object LlmQueries extends QueryPack {
           .agg(min(col("doc_id")).as("canonical_id"),
             count(lit(1)).as("n_copies"))
       },
-      Some("""
-        WITH all_docs AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT doc_id + 100000,
-                 array_to_string(string_split_regex(trim(text), '\s+')[2:], ' ')
-          FROM documents WHERE doc_id % 50 = 0)
+      Some(s"""
+        WITH all_docs AS ($plantedDocsSql)
         SELECT md5(text) AS content_hash,
                min(doc_id) AS canonical_id,
                count(*) AS n_copies
@@ -169,10 +321,10 @@ object LlmQueries extends QueryPack {
           Text.langId(col("text")).as("lang_pred"),
           Text.fingerprint(col("text")).as("fingerprint"))
       },
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id, text,
-                 list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
+                 ${Text.tokensSql("text")} AS toks
           FROM documents),
         sc AS (
           SELECT doc_id, text, toks,
@@ -201,15 +353,14 @@ object LlmQueries extends QueryPack {
         d.select(col("doc_id"),
           round(Text.qualityScore(col("text")), 6).as("quality"))
       },
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id, text,
-                 CAST(len(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS DOUBLE) AS n_tok,
+                 CAST(len(${Text.tokensSql("text")}) AS DOUBLE) AS n_tok,
                  CAST(length(text) AS DOUBLE) AS n_chars,
-                 CAST(len(list_filter(string_split_regex(lower(text), '\s+'), x ->
+                 CAST(len(list_filter(${Text.tokensSql("lower(text)")}, x ->
                    list_contains(['the','a','of','and','to','in','is'], x))) AS DOUBLE) AS n_stop,
-                 CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS DOUBLE) AS n_punct
+                 CAST(length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE) AS n_punct
           FROM documents)
         SELECT doc_id,
                round(least(1.0,
@@ -231,10 +382,10 @@ object LlmQueries extends QueryPack {
         d.select(col("doc_id"), Text.gopherFlags(col("text")).as("g"))
           .select(col("doc_id"), col("g.*"))
       },
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id, text,
-                 list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks,
+                 ${Text.tokensSql("text")} AS toks,
                  string_split(text, chr(10)) AS lines
           FROM documents),
         m AS (
@@ -279,23 +430,9 @@ object LlmQueries extends QueryPack {
           .select(col("a.doc_id").as("doc_id"),
             round(graft.ops.Text.jaccard(col("a.sh"), col("b.sh")), 6).as("jaccard3"))
       },
-      Some("""
-        WITH t AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
-          FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) >= 3
-                   THEN list_transform(generate_series(1, len(toks) - 2),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                   ELSE [] END AS sh
-          FROM t)
-        SELECT a.doc_id AS doc_id,
-               round(CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) > 0
-                 THEN CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                      len(list_distinct(list_concat(a.sh, b.sh)))
-                 ELSE 0.0 END, 6) AS jaccard3
+      Some(s"""
+        WITH ${shingleCtes("documents")}
+        SELECT a.doc_id AS doc_id, round($jaccardSql, 6) AS jaccard3
         FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
       """.trim)),
 
@@ -395,23 +532,7 @@ object LlmQueries extends QueryPack {
           threshold = 0.5)
       },
       Some(s"""
-        WITH RECURSIVE $plantedPairCtes,
-        dup AS (SELECT id1, id2 FROM pairs WHERE j >= 0.5),
-        ud AS (SELECT id1 AS a, id2 AS b FROM dup
-               UNION SELECT id2, id1 FROM dup),
-        reach(a, b) AS (
-          SELECT a, b FROM ud
-          UNION
-          SELECT r.a, u.b FROM reach r JOIN ud u ON r.b = u.a),
-        comp AS (
-          SELECT a AS doc_id, least(a, min(b)) AS label
-          FROM reach GROUP BY a),
-        canon AS (
-          SELECT d.doc_id, coalesce(c.label, d.doc_id) AS canonical_id
-          FROM all_docs d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-        sizes AS (
-          SELECT canonical_id, count(*) AS group_size
-          FROM canon GROUP BY 1)
+        WITH RECURSIVE $plantedClusterCtes
         SELECT k.doc_id, k.canonical_id,
                (k.doc_id = k.canonical_id) AS keep, s.group_size
         FROM canon k JOIN sizes s ON k.canonical_id = s.canonical_id
@@ -427,27 +548,10 @@ object LlmQueries extends QueryPack {
           threshold = 0.5)
       },
       Some(s"""
-        WITH RECURSIVE $plantedPairCtes,
-        dup AS (SELECT id1, id2 FROM pairs WHERE j >= 0.5),
-        ud AS (SELECT id1 AS a, id2 AS b FROM dup
-               UNION SELECT id2, id1 FROM dup),
-        reach(a, b) AS (
-          SELECT a, b FROM ud
-          UNION
-          SELECT r.a, u.b FROM reach r JOIN ud u ON r.b = u.a),
-        comp AS (
-          SELECT a AS doc_id, least(a, min(b)) AS label
-          FROM reach GROUP BY a),
-        canon AS (
-          SELECT d.doc_id, coalesce(c.label, d.doc_id) AS canonical_id
-          FROM all_docs d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-        sizes AS (
-          SELECT canonical_id, count(*) AS group_size
-          FROM canon GROUP BY 1),
+        WITH RECURSIVE $plantedClusterCtes,
         tok AS (
           SELECT doc_id,
-                 CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                   x -> len(x) > 0)) AS INTEGER) AS n_tokens
+                 CAST(len(${Text.tokensSql("text")}) AS INTEGER) AS n_tokens
           FROM all_docs),
         ranked AS (
           SELECT k.canonical_id, k.doc_id, t.n_tokens, s.group_size,
@@ -471,23 +575,7 @@ object LlmQueries extends QueryPack {
           threshold = 0.5, trainPct = 90, valPct = 5)
       },
       Some(s"""
-        WITH RECURSIVE $plantedPairCtes,
-        dup AS (SELECT id1, id2 FROM pairs WHERE j >= 0.5),
-        ud AS (SELECT id1 AS a, id2 AS b FROM dup
-               UNION SELECT id2, id1 FROM dup),
-        reach(a, b) AS (
-          SELECT a, b FROM ud
-          UNION
-          SELECT r.a, u.b FROM reach r JOIN ud u ON r.b = u.a),
-        comp AS (
-          SELECT a AS doc_id, least(a, min(b)) AS label
-          FROM reach GROUP BY a),
-        canon AS (
-          SELECT d.doc_id, coalesce(c.label, d.doc_id) AS canonical_id
-          FROM all_docs d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-        sizes AS (
-          SELECT canonical_id, count(*) AS group_size
-          FROM canon GROUP BY 1)
+        WITH RECURSIVE $plantedClusterCtes
         SELECT k.doc_id, k.canonical_id, s.group_size,
                CASE
                  WHEN ((k.canonical_id % 1000000007) * 2654435761) % 100 < 90
@@ -531,40 +619,26 @@ object LlmQueries extends QueryPack {
         WITH RECURSIVE
         batch AS (
           SELECT doc_id + 100000 AS doc_id,
-                 array_to_string(string_split_regex(trim(text), '\\s+')[2:], ' ') AS text
+                 ${Text.dropFirstTokenSql("text")} AS text
           FROM documents WHERE doc_id % 50 = 0
           UNION ALL
           SELECT doc_id + 200000,
                  array_to_string(list_transform(
-                   list_filter(string_split_regex(text, '\\s+'), x -> len(x) > 0),
+                   ${Text.tokensSql("text")},
                    x -> x || 'x'), ' ')
           FROM documents WHERE doc_id % 50 = 1
           UNION ALL
           SELECT doc_id + 300000,
                  array_to_string(list_transform(
-                   list_filter(string_split_regex(text, '\\s+'), x -> len(x) > 0),
+                   ${Text.tokensSql("text")},
                    x -> x || 'x')[2:], ' ')
           FROM documents WHERE doc_id % 50 = 1),
         all_docs AS (
           SELECT doc_id, text FROM documents
           UNION ALL SELECT doc_id, text FROM batch),
-        t AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(text, '\\s+'), x -> len(x) > 0) AS toks
-          FROM all_docs),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) >= 3
-                   THEN list_transform(generate_series(1, len(toks) - 2),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                   ELSE [] END AS sh
-          FROM t),
+        ${shingleCtes("all_docs")},
         pairs AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2,
-                 CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) > 0
-                   THEN CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                        len(list_distinct(list_concat(a.sh, b.sh)))
-                   ELSE 0.0 END AS j
+          SELECT a.doc_id AS id1, b.doc_id AS id2, $jaccardSql AS j
           FROM sh a JOIN sh b ON a.doc_id < b.doc_id
           WHERE b.doc_id >= 100000),
         hits AS (
@@ -575,15 +649,7 @@ object LlmQueries extends QueryPack {
           WHERE j >= 0.5 AND id1 >= 100000
             AND id1 NOT IN (SELECT doc_id FROM hits)
             AND id2 NOT IN (SELECT doc_id FROM hits)),
-        ud AS (SELECT id1 AS a, id2 AS b FROM bb
-               UNION SELECT id2, id1 FROM bb),
-        reach(a, b) AS (
-          SELECT a, b FROM ud
-          UNION
-          SELECT r.a, u.b FROM reach r JOIN ud u ON r.b = u.a),
-        comp AS (
-          SELECT a AS doc_id, least(a, min(b)) AS label
-          FROM reach GROUP BY a)
+        ${closureCtes("bb", "doc_id")}
         SELECT b.doc_id,
                CASE WHEN h.doc_id IS NOT NULL THEN 'dup_of_corpus'
                     WHEN c.label IS NOT NULL AND c.label <> b.doc_id
@@ -596,39 +662,12 @@ object LlmQueries extends QueryPack {
       """.trim)),
 
     // Brute-force exact cosine top-10 for 5 query vectors — the ANN
-    // baseline. Oracle via double list_dot_product (same left-to-
-    // right accumulation as Spark's aggregate()).
+    // baseline. Oracle via Embeddings.cosineSql (list_dot_product
+    // accumulates left to right, like vec_dot).
     Q("llm_cosine_topk",
-      (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        Embeddings.bruteForceTopK(e, q, "vec_id", "embedding", "qid", "qvec", k = 10)
-          .select(col("qid"), col("rank"), col("vec_id"),
-            round(col("cos"), 6).as("cos"))
-      },
-      Some("""
-        WITH q AS (
-          SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 5),
-        c AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        scored AS (
-          SELECT q.qid, c.vec_id,
-                 CASE WHEN sqrt(list_dot_product(q.qv, q.qv)) *
-                           sqrt(list_dot_product(c.v, c.v)) > 0
-                   THEN list_dot_product(q.qv, c.v) /
-                        (sqrt(list_dot_product(q.qv, q.qv)) *
-                         sqrt(list_dot_product(c.v, c.v)))
-                   ELSE 0.0 END AS cos
-          FROM c, q WHERE c.vec_id <> q.qid),
-        ranked AS (
-          SELECT qid, vec_id, cos,
-                 row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank
-          FROM scored)
-        SELECT qid, rank, vec_id, round(cos, 6) AS cos
-        FROM ranked WHERE rank <= 10
-      """.trim)),
+      (s, dir) => denseTopK(Tables(s, dir, "embeddings"), n = 5, k = 10)
+        .select(col("qid"), col("rank"), col("vec_id"), round(col("cos"), 6).as("cos")),
+      Some(cosineTopKSql(n = 5, k = 10))),
 
     // Embedding-cosine near-dup dedup (the vector-space member of the
     // dedup family): planted x2-scaled copies (exact in floating
@@ -696,15 +735,13 @@ object LlmQueries extends QueryPack {
           .withColumn("nrm", Embeddings.norm(col("v")))
         all.as("a").join(all.as("b"),
             col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
-          .withColumn("cos",
-            when(col("a.nrm") * col("b.nrm") > 0,
-              Embeddings.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
-              .otherwise(lit(0.0)))
+          .withColumn("cos", Embeddings.cosineOfNorms(
+            col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm")))
           .filter(col("cos") >= 0.9)
           .select(col("a.vec_id").as("id1"), col("b.vec_id").as("id2"),
             round(col("cos"), 6).as("cos"))
       },
-      Some("""
+      Some(s"""
         WITH base AS (
           SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
           UNION ALL
@@ -713,12 +750,7 @@ object LlmQueries extends QueryPack {
           FROM embeddings WHERE vec_id % 97 = 0),
         pairs AS (
           SELECT a.vec_id AS id1, b.vec_id AS id2,
-                 CASE WHEN sqrt(list_dot_product(a.v, a.v)) *
-                           sqrt(list_dot_product(b.v, b.v)) > 0
-                   THEN list_dot_product(a.v, b.v) /
-                        (sqrt(list_dot_product(a.v, a.v)) *
-                         sqrt(list_dot_product(b.v, b.v)))
-                   ELSE 0.0 END AS cos
+                 ${Embeddings.cosineSql("a.v", "b.v")} AS cos
           FROM base a JOIN base b
             ON a.label = b.label AND a.vec_id < b.vec_id)
         SELECT id1, id2, round(cos, 6) AS cos
@@ -743,7 +775,7 @@ object LlmQueries extends QueryPack {
         Embeddings.semDedup(e.unionByName(planted), "vec_id", "embedding",
           Embeddings.argmaxCell(col("embedding")), tau = 0.99)
       },
-      Some("""
+      Some(s"""
         WITH RECURSIVE base AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
           UNION ALL
@@ -763,21 +795,8 @@ object LlmQueries extends QueryPack {
         pairs AS (
           SELECT a.vec_id AS id1, b.vec_id AS id2
           FROM wc a JOIN wc b ON a.cell = b.cell AND a.vec_id < b.vec_id
-          WHERE CASE WHEN sqrt(list_dot_product(a.v, a.v)) *
-                          sqrt(list_dot_product(b.v, b.v)) > 0
-                  THEN list_dot_product(a.v, b.v) /
-                       (sqrt(list_dot_product(a.v, a.v)) *
-                        sqrt(list_dot_product(b.v, b.v)))
-                  ELSE 0.0 END >= 0.99),
-        ud AS (SELECT id1 AS a, id2 AS b FROM pairs
-               UNION SELECT id2, id1 FROM pairs),
-        reach(a, b) AS (
-          SELECT a, b FROM ud
-          UNION
-          SELECT r.a, u.b FROM reach r JOIN ud u ON r.b = u.a),
-        comp AS (
-          SELECT a AS vec_id, least(a, min(b)) AS label
-          FROM reach GROUP BY a),
+          WHERE ${Embeddings.cosineSql("a.v", "b.v")} >= 0.99),
+        ${closureCtes("pairs", "vec_id")},
         canon AS (
           SELECT w.vec_id, w.cell, coalesce(c.label, w.vec_id) AS canonical
           FROM wc w LEFT JOIN comp c ON w.vec_id = c.vec_id),
@@ -827,21 +846,15 @@ object LlmQueries extends QueryPack {
           .orderBy(col("doc_id"))
           .observe("graft.corpus_out", count(lit(1)).as("docs_out"))
       },
-      Some("""
-        WITH all_docs AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT doc_id + 100000,
-                 array_to_string(string_split_regex(trim(text), '\s+')[2:], ' ')
-          FROM documents WHERE doc_id % 50 = 0
+      Some(s"""
+        WITH all_docs AS ($plantedDocsSql
           UNION ALL
           SELECT doc_id + 200000, text
           FROM documents WHERE doc_id % 73 = 0),
         t AS (
           SELECT doc_id, text,
-                 list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks,
-                 list_filter(string_split_regex(lower(text), '\s+'),
-                   x -> len(x) > 0) AS ltoks
+                 ${Text.tokensSql("text")} AS toks,
+                 ${Text.tokensSql("lower(text)")} AS ltoks
           FROM all_docs),
         scored AS (
           SELECT doc_id, text, len(toks) AS n_tokens,
@@ -865,7 +878,7 @@ object LlmQueries extends QueryPack {
                    CAST(len(list_filter(ltoks, x -> list_contains(
                      ['el','la','de','y','es','un'], x))) AS DOUBLE) AS s_es,
                    CAST(length(text) AS DOUBLE) AS n_chars,
-                   CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g'))
+                   CAST(length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g'))
                      AS DOUBLE) AS n_punct
             FROM t)),
         kept AS (
@@ -903,27 +916,15 @@ object LlmQueries extends QueryPack {
           .withColumn("is_repetitive",
             col("n_distinct") * 10 < col("n_shingles") * 9)
       },
-      Some("""
+      Some(s"""
         WITH d AS (
           SELECT doc_id,
                  CASE WHEN doc_id % 40 = 0
                    THEN text || repeat(' ' || array_to_string(
-                     list_filter(string_split_regex(text, '\s+'),
-                       x -> len(x) > 0)[1:3], ' '), 30)
+                     ${Text.tokensSql("text")}[1:3], ' '), 30)
                    ELSE text END AS text2
           FROM documents),
-        t AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(text2, '\s+'),
-                   x -> len(x) > 0) AS toks
-          FROM d),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) >= 3
-                   THEN list_transform(generate_series(1, len(toks) - 2),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                   ELSE [] END AS sh
-          FROM t)
+        ${shingleCtes("d", "text2")}
         SELECT doc_id,
                CAST(len(sh) AS INTEGER) AS n_shingles,
                CAST(len(list_distinct(sh)) AS INTEGER) AS n_distinct,
@@ -1094,11 +1095,10 @@ object LlmQueries extends QueryPack {
           .select(col("doc_id"), col("shard"), col("n_tokens"),
             col("seq_id"), col("offset"))
       },
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id,
-                 CAST(len(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS BIGINT) AS n_tokens,
+                 CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS n_tokens,
                  md5(CAST(doc_id AS VARCHAR)) AS ord,
                  ((doc_id % 1000000007) * 2654435761) % 8 AS shard
           FROM documents),
@@ -1121,10 +1121,9 @@ object LlmQueries extends QueryPack {
     // at any partial-aggregation order, so the oracle can hash it).
     Q("llm_lm_score",
       (s, dir) => Text.bigramLogProb(Tables(s, dir, "documents")),
-      Some("""
+      Some(s"""
         WITH d AS (
-          SELECT doc_id, list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0) AS toks
+          SELECT doc_id, ${Text.tokensSql("text")} AS toks
           FROM documents),
         bg AS (
           SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
@@ -1151,10 +1150,9 @@ object LlmQueries extends QueryPack {
     // both engines — so the bucket assignment replays exactly.
     Q("llm_ppl_buckets",
       (s, dir) => Text.pplBuckets(Tables(s, dir, "documents")),
-      Some("""
+      Some(s"""
         WITH d AS (
-          SELECT doc_id, list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0) AS toks
+          SELECT doc_id, ${Text.tokensSql("text")} AS toks
           FROM documents),
         bg AS (
           SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
@@ -1192,10 +1190,9 @@ object LlmQueries extends QueryPack {
     // so the per-doc integers replay exactly.
     Q("llm_vocab_oov",
       (s, dir) => Text.vocabOov(Tables(s, dir, "documents")),
-      Some("""
+      Some(s"""
         WITH w AS (
-          SELECT doc_id, unnest(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS w
+          SELECT doc_id, unnest(${Text.tokensSql("text")}) AS w
           FROM documents),
         vocab AS (
           SELECT w FROM (
@@ -1223,10 +1220,9 @@ object LlmQueries extends QueryPack {
         ImportanceResampling.dsirSelect(
           d, d.filter(col("source") === "src0"), k = 100)
       },
-      Some("""
+      Some(s"""
         WITH d AS (
-          SELECT doc_id, source, list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0) AS toks
+          SELECT doc_id, source, ${Text.tokensSql("text")} AS toks
           FROM documents),
         uni AS (SELECT doc_id, source, unnest(toks) AS g FROM d),
         bi AS (
@@ -1279,11 +1275,10 @@ object LlmQueries extends QueryPack {
     // decimals (ln differs across libm implementations below that).
     Q("llm_tfidf_topterms",
       (s, dir) => Text.tfIdfTopTerms(Tables(s, dir, "documents"), k = 5),
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id,
-                 unnest(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS term
+                 unnest(${Text.tokensSql("text")}) AS term
           FROM documents),
         tf AS (
           SELECT doc_id, term, count(*) AS tf_count
@@ -1320,64 +1315,13 @@ object LlmQueries extends QueryPack {
     // doubles). The query side is broadcast; the corpus never shuffles
     // for the match.
     Q("llm_bm25_topk",
-      (s, dir) => {
-        import s.implicits._
-        val queries = Seq(
-          ("q1", "spark window agg"),
-          ("q2", "hash join merge batch"),
-          ("q3", "fast scan filter value"),
-          ("q4", "customer order line")).toDF("query_id", "query_text")
-        Text.bm25TopK(Tables(s, dir, "documents"), queries, k = 10)
-      },
-      Some("""
-        WITH q(query_id, query_text) AS (VALUES
-          ('q1', 'spark window agg'),
-          ('q2', 'hash join merge batch'),
-          ('q3', 'fast scan filter value'),
-          ('q4', 'customer order line')),
-        t AS (
-          SELECT doc_id,
-                 unnest(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS term
-          FROM documents),
-        tf AS (
-          SELECT doc_id, term, count(*) AS tf
-          FROM t GROUP BY doc_id, term),
-        dl AS (
-          SELECT doc_id, term, tf,
-                 sum(tf) OVER (PARTITION BY doc_id) AS doc_len
-          FROM tf),
-        df AS (SELECT term, count(*) AS df_count FROM tf GROUP BY term),
-        stats AS (
-          SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                 CAST(sum(doc_len) AS DOUBLE) / count(*) AS avgdl
-          FROM (SELECT DISTINCT doc_id, doc_len FROM dl)),
-        qt AS (
-          SELECT DISTINCT query_id, term FROM (
-            SELECT query_id,
-                   unnest(list_filter(string_split_regex(query_text, '\s+'),
-                     x -> len(x) > 0)) AS term
-            FROM q)),
-        qs AS (
-          SELECT term, query_id,
-                 round(ln(1 + (n_docs - df_count + 0.5) / (df_count + 0.5))
-                   * 1e6) AS idf_micros,
-                 avgdl
-          FROM qt JOIN df USING (term), stats),
-        sc AS (
-          SELECT query_id, dl.doc_id,
-                 sum(CAST(round(idf_micros * (tf * (1.2 + 1))
-                   / (tf + 1.2 * ((1 - 0.75) + 0.75 * doc_len / avgdl)))
-                   AS BIGINT)) AS score_micros
-          FROM dl JOIN qs USING (term)
-          GROUP BY query_id, dl.doc_id),
-        r AS (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                   ORDER BY score_micros DESC, doc_id) AS rank
-          FROM sc)
+      (s, dir) => Text.bm25TopK(Tables(s, dir, "documents"),
+        retrievalQueries(s, namedIds), k = 10),
+      Some(s"""
+        WITH ${bm25Ctes(namedIds, k = 10)}
         SELECT query_id, CAST(rank AS INTEGER) AS rank, doc_id,
                CAST(score_micros AS BIGINT) AS score_micros
-        FROM r WHERE rank <= 10
+        FROM lex
       """.trim)),
 
     // Hybrid retrieval — reciprocal rank fusion of the lexical (BM25)
@@ -1394,19 +1338,10 @@ object LlmQueries extends QueryPack {
     // embeddings pair with documents row-for-row.
     Q("llm_hybrid_rrf",
       (s, dir) => {
-        import s.implicits._
-        val queries = Seq(
-          (0L, "spark window agg"),
-          (1L, "hash join merge batch"),
-          (2L, "fast scan filter value"),
-          (3L, "customer order line")).toDF("query_id", "query_text")
-        val lex = Text.bm25TopK(Tables(s, dir, "documents"), queries, k = 20)
+        val lex = Text.bm25TopK(Tables(s, dir, "documents"),
+            retrievalQueries(s, probeIds), k = 20)
           .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank"))
-        val e = Tables(s, dir, "embeddings")
-        val probes = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val dense = Embeddings.bruteForceTopK(
-            e, probes, "vec_id", "embedding", "qid", "qvec", k = 20)
+        val dense = denseTopK(Tables(s, dir, "embeddings"), n = 4, k = 20)
           .select(col("qid").as("query_id"), col("vec_id").as("doc_id"),
             col("rank").as("dense_rank"))
         def rrf(rank: org.apache.spark.sql.Column) =
@@ -1422,80 +1357,17 @@ object LlmQueries extends QueryPack {
           .select(col("query_id"), col("rank"), col("doc_id"),
             col("rrf_micros"))
       },
-      Some("""
-        WITH q(query_id, query_text) AS (VALUES
-          (0, 'spark window agg'),
-          (1, 'hash join merge batch'),
-          (2, 'fast scan filter value'),
-          (3, 'customer order line')),
-        t AS (
-          SELECT doc_id,
-                 unnest(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS term
-          FROM documents),
-        tf AS (
-          SELECT doc_id, term, count(*) AS tf
-          FROM t GROUP BY doc_id, term),
-        dl AS (
-          SELECT doc_id, term, tf,
-                 sum(tf) OVER (PARTITION BY doc_id) AS doc_len
-          FROM tf),
-        df AS (SELECT term, count(*) AS df_count FROM tf GROUP BY term),
-        stats AS (
-          SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                 CAST(sum(doc_len) AS DOUBLE) / count(*) AS avgdl
-          FROM (SELECT DISTINCT doc_id, doc_len FROM dl)),
-        qt AS (
-          SELECT DISTINCT query_id, term FROM (
-            SELECT query_id,
-                   unnest(list_filter(string_split_regex(query_text, '\s+'),
-                     x -> len(x) > 0)) AS term
-            FROM q)),
-        qs AS (
-          SELECT term, query_id,
-                 round(ln(1 + (n_docs - df_count + 0.5) / (df_count + 0.5))
-                   * 1e6) AS idf_micros,
-                 avgdl
-          FROM qt JOIN df USING (term), stats),
-        bm AS (
-          SELECT query_id, dl.doc_id,
-                 sum(CAST(round(idf_micros * (tf * (1.2 + 1))
-                   / (tf + 1.2 * ((1 - 0.75) + 0.75 * doc_len / avgdl)))
-                   AS BIGINT)) AS score_micros
-          FROM dl JOIN qs USING (term)
-          GROUP BY query_id, dl.doc_id),
-        lex AS (
-          SELECT query_id, doc_id, lex_rank FROM (
-            SELECT query_id, doc_id, row_number() OVER (
-                     PARTITION BY query_id
-                     ORDER BY score_micros DESC, doc_id) AS lex_rank
-            FROM bm) WHERE lex_rank <= 20),
-        qe AS (
-          SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 4),
-        c AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        scored AS (
-          SELECT qe.qid, c.vec_id,
-                 CASE WHEN sqrt(list_dot_product(qe.qv, qe.qv)) *
-                           sqrt(list_dot_product(c.v, c.v)) > 0
-                   THEN list_dot_product(qe.qv, c.v) /
-                        (sqrt(list_dot_product(qe.qv, qe.qv)) *
-                         sqrt(list_dot_product(c.v, c.v)))
-                   ELSE 0.0 END AS cos
-          FROM c, qe WHERE c.vec_id <> qe.qid),
-        dense AS (
-          SELECT query_id, doc_id, dense_rank FROM (
-            SELECT qid AS query_id, vec_id AS doc_id,
-                   row_number() OVER (PARTITION BY qid
-                     ORDER BY cos DESC, vec_id) AS dense_rank
-            FROM scored) WHERE dense_rank <= 20),
+      Some(s"""
+        WITH ${bm25Ctes(probeIds, k = 20)}, ${denseCtes(n = 4, k = 20)},
         fused AS (
           SELECT query_id, doc_id,
                  COALESCE(CAST(round(1e6 / (60 + lex_rank)) AS BIGINT), 0) +
                  COALESCE(CAST(round(1e6 / (60 + dense_rank)) AS BIGINT), 0)
                    AS rrf_micros
-          FROM lex FULL OUTER JOIN dense USING (query_id, doc_id))
+          FROM (SELECT query_id, doc_id, rank AS lex_rank FROM lex)
+          FULL OUTER JOIN (SELECT qid AS query_id, vec_id AS doc_id,
+                                  rank AS dense_rank FROM dense)
+          USING (query_id, doc_id))
         SELECT CAST(query_id AS BIGINT) AS query_id,
                CAST(rank AS INTEGER) AS rank, doc_id, rrf_micros
         FROM (SELECT *, row_number() OVER (PARTITION BY query_id
@@ -1519,18 +1391,9 @@ object LlmQueries extends QueryPack {
     // pinned postings plan and the anti-join stays map-side.
     Q("llm_hard_negatives",
       (s, dir) => {
-        import s.implicits._
-        val queries = Seq(
-          (0L, "spark window agg"),
-          (1L, "hash join merge batch"),
-          (2L, "fast scan filter value"),
-          (3L, "customer order line")).toDF("query_id", "query_text")
-        val lex = Text.bm25TopK(Tables(s, dir, "documents"), queries, k = 30)
-        val e = Tables(s, dir, "embeddings")
-        val probes = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val dense = Embeddings.bruteForceTopK(
-            e, probes, "vec_id", "embedding", "qid", "qvec", k = 10)
+        val lex = Text.bm25TopK(Tables(s, dir, "documents"),
+          retrievalQueries(s, probeIds), k = 30)
+        val dense = denseTopK(Tables(s, dir, "embeddings"), n = 4, k = 10)
           .select(col("qid").as("query_id"), col("vec_id").as("doc_id"))
         val rankW = org.apache.spark.sql.expressions.Window
           .partitionBy("query_id")
@@ -1540,80 +1403,14 @@ object LlmQueries extends QueryPack {
           .select(col("query_id"), col("neg_rank"), col("doc_id"),
             col("score_micros"))
       },
-      Some("""
-        WITH q(query_id, query_text) AS (VALUES
-          (0, 'spark window agg'),
-          (1, 'hash join merge batch'),
-          (2, 'fast scan filter value'),
-          (3, 'customer order line')),
-        t AS (
-          SELECT doc_id,
-                 unnest(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS term
-          FROM documents),
-        tf AS (
-          SELECT doc_id, term, count(*) AS tf
-          FROM t GROUP BY doc_id, term),
-        dl AS (
-          SELECT doc_id, term, tf,
-                 sum(tf) OVER (PARTITION BY doc_id) AS doc_len
-          FROM tf),
-        df AS (SELECT term, count(*) AS df_count FROM tf GROUP BY term),
-        stats AS (
-          SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                 CAST(sum(doc_len) AS DOUBLE) / count(*) AS avgdl
-          FROM (SELECT DISTINCT doc_id, doc_len FROM dl)),
-        qt AS (
-          SELECT DISTINCT query_id, term FROM (
-            SELECT query_id,
-                   unnest(list_filter(string_split_regex(query_text, '\s+'),
-                     x -> len(x) > 0)) AS term
-            FROM q)),
-        qs AS (
-          SELECT term, query_id,
-                 round(ln(1 + (n_docs - df_count + 0.5) / (df_count + 0.5))
-                   * 1e6) AS idf_micros,
-                 avgdl
-          FROM qt JOIN df USING (term), stats),
-        bm AS (
-          SELECT query_id, dl.doc_id,
-                 sum(CAST(round(idf_micros * (tf * (1.2 + 1))
-                   / (tf + 1.2 * ((1 - 0.75) + 0.75 * doc_len / avgdl)))
-                   AS BIGINT)) AS score_micros
-          FROM dl JOIN qs USING (term)
-          GROUP BY query_id, dl.doc_id),
-        lex AS (
-          SELECT query_id, doc_id, score_micros FROM (
-            SELECT query_id, doc_id, score_micros, row_number() OVER (
-                     PARTITION BY query_id
-                     ORDER BY score_micros DESC, doc_id) AS lex_rank
-            FROM bm) WHERE lex_rank <= 30),
-        qe AS (
-          SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 4),
-        c AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        scored AS (
-          SELECT qe.qid, c.vec_id,
-                 CASE WHEN sqrt(list_dot_product(qe.qv, qe.qv)) *
-                           sqrt(list_dot_product(c.v, c.v)) > 0
-                   THEN list_dot_product(qe.qv, c.v) /
-                        (sqrt(list_dot_product(qe.qv, qe.qv)) *
-                         sqrt(list_dot_product(c.v, c.v)))
-                   ELSE 0.0 END AS cos
-          FROM c, qe WHERE c.vec_id <> qe.qid),
-        dense AS (
-          SELECT query_id, doc_id FROM (
-            SELECT qid AS query_id, vec_id AS doc_id,
-                   row_number() OVER (PARTITION BY qid
-                     ORDER BY cos DESC, vec_id) AS dense_rank
-            FROM scored) WHERE dense_rank <= 10),
+      Some(s"""
+        WITH ${bm25Ctes(probeIds, k = 30)}, ${denseCtes(n = 4, k = 10)},
         neg AS (
           SELECT l.query_id, l.doc_id, l.score_micros
           FROM lex l
           WHERE NOT EXISTS (
             SELECT 1 FROM dense d
-            WHERE d.query_id = l.query_id AND d.doc_id = l.doc_id))
+            WHERE d.qid = l.query_id AND d.vec_id = l.doc_id))
         SELECT CAST(query_id AS BIGINT) AS query_id,
                CAST(row_number() OVER (PARTITION BY query_id
                  ORDER BY score_micros DESC, doc_id) AS INTEGER) AS neg_rank,
@@ -1637,10 +1434,9 @@ object LlmQueries extends QueryPack {
           .select(explode(graft.ops.Text.tokens(col("text"))).as("term"))
         graft.ops.HeavyHitters.heavyHittersGated(toks, "term", k = 64)
       },
-      Some("""
+      Some(s"""
         WITH t AS (
-          SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS term
+          SELECT unnest(${Text.tokensSql("text")}) AS term
           FROM documents),
         c AS (SELECT term, count(*) AS n_exact FROM t GROUP BY term),
         n AS (SELECT count(*) AS total FROM t)
@@ -1660,14 +1456,8 @@ object LlmQueries extends QueryPack {
     // extra shuffle beyond the ranking's own.
     Q("llm_context_pack",
       (s, dir) => {
-        import s.implicits._
-        val queries = Seq(
-          (0L, "spark window agg"),
-          (1L, "hash join merge batch"),
-          (2L, "fast scan filter value"),
-          (3L, "customer order line")).toDF("query_id", "query_text")
         val docs = Tables(s, dir, "documents")
-        val lex = Text.bm25TopK(docs, queries, k = 20)
+        val lex = Text.bm25TopK(docs, retrievalQueries(s, probeIds), k = 20)
         val toks = docs.select(col("doc_id"),
           size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
         val w = org.apache.spark.sql.expressions.Window
@@ -1684,58 +1474,11 @@ object LlmQueries extends QueryPack {
           .select(col("query_id"), col("rank"), col("doc_id"),
             col("n_tokens"), col("cum_tokens"))
       },
-      Some("""
-        WITH q(query_id, query_text) AS (VALUES
-          (0, 'spark window agg'),
-          (1, 'hash join merge batch'),
-          (2, 'fast scan filter value'),
-          (3, 'customer order line')),
-        t AS (
-          SELECT doc_id,
-                 unnest(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS term
-          FROM documents),
-        tf AS (
-          SELECT doc_id, term, count(*) AS tf
-          FROM t GROUP BY doc_id, term),
-        dl AS (
-          SELECT doc_id, term, tf,
-                 sum(tf) OVER (PARTITION BY doc_id) AS doc_len
-          FROM tf),
-        df AS (SELECT term, count(*) AS df_count FROM tf GROUP BY term),
-        stats AS (
-          SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                 CAST(sum(doc_len) AS DOUBLE) / count(*) AS avgdl
-          FROM (SELECT DISTINCT doc_id, doc_len FROM dl)),
-        qt AS (
-          SELECT DISTINCT query_id, term FROM (
-            SELECT query_id,
-                   unnest(list_filter(string_split_regex(query_text, '\s+'),
-                     x -> len(x) > 0)) AS term
-            FROM q)),
-        qs AS (
-          SELECT term, query_id,
-                 round(ln(1 + (n_docs - df_count + 0.5) / (df_count + 0.5))
-                   * 1e6) AS idf_micros,
-                 avgdl
-          FROM qt JOIN df USING (term), stats),
-        bm AS (
-          SELECT query_id, dl.doc_id,
-                 sum(CAST(round(idf_micros * (tf * (1.2 + 1))
-                   / (tf + 1.2 * ((1 - 0.75) + 0.75 * doc_len / avgdl)))
-                   AS BIGINT)) AS score_micros
-          FROM dl JOIN qs USING (term)
-          GROUP BY query_id, dl.doc_id),
-        lex AS (
-          SELECT query_id, doc_id, rank FROM (
-            SELECT query_id, doc_id, row_number() OVER (
-                     PARTITION BY query_id
-                     ORDER BY score_micros DESC, doc_id) AS rank
-            FROM bm) WHERE rank <= 20),
+      Some(s"""
+        WITH ${bm25Ctes(probeIds, k = 20)},
         toks AS (
           SELECT doc_id,
-                 CAST(len(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS BIGINT) AS n_tokens
+                 CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS n_tokens
           FROM documents),
         packed AS (
           SELECT l.query_id, l.rank, l.doc_id, tk.n_tokens,
@@ -1758,41 +1501,12 @@ object LlmQueries extends QueryPack {
     // margins pinned over every reachable fixture value in TextSpec),
     // so score_micros is pure long arithmetic cross-engine.
     Q("llm_ql_topk",
-      (s, dir) => {
-        import s.implicits._
-        val queries = Seq(
-          (0L, "spark window agg"),
-          (1L, "hash join merge batch"),
-          (2L, "fast scan filter value"),
-          (3L, "customer order line")).toDF("query_id", "query_text")
-        Text.queryLikelihoodTopK(Tables(s, dir, "documents"), queries, k = 10)
-      },
-      Some("""
-        WITH q(query_id, query_text) AS (VALUES
-          (0, 'spark window agg'),
-          (1, 'hash join merge batch'),
-          (2, 'fast scan filter value'),
-          (3, 'customer order line')),
-        t AS (
-          SELECT doc_id,
-                 unnest(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS term
-          FROM documents),
-        tf AS (
-          SELECT doc_id, term, count(*) AS tf
-          FROM t GROUP BY doc_id, term),
-        dl AS (
-          SELECT doc_id, term, tf,
-                 sum(tf) OVER (PARTITION BY doc_id) AS doc_len
-          FROM tf),
+      (s, dir) => Text.queryLikelihoodTopK(Tables(s, dir, "documents"),
+        retrievalQueries(s, probeIds), k = 10),
+      Some(s"""
+        WITH ${lexicalCtes(probeIds)},
         cf AS (SELECT term, sum(tf) AS cf FROM tf GROUP BY term),
         ct AS (SELECT sum(tf) AS c_total FROM tf),
-        qt AS (
-          SELECT DISTINCT query_id, term FROM (
-            SELECT query_id,
-                   unnest(list_filter(string_split_regex(query_text, '\s+'),
-                     x -> len(x) > 0)) AS term
-            FROM q)),
         nq AS (SELECT query_id, count(*) AS n_qterms FROM qt
                GROUP BY query_id),
         qs AS (
@@ -1834,10 +1548,7 @@ object LlmQueries extends QueryPack {
     Q("llm_mmr_diversify",
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
-        val probes = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val cands = Embeddings.bruteForceTopK(
-            e, probes, "vec_id", "embedding", "qid", "qvec", k = 20)
+        val cands = denseTopK(e, n = 4, k = 20)
           .select(col("qid").as("query_id"), col("vec_id").as("doc_id"),
             floor(col("cos") * 1e6 + lit(0.5)).cast("long").as("rel_micros"))
         val withVec = e.select(col("vec_id").as("doc_id"),
@@ -1845,41 +1556,17 @@ object LlmQueries extends QueryPack {
           .join(broadcast(cands), Seq("doc_id"))
         Embeddings.mmrDiversify(withVec, k = 10, lambdaMicros = 700000L)
       },
-      Some("""
-        WITH RECURSIVE
-        qe AS (
-          SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 4),
-        c AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        scored AS (
-          SELECT qe.qid, c.vec_id,
-                 CASE WHEN sqrt(list_dot_product(qe.qv, qe.qv)) *
-                           sqrt(list_dot_product(c.v, c.v)) > 0
-                   THEN list_dot_product(qe.qv, c.v) /
-                        (sqrt(list_dot_product(qe.qv, qe.qv)) *
-                         sqrt(list_dot_product(c.v, c.v)))
-                   ELSE 0.0 END AS cos
-          FROM c, qe WHERE c.vec_id <> qe.qid),
+      Some(s"""
+        WITH RECURSIVE ${denseCtes(n = 4, k = 20)},
         cand AS (
-          SELECT s.query_id, s.doc_id,
-                 CAST(floor(s.cos * 1e6 + 0.5) AS BIGINT) AS rel_micros,
+          SELECT d.qid AS query_id, d.vec_id AS doc_id,
+                 CAST(floor(d.cos * 1e6 + 0.5) AS BIGINT) AS rel_micros,
                  e2.v
-          FROM (
-            SELECT qid AS query_id, vec_id AS doc_id, cos, row_number() OVER (
-                     PARTITION BY qid ORDER BY cos DESC, vec_id) AS r
-            FROM scored) s
-          JOIN c e2 ON e2.vec_id = s.doc_id
-          WHERE s.r <= 20),
+          FROM dense d JOIN c e2 ON e2.vec_id = d.vec_id),
         sims AS (
           SELECT a.query_id, a.doc_id AS d1, b.doc_id AS d2,
-                 CAST(floor(
-                   CASE WHEN sqrt(list_dot_product(a.v, a.v)) *
-                             sqrt(list_dot_product(b.v, b.v)) > 0
-                     THEN list_dot_product(a.v, b.v) /
-                          (sqrt(list_dot_product(a.v, a.v)) *
-                           sqrt(list_dot_product(b.v, b.v)))
-                     ELSE 0.0 END * 1e6 + 0.5) AS BIGINT) AS sim_micros
+                 CAST(floor(${Embeddings.cosineSql("a.v", "b.v")} * 1e6 + 0.5)
+                   AS BIGINT) AS sim_micros
           FROM cand a JOIN cand b
             ON a.query_id = b.query_id AND a.doc_id <> b.doc_id),
         sel AS (
@@ -1930,18 +1617,9 @@ object LlmQueries extends QueryPack {
     // aggregate per query on top of the pinned BM25 plan.
     Q("llm_retrieval_eval",
       (s, dir) => {
-        import s.implicits._
-        val queries = Seq(
-          (0L, "spark window agg"),
-          (1L, "hash join merge batch"),
-          (2L, "fast scan filter value"),
-          (3L, "customer order line")).toDF("query_id", "query_text")
-        val lex = Text.bm25TopK(Tables(s, dir, "documents"), queries, k = 10)
-        val e = Tables(s, dir, "embeddings")
-        val probes = e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val rel = Embeddings.bruteForceTopK(
-            e, probes, "vec_id", "embedding", "qid", "qvec", k = 3)
+        val lex = Text.bm25TopK(Tables(s, dir, "documents"),
+          retrievalQueries(s, probeIds), k = 10)
+        val rel = denseTopK(Tables(s, dir, "embeddings"), n = 4, k = 3)
           .select(col("qid").as("query_id"), col("vec_id").as("doc_id"),
             lit(1L).as("_rel"))
         lex.join(broadcast(rel), Seq("query_id", "doc_id"), "left")
@@ -1958,74 +1636,9 @@ object LlmQueries extends QueryPack {
               .cast("long").as("rr_micros"),
             col("dcg_micros"))
       },
-      Some("""
-        WITH q(query_id, query_text) AS (VALUES
-          (0, 'spark window agg'),
-          (1, 'hash join merge batch'),
-          (2, 'fast scan filter value'),
-          (3, 'customer order line')),
-        t AS (
-          SELECT doc_id,
-                 unnest(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS term
-          FROM documents),
-        tf AS (
-          SELECT doc_id, term, count(*) AS tf
-          FROM t GROUP BY doc_id, term),
-        dl AS (
-          SELECT doc_id, term, tf,
-                 sum(tf) OVER (PARTITION BY doc_id) AS doc_len
-          FROM tf),
-        df AS (SELECT term, count(*) AS df_count FROM tf GROUP BY term),
-        stats AS (
-          SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                 CAST(sum(doc_len) AS DOUBLE) / count(*) AS avgdl
-          FROM (SELECT DISTINCT doc_id, doc_len FROM dl)),
-        qt AS (
-          SELECT DISTINCT query_id, term FROM (
-            SELECT query_id,
-                   unnest(list_filter(string_split_regex(query_text, '\s+'),
-                     x -> len(x) > 0)) AS term
-            FROM q)),
-        qs AS (
-          SELECT term, query_id,
-                 round(ln(1 + (n_docs - df_count + 0.5) / (df_count + 0.5))
-                   * 1e6) AS idf_micros,
-                 avgdl
-          FROM qt JOIN df USING (term), stats),
-        bm AS (
-          SELECT query_id, dl.doc_id,
-                 sum(CAST(round(idf_micros * (tf * (1.2 + 1))
-                   / (tf + 1.2 * ((1 - 0.75) + 0.75 * doc_len / avgdl)))
-                   AS BIGINT)) AS score_micros
-          FROM dl JOIN qs USING (term)
-          GROUP BY query_id, dl.doc_id),
-        lex AS (
-          SELECT query_id, doc_id, rank FROM (
-            SELECT query_id, doc_id, row_number() OVER (
-                     PARTITION BY query_id
-                     ORDER BY score_micros DESC, doc_id) AS rank
-            FROM bm) WHERE rank <= 10),
-        qe AS (
-          SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 4),
-        c AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        scored AS (
-          SELECT qe.qid, c.vec_id,
-                 CASE WHEN sqrt(list_dot_product(qe.qv, qe.qv)) *
-                           sqrt(list_dot_product(c.v, c.v)) > 0
-                   THEN list_dot_product(qe.qv, c.v) /
-                        (sqrt(list_dot_product(qe.qv, qe.qv)) *
-                         sqrt(list_dot_product(c.v, c.v)))
-                   ELSE 0.0 END AS cos
-          FROM c, qe WHERE c.vec_id <> qe.qid),
-        rel AS (
-          SELECT query_id, doc_id, 1 AS _rel FROM (
-            SELECT qid AS query_id, vec_id AS doc_id,
-                   row_number() OVER (PARTITION BY qid
-                     ORDER BY cos DESC, vec_id) AS dense_rank
-            FROM scored) WHERE dense_rank <= 3),
+      Some(s"""
+        WITH ${bm25Ctes(probeIds, k = 10)}, ${denseCtes(n = 4, k = 3)},
+        rel AS (SELECT qid AS query_id, vec_id AS doc_id, 1 AS _rel FROM dense),
         j AS (
           SELECT l.query_id, l.rank, r._rel
           FROM lex l LEFT JOIN rel r
@@ -2084,11 +1697,10 @@ object LlmQueries extends QueryPack {
           .select(col("doc_id"), col("source"), col("n_tokens"),
             col("cum_before"))
       },
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id, source,
-                 CAST(len(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS BIGINT) AS n_tokens,
+                 CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS n_tokens,
                  md5(CAST(doc_id AS VARCHAR)) AS ord
           FROM documents),
         c AS (
@@ -2114,11 +1726,10 @@ object LlmQueries extends QueryPack {
             Text.tokenCount(col("text")).cast("long").as("n_tokens"))
         graft.ops.Packing.temperatureSample(d, "doc_id", "source", "n_tokens")
       },
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id, source,
-                 CAST(len(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS BIGINT) AS n_tokens
+                 CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS n_tokens
           FROM documents),
         m AS (SELECT source, sum(n_tokens) AS mass FROM t GROUP BY source),
         mm AS (SELECT max(mass) AS max_mass FROM m),
@@ -2219,8 +1830,6 @@ object LlmQueries extends QueryPack {
     Q("llm_ann_ivf_topk",
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
-        val q = e.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
         // trainIters = 1: with nprobe = nlist (full probe) the output
         // is provably centroid-independent, so one centroid update
         // exercises the whole training path (seed + assign +
@@ -2228,33 +1837,12 @@ object LlmQueries extends QueryPack {
         // full-corpus training jobs that cannot change the answer
         // (A/B'd: 3.8 -> ~2 s warm at sf0.1). Approximate configs keep
         // the default.
-        Embeddings.ivfTopK(e, q, "vec_id", "embedding", "qid", "qvec",
+        Embeddings.ivfTopK(e, probes(e, 20), "vec_id", "embedding", "qid", "qvec",
             k = 10, nlist = 16, nprobe = 16, trainIters = 1)
           .select(col("qid"), col("rank"), col("vec_id"),
             round(col("cos"), 6).as("cos"))
       },
-      Some("""
-        WITH q AS (
-          SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 20),
-        c AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        scored AS (
-          SELECT q.qid, c.vec_id,
-                 CASE WHEN sqrt(list_dot_product(q.qv, q.qv)) *
-                           sqrt(list_dot_product(c.v, c.v)) > 0
-                   THEN list_dot_product(q.qv, c.v) /
-                        (sqrt(list_dot_product(q.qv, q.qv)) *
-                         sqrt(list_dot_product(c.v, c.v)))
-                   ELSE 0.0 END AS cos
-          FROM c, q WHERE c.vec_id <> q.qid),
-        ranked AS (
-          SELECT qid, vec_id, cos,
-                 row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rank
-          FROM scored)
-        SELECT qid, rank, vec_id, round(cos, 6) AS cos
-        FROM ranked WHERE rank <= 10
-      """.trim)),
+      Some(cosineTopKSql(n = 20, k = 10))),
 
     // C4-style duplicate-SPAN removal (ops/SpanDedup): keep one
     // occurrence of every repeated 5-token span corpus-wide, remove
@@ -2300,11 +1888,10 @@ object LlmQueries extends QueryPack {
     Q("llm_inverted_index",
       (s, dir) => graft.ops.Text.invertedIndex(
         Tables(s, dir, "documents"), minDf = 3),
-      Some("""
+      Some(s"""
         WITH t AS (
           SELECT doc_id,
-                 unnest(list_filter(string_split_regex(text, '\s+'),
-                   x -> len(x) > 0)) AS term
+                 unnest(${Text.tokensSql("text")}) AS term
           FROM documents),
         tf AS (
           SELECT doc_id, term, count(*) AS tf

@@ -268,12 +268,7 @@ object StreamingQueries extends QueryPack {
     // misses a truth pair.
     Q("stream_neardup_gate",
       (s, dir) => {
-        val d = Tables(s, dir, "documents")
-        val planted = d.filter(col("doc_id") % 50 === 0)
-          .withColumn("doc_id", col("doc_id") + lit(100000L))
-          .withColumn("text",
-            concat_ws(" ", slice(graft.ops.Text.tokens(col("text")), 2, 100000)))
-        val all = d.unionByName(planted)
+        val all = LlmQueries.docsWithPlanted(s, dir)
           .select(col("doc_id"),
             timestamp_millis(lit(1577836800000L) + col("doc_id") * 1000)
               .as("ts_utc"),
@@ -293,30 +288,9 @@ object StreamingQueries extends QueryPack {
           .filter(col("_d") === 0)
           .select(col("doc_id"))
       },
-      Some("""
-        WITH all_docs AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT doc_id + 100000,
-                 array_to_string(string_split_regex(trim(text), '\s+')[2:], ' ')
-          FROM documents WHERE doc_id % 50 = 0),
-        t AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(text, '\s+'), x -> len(x) > 0) AS toks
-          FROM all_docs),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) >= 3
-                   THEN list_transform(generate_series(1, len(toks) - 2),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                   ELSE [] END AS sh
-          FROM t),
-        dropped AS (
-          SELECT DISTINCT b.doc_id
-          FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-          WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
-            AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                len(list_distinct(list_concat(a.sh, b.sh))) >= 0.5)
+      Some(s"""
+        WITH ${LlmQueries.plantedPairCtes},
+        dropped AS (SELECT DISTINCT id2 AS doc_id FROM pairs WHERE j >= 0.5)
         SELECT d.doc_id
         FROM all_docs d LEFT JOIN dropped x ON d.doc_id = x.doc_id
         WHERE x.doc_id IS NULL

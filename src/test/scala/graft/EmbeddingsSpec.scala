@@ -61,15 +61,50 @@ class EmbeddingsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("ANN LSH: declared dim must match the vectors — fail fast") {
+  test("dimension mismatch fails fast in every top-k operator") {
     val q = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val ex = intercept[Exception] {
-      Embeddings.annTopK(emb, q, "vec_id", "embedding", "qid", "qvec",
-        k = 5, dim = 32).collect()
+    // 32-long query vectors against the 64-long corpus
+    val q32 = q.withColumn("qvec", slice(col("qvec"), 1, 32))
+    val runs = Seq[(String, () => Unit)](
+      "annTopK declared dim = 32" -> (() => Embeddings.annTopK(emb, q,
+        "vec_id", "embedding", "qid", "qvec", k = 5, dim = 32).collect()),
+      "bruteForceTopK" -> (() => Embeddings.bruteForceTopK(emb, q32,
+        "vec_id", "embedding", "qid", "qvec", k = 5).collect()),
+      "annTopK" -> (() => Embeddings.annTopK(emb, q32,
+        "vec_id", "embedding", "qid", "qvec", k = 5).collect()),
+      "ivfTopK" -> (() => Embeddings.ivfTopK(emb, q32,
+        "vec_id", "embedding", "qid", "qvec", k = 5, trainIters = 1).collect()))
+    runs.foreach { case (name, run) =>
+      val ex = intercept[Exception](run())
+      assert(ex.toString.toLowerCase.contains("dim")
+        || Option(ex.getCause).exists(_.toString.toLowerCase.contains("dim")),
+        s"$name: $ex")
     }
-    assert(ex.toString.toLowerCase.contains("dim")
-      || Option(ex.getCause).exists(_.toString.toLowerCase.contains("dim")), ex.toString)
+  }
+
+  test("shared rerank: full-probe IVF is brute force, ANN cosines are brute force's") {
+    val q = emb.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "rank", "vec_id", "cos").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    val brute = rows(Embeddings.bruteForceTopK(emb, q, "vec_id", "embedding", "qid", "qvec", 10))
+    // probing every cell makes IVF exact: the same rows, bit-identical cos
+    val ivf = rows(Embeddings.ivfTopK(emb, q, "vec_id", "embedding", "qid", "qvec",
+      k = 10, nlist = 16, nprobe = 16, trainIters = 1))
+    assert(ivf == brute)
+    // every pair LSH returns carries brute force's cos for that pair
+    val n = emb.count().toInt
+    val all = Embeddings.bruteForceTopK(emb, q, "vec_id", "embedding", "qid", "qvec", n)
+      .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap
+    val ann = rows(Embeddings.annTopK(emb, q, "vec_id", "embedding", "qid", "qvec",
+      k = 10, bits = 4, tables = 8))
+    assert(ann.nonEmpty)
+    ann.foreach { case (qid, _, id, cos) =>
+      assert(java.lang.Double.doubleToLongBits(cos) ==
+        java.lang.Double.doubleToLongBits(all((qid, id))), s"($qid, $id): $cos vs ${all((qid, id))}")
+    }
   }
 
   test("ANN IVF: k-means cells partition the corpus; probes shrink candidates; recall beats cell-chance") {

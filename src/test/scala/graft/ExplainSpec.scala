@@ -313,6 +313,12 @@ class ExplainSpec extends SparkSpec {
     val below = lines.drop(cellAt + 1).takeWhile(!_.contains("FileScan"))
     assert(below.forall(l => !l.contains("Exchange") && !l.contains("QueryStage")),
       s"cell assignment is not on the corpus scan:\n$p")
+    // ...and computed in that one node: a nullable cell would let the
+    // join infer isnotnull(cell) and evaluate the whole cell
+    // expression again in a Filter (and the scan's DataFilters) below
+    val cellNodes = lines.filter(l => l.contains("centroid_dist(") && !l.contains("posexplode"))
+    assert(cellNodes.size == 1,
+      s"corpus cell computed in ${cellNodes.size} nodes, want 1:\n$p")
   }
 
   test("q3_shipping_priority: selective joins broadcast, top-k via TakeOrdered, no cartesian") {
