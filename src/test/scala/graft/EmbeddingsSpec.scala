@@ -61,14 +61,23 @@ class EmbeddingsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("ANN LSH: declared dim must match the vectors — fail fast") {
+    val q = emb.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val ex = intercept[Exception] {
+      Embeddings.annTopK(emb, q, "vec_id", "embedding", "qid", "qvec",
+        k = 5, dim = 32).collect()
+    }
+    assert(ex.toString.toLowerCase.contains("dim")
+      || Option(ex.getCause).exists(_.toString.toLowerCase.contains("dim")), ex.toString)
+  }
+
   test("dimension mismatch fails fast in every top-k operator") {
     val q = emb.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     // 32-long query vectors against the 64-long corpus
     val q32 = q.withColumn("qvec", slice(col("qvec"), 1, 32))
     val runs = Seq[(String, () => Unit)](
-      "annTopK declared dim = 32" -> (() => Embeddings.annTopK(emb, q,
-        "vec_id", "embedding", "qid", "qvec", k = 5, dim = 32).collect()),
       "bruteForceTopK" -> (() => Embeddings.bruteForceTopK(emb, q32,
         "vec_id", "embedding", "qid", "qvec", k = 5).collect()),
       "annTopK" -> (() => Embeddings.annTopK(emb, q32,
