@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one place the engine's hardened local-session configuration
   * lives. Every JVM entry point builds through here — the three mains
   * (`graft.Bench`, the timing record; `graft.Verify`, the correctness
-  * dump; `graft.PlanDump`, the executed-plan audit) and the test
-  * harness — so a lesson learned in one surface — usually the hard
+  * dump; `graft.PlanDump`, the executed-plan audit), the test harness
+  * and perfbench — so a lesson learned in one surface — usually the hard
   * way, in a driver bench record — is automatically carried by all of
   * them:
   *
@@ -45,6 +45,23 @@ import org.apache.spark.sql.SparkSession
   *    value once, when `CodeGenerator` is first initialized in the
   *    JVM, so only the first session's conf counts, and only if
   *    nothing compiled before it; `CodegenCacheSpec` pins the effect.
+  *  - `spark.buffer.pageSize` = [[PageSizeBytes]] (1 MiB), not the
+  *    heap-derived default. Spark sizes a Tungsten page as execution
+  *    memory / cores / 16, rounded up to a power of two and clamped
+  *    to 1-64 MiB: 64 MiB on a 7g `local[4]` JVM. Two structures
+  *    allocate and zero-fill a whole page however few rows they hold:
+  *    every string-keyed broadcast hash relation
+  *    (`UnsafeHashedRelation`'s `BytesToBytesMap`) and every
+  *    hash-aggregate task's fast map (`RowBasedKeyValueBatch`
+  *    acquires one page in its constructor). On the 500-document
+  *    `corpus` benchmark those pages were most of the heap: the old
+  *    generation peaked at 495.8 MB with 64 MiB pages and at 99.4 MB
+  *    with 1 MiB (medians of 10 runs each). 1 MiB is Spark's own
+  *    floor for the formula; a record larger than a page still gets a
+  *    page of its own size, and a task's 8,192-entry page table still
+  *    addresses 8 GiB. Spark reads the value once, when the
+  *    SparkContext starts; `ConfigSpec` pins it and
+  *    `BroadcastFootprintSpec` pins its effect.
   *  - `spark.cleaner.referenceTracking.cleanCheckpoints`: the
   *    ContextCleaner deletes a reliable checkpoint's files once its
   *    RDD is collected, so `Lineage.cut`'s `reliable` mode does not
@@ -61,6 +78,9 @@ object GraftSession {
   /** Entries of Spark's compiled-class cache; see the list above. */
   val CodegenCacheEntries = 4096
 
+  /** Bytes of one Tungsten memory page; see the list above. */
+  val PageSizeBytes: Long = 1L << 20
+
   /** Builder with the shared hardened configs applied; callers add
     * surface-specific extras (app name, AQE knobs) before getOrCreate.
     */
@@ -73,6 +93,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.ui.explainMode", "simple")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.buffer.pageSize", PageSizeBytes.toString)
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 
   /** Runs `body` with `settings` in the session conf, then restores

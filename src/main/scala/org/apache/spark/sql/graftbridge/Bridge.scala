@@ -10,8 +10,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * private[sql]; third-party expression libraries conventionally
   * expose it via a shim in an org.apache.spark.sql subpackage. This is
   * the only place the engine reaches into Spark internals: the Column
-  * layer, the function registry, and the listener bus that
-  * [[graft.Profile]] reads.
+  * layer, the function registry, the listener bus that
+  * [[graft.Profile]] reads, and the size of a built broadcast relation.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -48,4 +48,22 @@ object Bridge {
       : Map[String, org.apache.spark.sql.Row] =
     if (e.qe == null || e.executionFailure.isDefined) Map.empty
     else e.qe.observedMetrics
+
+  /** Class name and `estimatedSize` in bytes of the relation each
+    * broadcast exchange of an executed plan built, AQE query stages
+    * included. Call it after an action: a broadcast that has run is
+    * read back, not rebuilt. Hash relations are private to Spark's
+    * join package, so their size is read through the
+    * `KnownSizeEstimation` they implement.
+    */
+  def broadcastRelationSizes(
+      plan: org.apache.spark.sql.execution.SparkPlan): Seq[(String, Long)] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) {
+        case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike =>
+          e.relationFuture.get().value
+      }
+      .collect { case r: org.apache.spark.util.KnownSizeEstimation =>
+        r.getClass.getSimpleName -> r.estimatedSize
+      }
 }

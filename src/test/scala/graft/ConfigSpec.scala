@@ -26,6 +26,15 @@ class ConfigSpec extends SparkSpec {
       .get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
   }
 
+  test("Tungsten pages are sized by GraftSession, not derived from the heap") {
+    // the memory manager reads the page size once, when the context
+    // starts, so the conf key alone would not show that it took effect
+    assert(spark.sparkContext.getConf.get("spark.buffer.pageSize") ==
+      GraftSession.PageSizeBytes.toString)
+    assert(org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes ==
+      GraftSession.PageSizeBytes)
+  }
+
   test("the forked JVM carries the heap-hardening flags from build.sbt") {
     val args = java.lang.management.ManagementFactory
       .getRuntimeMXBean.getInputArguments.asScala
