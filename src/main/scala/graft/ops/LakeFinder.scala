@@ -151,15 +151,15 @@ object LakeFinder {
         col("x"), col("y"), bufferDist))
       .select(col("lake_label"), col("dhdt_c").as("dhdt"))
     // r16: outer median + outer MAD fused into ONE dataflow
-    // (ExactMedian.medianAndMadByValue) — the two sequential builtin
+    // (ExactMedian.medianAndMad) — the two sequential builtin
     // medians (second one re-reading ringPts through a broadcast
     // join) were two extra jobs per pipeline run; the fused form is
-    // one (lake, dhdt)-count aggregate + two windows, bit-identical
+    // one (lake, dhdt)-count aggregate + windows, bit-identical
     // (the by-value counting median replays Percentile's exact
     // interpolation chain; ExactMedianSpec pins it on non-decimal
     // doubles). ringPts is consumed once now, so its persist (and
     // the explicit count barrier) is gone with it.
-    val ringStats = graft.ops.ExactMedian.medianAndMadByValue(
+    val ringStats = graft.ops.ExactMedian.medianAndMad(
       ringPts, Seq("lake_label"), "dhdt", "outer_med", "outer_mad", "n_ring")
 
     // everything after clustering (size guards, hulls, ring stats,

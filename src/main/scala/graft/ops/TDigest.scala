@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Merging t-digest (Dunning & Ertl, "Computing extremely accurate
   * quantiles using t-digests") as a typed Aggregator — the mergeable
   * O(compression) quantile sketch a 100-TB pipeline uses where the
-  * exact counting reformulation ([[ExactMedian.quantilesByUnits]])
+  * exact counting reformulation ([[ExactMedian.quantiles]])
   * would shuffle one row per DISTINCT value: with billions of distinct
   * doubles the exact shuffle is corpus-sized, while the digest's
   * partial-aggregate state is a fixed few KB per group regardless of

@@ -168,18 +168,18 @@ object CleanupQueries extends QueryPack {
     // the same key (AQE coalesces).
     Q("a3_mad",
       (s, dir) => {
-        // r16: ONE-scan fused median+MAD (ExactMedian
-        // .medianAndMadByUnits) replaces the two BUILTIN-median
-        // passes. The round-7 A/B that kept the builtin compared it
-        // against TWO separate counting chains (each with its own
-        // scan + shuffle + window) and correctly lost; the fused form
-        // scans lineitem once and derives both medians from one
-        // per-group cents-count table (two windows over one group
-        // exchange — guide §2.4). Bit-identical to the builtin pair
-        // on 2dp prices (ExactMedianSpec pins it); oracle unchanged.
+        // r16: ONE-scan fused median+MAD (ExactMedian.medianAndMad)
+        // replaces the two BUILTIN-median passes. The round-7 A/B that
+        // kept the builtin compared it against TWO separate counting
+        // chains (each with its own scan + shuffle + window) and
+        // correctly lost; the fused form scans lineitem once and
+        // derives both medians from one per-group (flag, value) rank
+        // table (windows over one group exchange — guide §2.4).
+        // Bit-identical to the builtin pair on any double
+        // (ExactMedianSpec pins it); oracle unchanged.
         val li = Tables(s, dir, "lineitem")
-        graft.ops.ExactMedian.medianAndMadByUnits(
-            li, Seq("l_returnflag"), "l_extendedprice", "med", "mad")
+        graft.ops.ExactMedian.medianAndMad(
+            li, Seq("l_returnflag"), "l_extendedprice", "med", "mad", "n")
           .select(col("l_returnflag"),
             round(col("med"), 4).as("median_price"),
             round(col("mad"), 4).as("mad_price"))
@@ -383,7 +383,8 @@ object CleanupQueries extends QueryPack {
     // from exact integer moments pushed through OP-FOR-OP mirrored
     // double arithmetic — avg/stddev over raw doubles are summation-
     // order-dependent, and round() of the result is engine-divergent
-    // on decimal halves. min/max/median of 2-decimal values are exact.
+    // on decimal halves. min/max/median select source doubles: exact
+    // on any data.
     Q("a1_summary_stats",
       (s, dir) => {
         val main = Tables(s, dir, "lineitem")
@@ -406,11 +407,10 @@ object CleanupQueries extends QueryPack {
               4).as("std"),
             min(col("l_extendedprice")).as("min"),
             max(col("l_extendedprice")).as("max"))
-        // exact median via the counting reformulation (bit-identical
-        // to the builtin aggregate on the 2dp contract; ExactMedianSpec)
+        // exact median via the value-counting rank table (bit-identical
+        // to the builtin aggregate on any double; ExactMedianSpec)
         val med = graft.ops.ExactMedian
-          .medianByUnits(Tables(s, dir, "lineitem"), Nil,
-            "l_extendedprice", "median")
+          .median(Tables(s, dir, "lineitem"), Nil, "l_extendedprice", "median")
         main.crossJoin(broadcast(med)) // 1 row x 1 row
       },
       Some("""
@@ -491,15 +491,15 @@ object CleanupQueries extends QueryPack {
 
     // A17 exact grouped discrete quantiles — the per-group percentile
     // table (p25/p50/p75/p95) a quality dashboard reads off a corpus.
-    // Counting reformulation (ExactMedian.quantilesByUnits): one
-    // map-side-combined shuffle over (group, cents), then a window
-    // over DISTINCT units only; all four quantiles come out of ONE
-    // aggregation pass. Discrete selection returns whole elements, so
-    // results are exact on any double data — DuckDB's quantile_disc
-    // rank rule max(1, ceil(q*n)) is replayed bit-for-bit.
+    // Counting reformulation (ExactMedian.quantiles): one
+    // map-side-combined shuffle over (group, value), then a window
+    // over DISTINCT values only; all four quantiles come out of ONE
+    // aggregation pass. Discrete selection returns whole source
+    // elements, so results are exact on any double data — DuckDB's
+    // quantile_disc rank rule max(1, ceil(q*n)) is replayed bit-for-bit.
     Q("a17_grouped_quantiles",
       (s, dir) => {
-        graft.ops.ExactMedian.quantilesByUnits(
+        graft.ops.ExactMedian.quantiles(
           Tables(s, dir, "lineitem"), Seq("l_returnflag"),
           "l_extendedprice",
           Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75, "p95" -> 0.95))

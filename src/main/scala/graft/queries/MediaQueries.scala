@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -12,6 +13,69 @@ import graft.ops.Multimodal
   * the DuckDB oracle replaying the closed-form pixel spec.
   */
 object MediaQueries extends QueryPack {
+
+  /** The perceptual-hash image set of mm_phash_dedup and
+    * mm_phash_neardup: one synthetic PNG per document (seeded by
+    * doc_id, 4-8 x 3-6 pixels) plus a planted copy of every 7th with
+    * red of pixel (0,0) raised by one (a real re-encode), doc_id
+    * offset by 100000.
+    */
+  private def phashImages(s: SparkSession, dir: String): DataFrame = {
+    val spec = Tables(s, dir, "documents")
+      .select(col("doc_id"), col("doc_id").as("seed"),
+        (col("doc_id") % 5 + 4).cast("int").as("w"),
+        (col("doc_id") % 4 + 3).cast("int").as("h"),
+        lit(0).cast("int").as("delta"))
+    val planted = spec.filter(col("seed") % 7 === 0)
+      .withColumn("doc_id", col("doc_id") + 100000L)
+      .withColumn("delta", lit(1).cast("int"))
+    Multimodal.encodeSyntheticPngDelta(
+      spec.unionByName(planted), "seed", "w", "h", "delta")
+  }
+
+  /** [[phashImages]] and their 64-bit aHash replayed in SQL as the CTE
+    * chain `spec0, spec, cells, lum, tot, ph(doc_id, phash)`: encode,
+    * perturbation, 8x8 nearest-neighbour resample, luma and bit
+    * packing, without decoding an image.
+    */
+  private val phashCtes: String = """WITH spec0 AS (
+          SELECT doc_id, doc_id AS seed,
+                 doc_id % 5 + 4 AS w, doc_id % 4 + 3 AS h, 0 AS delta
+          FROM documents),
+        spec AS (
+          SELECT * FROM spec0
+          UNION ALL
+          SELECT doc_id + 100000 AS doc_id, seed, w, h, 1 AS delta
+          FROM spec0 WHERE seed % 7 = 0),
+        cells AS (
+          SELECT doc_id, seed, delta,
+                 gy.g * 8 + gx.g AS p,
+                 (gx.g * w) // 8 AS sx, (gy.g * h) // 8 AS sy
+          FROM spec,
+               LATERAL unnest(generate_series(0, 7)) gx(g),
+               LATERAL unnest(generate_series(0, 7)) gy(g)),
+        lum AS (
+          SELECT doc_id, p,
+                 299 * ((seed * 7 + sx * 13 + sy * 31
+                         + CASE WHEN sx = 0 AND sy = 0 THEN delta ELSE 0 END) % 256)
+               + 587 * ((seed * 11 + sx * 17 + sy * 29) % 256)
+               + 114 * ((seed * 13 + sx * 19 + sy * 23) % 256) AS luma
+          FROM cells),
+        tot AS (
+          SELECT doc_id, p, luma,
+                 sum(luma) OVER (PARTITION BY doc_id) AS total
+          FROM lum),
+        ph AS (
+          -- bit 63 is the sign bit: 1<<63 overflows DuckDB's checked
+          -- BIGINT shift, so it is spelled as long-min; sum() runs in
+          -- HUGEINT, and the final cast recovers the signed 64-bit
+          -- hash exactly as Spark's wrapping 1L<<63 produces it
+          SELECT doc_id,
+                 CAST(sum(CASE
+                   WHEN 64 * luma <= total THEN 0
+                   WHEN p = 63 THEN -9223372036854775807 - 1
+                   ELSE CAST(1 AS BIGINT) << p END) AS BIGINT) AS phash
+          FROM tot GROUP BY doc_id)"""
 
   override def queries: Seq[Q] = Seq(
 
@@ -138,62 +202,15 @@ object MediaQueries extends QueryPack {
     // hash-gated without the oracle decoding an image.
     Q("mm_phash_dedup",
       (s, dir) => {
-        val spec = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("doc_id").as("seed"),
-            (col("doc_id") % 5 + 4).cast("int").as("w"),
-            (col("doc_id") % 4 + 3).cast("int").as("h"),
-            lit(0).cast("int").as("delta"))
-        val planted = spec.filter(col("seed") % 7 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000L)
-          .withColumn("delta", lit(1).cast("int"))
-        val withPng = Multimodal.encodeSyntheticPngDelta(
-          spec.unionByName(planted), "seed", "w", "h", "delta")
-        Multimodal.perceptualHash(withPng, "media")
+        Multimodal.perceptualHash(phashImages(s, dir), "media")
           .groupBy(col("phash"))
           .agg(count(lit(1)).as("n_docs"),
             min(col("doc_id")).as("keep_doc"),
             max(col("doc_id")).as("max_doc"))
           .filter(col("n_docs") >= 2)
       },
-      Some("""
-        WITH spec0 AS (
-          SELECT doc_id, doc_id AS seed,
-                 doc_id % 5 + 4 AS w, doc_id % 4 + 3 AS h, 0 AS delta
-          FROM documents),
-        spec AS (
-          SELECT * FROM spec0
-          UNION ALL
-          SELECT doc_id + 100000 AS doc_id, seed, w, h, 1 AS delta
-          FROM spec0 WHERE seed % 7 = 0),
-        cells AS (
-          SELECT doc_id, seed, delta,
-                 gy.g * 8 + gx.g AS p,
-                 (gx.g * w) // 8 AS sx, (gy.g * h) // 8 AS sy
-          FROM spec,
-               LATERAL unnest(generate_series(0, 7)) gx(g),
-               LATERAL unnest(generate_series(0, 7)) gy(g)),
-        lum AS (
-          SELECT doc_id, p,
-                 299 * ((seed * 7 + sx * 13 + sy * 31
-                         + CASE WHEN sx = 0 AND sy = 0 THEN delta ELSE 0 END) % 256)
-               + 587 * ((seed * 11 + sx * 17 + sy * 29) % 256)
-               + 114 * ((seed * 13 + sx * 19 + sy * 23) % 256) AS luma
-          FROM cells),
-        tot AS (
-          SELECT doc_id, p, luma,
-                 sum(luma) OVER (PARTITION BY doc_id) AS total
-          FROM lum),
-        ph AS (
-          -- bit 63 is the sign bit: 1<<63 overflows DuckDB's checked
-          -- BIGINT shift, so it is spelled as long-min; sum() runs in
-          -- HUGEINT, and the final cast recovers the signed 64-bit
-          -- hash exactly as Spark's wrapping 1L<<63 produces it
-          SELECT doc_id,
-                 CAST(sum(CASE
-                   WHEN 64 * luma <= total THEN 0
-                   WHEN p = 63 THEN -9223372036854775807 - 1
-                   ELSE CAST(1 AS BIGINT) << p END) AS BIGINT) AS phash
-          FROM tot GROUP BY doc_id)
+      Some(s"""
+        $phashCtes
         SELECT phash, count(*) AS n_docs,
                min(doc_id) AS keep_doc, max(doc_id) AS max_doc
         FROM ph GROUP BY phash HAVING count(*) >= 2
@@ -209,17 +226,7 @@ object MediaQueries extends QueryPack {
     // bucket-local, never all-pairs.
     Q("mm_phash_neardup",
       (s, dir) => {
-        val spec = Tables(s, dir, "documents")
-          .select(col("doc_id"), col("doc_id").as("seed"),
-            (col("doc_id") % 5 + 4).cast("int").as("w"),
-            (col("doc_id") % 4 + 3).cast("int").as("h"),
-            lit(0).cast("int").as("delta"))
-        val planted = spec.filter(col("seed") % 7 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000L)
-          .withColumn("delta", lit(1).cast("int"))
-        val sig = Multimodal.perceptualHash(
-            Multimodal.encodeSyntheticPngDelta(
-              spec.unionByName(planted), "seed", "w", "h", "delta"), "media")
+        val sig = Multimodal.perceptualHash(phashImages(s, dir), "media")
           .select(col("doc_id"), col("phash"))
           .persist()
         // Factor the pair search by HASH CLASS: real image corpora
@@ -260,41 +267,8 @@ object MediaQueries extends QueryPack {
               .as("hamming"))
         cross.unionByName(within)
       },
-      Some("""
-        WITH spec0 AS (
-          SELECT doc_id, doc_id AS seed,
-                 doc_id % 5 + 4 AS w, doc_id % 4 + 3 AS h, 0 AS delta
-          FROM documents),
-        spec AS (
-          SELECT * FROM spec0
-          UNION ALL
-          SELECT doc_id + 100000 AS doc_id, seed, w, h, 1 AS delta
-          FROM spec0 WHERE seed % 7 = 0),
-        cells AS (
-          SELECT doc_id, seed, delta,
-                 gy.g * 8 + gx.g AS p,
-                 (gx.g * w) // 8 AS sx, (gy.g * h) // 8 AS sy
-          FROM spec,
-               LATERAL unnest(generate_series(0, 7)) gx(g),
-               LATERAL unnest(generate_series(0, 7)) gy(g)),
-        lum AS (
-          SELECT doc_id, p,
-                 299 * ((seed * 7 + sx * 13 + sy * 31
-                         + CASE WHEN sx = 0 AND sy = 0 THEN delta ELSE 0 END) % 256)
-               + 587 * ((seed * 11 + sx * 17 + sy * 29) % 256)
-               + 114 * ((seed * 13 + sx * 19 + sy * 23) % 256) AS luma
-          FROM cells),
-        tot AS (
-          SELECT doc_id, p, luma,
-                 sum(luma) OVER (PARTITION BY doc_id) AS total
-          FROM lum),
-        ph AS (
-          SELECT doc_id,
-                 CAST(sum(CASE
-                   WHEN 64 * luma <= total THEN 0
-                   WHEN p = 63 THEN -9223372036854775807 - 1
-                   ELSE CAST(1 AS BIGINT) << p END) AS BIGINT) AS phash
-          FROM tot GROUP BY doc_id)
+      Some(s"""
+        $phashCtes
         SELECT a.doc_id AS id1, b.doc_id AS id2,
                CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
         FROM ph a JOIN ph b ON a.doc_id < b.doc_id

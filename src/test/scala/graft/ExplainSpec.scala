@@ -233,7 +233,7 @@ class ExplainSpec extends SparkSpec {
 
   test("a17_grouped_quantiles: counts shuffle + group window, final agg reuses the partitioning") {
     val p = finalPlan("a17_grouped_quantiles")
-    // Exchange 1: groupBy(flag, units) counts; Exchange 2: the window
+    // Exchange 1: groupBy(flag, value) counts; Exchange 2: the window
     // repartition by flag. The final groupBy(flag) must REUSE the
     // window's hash partitioning — a third exchange means it stopped
     // doing so and the all-quantiles-in-one-pass claim regressed.

@@ -1,13 +1,17 @@
 #!/usr/bin/env python3
 """Local self-check mimicking the driver's DuckDB-oracle compare.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 
 For each query result parquet written by graft.Verify, runs the
 corresponding oracle SQL in DuckDB over the same test tables, then
 compares: schema (column names), row count, and values (columns sorted
 by name, rows sorted by all columns, exact equality with float
-tolerance report). Dev tool only — not part of the shipped library.
+tolerance report). Trailing query names restrict the check to those
+queries, as they restrict `graft.Verify <sfDir> <outDir> [query ...]`;
+a named query without an oracle entry FAILs. With no names every
+oracle entry is checked, so a missing output FAILs. Dev tool only —
+not part of the shipped library.
 """
 import json
 import math
@@ -44,7 +48,7 @@ def eq(a, b):
     return 'exact' if str(a) == str(b) else 'fail'
 
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    sf_dir, out_dir, only = sys.argv[1], sys.argv[2], set(sys.argv[3:])
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part",
               "orders", "lineitem", "events", "documents", "embeddings"]:
@@ -52,7 +56,12 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    for name in sorted(only - oracle.keys()):
+        print(f"FAIL {name}: no oracle SQL in {out_dir}/oracle_sql.json")
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
+        if only and name not in only:
+            continue
         try:
             got = con.execute(
                 f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
