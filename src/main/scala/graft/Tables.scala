@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Named-table registry over the driver-generated parquet directory.
@@ -102,18 +106,17 @@ object Tables {
     * written against. Generated data has shipped both ways across
     * rounds: TIMESTAMP(NANOS) (reads as raw ns longs under the
     * nanosAsLong legacy flag) and TIMESTAMP(MICROS) (reads as a real
-    * µs TimestampType). One driver-side footer peek picks the branch;
-    * the µs→ns widening is a projection on top of the scan, so column
-    * pruning and predicate pushdown on the other columns are
-    * untouched. ×1000 cannot overflow: µs-since-epoch ×1000 stays
-    * under Long.MaxValue until the year 2262.
+    * µs TimestampType). One footer read in this process picks the
+    * branch (parquet-hadoop's reader, so no Spark job: schema
+    * inference through `spark.read` runs one); the µs→ns widening is a
+    * projection on top of the scan, so column pruning and predicate
+    * pushdown on the other columns are untouched. ×1000 cannot
+    * overflow: µs-since-epoch ×1000 stays under Long.MaxValue until
+    * the year 2262.
     */
   private def events(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val footerTs = spark.read.parquet(path).schema
-      .find(_.name == "ts").map(_.dataType)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path: no `ts` column in footer"))
+    val footerTs = footerType(spark, path, "ts")
     footerTs match {
       case LongType => // TIMESTAMP(NANOS) via nanosAsLong: already raw ns
         spark.read.schema(schemas("events")).parquet(path)
@@ -130,6 +133,27 @@ object Tables {
               org.apache.spark.sql.functions.col("ts").cast(TimestampType)) *
               org.apache.spark.sql.functions.lit(1000L))
     }
+  }
+
+  /** The Spark type a parquet read gives `column` of `path`, from the
+    * footer of its first data file (the file itself, or the first in
+    * name order of a dataset directory), read in this process.
+    */
+  private def footerType(spark: SparkSession, path: String, column: String): DataType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(root).isDirectory) root
+      else fs.listStatus(root).map(_.getPath)
+        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+        .sortBy(_.getName).headOption
+        .getOrElse(throw new IllegalArgumentException(s"$path: no data files"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val footer = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    Bridge.parquetReadSchema(spark, footer).find(_.name == column).map(_.dataType)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$path: no `$column` column in footer"))
   }
 
   /** `events` with a µs `ts_utc` TimestampType derived from the ns

@@ -85,6 +85,12 @@ package object functions {
   def shingles(toks: Column, n: Int): Column =
     col(Shingles(expr(toks), n))
 
+  /** Codegen'd term histogram of a token array:
+    * `array<struct<term: string, tf: bigint>>`.
+    */
+  def term_counts(toks: Column): Column =
+    col(TermCounts(expr(toks)))
+
   /** Codegen'd Unicode NFC normalization of a string column. */
   def nfc_normalize(s: Column): Column =
     col(NfcNormalize(expr(s.cast("string"))))

@@ -53,7 +53,7 @@ object ImportanceResampling {
     * kinds come out of one explode_outer plus a null filter. A plain
     * explode (or a size filter on the token column) makes Spark infer
     * a size filter on the tokens and push it below the projection,
-    * which splits the text again (see [[Text.postings]]).
+    * which splits the text again (see `Text.termRows`).
     */
   private def gramBuckets(df: DataFrame, keep: Column*): DataFrame =
     df.select(keep :+ Text.tokens(col("text")).as("_t"): _*)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -210,37 +210,64 @@ object Text {
   /** Vocabulary size of [[vocabOov]]; its oracle SQL cuts at 32 too. */
   val VocabSize = 32
 
-  /** (doc_id, term, tf, doc_len) from (doc_id, text) rows: each
-    * document's whitespace tokens counted per term in one
-    * map-side-combined hash aggregate, and the document length taken
-    * from the size of the same token array (doc_id is the corpus key).
-    * The uncut expression under [[postings]], [[vocabOov]] and
-    * [[invertedIndex]].
+  /** (doc_id, doc_len, tc) from (doc_id, text) rows: each document's
+    * whitespace tokens counted per term inside its own row by the
+    * codegen'd [[graft.functions.term_counts]] kernel, `tc` an
+    * `array<struct<term, tf>>`, and the document length the size of
+    * the same token array. No shuffle: doc_id is the corpus key, so a
+    * document's terms never need to meet across rows. A null text has
+    * a null `tc` and a null doc_len (-1 with ANSI off); an empty one
+    * an empty `tc` and doc_len 0.
     */
-  private def termCounts(docs: DataFrame): DataFrame =
+  private def histograms(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-      // explode_outer, not explode: for an explode of a column Spark
-      // infers a size(toks) > 0 filter and pushes it below the
-      // projection, which splits the text three times. The null term
-      // rows it emits for token-less docs are dropped instead.
       .select(col("doc_id"), size(col("toks")).cast("long").as("doc_len"),
-        explode_outer(col("toks")).as("term"))
+        graft.functions.term_counts(col("toks")).as("tc"))
+
+  /** (doc_id, term, tf, doc_len): the per-document histograms
+    * flattened, one row per (document, distinct term), a narrow
+    * generate. inline_outer, not inline: for an inline of a column
+    * Spark infers a size(tc) > 0 filter and pushes it below the
+    * projection, which put 4 text splits into the uncut tf-idf and
+    * inverted-index plans instead of 1. The null term rows it emits
+    * for token-less docs are dropped instead.
+    */
+  private def termRows(hist: DataFrame): DataFrame =
+    hist.select(col("doc_id"), col("doc_len"), inline_outer(col("tc")))
       .filter(col("term").isNotNull)
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("tf"), max(col("doc_len")).as("doc_len"))
+      .select(col("doc_id"), col("term"), col("tf"), col("doc_len"))
+
+  /** The [[postings]] table and the corpus statistics observed on its
+    * cut's pass: `nDocs`, the documents with at least one token (the
+    * documents the table holds; Lucene counts indexed docs the same
+    * way), and `nTokens`, their token total.
+    */
+  final case class Postings(table: DataFrame, nDocs: Long, nTokens: Long)
 
   /** The corpus postings table (doc_id, term, tf, doc_len) that the
-    * retrieval and tf-idf operators read their corpus through.
+    * retrieval operators read their corpus through, with its
+    * [[Postings]] statistics.
     *
-    * It is materialized behind one [[graft.Lineage.cut]] because each
-    * operator reads it from two or three consumers (df or cf per term,
-    * corpus statistics, the scoring stream) that prune it to different
-    * columns, so Spark cannot reuse one consumer's shuffle for another:
-    * uncut, the corpus was tokenized and aggregated once per consumer
-    * (3x per bm25 call, the 24.7 s `llm_hybrid_rrf` of the r15 8-core
-    * record). ExplainSpec pins one corpus tokenization per call.
+    * The table is materialized behind one [[graft.Lineage.cut]]
+    * because each operator reads it from two consumers (df or cf per
+    * term, and the scoring stream) that prune it to different columns,
+    * so Spark could not reuse one consumer's scan for the other: uncut,
+    * the corpus was tokenized once per consumer (3x per bm25 call, the
+    * 24.7 s `llm_hybrid_rrf` of the r15 8-core record). Building it is
+    * one job with no shuffle. The statistics are observed on that
+    * job's pass, one row per document before the histograms are
+    * flattened, so they cost no job of their own. ExplainSpec pins one
+    * corpus tokenization per call.
     */
-  def postings(docs: DataFrame): DataFrame = graft.Lineage.cut(termCounts(docs))
+  def postings(docs: DataFrame): Postings = {
+    val corpus = Observation("graft.postings")
+    val hasTokens = col("doc_len") > 0
+    val table = graft.Lineage.cut(termRows(histograms(docs)
+      .observe(corpus, count_if(hasTokens).as("n_docs"),
+        coalesce(sum(when(hasTokens, col("doc_len"))), lit(0L)).as("n_tokens"))))
+    Postings(table, corpus.get("n_docs").asInstanceOf[Long],
+      corpus.get("n_tokens").asInstanceOf[Long])
+  }
 
   /** Corpus-trained bigram language-model scoring — the relational
     * form of CCNet-style LM quality filtering (Wenzek et al. 2020
@@ -335,12 +362,15 @@ object Text {
     * the classic weighting (smoothed idf: ln((N+1)/(df+1)) + 1, tf
     * normalized by document length), keeping each document's k
     * highest-scoring terms. The whole computation is declarative:
-    *   1. (doc, term) counts and document length — the [[postings]]
-    *      table,
-    *   2. document frequency — one aggregate over the (doc, term)
-    *      rows, joined back by term (at 100 TB this is a shuffle join
-    *      on the term dictionary; no row ever fans out),
-    *   3. corpus size as a broadcast 1-row aggregate,
+    *   1. (doc, term) counts and document length — each document's
+    *      term histogram, flattened with no shuffle (one reader, so
+    *      uncut),
+    *   2. document frequency — count(1) over (partition by term) on
+    *      the same rows: one shuffle on term, no aggregate joined back
+    *      (at 100 TB the term partitions are the term dictionary; no
+    *      row ever fans out),
+    *   3. corpus size as a broadcast 1-row aggregate over the raw
+    *      documents (no tokenization),
     *   4. per-doc top-k via row_number <= k, which Catalyst executes
     *      as WindowGroupLimit (partial top-k before the shuffle).
     * Ties break on the term string so ranks are engine-independent,
@@ -354,10 +384,8 @@ object Text {
     require(k > 0, s"k must be positive, got $k")
     val rankW = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
     val total = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-    val tf = postings(docs)
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df_count"))
-    tf
-      .join(dfreq, "term")
+    termRows(histograms(docs))
+      .withColumn("df_count", count(lit(1)).over(Window.partitionBy("term")))
       .crossJoin(broadcast(total))
       // idf quantizes to integer micros at the ln (the bm25TopK
       // discipline): the smoothed idf is the only transcendental in
@@ -384,35 +412,31 @@ object Text {
     * the standard pre-tokenizer health check before committing a
     * vocab to a training run.
     *
-    * Scale shape: both passes read one uncut (doc, term) count table.
-    * Its two readers share one shuffle, which Spark runs once and
-    * reuses (ReusedExchange), so a [[postings]] cut would only add a
-    * job. Corpus word counts are sum(tf) per term (dictionary-sized
-    * output); the top-V cut is a window over the dictionary, not the
-    * corpus (WindowGroupLimit applies partial top-V before the
-    * single-partition tail — and at a 10^8-term dictionary the
-    * production path is a threshold from the count distribution
-    * instead); the per-doc pass joins the counts against the
-    * broadcast vocabulary, with n_tokens the doc's tf sum and n_oov
-    * the tf sum of the terms outside it. (n_tokens is the doc length,
-    * but reading doc_len would keep it in one reader's shuffle only,
-    * and the two exchanges would no longer be the same.)
+    * Scale shape: the per-document term histograms are cut once (one
+    * job, no shuffle). The vocabulary pass flattens them and sums tf
+    * per term (a map-side-combined aggregate, dictionary-sized output)
+    * and collects the top [[VocabSize]] terms through an ordered limit
+    * (a partial top-V per partition before the single-partition
+    * merge). At most VocabSize strings are collected, whatever the
+    * corpus size, and they return as a literal set. The per-document
+    * pass is then a narrow scan of the cut: n_tokens is the doc
+    * length, n_oov the tf sum of the histogram entries outside the
+    * set, with no join and no shuffle. Documents without tokens are
+    * absent.
     *
     * @return (doc_id, n_tokens, n_oov, oov_rate) — oov_rate rounded
     *         to 6 decimals (one exact-integer division)
     */
   def vocabOov(docs: DataFrame): DataFrame = {
-    val tf = termCounts(docs)
-    val rankW = Window.orderBy(col("c").desc, col("term"))
-    val vocab = tf.groupBy(col("term")).agg(sum(col("tf")).as("c"))
-      .withColumn("_r", row_number().over(rankW))
-      .filter(col("_r") <= VocabSize)
-      .select(col("term"), lit(1).as("_in_vocab"))
-    tf
-      .join(broadcast(vocab), Seq("term"), "left")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).as("n_tokens"),
-        sum(when(col("_in_vocab").isNull, col("tf")).otherwise(0L)).as("n_oov"))
+    val hist = graft.Lineage.cut(histograms(docs))
+    val vocab = termRows(hist).groupBy(col("term")).agg(sum(col("tf")).as("c"))
+      .orderBy(col("c").desc, col("term")).limit(VocabSize)
+      .collect().map(_.getString(0)).toSeq
+    hist.filter(col("doc_len") > 0)
+      .select(col("doc_id"), col("doc_len").as("n_tokens"),
+        aggregate(col("tc"), lit(0L), (acc, t) =>
+          acc + when(t("term").isInCollection(vocab), lit(0L)).otherwise(t("tf")))
+          .as("n_oov"))
       .withColumn("oov_rate",
         round(col("n_oov").cast("double") / col("n_tokens").cast("double"), 6))
   }
@@ -430,8 +454,10 @@ object Text {
     * with k1 = [[Bm25K1]] and b = [[Bm25B]].
     *
     * Scale shape (nothing grows with corpus × queries):
-    *   1. the [[postings]] table (doc, term, tf, doc_len);
-    *   2. N and avgdl: one broadcast 1-row aggregate;
+    *   1. the [[postings]] table (doc, term, tf, doc_len), one job
+    *      and no shuffle;
+    *   2. N and avgdl: observed on that job's pass, two literals in
+    *      the plan;
     *   3. the query-term table joined with per-term df is tiny by
     *      contract and BROADCAST into the postings stream — the
     *      corpus-side table never shuffles for the match;
@@ -455,21 +481,20 @@ object Text {
     */
   def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val withLen = postings(docs)
-    val dfreq = withLen.groupBy("term").agg(count(lit(1)).as("df_count"))
-    // N and avgdl from the postings table itself (docs with no tokens
-    // can match no query term, so excluding them from N/avgdl is the
-    // retrieval-index convention — Lucene counts indexed docs)
-    val stats = withLen.select(col("doc_id"), col("doc_len")).distinct()
-      .agg(count(lit(1)).cast("double").as("n_docs"),
-        // exact: integer sum then ONE division — avg(double) would
-        // accumulate in partial-agg order and could differ cross-engine
-        (sum(col("doc_len")).cast("double") / count(lit(1))).as("avgdl"))
+    val p = postings(docs)
+    val dfreq = p.table.groupBy("term").agg(count(lit(1)).as("df_count"))
+    // N and avgdl over the documents the postings hold (docs with no
+    // tokens can match no query term, so excluding them is the
+    // retrieval-index convention — Lucene counts indexed docs).
+    // Exact: integer sum then ONE division — avg(double) would
+    // accumulate in partial-agg order and could differ cross-engine
+    val nDocs = p.nDocs.toDouble
+    val avgdl = p.nTokens.toDouble / nDocs
     val qterms = queries
       .select(col("query_id"), explode(tokens(col("query_text"))).as("term"))
       .distinct()
-    // tiny-side assembly: query terms pick up their df and the corpus
-    // stats BEFORE touching the postings stream
+    // tiny-side assembly: query terms pick up their df and idf BEFORE
+    // touching the postings stream
     // idf is the ONLY transcendental in the score; quantize it to
     // integer micros IMMEDIATELY after the ln so every arithmetic
     // step after the libm call is IEEE-deterministic: a cross-libm
@@ -482,19 +507,17 @@ object Text {
     // rounding — is *,/,+ on bit-identical doubles, exact-rounded the
     // same in any IEEE-754 engine.
     val qside = qterms.join(dfreq, Seq("term"))
-      .crossJoin(stats)
-      .withColumn("idf_micros",
-        round(log(lit(1) + (col("n_docs") - col("df_count") + 0.5)
-          / (col("df_count") + 0.5)) * 1e6))
-      .select(col("term"), col("query_id"), col("idf_micros"), col("avgdl"))
+      .select(col("term"), col("query_id"),
+        round(log(lit(1) + (lit(nDocs) - col("df_count") + 0.5)
+          / (col("df_count") + 0.5)) * 1e6).as("idf_micros"))
     val rankW = Window.partitionBy("query_id")
       .orderBy(col("score_micros").desc, col("doc_id"))
-    withLen
+    p.table
       .join(broadcast(qside), Seq("term"))
       .withColumn("term_micros",
         round(col("idf_micros") * (col("tf") * (Bm25K1 + 1))
           / (col("tf") + lit(Bm25K1) * (lit(1 - Bm25B)
-            + lit(Bm25B) * col("doc_len") / col("avgdl")))).cast("long"))
+            + lit(Bm25B) * col("doc_len") / lit(avgdl)))).cast("long"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("term_micros")).as("score_micros"))
       .withColumn("rank", row_number().over(rankW))
@@ -514,8 +537,10 @@ object Text {
     *
     * with μ = [[QlMu]], so it needs exactly the [[postings]] table
     * BM25 already needs (no per-(query,doc) zero-tf rows), and shares
-    * its scale shape: the (query term × collection stats) side
-    * broadcast, WindowGroupLimit top-k.
+    * its scale shape: the table built in one job with no shuffle, |C|
+    * observed on that job's pass (a literal in the plan), cf one
+    * aggregate over the table, the (query term × cf) side broadcast,
+    * WindowGroupLimit top-k.
     *
     * Exactness: both ln() terms quantize to integer micros at the
     * transcendental (the [[bm25TopK]] discipline — the argument of
@@ -529,24 +554,22 @@ object Text {
     */
   def queryLikelihoodTopK(docs: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val withLen = postings(docs)
-    val cf = withLen.groupBy("term").agg(sum(col("tf")).as("cf"))
-    val ctotal = withLen.agg(sum(col("tf")).as("c_total"))
+    val p = postings(docs)
+    val cf = p.table.groupBy("term").agg(sum(col("tf")).as("cf"))
     val qterms = queries
       .select(col("query_id"), explode(tokens(col("query_text"))).as("term"))
       .distinct()
     val nq = qterms.groupBy("query_id").agg(count(lit(1)).as("n_qterms"))
     val qside = qterms.join(cf, Seq("term"))
-      .crossJoin(ctotal)
-      // exact rational argument: (tf·|C|) stays a long product, one
-      // double division, one ln, ONE rounding to the micro grain
-      .select(col("term"), col("query_id"), col("cf"), col("c_total"))
+      .select(col("term"), col("query_id"), col("cf"))
     val rankW = Window.partitionBy("query_id")
       .orderBy(col("score_micros").desc, col("doc_id"))
-    withLen
+    p.table
       .join(broadcast(qside), Seq("term"))
+      // exact rational argument: (tf·|C|) stays a long product, one
+      // double division, one ln, ONE rounding to the micro grain
       .withColumn("term_micros",
-        round(log(lit(1) + (col("tf") * col("c_total"))
+        round(log(lit(1) + (col("tf") * lit(p.nTokens))
           / (lit(QlMu) * col("cf"))) * 1e6).cast("long"))
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("term_micros")).as("match_micros"),
@@ -564,12 +587,13 @@ object Text {
     * total occurrence count, and posting range. At scale the full
     * postings TABLE (term, doc_id, tf) is the index — term-partitioned
     * parquet, read back by an equi-join on term; this summary is the
-    * term-dictionary side of it. Shape: one explode (narrow) + two
-    * map-side-combined hash aggregates; no window, no join. It has
+    * term-dictionary side of it. Shape: each document's term
+    * histogram flattened (narrow), then one map-side-combined hash
+    * aggregate on term, the only shuffle; no window, no join. It has
     * one consumer of the term counts, so it reads them uncut.
     */
   def invertedIndex(docs: DataFrame, minDf: Int = 1): DataFrame =
-    termCounts(docs)
+    termRows(histograms(docs))
       .groupBy("term")
       .agg(count(lit(1)).as("df_count"),
         sum(col("tf")).as("tf_total"),

@@ -1,9 +1,10 @@
 package graft.queries
 
-import scala.reflect.runtime.universe.TypeTag
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.Tables
 import graft.ops.{Contamination, Embeddings, ImportanceResampling, NearDup, SpanDedup, Text, WeightedSample}
@@ -138,10 +139,13 @@ object LlmQueries extends QueryPack {
 
   /** Transitive closure of the undirected pairs `pairs(id1, id2)`:
     * `comp(<id>, label)`, label = the smallest id of the component.
-    * Needs `WITH RECURSIVE`.
+    * Needs `WITH RECURSIVE`. `ud`, and the pair CTE it reads, are
+    * MATERIALIZED: otherwise DuckDB re-derives them, all-pairs Jaccard
+    * included, inside the recursion (`llm_dedup_clusters` 89.6 s ->
+    * 16.9 s at sf0.001, identical rows).
     */
   private def closureCtes(pairs: String, id: String): String = s"""
-    ud AS (SELECT id1 AS a, id2 AS b FROM $pairs
+    ud AS MATERIALIZED (SELECT id1 AS a, id2 AS b FROM $pairs
            UNION SELECT id2, id1 FROM $pairs),
     reach(a, b) AS (
       SELECT a, b FROM ud
@@ -156,7 +160,7 @@ object LlmQueries extends QueryPack {
     * `sizes(canonical_id, group_size)`. Needs `WITH RECURSIVE`.
     */
   private val plantedClusterCtes: String = s"""$plantedPairCtes,
-    dup AS (SELECT id1, id2 FROM pairs WHERE j >= 0.5),
+    dup AS MATERIALIZED (SELECT id1, id2 FROM pairs WHERE j >= 0.5),
     ${closureCtes("dup", "doc_id")},
     canon AS (
       SELECT d.doc_id, coalesce(c.label, d.doc_id) AS canonical_id
@@ -188,11 +192,18 @@ object LlmQueries extends QueryPack {
   private val namedIds = Seq("q1", "q2", "q3", "q4")
 
   /** The retrieval query set as (query_id, query_text), `ids` in text
-    * order.
+    * order: a bigint id column for Long ids, a string one for String
+    * ids, nullable as a product encoder makes them. Built from rows
+    * under an explicit schema, so no encoder is derived by runtime
+    * reflection on each call.
     */
-  private def retrievalQueries[T: TypeTag](s: SparkSession, ids: Seq[T]): DataFrame = {
-    import s.implicits._
-    ids.zip(retrievalTexts).toDF("query_id", "query_text")
+  private[graft] def retrievalQueries(s: SparkSession, ids: Seq[Any]): DataFrame = {
+    val idType = if (ids.forall(_.isInstanceOf[String])) StringType else LongType
+    val schema = StructType(Seq(
+      StructField("query_id", idType, nullable = idType == StringType),
+      StructField("query_text", StringType)))
+    s.createDataFrame(
+      ids.zip(retrievalTexts).map { case (id, text) => Row(id, text) }.asJava, schema)
   }
 
   /** Oracle CTEs shared by the lexical scorers: the query set
@@ -637,14 +648,14 @@ object LlmQueries extends QueryPack {
           SELECT doc_id, text FROM documents
           UNION ALL SELECT doc_id, text FROM batch),
         ${shingleCtes("all_docs")},
-        pairs AS (
+        pairs AS MATERIALIZED (
           SELECT a.doc_id AS id1, b.doc_id AS id2, $jaccardSql AS j
           FROM sh a JOIN sh b ON a.doc_id < b.doc_id
           WHERE b.doc_id >= 100000),
         hits AS (
           SELECT id2 AS doc_id, min(id1) AS dup_of
           FROM pairs WHERE j >= 0.5 AND id1 < 100000 GROUP BY 1),
-        bb AS (
+        bb AS MATERIALIZED (
           SELECT id1, id2 FROM pairs
           WHERE j >= 0.5 AND id1 >= 100000
             AND id1 NOT IN (SELECT doc_id FROM hits)
@@ -1495,11 +1506,11 @@ object LlmQueries extends QueryPack {
     // Dirichlet query-likelihood retrieval — the language-modeling
     // member of the lexical trio (BM25 / TF-IDF / QL), in the
     // rank-preserving matched-terms decomposition so it rides the
-    // exact same postings plan as BM25 (map-side agg, broadcast query
-    // side, WindowGroupLimit top-k). Both ln() terms quantize to
-    // integer micros at the transcendental (the BM25 idf discipline;
-    // margins pinned over every reachable fixture value in TextSpec),
-    // so score_micros is pure long arithmetic cross-engine.
+    // exact same postings plan as BM25 (per-document histograms,
+    // broadcast query side, WindowGroupLimit top-k). Both ln() terms
+    // quantize to integer micros at the transcendental (the BM25 idf
+    // discipline; margins pinned over every reachable fixture value in
+    // TextSpec), so score_micros is pure long arithmetic cross-engine.
     Q("llm_ql_topk",
       (s, dir) => Text.queryLikelihoodTopK(Tables(s, dir, "documents"),
         retrievalQueries(s, probeIds), k = 10),

@@ -11,7 +11,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * expose it via a shim in an org.apache.spark.sql subpackage. This is
   * the only place the engine reaches into Spark internals: the Column
   * layer, the function registry, the listener bus that
-  * [[graft.Profile]] reads, and the size of a built broadcast relation.
+  * [[graft.Profile]] reads, the size of a built broadcast relation, and
+  * Spark's parquet-to-Spark schema conversion.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -29,6 +30,20 @@ object Bridge {
       org.apache.spark.sql.catalyst.FunctionIdentifier(name),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", name),
       builder)
+  }
+
+  /** A parquet footer schema as the session's parquet reads see it:
+    * Spark's own conversion under the session conf (nanosAsLong,
+    * INT96 and NTZ inference), which lives behind private[sql]
+    * sessionState.
+    */
+  def parquetReadSchema(
+      spark: org.apache.spark.sql.SparkSession,
+      footer: org.apache.parquet.schema.MessageType)
+      : org.apache.spark.sql.types.StructType = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(classic.sessionState.conf).convert(footer)
   }
 
   /** Block until every event already posted to the listener bus has

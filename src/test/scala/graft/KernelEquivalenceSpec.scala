@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{jaccard_sim, minhash_sig, simhash64, vec_dot}
+import graft.functions.{jaccard_sim, minhash_sig, simhash64, term_counts, vec_dot}
 
 /** The codegen'd kernels (VecDot, MinHashSig, SimHash64, JaccardSim)
-  * replaced interpreted higher-order-function formulations for speed.
+  * replaced interpreted higher-order-function formulations for speed,
+  * and TermCounts a (doc, term) aggregate.
   * This spec pins BIT-IDENTICAL equivalence against those original
   * formulations, evaluated side by side on real table data — if a
   * kernel ever drifts from the declarative semantics (hash family,
@@ -178,6 +179,38 @@ class KernelEquivalenceSpec extends SparkSpec {
     assert(nul.getSeq[String](0) == nul.getSeq[String](1),
       "shingles must skip null tokens like concat_ws")
     assert(nul.getSeq[String](0) == Seq("a", "b"))
+  }
+
+  test("term_counts == groupBy(doc_id, term) counts: repeated, empty, null, non-ASCII tokens") {
+    val sess = spark
+    import sess.implicits._
+    val extra = Seq[(Long, String)](
+      (900001L, "a a b a  b c a"),
+      (900002L, ""),
+      (900003L, null),
+      // precomposed vs decomposed é, CJK, sharp s vs its uppercase
+      // fold: grouping compares bytes, so each is its own term
+      (900004L, "caf\u00e9 cafe\u0301 caf\u00e9 na\u00efve \u65e5\u672c \u65e5\u672c \u00df SS ss \u00df"))
+      .toDF("doc_id", "text")
+    val toks = Tables(spark, sf001, "documents").select("doc_id", "text")
+      .unionByName(extra)
+      .select(col("doc_id"), graft.ops.Text.tokens(col("text")).as("toks"))
+    val kernel = toks.select(col("doc_id"), inline(term_counts(col("toks"))))
+    val grouped = toks.select(col("doc_id"), explode(col("toks")).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    assert(kernel.exceptAll(grouped).isEmpty && grouped.exceptAll(kernel).isEmpty,
+      "term_counts diverged from the (doc_id, term) aggregate")
+    assert(kernel.filter(col("doc_id") === 900004L).count() == 7)
+    // row contracts: first-occurrence order, null tokens skipped, an
+    // empty array gives an empty histogram and a null array null
+    val r = spark.sql("SELECT array('b', 'a', CAST(NULL AS STRING), 'b') AS t, " +
+        "CAST(array() AS array<string>) AS e, CAST(NULL AS array<string>) AS n")
+      .select(term_counts(col("t")), term_counts(col("e")), term_counts(col("n")))
+      .head()
+    assert(r.getSeq[org.apache.spark.sql.Row](0).map(x => (x.getString(0), x.getLong(1))) ==
+      Seq(("b", 2L), ("a", 1L)))
+    assert(r.getSeq[org.apache.spark.sql.Row](1).isEmpty)
+    assert(r.isNullAt(2))
   }
 
   test("vec_dot declares input types: array<float> is cast, not misread") {

@@ -22,6 +22,44 @@ class TablesSpec extends SparkSpec {
     assert(Tables(spark, sf001, "events").schema("ts").dataType == LongType)
   }
 
+  test("events: TIMESTAMP(MICROS) ts widens to raw ns, UTC-adjusted or not") {
+    val dir = Files.createTempDirectory("graft_events_micros").toString
+    val micros = Seq(1514764800000000L, 1700000000123456L)
+    val base = spark.createDataFrame(spark.sparkContext.parallelize(
+        micros.zipWithIndex.map { case (us, i) =>
+          org.apache.spark.sql.Row(i.toLong, us, 7L, "click", 1.5, "{}") }, 1),
+        Tables.schemas("events"))
+    val prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try {
+      for ((sub, tsType) <- Seq("utc" -> "timestamp", "ntz" -> "timestamp_ntz")) {
+        base.withColumn("ts", timestamp_micros(col("ts")).cast(tsType))
+          .write.mode("overwrite").parquet(s"$dir/$sub/events.parquet")
+        val df = Tables(spark, s"$dir/$sub", "events")
+        assert(df.schema == Tables.schemas("events"), s"$sub: ${df.schema}")
+        assert(df.orderBy("event_id").collect().map(_.getLong(1)).toSeq ==
+          micros.map(_ * 1000L), sub)
+      }
+    } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+  }
+
+  test("events: reading the table runs no Spark job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Tables(spark, sf001, "events") // warm
+    Profile.drain(spark)
+    sc.addSparkListener(l)
+    try {
+      Tables(spark, sf001, "events")
+      Profile.drain(spark)
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get == 0, s"reading events ran ${jobs.get} jobs")
+  }
+
   test("a mis-typed parquet file is rejected at read, not coerced") {
     val dir = Files.createTempDirectory("graft_badschema").toString
     // "lineitem" with l_quantity as STRING — plausible producer bug

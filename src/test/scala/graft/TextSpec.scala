@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.Text
+import graft.queries.LlmQueries
 
 class TextSpec extends SparkSpec {
 
@@ -174,6 +175,44 @@ class TextSpec extends SparkSpec {
     val s1 = termM(2, 3) + termM(1, 1) + 2 * dlM(3) // doc 1: both terms
     val s2 = termM(1, 3) + 2 * dlM(2)               // doc 2: apple only
     assert(got.toSeq == Seq((1, 1L, s1), (2, 2L, s2)), got.mkString(", "))
+  }
+
+  test("bm25TopK and queryLikelihoodTopK: same rows under both lineage-cut modes") {
+    val docs = Tables(spark, sf001, "documents")
+    val queries = LlmQueries.retrievalQueries(spark, Seq(0L, 1L, 2L, 3L))
+    def run(): Seq[Seq[org.apache.spark.sql.Row]] = Seq(
+      Text.bm25TopK(docs, queries, k = 10),
+      Text.queryLikelihoodTopK(docs, queries, k = 10))
+      .map(_.collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(1))))
+    val local = run()
+    spark.conf.set("spark.graft.lineage.cut", "reliable")
+    val reliable = try run() finally spark.conf.unset("spark.graft.lineage.cut")
+    assert(local.forall(_.nonEmpty))
+    assert(local == reliable, "lexical rows diverged across cut modes")
+  }
+
+  test("postings statistics: null and empty text stay out of N, avgdl and |C|, ANSI on or off") {
+    val sess = spark
+    import sess.implicits._
+    val clean = Seq((1L, "apple apple pie"), (2L, "apple tart"), (3L, "cherry tart date"))
+    val docs = (clean ++ Seq((4L, null), (5L, "  "))).toDF("doc_id", "text")
+    val queries = Seq(("q", "apple pie")).toDF("query_id", "query_text")
+    def rows(d: org.apache.spark.sql.DataFrame) = Seq(
+      Text.bm25TopK(d, queries), Text.queryLikelihoodTopK(d, queries))
+      .map(_.collect().toSeq.sortBy(_.getInt(1)))
+    val expected = rows(clean.toDF("doc_id", "text"))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    for (mode <- Seq("false", "true")) {
+      spark.conf.set("spark.sql.ansi.enabled", mode)
+      try {
+        // with ANSI off size(null) is -1, the doc_len of a null text
+        val nullSize = spark.sql("SELECT size(CAST(NULL AS array<string>))").head()
+        assert(if (mode == "false") nullSize.getInt(0) == -1 else nullSize.isNullAt(0))
+        val p = Text.postings(docs)
+        assert((p.nDocs, p.nTokens) == ((3L, 8L)), s"ansi=$mode")
+        assert(rows(docs) == expected, s"ansi=$mode")
+      } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    }
   }
 
   test("ql quantization margin: every reachable sf0.01 ln argument is far from a half-point") {
